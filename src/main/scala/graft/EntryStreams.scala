@@ -587,12 +587,12 @@ private[graft] object EntryStreams {
         .orderBy("event_id")
     }),
     // §2.2 influxdb sink: the line-protocol encode (shared with
-    // InfluxDbSink) gated as text — escaping, value render, ns clock
+    // Metrics.influxDb) gated as text — escaping, value render, ns clock
     "q_influx_lines" -> ((s, d) => evs(s, d)
       .filter(col("metric").isNotNull)
       .select(col("event_id"), graft.sinks.Metrics.influxLine.as("line"))
       .orderBy("event_id")),
-    // §2.2 influxdb v2 sink: the point encode (shared with Influx2Sink)
+    // §2.2 influxdb v2 sink: the point encode (shared with Metrics.influx2)
     // at ms precision — host-tag drop rule + precision clock scaling
     "q_influx2_line" -> ((s, d) => evs(s, d)
       .filter(col("metric").isNotNull)

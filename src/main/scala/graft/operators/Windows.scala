@@ -100,7 +100,7 @@ object Windows {
     else {
       val n = try df.sparkSession.conf
         .get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable =>
+      catch { case scala.util.control.NonFatal(_) =>
         df.sparkSession.sparkContext.defaultParallelism }
       df.repartition(n, keys.map(col): _*)
     }

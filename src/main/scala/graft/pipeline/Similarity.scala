@@ -542,7 +542,7 @@ object Similarity {
     // sized one.
     val verifyWidth = try embeddings.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
-    catch { case _: Throwable =>
+    catch { case scala.util.control.NonFatal(_) =>
       embeddings.sparkSession.sparkContext.defaultParallelism }
     val cand = capped.as("a")
       .join(capped.as("b"), col("a.band") === col("b.band") &&

@@ -385,6 +385,7 @@ object Sketches {
   def hdrQuantilesAudit(df: DataFrame, keys: Seq[String], v: Column,
       qMillis: Seq[Int], sb: Int = DefaultSubBits): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    require(sb >= 1 && sb <= 16, s"sb must be in [1,16], got $sb")
     val dom = df.filter(v.isNotNull && v >= 0)
       .select(keys.map(col) :+ v.as("v"): _*)
     // r22: ONE corpus pass feeds both sides. The sketch groups by

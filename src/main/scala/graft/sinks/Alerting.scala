@@ -1,15 +1,15 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The alerting integrations (reference `src/riemann/msteams.clj`,
   * `telegram.clj`, `opsgenie.clj`, `victorops.clj`, `slack.clj`,
   * `pagerduty.clj`) —
   * each is the reference's payload formatter re-expressed as pure
-  * codegen'd columns, with the HTTP client injected like every other
-  * sink in [[Sinks]]. Formatting runs distributed; only the final POST
-  * leaves the executor. */
+  * codegen'd columns and a factory over [[Sinks.RenderSink]] with the
+  * HTTP client injected. Formatting runs distributed; only the final
+  * POST leaves the executor. */
 object Alerting {
 
   private def orDash(c: Column) = coalesce(c.cast("string"), lit("-"))
@@ -37,17 +37,12 @@ object Alerting {
   /** MS Teams incoming-webhook sink (msteams.clj:34-66): each batch
     * partition posts ONE MessageCard whose sections are its events —
     * the reference's events-sequence form. */
-  class MsTeamsSink(post: String => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.select(Sinks.cheshireJson(msteamsSection).as("section"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val sections = rows.map(_.getString(0)).mkString(",")
-          if (sections.nonEmpty) post(
-            """{"@type":"MessageCard","@context":"http://schema.org/extensions",""" +
-              """"title":"Riemann Alerting","summary":"Received alerts from Riemann",""" +
-              s""""sections":[$sections]}""")
-        }
-  }
+  def msTeams(post: String => Unit): Sinks.EventSink = Sinks.RenderSink(
+    _.select(Sinks.cheshireJson(msteamsSection)),
+    Sinks.joined(
+      """{"@type":"MessageCard","@context":"http://schema.org/extensions",""" +
+        """"title":"Riemann Alerting","summary":"Received alerts from Riemann",""" +
+        """"sections":[""", ",", "]}")(post))
 
   // ------------------------------------------------------------- Telegram
 
@@ -67,18 +62,14 @@ object Alerting {
   /** Telegram sendMessage sink (telegram.clj:36-90): one API call per
     * event with (chat_id, parse_mode, text) form params; the bot-token
     * URL is assembled like the reference's `api-url` format. */
-  class TelegramSink(token: String, chatId: String,
+  def telegram(token: String, chatId: String,
       parseMode: String = "Markdown",
-      post: (String, Map[String, String]) => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val url = s"https://api.telegram.org/bot$token/sendMessage"
-      val (cid, pm) = (chatId, parseMode)
-      batch.select(telegramText(parseMode).as("text"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => post(url, Map(
-            "chat_id" -> cid, "parse_mode" -> pm, "text" -> r.getString(0))))
-        }
-    }
+      post: (String, Map[String, String]) => Unit): Sinks.EventSink = {
+    val url = s"https://api.telegram.org/bot$token/sendMessage"
+    Sinks.RenderSink(_.select(telegramText(parseMode)),
+      Sinks.eachRow(r => post(url, Map(
+        "chat_id" -> chatId, "parse_mode" -> parseMode,
+        "text" -> r.getString(0)))))
   }
 
   // ------------------------------------------------------------- OpsGenie
@@ -113,26 +104,21 @@ object Alerting {
   /** OpsGenie v2 alerts sink (opsgenie.clj:53-66): create posts the
     * body to /v2/alerts with the GenieKey header; close posts to
     * /v2/alerts/<alias>/close?identifierType=alias. */
-  class OpsgenieSink(apiKey: String, close: Boolean = false,
+  def opsgenie(apiKey: String, close: Boolean = false,
       post: (String, Map[String, String], String) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val headers = Map("Authorization" -> s"GenieKey $apiKey")
-      val doClose = close
-      batch.select(opsgenieBody.as("body"))
-        .select(col("body"),
-          get_json_object(col("body"), "$.alias").as("alias"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach { r =>
-            if (doClose) post(
-              s"https://api.opsgenie.com/v2/alerts/${r.getString(1)}" +
-                "/close?identifierType=alias",
-              headers, """{"user":"Riemann"}""")
-            else post("https://api.opsgenie.com/v2/alerts", headers,
-              r.getString(0))
-          }
-        }
-    }
+      : Sinks.EventSink = {
+    val headers = Map("Authorization" -> s"GenieKey $apiKey")
+    Sinks.RenderSink(
+      _.select(opsgenieBody.as("body"))
+        .select(col("body"), get_json_object(col("body"), "$.alias")),
+      Sinks.eachRow { r =>
+        if (close) post(
+          s"https://api.opsgenie.com/v2/alerts/${r.getString(1)}" +
+            "/close?identifierType=alias",
+          headers, """{"user":"Riemann"}""")
+        else post("https://api.opsgenie.com/v2/alerts", headers,
+          r.getString(0))
+      })
   }
 
   // ---------------------------------------------------------------- Slack
@@ -180,14 +166,10 @@ object Alerting {
 
   /** Slack sink (slack.clj:71-120): each event posted as one
     * incoming-webhook message through the injected transport. */
-  class SlackSink(username: String, channel: String, icon: String,
-      post: String => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.select(slackMessage(username, channel, icon).as("msg"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => post(r.getString(0)))
-        }
-  }
+  def slack(username: String, channel: String, icon: String,
+      post: String => Unit): Sinks.EventSink =
+    Sinks.RenderSink(_.select(slackMessage(username, channel, icon)),
+      Sinks.eachRow(r => post(r.getString(0))))
 
   // ------------------------------------------------------------ PagerDuty
 
@@ -238,15 +220,12 @@ object Alerting {
     * reference returns {:trigger :acknowledge :resolve} closures; here
     * each is a sink — compose with `changed-state` + `where` exactly
     * like the reference example. `v2 = false` selects the v1 API. */
-  class PagerdutySink(routingKey: String, action: String,
-      post: String => Unit, v2: Boolean = true) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.select((if (v2) pagerdutyV2Body(routingKey, action)
-        else pagerdutyV1Body(routingKey, action)).as("body"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => post(r.getString(0)))
-        }
-  }
+  def pagerduty(routingKey: String, action: String,
+      post: String => Unit, v2: Boolean = true): Sinks.EventSink =
+    Sinks.RenderSink(_.select(
+        if (v2) pagerdutyV2Body(routingKey, action)
+        else pagerdutyV1Body(routingKey, action)),
+      Sinks.eachRow(r => post(r.getString(0))))
 
   // ------------------------------------------------------------ VictorOps
 
@@ -268,16 +247,12 @@ object Alerting {
   /** VictorOps generic-integration sink (victorops.clj:36-55): the
     * adapter's five message types are one sink each; URL =
     * endpoint/api-key/routing-key. */
-  class VictorOpsSink(apiKey: String, routingKey: String,
+  def victorOps(apiKey: String, routingKey: String,
       messageType: String, post: (String, String) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val url = "https://alert.victorops.com/integrations/generic/" +
-        s"20131114/alert/$apiKey/$routingKey"
-      batch.select(victoropsBody(messageType).as("body"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => post(url, r.getString(0)))
-        }
-    }
+      : Sinks.EventSink = {
+    val url = "https://alert.victorops.com/integrations/generic/" +
+      s"20131114/alert/$apiKey/$routingKey"
+    Sinks.RenderSink(_.select(victoropsBody(messageType)),
+      Sinks.eachRow(r => post(url, r.getString(0))))
   }
 }

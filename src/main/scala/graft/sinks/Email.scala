@@ -140,14 +140,9 @@ object Email {
     * subject ≤ 100 UTF-8 bytes, body ≤ 8092 — applied via
     * [[Text.truncateBytes]]; the AWS client is injected as
     * `(arn, subject, body) => Unit`. */
-  class SnsSink(arn: String, publish: (String, String, String) => Unit,
-      hasDescription: Boolean = false) extends Sinks.EventSink {
-    val MaxSubjectBytes = 100
-    val MaxBodyBytes = 8092
-    private val inner = new EmailSink((subj, body) =>
-      publish(arn, Text.truncateBytes(subj, MaxSubjectBytes),
-        Text.truncateBytes(body, MaxBodyBytes)), hasDescription)
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      inner.write(batch, batchId)
-  }
+  def sns(arn: String, publish: (String, String, String) => Unit,
+      hasDescription: Boolean = false): Sinks.EventSink =
+    new EmailSink((subj, body) =>
+      publish(arn, Text.truncateBytes(subj, 100),
+        Text.truncateBytes(body, 8092)), hasDescription)
 }

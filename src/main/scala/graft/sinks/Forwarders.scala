@@ -1,12 +1,13 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Metric/check forwarders (reference `src/riemann/cloudwatch.clj`,
   * `stackdriver.clj`, `zabbix.clj`, `nagios.clj`, `xymon.clj`,
   * `blueflood.clj`, `shinken.clj`, `druid.clj`, `boundary.clj`,
-  * `netuitive.clj`): payload formatting as codegen'd columns, transports
+  * `netuitive.clj`): payload formatting as codegen'd columns and a
+  * factory over [[Sinks.RenderSink]] per integration, transports
   * injected. The Zabbix sender frame is implemented bit-exactly (it is
   * a real wire protocol, not an HTTP body). */
 object Forwarders {
@@ -28,17 +29,12 @@ object Forwarders {
 
   /** cloudwatch.clj:17-50: put-metric-data under a namespace; the AWS
     * client is injected as (namespace, datapointJson). */
-  class CloudwatchSink(namespace: String,
-      put: (String, String) => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val ns = namespace
-      batch.filter(col("metric").isNotNull && col("service").isNotNull)
-        .select(cloudwatchDatapoint.as("dp"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => put(ns, r.getString(0)))
-        }
-    }
-  }
+  def cloudwatch(namespace: String,
+      put: (String, String) => Unit): Sinks.EventSink =
+    Sinks.RenderSink(
+      _.filter(col("metric").isNotNull && col("service").isNotNull)
+        .select(cloudwatchDatapoint),
+      Sinks.eachRow(r => put(namespace, r.getString(0))))
 
   // ----------------------------------------------------------- Stackdriver
 
@@ -54,25 +50,22 @@ object Forwarders {
     * Divergence (documented): the reference's envelope timestamp is a
     * monotonically-bumped wall clock; here it is the batch's max
     * event time — deterministic under replay. */
-  class StackdriverSink(apiKey: String,
+  def stackdriver(apiKey: String,
       post: (String, Map[String, String], String) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val key = apiKey
-      batch.filter(col("metric").isNotNull)
-        .select(stackdriverPoint.as("p"), col("time_s"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          var maxT = 0L
-          val ps = rows.map { r =>
-            maxT = math.max(maxT, r.getLong(1)); r.getString(0)
-          }.mkString(",")
-          if (ps.nonEmpty) post(
-            "https://custom-gateway.stackdriver.com/v1/custom",
-            Map("x-stackdriver-apikey" -> key),
-            s"""{"timestamp":$maxT,"proto_version":1,"data":[$ps]}""")
-        }
-    }
-  }
+      : Sinks.EventSink =
+    Sinks.RenderSink(
+      _.filter(col("metric").isNotNull)
+        .select(stackdriverPoint, col("time_s")),
+      rows => {
+        var maxT = 0L
+        val ps = rows.map { r =>
+          maxT = math.max(maxT, r.getLong(1)); r.getString(0)
+        }.mkString(",")
+        if (ps.nonEmpty) post(
+          "https://custom-gateway.stackdriver.com/v1/custom",
+          Map("x-stackdriver-apikey" -> apiKey),
+          s"""{"timestamp":$maxT,"proto_version":1,"data":[$ps]}""")
+      })
 
   // ---------------------------------------------------------------- Zabbix
 
@@ -99,14 +92,9 @@ object Forwarders {
 
   /** zabbix.clj:63-99: each partition's datapoints go out as one
     * sender frame over the injected socket transport. */
-  class ZabbixSink(send: Array[Byte] => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.select(zabbixDatapoint.as("dp"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val dps = rows.map(_.getString(0)).mkString(",")
-          if (dps.nonEmpty) send(zabbixFrame(dps))
-        }
-  }
+  def zabbix(send: Array[Byte] => Unit): Sinks.EventSink =
+    Sinks.RenderSink(_.select(zabbixDatapoint),
+      Sinks.joined("", ",", "")(dps => send(zabbixFrame(dps))))
 
   // ---------------------------------------------------------------- Nagios
 
@@ -128,15 +116,11 @@ object Forwarders {
   /** nagios.clj:20-46: one NSCA message per event — (host, state,
     * service, description); the NSCA client (host/port/password/
     * encryption) is injected. */
-  class NagiosSink(send: (String, String, String, String) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.select(nagiosFields: _*)
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r =>
-            send(r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-        }
-  }
+  def nagios(send: (String, String, String, String) => Unit)
+      : Sinks.EventSink =
+    Sinks.RenderSink(_.select(nagiosFields: _*),
+      Sinks.eachRow(r =>
+        send(r.getString(0), r.getString(1), r.getString(2), r.getString(3))))
 
   // ----------------------------------------------------------------- Xymon
 
@@ -169,14 +153,9 @@ object Forwarders {
   /** xymon.clj:82-135: each partition's status messages ship as one
     * `combo\n` message (messages blank-line separated, trailing blank
     * line), the reference's batching for high event volumes. */
-  class XymonSink(send: String => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.select(xymonStatus.as("msg"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val msgs = rows.map(_.getString(0)).toSeq
-          if (msgs.nonEmpty) send("combo\n" + msgs.mkString("\n\n") + "\n\n")
-        }
-  }
+  def xymon(send: String => Unit): Sinks.EventSink =
+    Sinks.RenderSink(_.select(xymonStatus),
+      Sinks.joined("combo\n", "\n\n", "\n\n")(send))
 
   // ------------------------------------------------------------- Blueflood
 
@@ -190,17 +169,11 @@ object Forwarders {
     col("metric").as("metricValue"),
     concat_ws(".", col("host"), col("service")).as("metricName")))
 
-  class BluefloodSink(host: String, port: Int, tenantId: String,
-      post: (String, String) => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val url = s"http://$host:$port/v2.0/$tenantId/ingest"
-      batch.filter(col("metric").isNotNull)
-        .select(bluefloodPoint.as("p"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val ps = rows.map(_.getString(0)).mkString(",")
-          if (ps.nonEmpty) post(url, s"[$ps]")
-        }
-    }
+  def blueflood(host: String, port: Int, tenantId: String,
+      post: (String, String) => Unit): Sinks.EventSink = {
+    val url = s"http://$host:$port/v2.0/$tenantId/ingest"
+    Sinks.RenderSink(_.filter(col("metric").isNotNull).select(bluefloodPoint),
+      Sinks.joined("[", ",", "]")(post(url, _)))
   }
 
   // --------------------------------------------------------------- Shinken
@@ -217,20 +190,16 @@ object Forwarders {
     orEmpty(col("state")).as("return_code"),
     orEmpty(col("metric")).as("output"))
 
-  class ShinkenSink(hostname: String, port: Int, username: String,
+  def shinken(hostname: String, port: Int, username: String,
       password: String, post: (String, String, Map[String, String]) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val url = s"http://$hostname:$port/push_check_result"
-      val auth = s"$username:$password"
-      batch.select(shinkenFields: _*)
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => post(url, auth, Map(
-            "time_stamp" -> r.getString(0), "host_name" -> r.getString(1),
-            "service_description" -> r.getString(2),
-            "return_code" -> r.getString(3), "output" -> r.getString(4))))
-        }
-    }
+      : Sinks.EventSink = {
+    val url = s"http://$hostname:$port/push_check_result"
+    val auth = s"$username:$password"
+    Sinks.RenderSink(_.select(shinkenFields: _*),
+      Sinks.eachRow(r => post(url, auth, Map(
+        "time_stamp" -> r.getString(0), "host_name" -> r.getString(1),
+        "service_description" -> r.getString(2),
+        "return_code" -> r.getString(3), "output" -> r.getString(4)))))
   }
 
   // ----------------------------------------------------------------- Druid
@@ -246,16 +215,11 @@ object Forwarders {
     col("description"),
     col("metric").as("value")))
 
-  class DruidSink(host: String, port: Int, dataset: String,
-      post: (String, String) => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val url = s"http://$host:$port/v1/post/$dataset"
-      batch.select(druidEvent.as("e"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val es = rows.map(_.getString(0)).mkString(",")
-          if (es.nonEmpty) post(url, s"[$es]")
-        }
-    }
+  def druid(host: String, port: Int, dataset: String,
+      post: (String, String) => Unit): Sinks.EventSink = {
+    val url = s"http://$host:$port/v1/post/$dataset"
+    Sinks.RenderSink(_.select(druidEvent),
+      Sinks.joined("[", ",", "]")(post(url, _)))
   }
 
   // -------------------------------------------------------------- Boundary
@@ -296,22 +260,17 @@ object Forwarders {
 
   /** boundary.clj:53-105: measurements tuples posted as one JSON array
     * with email:token basic auth. */
-  class BoundarySink(email: String, token: String, org: Option[String] = None,
+  def boundary(email: String, token: String, org: Option[String] = None,
       async: Boolean = false, post: (String, String, String) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val path = if (async) "measurementsAsync" else "measurements"
-      val url = s"https://premium-api.boundary.com/v1/$path"
-      val auth = s"$email:$token"
-      batch
-        .withColumn("_mid", boundarify(col("service"), org))
+      : Sinks.EventSink = {
+    val path = if (async) "measurementsAsync" else "measurements"
+    val url = s"https://premium-api.boundary.com/v1/$path"
+    val auth = s"$email:$token"
+    Sinks.RenderSink(
+      _.withColumn("_mid", boundarify(col("service"), org))
         .filter(col("_mid") =!= "") // the reference's reject-empty rule
-        .select(boundaryTuple.as("t"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val ts = rows.map(_.getString(0)).mkString(",")
-          if (ts.nonEmpty) post(url, auth, s"[$ts]")
-        }
-    }
+        .select(boundaryTuple),
+      Sinks.joined("[", ",", "]")(post(url, auth, _)))
   }
 
   // ------------------------------------------------------------- Netuitive
@@ -334,16 +293,11 @@ object Forwarders {
         t => struct(t.as("name"), lit("true").as("value"))).as("tags")))
   }
 
-  class NetuitiveSink(apiKey: String, typ: String = "Riemann",
-      post: (String, String) => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val url = s"https://api.app.netuitive.com/ingest/$apiKey"
-      batch.select(netuitiveElement(typ).as("e"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val es = rows.map(_.getString(0)).mkString(",")
-          if (es.nonEmpty) post(url, s"[$es]")
-        }
-    }
+  def netuitive(apiKey: String, typ: String = "Riemann",
+      post: (String, String) => Unit): Sinks.EventSink = {
+    val url = s"https://api.app.netuitive.com/ingest/$apiKey"
+    Sinks.RenderSink(_.select(netuitiveElement(typ)),
+      Sinks.joined("[", ",", "]")(post(url, _)))
   }
 
 }

@@ -1,15 +1,20 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The metric-protocol sinks — InfluxDB v1/v2, Prometheus Pushgateway,
   * OpenTSDB, KairosDB, Datadog, Librato. Each is the reference's wire
   * encoder re-expressed as pure codegen'd columns (shared by the sink
-  * and its oracle gate) with the network transport injected, following
-  * the [[Sinks]] pattern. Split out of Sinks.scala along the
+  * and its oracle gate) and a factory over [[Sinks.RenderSink]] with the
+  * network transport injected. Split out of Sinks.scala along the
   * [[Alerting]]/[[Forwarders]] precedent. */
 object Metrics {
+
+  /** The guard most metric protocols share: a datapoint needs a value
+    * and a name. */
+  private def hasMetricAndService: Column =
+    col("metric").isNotNull && col("service").isNotNull
 
   /** InfluxDB line-protocol point for one event —
     * `measurement,host=<host> value=<metric> <time_ns>` with
@@ -30,28 +35,20 @@ object Metrics {
     * formatted distributed and handed to the injected HTTP transport
     * per partition (the batched `/write` POST). Events without a
     * metric are dropped (a point needs ≥1 field). */
-  class InfluxDbSink(transport: Iterator[String] => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.filter(col("metric").isNotNull)
-        .select(influxLine.as("line"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          transport(rows.map(_.getString(0)))
-        }
-  }
+  def influxDb(transport: Iterator[String] => Unit): Sinks.EventSink =
+    Sinks.RenderSink(_.filter(col("metric").isNotNull).select(influxLine),
+      Sinks.lines(transport))
 
-  object InfluxDbSink {
-    /** The user-facing default, matching influxdb.clj:135-231's v1
-      * connect defaults (port 8086, db "riemann"): each partition's
-      * points POST as one line-protocol body to `/write?db=…` through
-      * the bounded pooled HTTP transport (claim-timeout and retry
-      * semantics from pool.clj; see [[Pool.httpPostTransport]]). */
-    def apply(host: String, port: Int = 8086, db: String = "riemann",
-        poolSize: Int = 4, claimTimeoutMs: Long = 100): InfluxDbSink =
-      new InfluxDbSink(Pool.httpPostTransport(
-        s"http://$host:$port/write?db=$db", size = poolSize,
-        claimTimeoutMs = claimTimeoutMs))
-  }
+  /** The user-facing default, matching influxdb.clj:135-231's v1
+    * connect defaults (port 8086, db "riemann"): each partition's
+    * points POST as one line-protocol body to `/write?db=…` through
+    * the bounded pooled HTTP transport (claim-timeout and retry
+    * semantics from pool.clj; see [[Pool.httpPostTransport]]). */
+  def influxDb(host: String, port: Int = 8086, db: String = "riemann",
+      poolSize: Int = 4, claimTimeoutMs: Long = 100): Sinks.EventSink =
+    influxDb(Pool.httpPostTransport(
+      s"http://$host:$port/write?db=$db", size = poolSize,
+      claimTimeoutMs = claimTimeoutMs))
 
   /** InfluxDB v2 write options (reference src/riemann/influxdb2.clj:55-63
     * default-opts): org/bucket/token replace v1's db/user/password, and
@@ -100,18 +97,13 @@ object Metrics {
     * as one newline-joined body to the v2 write URL with the token
     * header — the WriteApi.writePoints batch. Metric-less events drop
     * (a point needs its value field). */
-  class Influx2Sink(cfg: Influx2Config,
+  def influx2(cfg: Influx2Config,
       post: (String, Map[String, String], String) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val (url, headers) = (cfg.url, cfg.headers)
-      batch.filter(col("metric").isNotNull && col("service").isNotNull)
-        .select(influx2Line(cfg.precision).as("line"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val body = rows.map(_.getString(0)).mkString("\n")
-          if (body.nonEmpty) post(url, headers, body)
-        }
-    }
+      : Sinks.EventSink = {
+    val (url, headers) = (cfg.url, cfg.headers)
+    Sinks.RenderSink(
+      _.filter(hasMetricAndService).select(influx2Line(cfg.precision)),
+      Sinks.joined("", "\n", "")(post(url, headers, _)))
   }
 
   /** Prometheus Pushgateway datapoint for one event (reference
@@ -144,15 +136,10 @@ object Metrics {
     * formatted distributed via [[prometheusLine]], handed per partition
     * to the injected POST transport. Events without metric or service
     * are dropped (generate-datapoint's guard). */
-  class PrometheusSink(transport: Iterator[String] => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.filter(col("metric").isNotNull && col("service").isNotNull)
-        .select(concat(prometheusLine, lit("\n")).as("line"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          transport(rows.map(_.getString(0)))
-        }
-  }
+  def prometheus(transport: Iterator[String] => Unit): Sinks.EventSink =
+    Sinks.RenderSink(
+      _.filter(hasMetricAndService).select(concat(prometheusLine, lit("\n"))),
+      Sinks.lines(transport))
 
   /** OpenTSDB telnet put line for one event (reference
     * src/riemann/opentsdb.clj:38-110): `put <dotted-service> <time>
@@ -172,15 +159,10 @@ object Metrics {
     * distributed, handed per partition to the injected telnet
     * transport. Events without metric or service are dropped (the
     * reference's when-guards). */
-  class OpenTsdbSink(transport: Iterator[String] => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.filter(col("metric").isNotNull && col("service").isNotNull)
-        .select(concat(opentsdbLine, lit("\n")).as("line"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          transport(rows.map(_.getString(0)))
-        }
-  }
+  def openTsdb(transport: Iterator[String] => Unit): Sinks.EventSink =
+    Sinks.RenderSink(
+      _.filter(hasMetricAndService).select(concat(opentsdbLine, lit("\n"))),
+      Sinks.lines(transport))
 
   /** KairosDB telnet metric for one event (reference
     * src/riemann/kairosdb.clj:25-36 metric->telnet + :153-158
@@ -198,15 +180,10 @@ object Metrics {
   /** KairosDB sink (kairosdb.clj:88-170): telnet metrics formatted
     * distributed, handed per partition to the injected transport.
     * Events without metric or service drop (make-metric's guards). */
-  class KairosDbSink(transport: Iterator[String] => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.filter(col("metric").isNotNull && col("service").isNotNull)
-        .select(concat(kairosdbLine, lit("\n")).as("line"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          transport(rows.map(_.getString(0)))
-        }
-  }
+  def kairosDb(transport: Iterator[String] => Unit): Sinks.EventSink =
+    Sinks.RenderSink(
+      _.filter(hasMetricAndService).select(concat(kairosdbLine, lit("\n"))),
+      Sinks.lines(transport))
 
   /** Datadog series entry for one event (reference
     * src/riemann/datadog.clj:9-33 generate-event): `{"metric":
@@ -239,15 +216,9 @@ object Metrics {
     * entries are joined into one `{"series": [...]}` POST body for the
     * injected HTTP transport (the reference recommends batching for
     * exactly this reason). */
-  class DatadogSink(transport: String => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.filter(col("metric").isNotNull && col("service").isNotNull)
-        .select(datadogEvent.as("entry"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val entries = rows.map(_.getString(0)).mkString(",")
-          if (entries.nonEmpty) transport(s"""{"series":[$entries]}""")
-        }
-  }
+  def datadog(transport: String => Unit): Sinks.EventSink =
+    Sinks.RenderSink(_.filter(hasMetricAndService).select(datadogEvent),
+      Sinks.joined("""{"series":[""", ",", "]}")(transport))
 
   /** Librato safe-name (reference src/riemann/librato.clj:9-17):
     * spaces become periods, only `A-Za-z0-9.:-_` survive, cut to 255
@@ -275,13 +246,7 @@ object Metrics {
   /** Librato sink (librato.clj:44-120 librato-metrics :gauge): each
     * partition's gauges collate into one `{"gauges":[...]}` POST for
     * the injected client. */
-  class LibratoSink(post: String => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.filter(col("metric").isNotNull)
-        .select(libratoGauge.as("entry"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val entries = rows.map(_.getString(0)).mkString(",")
-          if (entries.nonEmpty) post(s"""{"gauges":[$entries]}""")
-        }
-  }
+  def librato(post: String => Unit): Sinks.EventSink =
+    Sinks.RenderSink(_.filter(col("metric").isNotNull).select(libratoGauge),
+      Sinks.joined("""{"gauges":[""", ",", "]}")(post))
 }

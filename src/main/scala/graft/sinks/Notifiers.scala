@@ -1,12 +1,13 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Notification and log-shipping sinks (reference `src/riemann/
   * pushover.clj`, `twilio.clj`, `hipchat.clj`, `mailgun.clj`,
   * `logstash.clj`, `logentries.clj`, `keenio.clj`): payload formatting
-  * as codegen'd columns, transports injected — split out of
+  * as codegen'd columns and a factory over [[Sinks.RenderSink]] (or
+  * [[Email.EmailSink]]) per integration, transports injected — split out of
   * [[Forwarders]] along the [[Alerting]]/[[Metrics]] precedent. */
 object Notifiers {
 
@@ -32,26 +33,21 @@ object Notifiers {
       lit(" is "), orEmpty(col("state")), lit(" ("),
       orEmpty(col("metric")), lit(")"))
 
-  class PushoverSink(token: String, user: String,
-      post: Map[String, String] => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val (tk, us) = (token, user)
-      batch.select(
-          pushoverTitle.as("title"),
-          pushoverMessage.as("message"),
-          pushoverPriority.cast("string").as("priority"),
-          orEmpty(col("time_s")).as("timestamp"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => post(Map(
-            "token" -> tk, "user" -> us,
-            "title" -> r.getString(0), "message" -> r.getString(1),
-            "priority" -> r.getString(2),
-            // the reference's defaults for emergency re-delivery
-            "expire" -> "2400", "retry" -> "600",
-            "timestamp" -> r.getString(3))))
-        }
-    }
-  }
+  def pushover(token: String, user: String,
+      post: Map[String, String] => Unit): Sinks.EventSink =
+    Sinks.RenderSink(
+      _.select(
+        pushoverTitle.as("title"),
+        pushoverMessage.as("message"),
+        pushoverPriority.cast("string").as("priority"),
+        orEmpty(col("time_s")).as("timestamp")),
+      Sinks.eachRow(r => post(Map(
+        "token" -> token, "user" -> user,
+        "title" -> r.getString(0), "message" -> r.getString(1),
+        "priority" -> r.getString(2),
+        // the reference's defaults for emergency re-delivery
+        "expire" -> "2400", "retry" -> "600",
+        "timestamp" -> r.getString(3)))))
 
   // -------------------------------------------------------------- Logstash
 
@@ -63,13 +59,9 @@ object Notifiers {
 
   /** One "\n"-terminated line per event over the injected TCP/TLS/UDP
     * client. */
-  class LogstashSink(sendLine: String => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      batch.select(logstashLine.as("line"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => sendLine(r.getString(0) + "\n"))
-        }
-  }
+  def logstash(sendLine: String => Unit): Sinks.EventSink =
+    Sinks.RenderSink(_.select(logstashLine),
+      Sinks.eachRow(r => sendLine(r.getString(0) + "\n")))
 
   // ------------------------------------------------------------ Logentries
 
@@ -91,16 +83,10 @@ object Notifiers {
       concat(col("description"), lit(","), pairs)).otherwise(pairs)
   }
 
-  class LogentriesSink(token: String, sendLine: String => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val tk = token
-      batch.select(logentriesLine.as("line"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => sendLine(r.getString(0) + " " + tk + "\n"))
-        }
-    }
-  }
+  def logentries(token: String, sendLine: String => Unit)
+      : Sinks.EventSink =
+    Sinks.RenderSink(_.select(logentriesLine),
+      Sinks.eachRow(r => sendLine(r.getString(0) + " " + token + "\n")))
 
   // --------------------------------------------------------------- HipChat
 
@@ -122,23 +108,20 @@ object Notifiers {
     * events-sequence form joins blocks with blank lines); color is the
     * first event's state color, like the reference's
     * `(:state (first ev))` fallback. */
-  class HipchatSink(server: String, token: String, room: String,
+  def hipchat(server: String, token: String, room: String,
       notify: Boolean, post: (String, Map[String, String]) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val url = s"https://$server/v2/room/$room/notification?auth_token=$token"
-      val ntf = notify
-      batch.select(hipchatMessage.as("msg"), hipchatColor.as("color"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val rs = rows.toSeq
-          if (rs.nonEmpty) post(url, Map(
-            "color" -> rs.head.getString(1),
-            "from" -> "riemann",
-            "message_format" -> "text",
-            "notify" -> ntf.toString,
-            "message" -> rs.map(_.getString(0)).mkString("\n\n")))
-        }
-    }
+      : Sinks.EventSink = {
+    val url = s"https://$server/v2/room/$room/notification?auth_token=$token"
+    Sinks.RenderSink(_.select(hipchatMessage, hipchatColor),
+      rows => {
+        val rs = rows.toSeq
+        if (rs.nonEmpty) post(url, Map(
+          "color" -> rs.head.getString(1),
+          "from" -> "riemann",
+          "message_format" -> "text",
+          "notify" -> notify.toString,
+          "message" -> rs.map(_.getString(0)).mkString("\n\n")))
+      })
   }
 
   // ---------------------------------------------------------------- Twilio
@@ -146,17 +129,13 @@ object Notifiers {
   /** twilio.clj:17-48: one SMS per batch through the standard
     * common.clj body ([[Email.bodyAgg]]); form params To/From/Body,
     * account-sid basic auth, Messages.json endpoint. */
-  class TwilioSink(account: String, serviceKey: String, from: String,
+  def twilio(account: String, serviceKey: String, from: String,
       to: String, post: (String, String, Map[String, String]) => Unit)
-      extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val inner = new Email.EmailSink((_, body) =>
-        post(s"https://api.twilio.com/2010-04-01/Accounts/$account/Messages.json",
-          s"$account:$serviceKey",
-          Map("To" -> to, "From" -> from, "Body" -> body)))
-      inner.write(batch, batchId)
-    }
-  }
+      : Sinks.EventSink =
+    new Email.EmailSink((_, body) =>
+      post(s"https://api.twilio.com/2010-04-01/Accounts/$account/Messages.json",
+        s"$account:$serviceKey",
+        Map("To" -> to, "From" -> from, "Body" -> body)))
 
   // ---------------------------------------------------------------- KeenIO
 
@@ -168,16 +147,12 @@ object Notifiers {
 
   /** The full event as JSON to
     * /3.0/projects/<pid>/events/<collection>?api_key=<key>. */
-  class KeenIoSink(collection: String, projectId: String, writeKey: String,
-      post: (String, String) => Unit) extends Sinks.EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      val url = "https://api.keen.io/3.0/projects/" + projectId +
-        s"/events/$collection?api_key=$writeKey"
-      batch.select(keenioBody.as("body"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => post(url, r.getString(0)))
-        }
-    }
+  def keenIo(collection: String, projectId: String, writeKey: String,
+      post: (String, String) => Unit): Sinks.EventSink = {
+    val url = "https://api.keen.io/3.0/projects/" + projectId +
+      s"/events/$collection?api_key=$writeKey"
+    Sinks.RenderSink(_.select(keenioBody),
+      Sinks.eachRow(r => post(url, r.getString(0))))
   }
 
   // --------------------------------------------------------------- Mailgun
@@ -186,14 +161,11 @@ object Notifiers {
     * body (common.clj — [[Email.subjectAgg]]/[[Email.bodyAgg]]) posted
     * as form params to /v2/<sandbox>/messages with api-key basic auth.
     * One message per batch, like the mailer. */
-  class MailgunSink(sandbox: String, serviceKey: String, from: String,
+  def mailgun(sandbox: String, serviceKey: String, from: String,
       to: String, post: (String, String, Map[String, String]) => Unit)
-      extends Sinks.EventSink {
-    private val inner = new Email.EmailSink((subj, body) =>
+      : Sinks.EventSink =
+    new Email.EmailSink((subj, body) =>
       post(s"https://api.mailgun.net/v2/$sandbox/messages",
         s"api:$serviceKey",
         Map("from" -> from, "to" -> to, "subject" -> subj, "text" -> body)))
-    override def write(batch: DataFrame, batchId: Long): Unit =
-      inner.write(batch, batchId)
-  }
 }

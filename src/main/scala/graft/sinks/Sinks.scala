@@ -2,7 +2,8 @@ package graft.sinks
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.sources.LineProtocols
@@ -10,12 +11,18 @@ import graft.sources.LineProtocols
 /** Sink layer: riemann's ~40 integrations share one shape — `(sink
   * opts) → stream fn` called per event/batch (reference
   * src/riemann/config.clj:7-63 imports; graphite sink
-  * src/riemann/graphite.clj:116-174; kafka producer kafka.clj:11-48;
-  * `append`/`register` accumulator streams.clj:1243-1253). The Spark
-  * reading: a sink is a foreachBatch consumer; transports (HTTP/TCP
-  * clients) plug in as a `String => Unit` / `Iterator[Row] => Unit`
-  * so the Spark-side batching, ordering, and formatting are real and
-  * testable while network IO stays injectable. */
+  * src/riemann/graphite.clj:116-174; `append`/`register` accumulator
+  * streams.clj:1243-1253). The Spark reading: a sink is a foreachBatch
+  * consumer, and an integration is one [[RenderSink]] — a render step
+  * (guard filters + codegen'd payload columns, run distributed) and a
+  * per-partition delivery that hands the rendered rows to an injected
+  * transport (HTTP/TCP client in production, a collector in tests).
+  * Each integration is a factory over it: [[graphite]], [[webhook]],
+  * [[Alerting.slack]], [[Metrics.influxDb]], [[Forwarders.zabbix]],
+  * [[Notifiers.hipchat]], … The few sinks with another shape are
+  * classes: [[MemorySink]], [[Guarded]], [[ForwardSink]] (batch-id
+  * replay guard) and [[Email.EmailSink]] (one driver-side aggregate per
+  * batch). */
 object Sinks {
 
   /** A batch sink: receives each micro-batch (or batch write). */
@@ -49,31 +56,54 @@ object Sinks {
     def size: Int = rows.size()
   }
 
-  /** Graphite plaintext sink (graphite.clj:116-174): formats
-    * `service metric time` lines and hands each partition's lines to
-    * `transport` (a TCP/UDP client in production; a collector in test).
-    * Formatting and per-partition batching run distributed; only the
-    * transport side-effect is injected. */
-  class GraphiteSink(transport: Iterator[String] => Unit) extends EventSink {
+  /** The render-and-deliver sink every payload integration is built
+    * from: `render` turns the batch into its payload columns (guards
+    * and formatting, distributed), `deliver` runs once per partition on
+    * the executor and hands the rendered rows to the transport. */
+  final case class RenderSink(render: DataFrame => DataFrame,
+      deliver: Iterator[Row] => Unit) extends EventSink {
     override def write(batch: DataFrame, batchId: Long): Unit =
-      LineProtocols.encodeGraphite(batch)
-        .select("line").toDF("line")
-        .foreachPartition { (rows: Iterator[Row]) =>
-          transport(rows.map(_.getString(0)))
-        }
+      render(batch).foreachPartition(deliver)
   }
 
-  object GraphiteSink {
-    /** The user-facing default, matching `(graphite {:host …})`
-      * (graphite.clj:128-170): pooled TCP to host:2003 with the
-      * reference's pool defaults (size 4, claim-timeout 0.1 s,
-      * reconnect-interval 5 s, block-start). The transport-injected
-      * constructor above remains for tests and exotic carriers. */
-    def apply(host: String, port: Int = 2003, poolSize: Int = 4,
-        claimTimeoutMs: Long = 100): GraphiteSink =
-      new GraphiteSink(Pool.tcpLineTransport(host, port, size = poolSize,
-        claimTimeoutMs = claimTimeoutMs))
+  /** Delivery: one transport call per rendered row. */
+  def eachRow(send: Row => Unit): Iterator[Row] => Unit =
+    rows => rows.foreach(send)
+
+  /** Delivery: one `prefix + rows.mkString(sep) + suffix` body per
+    * partition over the first rendered column (the batched POST / frame
+    * form); a partition that renders nothing — empty, or every row
+    * guarded away — sends nothing. */
+  def joined(prefix: String, sep: String, suffix: String)(
+      send: String => Unit): Iterator[Row] => Unit = rows => {
+    val body = rows.map(_.getString(0)).mkString(sep)
+    if (body.nonEmpty) send(prefix + body + suffix)
   }
+
+  /** Delivery: each partition's first-column strings streamed to a
+    * line transport (one pooled connection or POST per partition). */
+  def lines(transport: Iterator[String] => Unit): Iterator[Row] => Unit =
+    rows => transport(rows.map(_.getString(0)))
+
+  /** Every column of the event as one JSON object. */
+  private def eventJson(df: DataFrame): Column =
+    to_json(struct(df.columns.toIndexedSeq.map(col): _*))
+
+  /** Graphite plaintext sink (graphite.clj:116-174): `service metric
+    * time` lines, each partition's lines handed to `transport`. */
+  def graphite(transport: Iterator[String] => Unit): EventSink =
+    RenderSink(LineProtocols.encodeGraphite(_).select("line"),
+      lines(transport))
+
+  /** The user-facing default, matching `(graphite {:host …})`
+    * (graphite.clj:128-170): pooled TCP to host:2003 with the
+    * reference's pool defaults (size 4, claim-timeout 0.1 s,
+    * reconnect-interval 5 s, block-start). The transport-injected
+    * overload remains for tests and exotic carriers. */
+  def graphite(host: String, port: Int = 2003, poolSize: Int = 4,
+      claimTimeoutMs: Long = 100): EventSink =
+    graphite(Pool.tcpLineTransport(host, port, size = poolSize,
+      claimTimeoutMs = claimTimeoutMs))
 
   /** `exception-stream` / dead-letter (streams.clj:81-121): the
     * reference isolates child failures per event and routes the
@@ -88,7 +118,6 @@ object Sinks {
         case err: Exception =>
           deadLetter.write(batch, batchId)
           val spark = batch.sparkSession
-          import org.apache.spark.sql.functions._
           // the "riemann exception" event (streams.clj:93-106)
           deadLetter.write(
             spark.range(1).select(
@@ -140,7 +169,6 @@ object Sinks {
         if (subscribers.count(_._1.isDefined) >= 2 &&
             (cols == base || hasTags))
           try {
-            import org.apache.spark.sql.functions.{expr, lit}
             // NULL (not empty) containers for columns the batch lacks:
             // Catalyst on the original schema resolves absent fields to
             // null literals, so `tags = nil` must stay true there
@@ -194,40 +222,19 @@ object Sinks {
   }
 
   /** Elasticsearch bulk sink (reference src/riemann/elasticsearch.clj:
-    * 37-190): formats each partition as an NDJSON `_bulk` body —
-    * `{"index":{}}` action line + event document — and hands the bodies
-    * to the injected HTTP transport. Formatting and batching run
-    * distributed; one transport call per partition (the bulk POST). */
-  class ElasticsearchBulkSink(index: String, transport: String => Unit)
-      extends EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      import org.apache.spark.sql.functions._
-      val idx = index
-      batch
-        .select(to_json(struct(batch.columns.toIndexedSeq.map(col): _*)).as("doc"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val body = rows.map(r =>
-            s"""{"index":{"_index":"$idx"}}""" + "\n" + r.getString(0))
-            .mkString("", "\n", "\n")
-          if (body.trim.nonEmpty) transport(body)
-        }
-    }
-  }
+    * 37-190): each partition is one NDJSON `_bulk` body — an
+    * `{"index":…}` action line + the event document per event. */
+  def elasticsearchBulk(index: String, transport: String => Unit): EventSink =
+    RenderSink(df => df.select(concat(
+        lit(s"""{"index":{"_index":"$index"}}""" + "\n"), eventJson(df))),
+      joined("", "\n", "\n")(transport))
 
   /** Webhook/alerting sink (the slack/pagerduty family, e.g.
-    * src/riemann/slack.clj:71, pagerduty.clj:91): each event rendered
-    * as a JSON alert payload, posted one-per-event through the injected
-    * transport — the shape all ~40 reference HTTP integrations share. */
-  class WebhookSink(transport: String => Unit) extends EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      import org.apache.spark.sql.functions._
-      batch
-        .select(to_json(struct(batch.columns.toIndexedSeq.map(col): _*)).as("payload"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          rows.foreach(r => transport(r.getString(0)))
-        }
-    }
-  }
+    * src/riemann/slack.clj:71, pagerduty.clj:91): each event posted as
+    * one JSON payload through the injected transport. */
+  def webhook(transport: String => Unit): EventSink =
+    RenderSink(df => df.select(eventJson(df)),
+      eachRow(r => transport(r.getString(0))))
 
   /** [[ForwardSink]] with the production transport out of the box:
     * pooled synchronous framed TCP ([[Pool.tcpFrameTransport]] — one
@@ -278,7 +285,6 @@ object Sinks {
       import graft.sources.RiemannProtobuf
       val spark = batch.sparkSession
       import spark.implicits._
-      import org.apache.spark.sql.functions._
       val n = batchSize
       batch.select(
         col("host").cast("string"), col("service").cast("string"),
@@ -310,30 +316,8 @@ object Sinks {
       internal: Boolean = false, routingKey: String = "riemann.events",
       contentType: String = "application/json")
 
-  class RabbitMqSink(cfg: RabbitMqConfig,
-      publish: (RabbitMqConfig, String, String) => Unit)
-      extends EventSink {
-    override def write(batch: DataFrame, batchId: Long): Unit = {
-      import org.apache.spark.sql.functions._
-      val (c, rk) = (cfg, cfg.routingKey)
-      batch
-        .select(to_json(struct(batch.columns.toIndexedSeq.map(col): _*)).as("payload"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          // the full config reaches the injected client so exchange
-          // declaration / content-type settings are honored, not dead
-          rows.foreach(r => publish(c, rk, r.getString(0)))
-        }
-    }
-  }
-
-  /** Kafka producer sink (kafka.clj:11-48): native in Spark — this just
-    * pins the contract (value = JSON event). */
-  def kafka[T](ds: Dataset[T], bootstrap: String, topic: String): DataStreamWriter[Row] = {
-    import org.apache.spark.sql.functions._
-    ds.toDF()
-      .select(to_json(struct(ds.toDF().columns.toIndexedSeq.map(col): _*)).as("value"))
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("topic", topic)
-  }
+  def rabbitMq(cfg: RabbitMqConfig,
+      publish: (RabbitMqConfig, String, String) => Unit): EventSink =
+    RenderSink(df => df.select(eventJson(df)),
+      eachRow(r => publish(cfg, cfg.routingKey, r.getString(0))))
 }

@@ -14,7 +14,7 @@ class AlertingSpec extends SparkSpec {
 
   test("msteams: one MessageCard per partition, one section per event (msteams.clj:7-32)") {
     AlertProbe.posts.clear()
-    new Alerting.MsTeamsSink(b => { AlertProbe.posts.add(("", b)); () })
+    Alerting.msTeams(b => { AlertProbe.posts.add(("", b)); () })
       .write(onePartition, 0L)
     assert(AlertProbe.posts.size == 1)
     val body = AlertProbe.posts.peek()._2
@@ -32,7 +32,7 @@ class AlertingSpec extends SparkSpec {
 
   test("telegram: markdown and HTML parse modes (telegram.clj:9-26)") {
     AlertProbe.posts.clear()
-    new Alerting.TelegramSink("TOK", "42", "Markdown",
+    Alerting.telegram("TOK", "42", "Markdown",
       (url, form) => { AlertProbe.posts.add((url, form.toString)); () })
       .write(onePartition, 0L)
     assert(AlertProbe.posts.size == 2)
@@ -48,7 +48,7 @@ class AlertingSpec extends SparkSpec {
 
   test("opsgenie: create body + close URL share the stable alias (opsgenie.clj:21-66)") {
     AlertProbe.posts.clear()
-    new Alerting.OpsgenieSink("KEY", close = false,
+    Alerting.opsgenie("KEY", close = false,
       (url, headers, body) =>
         { AlertProbe.posts.add((url, headers("Authorization") + "|" + body)); () })
       .write(onePartition, 0L)
@@ -63,7 +63,7 @@ class AlertingSpec extends SparkSpec {
     val alias = "\"alias\":\"(\\w{15})\"".r.findFirstMatchIn(hb).get.group(1)
 
     AlertProbe.posts.clear()
-    new Alerting.OpsgenieSink("KEY", close = true,
+    Alerting.opsgenie("KEY", close = true,
       (u, _, b) => { AlertProbe.posts.add((u, b)); () })
       .write(onePartition, 0L)
     val closes = new scala.collection.mutable.ArrayBuffer[(String, String)]()
@@ -76,7 +76,7 @@ class AlertingSpec extends SparkSpec {
 
   test("victorops: message type, entity id, state message (victorops.clj:21-34)") {
     AlertProbe.posts.clear()
-    new Alerting.VictorOpsSink("AK", "RK", "CRITICAL",
+    Alerting.victorOps("AK", "RK", "CRITICAL",
       (url, body) => { AlertProbe.posts.add((url, body)); () })
       .write(onePartition, 0L)
     assert(AlertProbe.posts.size == 2)

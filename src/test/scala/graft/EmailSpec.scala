@@ -120,7 +120,7 @@ class EmailSpec extends SparkSpec {
 
   test("SnsSink applies the 100-byte subject budget (sns.clj:19-26)") {
     val sent = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    val sink = new Email.SnsSink("arn:x", (a, s, b) => sent += ((a, s, b)))
+    val sink = Email.sns("arn:x", (a, s, b) => sent += ((a, s, b)))
     // 60 distinct hosts -> subject "60 hosts api ok" (short); a long
     // single-host subject instead: host of 120 chars truncates to 100
     val longHost = "h" * 120

@@ -15,7 +15,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("cloudwatch: service/metric datapoint with Host dimension; guards drop (cloudwatch.clj:8-50)") {
     FwdProbe.calls.clear()
-    new Forwarders.CloudwatchSink("Riemann",
+    Forwarders.cloudwatch("Riemann",
       (ns, dp) => { FwdProbe.calls.add((ns, dp)); () }).write(batch, 0L)
     assert(FwdProbe.calls.size == 1) // the metric-less event dropped
     val (ns, dp) = FwdProbe.calls.peek()
@@ -27,7 +27,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("stackdriver: whitespace-dotted names, one envelope per partition (stackdriver.clj:10-46)") {
     FwdProbe.calls.clear()
-    new Forwarders.StackdriverSink("SDKEY",
+    Forwarders.stackdriver("SDKEY",
       (url, headers, body) =>
         { FwdProbe.calls.add((url, headers("x-stackdriver-apikey") + "|" + body)); () })
       .write(batch, 0L)
@@ -41,7 +41,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("zabbix: sender frame is ZBXD\\1 + LE length + request (zabbix.clj:30-61)") {
     FwdProbe.frames.clear()
-    new Forwarders.ZabbixSink(f => { FwdProbe.frames.add(f); () })
+    Forwarders.zabbix(f => { FwdProbe.frames.add(f); () })
       .write(batch, 0L)
     assert(FwdProbe.frames.size == 1)
     val f = FwdProbe.frames.peek()
@@ -60,7 +60,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("nagios: state map ok/warning pass, error->critical, else unknown (nagios.clj:10-46)") {
     FwdProbe.calls.clear()
-    val sink = new Forwarders.NagiosSink((h, st, sv, d) =>
+    val sink = Forwarders.nagios((h, st, sv, d) =>
       { FwdProbe.calls.add((h, s"$st/$sv/$d")); () })
     sink.write(events(
       E(id = 1, host = "a", service = "s1", state = "error", description = "x"),
@@ -74,7 +74,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("pushover: priority table and message params (pushover.clj:15-35)") {
     FwdProbe.calls.clear()
-    new Notifiers.PushoverSink("TOK", "USR",
+    Notifiers.pushover("TOK", "USR",
       form => { FwdProbe.calls.add((form("title"), form.toString)); () })
       .write(batch, 0L)
     assert(FwdProbe.calls.size == 2)
@@ -90,7 +90,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("mailgun: one message per batch through the standard subject/body (mailgun.clj:28-38)") {
     FwdProbe.calls.clear()
-    new Notifiers.MailgunSink("sandbox.mg", "KEY", "riemann@x", "ops@x",
+    Notifiers.mailgun("sandbox.mg", "KEY", "riemann@x", "ops@x",
       (url, auth, form) =>
         { FwdProbe.calls.add((url, auth + "|" + form("subject"))); () })
       .write(batch, 0L)
@@ -103,7 +103,7 @@ class ForwardersSpec extends SparkSpec {
   }
   test("logstash/logentries: line shapes incl. source field and token suffix") {
     FwdProbe.calls.clear()
-    new Notifiers.LogstashSink(l => { FwdProbe.calls.add(("ls", l)); () })
+    Notifiers.logstash(l => { FwdProbe.calls.add(("ls", l)); () })
       .write(batch, 0L)
     val ls = new scala.collection.mutable.ArrayBuffer[(String, String)]()
     FwdProbe.calls.forEach(e => { ls += e; () })
@@ -112,7 +112,7 @@ class ForwardersSpec extends SparkSpec {
     assert(ls.exists(_._2.contains(""""source":"web01"""")))
 
     FwdProbe.calls.clear()
-    new Notifiers.LogentriesSink("TOKEN-1",
+    Notifiers.logentries("TOKEN-1",
       l => { FwdProbe.calls.add(("le", l)); () }).write(batch, 0L)
     val le = new scala.collection.mutable.ArrayBuffer[(String, String)]()
     FwdProbe.calls.forEach(e => { le += e; () })
@@ -124,7 +124,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("hipchat: one colored room notification per partition (hipchat.clj:7-48)") {
     FwdProbe.calls.clear()
-    new Notifiers.HipchatSink("api.hipchat.com", "TOK40", "42", notify = true,
+    Notifiers.hipchat("api.hipchat.com", "TOK40", "42", notify = true,
       (url, form) => { FwdProbe.calls.add((url, form.toString)); () })
       .write(batch, 0L)
     assert(FwdProbe.calls.size == 1)
@@ -138,7 +138,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("twilio: SMS per batch via the common body, account auth (twilio.clj:17-48)") {
     FwdProbe.calls.clear()
-    new Notifiers.TwilioSink("AC99", "KEY", "+15005550006", "+15551234567",
+    Notifiers.twilio("AC99", "KEY", "+15005550006", "+15551234567",
       (url, auth, form) =>
         { FwdProbe.calls.add((url, auth + "|" + form("To") + "|" + form("Body").take(30))); () })
       .write(batch, 0L)
@@ -162,7 +162,7 @@ class ForwardersSpec extends SparkSpec {
     assert(withTtl.select(Forwarders.xymonDisable).collect().head.getString(0)
       == "disable a,example,com.disk_usage 2 85%")
     FwdProbe.calls.clear()
-    new Forwarders.XymonSink(m => { FwdProbe.calls.add(("xy", m)); () })
+    Forwarders.xymon(m => { FwdProbe.calls.add(("xy", m)); () })
       .write(batch, 0L)
     val combo = FwdProbe.calls.peek()._2
     assert(combo.startsWith("combo\nstatus web01.cpu_load critical hot\n"))
@@ -172,21 +172,21 @@ class ForwardersSpec extends SparkSpec {
 
   test("blueflood/druid/netuitive: batched JSON ingest bodies") {
     FwdProbe.calls.clear()
-    new Forwarders.BluefloodSink("bf", 19000, "t1",
+    Forwarders.blueflood("bf", 19000, "t1",
       (url, body) => { FwdProbe.calls.add((url, body)); () }).write(batch, 0L)
     val (bu, bb) = FwdProbe.calls.poll()
     assert(bu == "http://bf:19000/v2.0/t1/ingest")
     assert(bb == """[{"collectionTime":100,"ttlInSeconds":2592000,""" +
       """"metricValue":0.95,"metricName":"web01.cpu load"}]""")
 
-    new Forwarders.DruidSink("dr", 8200, "riemann",
+    Forwarders.druid("dr", 8200, "riemann",
       (url, body) => { FwdProbe.calls.add((url, body)); () }).write(batch, 0L)
     val (du, db) = FwdProbe.calls.poll()
     assert(du == "http://dr:8200/v1/post/riemann")
     assert(db.contains(""""timestamp":"1970-01-01T00:01:40.000Z""""))
     assert(db.contains(""""value":0.95"""))
 
-    new Forwarders.NetuitiveSink("KEY123", "Riemann",
+    Forwarders.netuitive("KEY123", "Riemann",
       (url, body) => { FwdProbe.calls.add((url, body)); () }).write(batch, 0L)
     val (nu, nb) = FwdProbe.calls.poll()
     assert(nu == "https://api.app.netuitive.com/ingest/KEY123")
@@ -196,7 +196,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("shinken: ws-arbiter form params per event (shinken.clj:13-20)") {
     FwdProbe.calls.clear()
-    new Forwarders.ShinkenSink("sk", 7760, "admin", "secret",
+    Forwarders.shinken("sk", 7760, "admin", "secret",
       (url, auth, form) =>
         { FwdProbe.calls.add((url, auth + "|" + form.toSeq.sorted.mkString(","))); () })
       .write(batch, 0L)
@@ -211,7 +211,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("boundary: boundarified metric ids as measurement tuples (boundary.clj:17-105)") {
     FwdProbe.calls.clear()
-    new Forwarders.BoundarySink("e@x", "TK", Some("org"), async = false,
+    Forwarders.boundary("e@x", "TK", Some("org"), async = false,
       (url, auth, body) => { FwdProbe.calls.add((url, auth + "|" + body)); () })
       .write(events(
         E(id = 1, host = "h1", service = "foo bar!", metric = 2.0, time = 5L),
@@ -230,7 +230,7 @@ class ForwardersSpec extends SparkSpec {
 
   test("keenio: project/collection URL with write key (keenio.clj:9-35)") {
     FwdProbe.calls.clear()
-    new Notifiers.KeenIoSink("alerts", "PID", "WK",
+    Notifiers.keenIo("alerts", "PID", "WK",
       (url, body) => { FwdProbe.calls.add((url, body)); () }).write(batch, 0L)
     assert(FwdProbe.calls.size == 2)
     val (url, body) = FwdProbe.calls.peek()

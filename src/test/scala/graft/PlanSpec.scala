@@ -571,15 +571,18 @@ class PlanSpec extends SparkSpec {
     val n = math.max(spark.sparkContext.defaultParallelism, 2)
     val tmp = java.nio.file.Files.createTempDirectory("spread_scale")
       .toString
-    spark.range(0, 10000).select(col("id").as("event_id"))
-      .repartition(n).write.mode("overwrite").parquet(tmp)
-    val multi = spark.read.parquet(tmp)
-    assert(multi.rdd.getNumPartitions * 2 > n,
-      s"test table did not scan as multiple splits " +
-        s"(${multi.rdd.getNumPartitions})")
-    val pMulti = plan(EntryShared.spread(multi, col("event_id")))
-    assert(!pMulti.contains("REPARTITION_BY_NUM"),
-      s"spread fired on a multi-split scan:\n$pMulti")
+    try {
+      spark.range(0, 10000).select(col("id").as("event_id"))
+        .repartition(n).write.mode("overwrite").parquet(tmp)
+      val multi = spark.read.parquet(tmp)
+      assert(multi.rdd.getNumPartitions * 2 > n,
+        s"test table did not scan as multiple splits " +
+          s"(${multi.rdd.getNumPartitions})")
+      val pMulti = plan(EntryShared.spread(multi, col("event_id")))
+      assert(!pMulti.contains("REPARTITION_BY_NUM"),
+        s"spread fired on a multi-split scan:\n$pMulti")
+    } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(
+      new java.io.File(tmp))
     val single = EventView(spark, dir) // single-row-group test table
     val pSingle = plan(EntryShared.spread(single, col("event_id")))
     assert("REPARTITION_BY_NUM".r.findAllIn(pSingle).length == 1,

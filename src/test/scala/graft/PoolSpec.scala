@@ -155,7 +155,7 @@ class PoolSpec extends SparkSpec {
       retries = 1)
     val dead = new Sinks.MemorySink
     val guarded = new Sinks.Guarded(
-      new Sinks.GraphiteSink(transport), dead)
+      Sinks.graphite(transport), dead)
     val batch = events(
       E(id = 1, host = "web01", service = "cpu", metric = 0.5, time = 100L),
       E(id = 2, host = "web02", service = "mem", metric = 0.25, time = 101L))
@@ -203,7 +203,7 @@ class PoolSpec extends SparkSpec {
     acceptor.setDaemon(true); acceptor.start()
 
     try {
-      val sink = Sinks.GraphiteSink("127.0.0.1", port)
+      val sink = Sinks.graphite("127.0.0.1", port)
       sink.write(events(
         E(id = 1, host = "web01", service = "cpu", metric = 0.5, time = 100L))
         .coalesce(1), 0L)
@@ -226,7 +226,7 @@ class PoolSpec extends SparkSpec {
     try {
       val dead = new Sinks.MemorySink
       val guarded = new Sinks.Guarded(
-        Sinks.GraphiteSink("127.0.0.1", deadPort), dead)
+        Sinks.graphite("127.0.0.1", deadPort), dead)
       guarded.write(events(
         E(id = 1, host = "h", service = "cpu", metric = 1.0, time = 100L))
         .coalesce(1), 0L)

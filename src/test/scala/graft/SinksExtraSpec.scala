@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sinks.{Alerting, Metrics, Sinks}
+import graft.sinks.{Alerting, Forwarders, Metrics, Sinks}
 import graft.operators.{Streams, Windows}
 
 /** Dead-letter routing (streams.clj:81-121 exception-stream), pubsub
@@ -99,7 +99,7 @@ class SinksExtraSpec extends SparkSpec {
 
   test("elasticsearch bulk sink formats NDJSON bodies (elasticsearch.clj:37-190)") {
     EsProbe.bodies.clear()
-    val sink = new Sinks.ElasticsearchBulkSink("riemann",
+    val sink = Sinks.elasticsearchBulk("riemann",
       b => EsProbe.bodies.add(b))
     sink.write(events(E(id = 1, service = "api", metric = 1.0)).coalesce(1), 0L)
     assert(EsProbe.bodies.size() == 1)
@@ -110,7 +110,7 @@ class SinksExtraSpec extends SparkSpec {
 
   test("webhook sink posts one JSON payload per event (slack.clj:71 family)") {
     EsProbe.bodies.clear()
-    val sink = new Sinks.WebhookSink(p => EsProbe.bodies.add(p))
+    val sink = Sinks.webhook(p => EsProbe.bodies.add(p))
     sink.write(events(E(id = 1, state = "critical"), E(id = 2, state = "ok")), 0L)
     assert(EsProbe.bodies.size() == 2)
   }
@@ -194,7 +194,7 @@ class SinksExtraSpec extends SparkSpec {
 
   test("influxdb sink formats line protocol with escaping (influxdb.clj:135-231)") {
     InfluxProbe.lines.clear()
-    val sink = new Metrics.InfluxDbSink(ls => ls.foreach(InfluxProbe.lines.add))
+    val sink = Metrics.influxDb(ls => ls.foreach(InfluxProbe.lines.add))
     sink.write(events(
       E(id = 1, host = "web01", service = "cpu load", metric = 0.95, time = 10L),
       E(id = 2, host = "a=b,c d", service = "mem", metric = 512.0, time = 11L),
@@ -233,7 +233,7 @@ class SinksExtraSpec extends SparkSpec {
   test("opentsdb sink emits put lines its own decoder round-trips (opentsdb.clj:38-110)") {
     import graft.sources.LineProtocols
     InfluxProbe.lines.clear()
-    val sink = new Metrics.OpenTsdbSink(ls => ls.foreach(InfluxProbe.lines.add))
+    val sink = Metrics.openTsdb(ls => ls.foreach(InfluxProbe.lines.add))
     sink.write(events(
       E(id = 1, host = "web01", service = "cpu load", metric = 0.95, time = 10L),
       E(id = 2, host = null, service = "mem", metric = 512.0, time = 11L),
@@ -257,7 +257,7 @@ class SinksExtraSpec extends SparkSpec {
 
   test("prometheus sink formats sanitized datapoints with sorted labels (prometheus.clj:13-48)") {
     InfluxProbe.lines.clear()
-    val sink = new Metrics.PrometheusSink(ls => ls.foreach(InfluxProbe.lines.add))
+    val sink = Metrics.prometheus(ls => ls.foreach(InfluxProbe.lines.add))
     sink.write(events(
       E(id = 1, host = "web01", service = "cpu load%", state = "ok",
         metric = 0.95, attributes = Map("dc" -> "east"), time = 10L),
@@ -275,7 +275,7 @@ class SinksExtraSpec extends SparkSpec {
 
   test("kairosdb sink emits millisecond put lines (kairosdb.clj:25-36)") {
     InfluxProbe.lines.clear()
-    val sink = new Metrics.KairosDbSink(ls => ls.foreach(InfluxProbe.lines.add))
+    val sink = Metrics.kairosDb(ls => ls.foreach(InfluxProbe.lines.add))
     sink.write(events(
       E(id = 1, host = "web01", service = "cpu load", metric = 0.95, time = 10L),
       E(id = 2, host = "drop", service = null, metric = 1.0, time = 11L)), 0L)
@@ -285,7 +285,7 @@ class SinksExtraSpec extends SparkSpec {
 
   test("librato sink collates safe-named gauges per partition (librato.clj:9-27)") {
     InfluxProbe.lines.clear()
-    val sink = new Metrics.LibratoSink(
+    val sink = Metrics.librato(
       body => { InfluxProbe.lines.add(body); () })
     sink.write(events(
       E(id = 1, host = "web 01!", service = "cpu load%", metric = 0.95,
@@ -302,7 +302,7 @@ class SinksExtraSpec extends SparkSpec {
     Influx2Probe.posts.clear()
     val cfg = Metrics.Influx2Config(organization = "acme", bucket = "metrics",
       host = "flux.example.com", token = "s3cr3t", precision = "ms")
-    val sink = new Metrics.Influx2Sink(cfg,
+    val sink = Metrics.influx2(cfg,
       (url, headers, body) => { Influx2Probe.posts.add((url, headers, body)); () })
     sink.write(events(
       E(id = 1, host = "web 01", service = "cpu load", metric = 0.95, time = 10L),
@@ -322,7 +322,7 @@ class SinksExtraSpec extends SparkSpec {
 
   test("slack sink: escaped attachment message with vector-literal tags (slack.clj:8-39)") {
     InfluxProbe.lines.clear()
-    val sink = new Alerting.SlackSink("Riemann bot", "#monitoring", ":smile:",
+    val sink = Alerting.slack("Riemann bot", "#monitoring", ":smile:",
       body => { InfluxProbe.lines.add(body); () })
     sink.write(events(
       E(id = 1, host = "web<1>", service = "cpu & load", state = "critical",
@@ -343,7 +343,7 @@ class SinksExtraSpec extends SparkSpec {
 
   test("pagerduty v2/v1 bodies: routing key, action, summary, dedup key (pagerduty.clj:29-72)") {
     InfluxProbe.lines.clear()
-    val v2 = new Alerting.PagerdutySink("rk-123", "trigger",
+    val v2 = Alerting.pagerduty("rk-123", "trigger",
       body => { InfluxProbe.lines.add(body); () })
     v2.write(events(
       E(id = 1, host = "web01", service = "cpu", state = "critical",
@@ -361,7 +361,7 @@ class SinksExtraSpec extends SparkSpec {
     // to a millis parser, rendering as 10 ms into 1970
     assert(body.contains(""""timestamp":"1970-01-01T00:00:00.010Z""""))
 
-    val v1 = new Alerting.PagerdutySink("sk-9", "resolve",
+    val v1 = Alerting.pagerduty("sk-9", "resolve",
       b => { InfluxProbe.lines.add(b); () }, v2 = false)
     v1.write(events(
       E(id = 2, host = "web01", service = "cpu", state = "ok",
@@ -378,7 +378,7 @@ class SinksExtraSpec extends SparkSpec {
     // serialized into the task, so capturing a local val (even one
     // pointing at the static queue) adds to a deserialized copy
     InfluxProbe.lines.clear()
-    val sink = new Metrics.DatadogSink(
+    val sink = Metrics.datadog(
       body => { InfluxProbe.lines.add(body); () })
     val posted = InfluxProbe.lines
     sink.write(events(
@@ -400,9 +400,44 @@ class SinksExtraSpec extends SparkSpec {
     assert(!parsed.columns.contains("_corrupt_record"))
   }
 
+  test("render sinks deliver per partition: a joined body per non-empty " +
+    "partition, none for an empty or fully-guarded one") {
+    // four explicit partitions: two events | none | one metric-less
+    // event (the metric guard removes every row) | one event
+    def row(id: Long, host: String, metric: java.lang.Double) =
+      org.apache.spark.sql.Row(id, host, "cpu", null, null, metric, null,
+        10L + id, null, null)
+    val layout = Seq(Seq(row(1, "a", 1.0), row(2, "b", 2.0)), Seq(),
+      Seq(row(3, "c", null)), Seq(row(4, "d", 4.0)))
+    val batch = spark.createDataFrame(
+      spark.sparkContext.parallelize(layout, layout.size).flatMap(identity),
+      eventSchema)
+    assert(batch.rdd.getNumPartitions == 4)
+    import scala.jdk.CollectionConverters._
+
+    InfluxProbe.lines.clear()
+    Metrics.datadog(body => { InfluxProbe.lines.add(body); () })
+      .write(batch, 0L)
+    val bodies = InfluxProbe.lines.asScala.toSeq
+    assert(bodies.size == 2)
+    assert(bodies.forall(b => b.startsWith("""{"series":[""") &&
+      b.endsWith("]}")))
+    assert(bodies.map(""""metric":""".r.findAllIn(_).length).sorted ==
+      Seq(1, 2))
+
+    // per-row delivery: one send per surviving event, nothing from the
+    // empty or the guarded-away partition
+    EsProbe.bodies.clear()
+    Forwarders.cloudwatch("ns", (_, dp) => { EsProbe.bodies.add(dp); () })
+      .write(batch, 0L)
+    assert(EsProbe.bodies.asScala.toSeq
+      .map(""""value":"(\w)"}""".r.findFirstMatchIn(_).get.group(1))
+      .sorted == Seq("a", "b", "d"))
+  }
+
   test("rabbitmq sink publishes JSON under the routing key (rabbitmq.clj:17-82)") {
     RabbitProbe.published.clear()
-    val sink = new Sinks.RabbitMqSink(
+    val sink = Sinks.rabbitMq(
       Sinks.RabbitMqConfig(routingKey = "riemann.events.test"),
       (cfg, rk, payload) => RabbitProbe.published.add(
         (s"${cfg.exchange}/$rk", payload)))

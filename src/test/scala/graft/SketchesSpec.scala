@@ -277,6 +277,10 @@ class SketchesSpec extends SparkSpec {
         .collect().head.toSeq ==
       Sketches.hdrQuantilesAudit(clean, Seq("k"), col("v"), Seq(500))
         .collect().head.toSeq)
+    // sub-bucket bits outside [1,16] fail fast, as in hdrSketch
+    for (sb <- Seq(0, 17))
+      intercept[IllegalArgumentException](Sketches.hdrQuantilesAudit(
+        clean, Seq("k"), col("v"), Seq(500), sb))
   }
 
   test("streamingQuantiles (chained aggs + bounded fold) == batch " +

@@ -84,7 +84,7 @@ class SourcesSinksSpec extends SparkSpec {
     GraphiteProbe.seen.clear()
     // transport stub: collects formatted lines into a JVM-static buffer
     // (the closure is serialized to tasks; a static holder survives that)
-    val sink = new Sinks.GraphiteSink(ls => ls.foreach(GraphiteProbe.seen.add))
+    val sink = Sinks.graphite(ls => ls.foreach(GraphiteProbe.seen.add))
     sink.write(events(E(id = 1, service = "a", metric = 1.5, time = 10L)), 0L)
     assert(GraphiteProbe.seen.size() == 1 && GraphiteProbe.seen.peek() == "a 1.5 10")
   }
