@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query seconds.
   *
@@ -55,7 +57,7 @@ object Bench {
     def loadavg(): Double =
       try java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
 
     // loadavg gate: the driver benches while doing other work, and a
     // contaminated run reads 1.3-2x slower than the same code idle
@@ -84,10 +86,10 @@ object Bench {
     // whichever query happens to run first
     Seq("events", "documents", "embeddings", "lineitem").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     try materialize(SparkEntry.queries("q_where")(spark, sfDir))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     // optional comma-separated subset for local profiling runs
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -155,7 +157,7 @@ object Bench {
       val runs = (1 to 3).map(_ => run())
       ev1.unpersist()
       runs.max
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
     // cross-round perf SENTINEL (r18 VERDICT #4): a pinned 10-query
     // subset — seven pure codegen'd narrow queries, one hash-exchange
@@ -269,7 +271,7 @@ object Bench {
     def save(path: String): Unit =
       try java.nio.file.Files.write(java.nio.file.Paths.get(path),
         (json + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     // non-default scale factors (e.g. the ScaleUp sf1 headroom probe)
     // get their own artifact names so they can never clobber the
     // driver-scale sf0.1 numbers the judge reads

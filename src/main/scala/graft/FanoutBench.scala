@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -132,7 +134,7 @@ object FanoutBench {
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.WRITE,
       java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

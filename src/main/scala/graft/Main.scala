@@ -405,20 +405,34 @@ object Main {
       timestamp_seconds(col("time_s")).as("time"), col("ttl"), col("tags"),
       col("attributes"))
 
+  /** The shuffle width of a session a command builds for itself: one
+    * partition per core (`defaultParallelism`, the core count under
+    * `local[*]`), unless GRAFT_SHUFFLE_PARTITIONS names one. Each
+    * partition of a stateful stage is its own RocksDB store, committed
+    * and snapshotted on every trigger, so this width sets the fixed
+    * per-trigger cost of the index stream. A query restarted over an
+    * existing checkpoint keeps the width it was created with: Spark
+    * restores it from the offset log. A caller's session is never
+    * passed here. */
+  private[graft] def perCoreShuffle(spark: SparkSession,
+      env: Map[String, String] = sys.env): SparkSession = {
+    spark.conf.set("spark.sql.shuffle.partitions",
+      env.getOrElse("GRAFT_SHUFFLE_PARTITIONS",
+        spark.sparkContext.defaultParallelism.toString))
+    spark
+  }
+
   /** Assemble the process from a config file: servers, sources, Core +
     * Loader, the served index, and the ws/sse query surfaces. The
     * returned handle owns everything [[main]] blocks on. */
   def start(path: Path, spark0: Option[SparkSession] = None): Running = {
-    val spark = spark0.getOrElse {
+    val spark = spark0.getOrElse(perCoreShuffle(
       SparkSession.builder()
         .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
         .appName("graft")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.extensions", "graft.query.RiemannExtensions")
-        .getOrCreate()
-    }
+        .getOrCreate()))
     // the index op runs on transformWithState, which needs a state
     // store with column families — RocksDB, the production store for
     // every stateful operator here (the HDFSBacked default cannot
@@ -753,14 +767,12 @@ object Main {
   def main(args: Array[String]): Unit = args.toList match {
     case "version" :: _ => println(Version)
     case "jobs" :: cfg :: _ =>
-      val spark = SparkSession.builder()
+      val spark = perCoreShuffle(SparkSession.builder()
         .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
         .appName("graft-jobs")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        .getOrCreate())
       val code =
         try { runJobsCmd(Paths.get(cfg), spark); 0 }
         catch {
@@ -772,14 +784,12 @@ object Main {
       sys.exit(code)
     case "test" :: cfg :: _ =>
       // bin.clj's "test" command: exit 0 iff every config test passes
-      val spark = SparkSession.builder()
+      val spark = perCoreShuffle(SparkSession.builder()
         .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
         .appName("graft-test")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "8"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        .getOrCreate())
       val (_, failedN) = runTests(Paths.get(cfg), spark)
       spark.stop()
       sys.exit(if (failedN == 0) 0 else 1)

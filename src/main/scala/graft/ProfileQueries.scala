@@ -8,6 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.util.control.NonFatal
+
 /** r21 optimization-round measurement harness (guide §1: measure first).
   *
   * For each selected query this main reports, on top of wall seconds:
@@ -91,10 +93,10 @@ object ProfileQueries {
     // warm-up (parquet footers, codegen, executor spin-up)
     Seq("events", "documents", "embeddings", "lineitem").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     try materialize(SparkEntry.queries("q_where")(spark, sfDir))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     println(f"${"query"}%-28s ${"sec"}%7s ${"jobs"}%5s ${"stages"}%7s " +
       f"${"tasks"}%6s ${"taskSec"}%8s")

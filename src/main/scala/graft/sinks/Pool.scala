@@ -182,8 +182,8 @@ object Pool {
     pools.remove(id).foreach(_.shutdown())
 
   /** A pooled line transport, pluggable wherever sinks take
-    * `Iterator[String] => Unit` ([[Sinks.GraphiteSink]],
-    * [[Metrics.InfluxDbSink]], …). Serializable recipe, per-JVM pool:
+    * `Iterator[String] => Unit` ([[Sinks.graphite]],
+    * [[Metrics.influxDb]], …). Serializable recipe, per-JVM pool:
     * each partition write claims a connection (claim timeout ≈
     * graphite.clj's 0.1 s default), sends, releases; a send failure
     * invalidates the connection and retries on a freshly claimed one up

@@ -93,6 +93,24 @@ class MainSpec extends SparkSpec {
     } finally sock.close()
   }
 
+  /** One riemann-wire query (a Msg{query} on the ingest socket) and its
+    * decoded reply: (ok, error, events). */
+  private def wireQueryOn(port: Int, q: String): (Option[Boolean],
+      Option[String], Seq[RiemannProtobuf.PEvent]) = {
+    val sock = connect(port)
+    sock.setSoTimeout(20000)
+    try {
+      val out = new DataOutputStream(sock.getOutputStream)
+      val in = new DataInputStream(sock.getInputStream)
+      out.write(RiemannProtobuf.frame(RiemannProtobuf.encodeQueryMsg(q)))
+      out.flush()
+      val len = in.readInt()
+      val reply = new Array[Byte](len)
+      in.readFully(reply)
+      RiemannProtobuf.decodeReply(reply)
+    } finally sock.close()
+  }
+
   test("config file -> Main.start -> TCP ingest -> ws index query; " +
     "reload mid-traffic preserves index state and acked frames") {
     val tcpPort = freePort()
@@ -144,21 +162,7 @@ class MainSpec extends SparkSpec {
 
       // the riemann-wire query path (transport.clj:175-181): a
       // Msg{query} on the INGEST socket answers from the same index
-      def wireQuery(q: String): (Option[Boolean], Option[String],
-          Seq[RiemannProtobuf.PEvent]) = {
-        val sock = connect(tcpPort)
-        sock.setSoTimeout(20000)
-        try {
-          val out = new DataOutputStream(sock.getOutputStream)
-          val in = new DataInputStream(sock.getInputStream)
-          out.write(RiemannProtobuf.frame(RiemannProtobuf.encodeQueryMsg(q)))
-          out.flush()
-          val len = in.readInt()
-          val reply = new Array[Byte](len)
-          in.readFully(reply)
-          RiemannProtobuf.decodeReply(reply)
-        } finally sock.close()
-      }
+      def wireQuery(q: String) = wireQueryOn(tcpPort, q)
       val (ok, err, evs) = wireQuery("""state = "critical"""")
       assert(ok.contains(true) && err.isEmpty, s"reply: $ok $err")
       assert(evs.map(_.host) == Seq("web01"), s"events: $evs")
@@ -664,6 +668,96 @@ class MainSpec extends SparkSpec {
     val out = spark.read.parquet(outPath)
     assert(out.count() == results.head._2)
     assert(out.columns.contains("shard"))
+  }
+
+  test("sessions the packaged commands build get one shuffle partition " +
+    "per core unless GRAFT_SHUFFLE_PARTITIONS names a width; a passed-in " +
+    "session keeps its own") {
+    val key = "spark.sql.shuffle.partitions"
+    val own = spark.newSession()
+    own.conf.set(key, "3")
+    Main.perCoreShuffle(own, Map.empty)
+    assert(own.conf.get(key) == spark.sparkContext.defaultParallelism.toString)
+    Main.perCoreShuffle(own, Map("GRAFT_SHUFFLE_PARTITIONS" -> "7"))
+    assert(own.conf.get(key) == "7")
+
+    val passed = spark.newSession()
+    passed.conf.set(key, "3")
+    val cfg = Files.createTempDirectory("graft-main-width").resolve("g.json")
+    Files.writeString(cfg, """{"streams": []}""")
+    val running = Main.start(cfg, Some(passed))
+    try assert(passed.conf.get(key) == "3")
+    finally running.stop()
+  }
+
+  test("a restart over a checkpoint made at 32 shuffle partitions keeps " +
+    "32 on a session set to 4: every earlier key is still served from " +
+    "its recovered state over the wire") {
+    val key = "spark.sql.shuffle.partitions"
+    val prevWidth = spark.conf.get(key)
+    val tcpPort = freePort()
+    val dir = Files.createTempDirectory("graft-main-restart")
+    val cfg = dir.resolve("graft.json")
+    // an hour of watermark delay, so the older copies sent after the
+    // restart are not late: they reach the recovered state and lose
+    Files.writeString(cfg,
+      s"""{"servers": {"tcp": {"host": "127.0.0.1", "port": $tcpPort}},
+         | "streams": [
+         |   {"name": "index", "source": "tcp",
+         |    "pipeline": [{"op": "index", "watermark": "1 hour"}],
+         |    "sink": {"kind": "index", "outputMode": "update",
+         |             "checkpoint": "${dir.resolve("ckpt")}"}}
+         |]}""".stripMargin)
+    val hosts = (1 to 12).map(i => s"web$i")
+    val t = 1706000000L
+    def ev(host: String, metric: Double, time: Long) =
+      PEvent(host, "cpu", "ok", null, Some(metric), Nil, Some(time),
+        Some(86400.0), Map.empty)
+    def awaitKeys(running: Main.Running): Unit = {
+      val deadline = System.currentTimeMillis() + 60000
+      while (running.index.size < hosts.size &&
+          System.currentTimeMillis() < deadline) {
+        running.core.activeQueries.values.foreach(_.processAllAvailable())
+        Thread.sleep(100)
+      }
+      assert(running.index.size == hosts.size,
+        s"index has ${running.index.size} keys")
+    }
+    try {
+      spark.conf.set(key, "32")
+      val first = Main.start(cfg, Some(spark))
+      try {
+        sendEvents(tcpPort, hosts.zipWithIndex.map { case (h, i) =>
+          ev(h, i.toDouble, t) })
+        awaitKeys(first)
+      } finally first.stop()
+
+      spark.conf.set(key, "4")
+      val second = Main.start(cfg, Some(spark))
+      try {
+        assert(spark.conf.get(key) == "4")
+        // an older copy of every key: latest-wins against the state
+        // recovered from the 32-partition checkpoint re-emits the
+        // pre-restart event, so the restarted served index holds it
+        sendEvents(tcpPort, hosts.map(h => ev(h, -1.0, t - 60)))
+        awaitKeys(second)
+        hosts.zipWithIndex.foreach { case (h, i) =>
+          val (ok, err, evs) =
+            wireQueryOn(tcpPort, s"""host = "$h" and service = "cpu"""")
+          assert(ok.contains(true) && err.isEmpty, s"reply: $ok $err")
+          assert(evs.map(_.metric) == Seq(Some(i.toDouble)), s"$h: $evs")
+        }
+        val q = second.core.activeQueries("index")
+        val deadline = System.currentTimeMillis() + 30000
+        while ((q.lastProgress == null ||
+            q.lastProgress.stateOperators.isEmpty) &&
+            System.currentTimeMillis() < deadline) Thread.sleep(100)
+        assert(q.lastProgress.stateOperators(0).numShufflePartitions == 32)
+      } finally second.stop()
+    } finally {
+      spark.conf.set(key, prevWidth)
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("version command prints and exits") {
