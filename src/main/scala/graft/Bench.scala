@@ -1,37 +1,74 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import scala.util.control.NonFatal
 
-/** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
-  * prints one JSON line with per-query seconds.
+/** The one measurement entry point. With no argument it runs every
+  * registered query at SPARK_GRAFT_SF_DIR and prints one JSON line with
+  * per-query seconds.
   *
   * Each query is forced through a full materialization of every output
   * row AND column (xxhash64 over the row struct, then a sum) — a bare
   * `count()` would let Catalyst prune projections and bench a no-op.
-  * The checksum also doubles as a cross-run stability probe. */
+  * The checksum also doubles as a cross-run stability probe.
+  *
+  * Subcommands (`runMain graft.Bench <name>`): `profile` (jobs, stages,
+  * tasks and plan dumps per query), `fanout` (the fan-out tee's cost
+  * curve), `static-cache` (the crosscorpus static-side cache A/B),
+  * `zone` (the files landing-zone ceiling), `ceiling` (per-family soak
+  * ceilings) and `soak` (the long-haul state soak). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    command(args.toSeq) match {
+      case Right(run) => run(sfDir)
+      case Left(usage) => System.err.println(usage); sys.exit(2)
+    }
+  }
+
+  // each run takes the scale-factor directory; only the query runs read it
+  private val subcommands: Seq[(String, String => Unit)] = Seq(
+    "profile" -> profileMain _,
+    "fanout" -> (_ => BenchStreams.fanout()),
+    "static-cache" -> (_ => BenchStreams.staticCache()),
+    "zone" -> (_ => BenchStreams.zone()),
+    "ceiling" -> (_ => BenchSoak.ceiling()),
+    "soak" -> (_ => BenchSoak.soak()))
+
+  /** The run `args` name: the suite when empty, else one subcommand;
+    * `Left(usage)` for anything else. */
+  def command(args: Seq[String]): Either[String, String => Unit] = {
+    val usage = "usage: graft.Bench [" +
+      subcommands.map(_._1).mkString("|") + "]" +
+      args.headOption.fold("")(a => s" (got '$a')")
+    args match {
+      case Seq() => Right(suite _)
+      case Seq(name) => subcommands.toMap.get(name).toRight(usage)
+      case _ => Left(usage)
+    }
+  }
+
+  /** The session the suite and `profile` measure on. */
+  private def suiteSession(): SparkSession = LocalSession(
     // r17 AQE-posture sweep hook: override the shuffle partition count
     // (e.g. 200 vs 2000) to prove plans and latencies survive AQE
     // coalescing away a mis-sized exchange config
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.query.RiemannExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .map("spark.sql.shuffle.partitions" -> _).toSeq ++ Seq(
+      "spark.sql.extensions" -> "graft.query.RiemannExtensions",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // defaults in Spark 4, pinned as intent: runtime re-planning and
       // skew-join splitting are part of the 100 TB design
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // Cached-plan AQE is a two-sided trade the r17 sweep measured
       // BOTH ways: with shuffle.partitions mis-sized at 2000, leaving
       // this false materializes caches at full width (q_ann_recall /
@@ -41,23 +78,55 @@ object Bench {
       // Default false = the well-sized posture this harness ships
       // (partitions = cores); flip via env when sweeping mis-sized
       // configs. BASELINE.md "AQE posture audit" has the numbers.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
+        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false")): _*)
 
-    def materialize(df: DataFrame): Unit = {
-      // bit_xor: order-independent, overflow-free under ANSI mode
-      val h = xxhash64(struct(df.columns.toIndexedSeq.map(col): _*))
-      df.select(h.as("h")).agg(expr("bit_xor(h)")).collect()
-      ()
+  private def materialize(df: DataFrame): Unit = {
+    // bit_xor: order-independent, overflow-free under ANSI mode
+    val h = xxhash64(struct(df.columns.toIndexedSeq.map(col): _*))
+    df.select(h.as("h")).agg(expr("bit_xor(h)")).collect()
+    ()
+  }
+
+  // warm-up: touch every input table and run one tiny end-to-end query
+  // so parquet footers, codegen, and executor spin-up don't bill to
+  // whichever query happens to run first
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    Seq("events", "documents", "embeddings", "lineitem").foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case NonFatal(_) => () }
     }
+    try materialize(SparkEntry.queries("q_where")(spark, sfDir))
+    catch { case NonFatal(_) => () }
+  }
 
-    def loadavg(): Double =
-      try java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-      catch { case NonFatal(_) => -1.0 }
+  // optional comma-separated subset for local profiling runs
+  private def only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).toSet)
+
+  private def selected(only: Option[Set[String]]): Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+
+  /** Wall seconds to build and materialize query `name`, -1 when it
+    * fails; its per-query caches are released outside the timing. */
+  private def timeOne(spark: SparkSession, sfDir: String,
+      name: String): Double = {
+    val t0 = System.nanoTime()
+    val ok = try { materialize(SparkEntry.queries(name)(spark, sfDir)); true }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+    val dt = (System.nanoTime() - t0) / 1e9
+    spark.catalog.clearCache() // release per-query caches (outside timing)
+    if (ok) dt else -1.0
+  }
+
+  private def loadavg(): Double =
+    try java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .getSystemLoadAverage
+    catch { case NonFatal(_) => -1.0 }
+
+  private def suite(sfDir: String): Unit = {
+    val spark = suiteSession()
 
     // loadavg gate: the driver benches while doing other work, and a
     // contaminated run reads 1.3-2x slower than the same code idle
@@ -81,31 +150,9 @@ object Bench {
       gateWaitedS += 15
     }
 
-    // warm-up: touch every input table and run one tiny end-to-end query
-    // so parquet footers, codegen, and executor spin-up don't bill to
-    // whichever query happens to run first
-    Seq("events", "documents", "embeddings", "lineitem").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case NonFatal(_) => () }
-    }
-    try materialize(SparkEntry.queries("q_where")(spark, sfDir))
-    catch { case NonFatal(_) => () }
-
-    // optional comma-separated subset for local profiling runs
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-
-    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { materialize(fn(spark, sfDir)); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // release per-query caches (outside timing)
-      if (ok) dt else -1.0
-    }
+    warmUp(spark, sfDir)
+    val subset = only
+    val names = selected(subset)
     val loadAtStart = loadavg()
     // N full passes (default 2), keep the per-query minimum: a
     // transiently loaded machine (the driver benches while doing other
@@ -115,11 +162,9 @@ object Bench {
     // query twice — r10 measured 4-6x outliers on one query per run
     // surviving min-of-2 — so baseline-quality runs use PASSES=3.
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(2)
-    val allPasses = (1 to passes).map { _ =>
-      selected.map { case (n, f) => n -> timeOne(n, f) }
-    }
-    val results = selected.map(_._1).zipWithIndex.map { case (n, i) =>
-      val ts = allPasses.map(_(i)._2).filter(_ >= 0)
+    val allPasses = (1 to passes).map(_ => names.map(timeOne(spark, sfDir, _)))
+    val results = names.zipWithIndex.map { case (n, i) =>
+      val ts = allPasses.map(_(i)).filter(_ >= 0)
       n -> (if (ts.isEmpty) -1.0 else ts.min)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -170,11 +215,9 @@ object Bench {
     val sentinelNames = Seq("q_where", "q_over_under", "q_tagged_any",
       "q_match", "q_smap", "q_adjust", "q_default",
       "q_fixed_time_window", "q_percentiles", "q_moving_event_window")
-    val sentinel = sentinelNames.flatMap { n =>
-      SparkEntry.queries.get(n).map { f =>
-        val ts = (1 to 5).map(_ => timeOne(n, f)).filter(_ >= 0)
-        n -> (if (ts.isEmpty) -1.0 else ts.min)
-      }
+    val sentinel = sentinelNames.filter(SparkEntry.queries.contains).map { n =>
+      val ts = (1 to 5).map(_ => timeOne(spark, sfDir, n)).filter(_ >= 0)
+      n -> (if (ts.isEmpty) -1.0 else ts.min)
     }
     val sentinelJson = sentinel
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -239,7 +282,7 @@ object Bench {
       }
       clientLoop(500L * 1000 * 1000, 0) // warm-up: JIT the closure paths
       (1 to 3).map(_ => run()).max
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] wire probe ($threads cl) failed: " +
         e.getMessage)
       -1.0
@@ -266,8 +309,8 @@ object Bench {
     val nQueries = results.count(_._2 >= 0)
     val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sentinel_total":$sentinelTotal%.3f,"n_queries":$nQueries,"events_per_sec":$throughput%.0f,"wire_qps":$wireQps%.0f,"loadavg_start":$loadAtStart%.2f,"queries_file":"BENCH_parsed.json","sf":"$sfDir"}"""
     println(compact)
-    // sbt's logger prefixes stdout with "[info] "; also drop a clean copy
-    // on disk for anything that wants to parse the line verbatim
+    // a clean copy on disk for anything that wants to parse the line
+    // verbatim without scraping stdout
     def save(path: String): Unit =
       try java.nio.file.Files.write(java.nio.file.Paths.get(path),
         (json + "\n").getBytes("UTF-8"))
@@ -287,13 +330,179 @@ object Bench {
     // runs (SPARK_GRAFT_ONLY) must not clobber it — a partial artifact
     // would masquerade as the full measurement (bench_last keeps the
     // subset result for local spot-checks)
-    if (only.isEmpty) save(s"BENCH_parsed$sfTag.json")
+    if (subset.isEmpty) save(s"BENCH_parsed$sfTag.json")
     // "idle" = the machine had < half a core of competing load per 8
     // cores when the run began (loadavg is the only portable signal);
     // subset runs (SPARK_GRAFT_ONLY) never qualify — a partial
     // artifact would masquerade as a full idle measurement
-    if (only.isEmpty && loadAtStart >= 0 && loadAtStart < cpus.toDouble / 16.0)
+    if (subset.isEmpty && loadAtStart >= 0 &&
+        loadAtStart < LocalSession.cpus / 16.0)
       save(s"bench_idle$sfTag.json")
     spark.stop()
+  }
+
+  /** One `profile` row: the faster pass's wall seconds (-1 when both
+    * failed) with that pass's jobs, stages, tasks and summed task
+    * seconds. */
+  final case class QueryProfile(name: String, sec: Double, jobs: Int,
+      stages: Int, tasks: Int, taskSec: Double)
+
+  /** r21 optimization-round measurement (guide §1: measure first).
+    *
+    * For each named query this reports, on top of wall seconds: the
+    * number of Spark JOBS the query ran (every job is a full scheduler
+    * round trip — cache-materialization counts, collects, broadcast
+    * builds), the number of stages and tasks, and the summed task time.
+    * At sf0.1 the inputs are tiny, so a query's wall clock is dominated
+    * by sequential job barriers — exactly the passes that each become a
+    * full corpus scan at 100 TB. Job count IS the portable measurement.
+    *
+    * With `plans = Some((dir, suffix))` it also writes each query's
+    * `.explain("formatted")` to `<dir>/<query><suffix>.txt` (the
+    * judge-checkable plan evidence). SPARK_GRAFT_JOBLOG=1 prints every
+    * job and stage as it ends. Never writes the bench artifacts. */
+  def profile(spark: SparkSession, sfDir: String, names: Seq[String],
+      plans: Option[(Path, String)]): Seq[QueryProfile] = {
+    val jobs = new AtomicInteger(0)
+    val stages = new AtomicInteger(0)
+    val tasks = new AtomicInteger(0)
+    val taskTimeMs = new AtomicLong(0L)
+    val jobLog = sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")
+    val jobStartNs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        jobStartNs.put(js.jobId, System.nanoTime())
+        ()
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
+        if (jobLog) Option(jobStartNs.get(je.jobId)).foreach { t0 =>
+          println(f"[job] ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+        }
+        ()
+      }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(sc.stageInfo.numTasks)
+        taskTimeMs.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
+        if (jobLog) println(f"[stage] ${sc.stageInfo.stageId}%4d " +
+          f"${sc.stageInfo.numTasks}%4d tasks " +
+          f"${sc.stageInfo.taskMetrics.executorRunTime / 1000.0}%7.2f taskSec " +
+          s"${sc.stageInfo.name.takeWhile(_ != '\n').take(80)}")
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      println(f"${"query"}%-28s ${"sec"}%7s ${"jobs"}%5s ${"stages"}%7s " +
+        f"${"tasks"}%6s ${"taskSec"}%8s")
+      names.map { name =>
+        spark.sparkContext.setJobDescription(name)
+        // two passes, report the min pass (bench methodology) but keep
+        // the per-pass job counts (identical across passes by construction)
+        val runs = (1 to 2).map { _ =>
+          jobs.set(0); stages.set(0); tasks.set(0); taskTimeMs.set(0L)
+          val dt = timeOne(spark, sfDir, name)
+          // listener events arrive asynchronously: count all of them
+          org.apache.spark.sql.graft.SessionBridge.awaitListeners(spark)
+          QueryProfile(name, dt, jobs.get(), stages.get(), tasks.get(),
+            taskTimeMs.get() / 1000.0)
+        }
+        val best = runs.minBy(r => if (r.sec < 0) Double.MaxValue else r.sec)
+        println(f"$name%-28s ${best.sec}%7.3f ${best.jobs}%5d ${best.stages}%7d " +
+          f"${best.tasks}%6d ${best.taskSec}%8.2f")
+        plans.foreach { case (dir, suffix) =>
+          writePlan(spark, dir, s"$name$suffix")(SparkEntry.queries(name)(spark, sfDir))
+        }
+        spark.sparkContext.setJobDescription(null)
+        best
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Writes `df`'s formatted physical plan to `<dir>/<file>.txt`. A
+    * failure is reported, never fatal; the caches building `df` pinned
+    * are released either way. */
+  private def writePlan(spark: SparkSession, dir: Path, file: String)(
+      df: => DataFrame): Unit =
+    try {
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.createDirectories(dir)
+      Files.write(dir.resolve(s"$file.txt"), plan.getBytes("UTF-8"))
+      ()
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $file plan dump failed: ${e.getMessage}")
+    } finally spark.catalog.clearCache()
+
+  /** `profile`: env SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY
+    * (comma-separated query subset), SPARK_GRAFT_PLAN_TAG (subdir under
+    * plans/, e.g. "r21"; no plans are written without it) and
+    * SPARK_GRAFT_PLAN_SUFFIX ("_before"/"_after"). */
+  private def profileMain(sfDir: String): Unit = {
+    val spark = suiteSession()
+    val plans = sys.env.get("SPARK_GRAFT_PLAN_TAG").filter(_.nonEmpty).map(tag =>
+      (Paths.get("plans", tag), sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")))
+    warmUp(spark, sfDir)
+    profile(spark, sfDir, selected(only), plans)
+    plans.foreach { case (dir, suffix) =>
+      // r21 plan evidence for the EAGER ANN entry points: their
+      // declared-query plans collapse to a LocalTableScan (the result is
+      // computed during query construction and handed back as a local
+      // relation), so the interesting physical plans live in the lazy
+      // `*Plan` variants — the evidence for the r21 barrier-reduction
+      // claims
+      import graft.pipeline.{Dedup, Similarity}
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val ids = Seq(0L, 1L, 2L, 3L, 4L)
+      def dump(name: String)(df: => DataFrame): Unit =
+        writePlan(spark, dir, s"$name$suffix")(df)
+      dump("ann_brute_internal")(Similarity.bruteForceTopKPlan(emb, ids, 10)._1)
+      dump("ann_ivf_internal")(Similarity.ivfTopKPlan(emb, ids, 10, 3)._1)
+      dump("ann_pq_internal")(Similarity.pqTopKPlan(emb, ids, 10, 8)._1)
+      dump("ann_ivfpq_internal")(
+        Similarity.ivfPqTopKPlan(emb, ids, 10, 3, 8, 16, 1)._1)
+      dump("ann_recall_internal")(Similarity.annRecallPlan(emb, ids, 10, 8, 3)._1)
+      // r22: the q_semantic_dedup / q_embedding_neardups pair pipeline —
+      // the declared queries collapse to a LocalTableScan (the components
+      // are computed during construction), so the exact-cosine verification
+      // plan lives here
+      dump("semantic_pairs_internal")(Dedup.embeddingNearDups(emb, 0.4))
+    }
+    spark.stop()
+  }
+
+  /** Appends one JSON line to `path`, creating it if needed. */
+  private[graft] def appendLine(path: Path, line: String): Unit = {
+    Files.writeString(path, line + "\n",
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    ()
+  }
+
+  /** The ×2 ramp `zone` and `ceiling` share: offer `start`, then double
+    * the rate while `attempt(rate, i)` (i = attempts so far that
+    * sustained) reports it sustained, never past `max`. `attempt`
+    * returns (sustained, measured rate, the row's own fields); each
+    * attempt appends `{<label>,"rate":R,<fields>,"sustained":S}` to
+    * `out`, and a summary row names the last sustained rate, its
+    * measured rate under `measuredKey`, and the first unsustained rate
+    * (-1 when `max` ended the ramp). */
+  private[graft] def ramp(out: Path, label: String, measuredKey: String,
+      start: Int, max: Int)(
+      attempt: (Int, Int) => (Boolean, Double, String)): Unit = {
+    var rate = start
+    var sustained = 0
+    var lastOkRate = 0
+    var lastOk = 0.0
+    var done = false
+    while (!done && rate <= max) {
+      val (ok, measured, fields) = attempt(rate, sustained)
+      appendLine(out, s"""{$label,"rate":$rate,$fields,"sustained":$ok}""")
+      if (ok) { lastOkRate = rate; lastOk = measured; rate *= 2; sustained += 1 }
+      else done = true
+    }
+    appendLine(out, s"""{$label,"max_sustained_rate":$lastOkRate,""" +
+      f""""$measuredKey":$lastOk%.0f,""" +
+      s""""first_unsustained_rate":${if (done) rate else -1}}""")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes a 10x scale-up of an existing testdata directory (the
@@ -64,15 +64,7 @@ object ScaleUp {
       args.lift(3).map(_.split(",").map(_.trim).toSet)
     val skewPct = args.lift(4).map(_.toInt).getOrElse(0)
     require(skewPct >= 0 && skewPct < 100, s"skewPct in [0,100): $skewPct")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     def maxOf(df: DataFrame, k: String): Long =
       df.agg(max(col(k))).head.getLong(0)
@@ -149,15 +141,7 @@ object ScaleUp {
     * text built by a sequence/transform pipeline), so nothing
     * megabyte-sized ever sits in a driver literal. */
   private def docmix(src: String, out: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("spark.sql.legacy.parquet.nanosAsLong" -> "true")
     import spark.implicits._
 
     val base = spark.read.parquet(s"$src/documents.parquet")

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual end-to-end smoke: runs the driver's `entry` contract exactly
   * as the driver would (fresh session, no special confs) and prints the
   * result. `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.query.RiemannExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("spark.sql.extensions" -> "graft.query.RiemannExtensions")
     val df = SparkEntry.entry(spark)
     df.show(5, truncate = false)
     println(s"entry rows = ${df.count()}")

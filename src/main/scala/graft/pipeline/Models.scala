@@ -408,8 +408,7 @@ object Models {
     val cmd = args.lift(0).getOrElse("list")
     val root = args.lift(1).getOrElse(
       new Path(defaultRoot("x")).getParent.toString)
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession()
     try cmd match {
       case "list" =>
         val arts = listArtifacts(spark, root)

@@ -1,11 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic
 
-/** Bridge into the classic session-cloning internals (`private[sql]`,
-  * sessionStateBuilder/cloneSession): evaluate ONE DataFrame under a
-  * scoped SQL-conf override without mutating the caller's session.
+/** Bridge into Spark's `private[spark]` internals: the classic
+  * session-cloning path (sessionStateBuilder/cloneSession), to evaluate
+  * ONE DataFrame under a scoped SQL-conf override without mutating the
+  * caller's session, and the listener bus.
   *
   * r22 (r21 VERDICT "what's wrong" #4): [[graft.pipeline.Dedup]]'s
   * union-find probe used to set `spark.sql.limit.initialNumPartitions`
@@ -15,35 +16,19 @@ import org.apache.spark.sql.classic
   * sharing the SparkContext, shared state and cache manager, so the
   * probe's plan sees the override and nobody else ever can. */
 object SessionBridge {
-  // one clone per (base session, conf override) — cloneSession builds a
-  // full SessionState (analyzer/optimizer rule stacks), a real
-  // driver-side cost per call; the override sets are tiny constants, so
-  // the clone is reusable for the base session's lifetime. Weak keys:
-  // a stopped base session must not be pinned by its probe clone.
-  private val clones =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[classic.SparkSession,
-        scala.collection.mutable.Map[Seq[(String, String)],
-          classic.SparkSession]]())
-
+  // one clone per call: a cached clone would pin its base session
+  // (through parentSessionState) and keep the conf it was cloned with,
+  // so a conf the caller sets later would never reach the probe
   def collectWithConf(df: DataFrame,
       kvs: (String, String)*): Array[org.apache.spark.sql.Row] = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val perConf = clones.synchronized {
-      var m = clones.get(session)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        clones.put(session, m)
-      }
-      m
-    }
-    val cloned = perConf.synchronized {
-      perConf.getOrElseUpdate(kvs.toSeq, {
-        val c = session.cloneSession()
-        kvs.foreach { case (k, v) => c.conf.set(k, v) }
-        c
-      })
-    }
+    val cloned = df.sparkSession.asInstanceOf[classic.SparkSession]
+      .cloneSession()
+    kvs.foreach { case (k, v) => cloned.conf.set(k, v) }
     classic.Dataset.ofRows(cloned, df.queryExecution.logical).collect()
   }
+
+  /** Blocks until every event posted so far has reached the listeners,
+    * so counts a listener keeps are complete when read. */
+  def awaitListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

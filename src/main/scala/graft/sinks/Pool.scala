@@ -125,15 +125,9 @@ object Pool {
       * invalidate (close + background regen) and rethrow. */
     def withResource[T](timeoutMs: Long)(f: A => T): T = {
       val a = claim(timeoutMs)
-      try {
-        val r = f(a)
-        release(a)
-        r
-      } catch {
-        case e: Throwable =>
-          invalidate(a)
-          throw e
-      }
+      var ok = false
+      try { val r = f(a); release(a); ok = true; r }
+      finally if (!ok) invalidate(a)
     }
 
     private def drainAndClose(): Unit = {

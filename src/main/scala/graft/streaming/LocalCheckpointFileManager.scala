@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * with plain java.nio I/O and delegates every other scheme to Spark's
   * default [[FileContextBasedCheckpointFileManager]].
   *
-  * Why it exists (r19 VERDICT #2c, measured with FanoutProfile): on
+  * Why it exists (r19 VERDICT #2c, measured with `Bench fanout`): on
   * this engine every micro-batch pays three-plus checkpoint metadata
   * writes — the offset WAL before the batch, the commit log after,
   * and (for spool/file subscribers) the file-source seen-files log.

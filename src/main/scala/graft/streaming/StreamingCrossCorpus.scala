@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * WHOLE reference corpus per trigger. The config surface persists it
   * automatically ([[graft.config.ConfigFile]] `cachedStatic` — 2.5 s →
   * 0.5 s per batch at a 50 K-doc reference in the r18 A/B,
-  * StaticCacheBench); direct callers should `.persist()` it. */
+  * `Bench static-cache`); direct callers should `.persist()` it. */
 object StreamingCrossCorpus {
 
   def matches(docs: DataFrame, refBanded: DataFrame,

@@ -530,6 +530,28 @@ class PipelineSpec extends SparkSpec {
     assert(Seq(20L, 21L, 30L, 31L, 50L).forall(fast(_) == 20L))
   }
 
+  test("SessionBridge probes run under the base session's conf as it is " +
+    "at probe time, plus the override") {
+    import org.apache.spark.sql.graft.SessionBridge
+    val key = "spark.sql.caseSensitive"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      // `V` resolves against `v` only while resolution ignores case;
+      // the probe re-analyzes the plan in its own session
+      val df = spark.range(3).toDF("v").select("V")
+      val probe = () => SessionBridge.collectWithConf(df,
+        "spark.sql.limit.initialNumPartitions" -> "100000")
+      assert(probe().length == 3)
+      spark.conf.set(key, "true")
+      // a probe session kept from the first call would still ignore case
+      intercept[org.apache.spark.sql.AnalysisException](probe())
+      // the override never reaches the base session
+      assert(!spark.conf.getOption("spark.sql.limit.initialNumPartitions")
+        .contains("100000"))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("minhash signature is identical through the shared-shingle path") {
     val d = docs((1L, "a b c d e f"), (2L, "x y z w v u"))
     val direct = Dedup.minhashSignature(d, k = 4, w = 3)
