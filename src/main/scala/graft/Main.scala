@@ -1,12 +1,16 @@
 package graft
 
-import java.nio.file.{Path, Paths}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
+  DataOutputStream}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.CountDownLatch
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -14,7 +18,7 @@ import org.json4s.jackson.JsonMethods
 import graft.config.ConfigFile
 import graft.sinks.{Sinks, SseServer, WsServer}
 import graft.sources.Sources
-import graft.streaming.SEvent
+import graft.streaming.{IndexProcessor, SEvent, WireEvent, WireIndexProcessor}
 
 /** The deployable process entry point — the `bin.clj` equivalent
   * (reference src/riemann/bin.clj:135-167 `-main`): load a config
@@ -68,98 +72,213 @@ object Main {
   val Version = "riemann-capability engine (Spark) 0.11"
 
   /** The served riemann index: latest event per (host, service),
-    * updated from the `index`-sink stream (IndexProcessor upserts +
-    * `state="expired"` tombstones), answering snapshot dumps and query
-    * filters for the ws/sse servers.
+    * answering snapshot dumps and query filters for the ws/sse servers
+    * and the wire handler, and pushing every change to the "index"
+    * pubsub channel.
     *
     * Driver-side by design, like the reference's index — an in-memory
-    * map on the serving node (index.clj:58-126 nbhm-index). The
-    * per-batch collect is bounded by the keys the batch UPDATED (the
-    * index stream emits latest-per-key, never raw volume), and the map
-    * itself by index cardinality — the same RAM contract the reference
-    * runs under. */
-  final class ServedIndex(spark: SparkSession) {
-    private val state = TrieMap[(String, String), graft.streaming.WireEvent]()
-    // whether the feeding stream ever carried tags/attributes columns:
+    * map on the serving node (index.clj:58-126 nbhm-index), bounded by
+    * index cardinality, the same RAM contract the reference runs under.
+    *
+    * For a stream whose pipeline ends in the `index` op, this map IS
+    * the index state ([[sinkFor]] with the op): no shuffle, no keyed
+    * state store. Each batch is reduced on the executors to its latest
+    * event per key and partition, so the collect is bounded by the
+    * keys the batch updated; the driver merges those rows by
+    * compare-and-set on [[WireIndexProcessor.latestWins]], drops late
+    * rows by the feed's watermark, reaps TTL-lapsed entries once the
+    * watermark advances, and logs the changed keys under the stream's
+    * checkpoint so a restarted process serves them at once (see
+    * [[ServedIndex.Log]]). [[WireIndexProcessor]] keeps the same
+    * contract for streams that do not feed this map and is its parity
+    * oracle. A stream with an `index` sink and any other pipeline
+    * upserts its rows as they come (`state="expired"` deletes). */
+  final class ServedIndex(spark: SparkSession,
+      pubsub: Sinks.Pubsub = new Sinks.Pubsub) {
+    import ServedIndex._
+
+    private val state = TrieMap[(String, String), Held]()
+    // whether a feeding stream ever carried tags/attributes columns:
     // dumps must render the same JSON shape the per-batch pushes use
     // (6-column feeds push without tags/attributes keys)
     @volatile private var wireShape = false
 
-    val sink: Sinks.EventSink = new Sinks.EventSink {
-      override def write(batch: DataFrame, batchId: Long): Unit = {
-        val spark0 = batch.sparkSession
-        import spark0.implicits._
-        // the whole-event index stream carries tags and attributes
-        // (the reference index stores whole events); a plain SEvent
-        // feed stores empty ones
-        val tagsExpr =
-          if (batch.columns.contains("tags"))
-            "coalesce(tags, array())" else "array()"
-        val attrsExpr =
-          if (batch.columns.contains("attributes"))
-            "coalesce(attributes, cast(map() as map<string,string>))"
-          else "cast(map() as map<string,string>)"
-        if (batch.columns.contains("tags") ||
-          batch.columns.contains("attributes")) wireShape = true
-        batch.selectExpr("host", "service", "state", "metric", "time",
-            "ttl", s"$tagsExpr AS tags", s"$attrsExpr AS attributes")
-          .as[graft.streaming.WireEvent].collect()
-          .foreach { e =>
-            if (e.state == "expired") state.remove((e.host, e.service))
-            else state((e.host, e.service)) = e
-          }
+    /** The sink of an `index`-kind stream: a [[Feed]] that does the
+      * `index` op's work when the pipeline's trailing op was absorbed,
+      * else a plain upsert of every row. */
+    def sinkFor(stream: String, spec: JObject,
+        op: Option[JObject]): Sinks.EventSink = op match {
+      case Some(o) =>
+        val ckpt = (spec \ "checkpoint") match {
+          case JString(d) => Some(Paths.get(d))
+          case _ => None
+        }
+        new Feed(stream, delayMs(ConfigFile.indexWatermark(o)), ckpt)
+      case None => (batch: DataFrame, batchId: Long) => {
+        val wire = ConfigFile.carriesWholeEvents(batch)
+        if (wire) wireShape = true
+        val rows = ConfigFile.wireEvents(batch).collect().toSeq
+        rows.foreach(putTagged)
+        publish(batch.sparkSession, rows, wire, batchId)
       }
     }
+
+    /** The pushes of one batch, as a local relation Catalyst folds
+      * without a job — built only when someone subscribes. */
+    private def publish(session: SparkSession, rows: Seq[WireEvent],
+        wire: Boolean, batchId: Long): Unit =
+      if (pubsub.subscribed("index")) {
+        val df =
+          if (wire) session.createDataset(rows)(Encoders.product[WireEvent]).toDF()
+          else session.createDataset(rows.map(_.toSEvent))(
+            Encoders.product[SEvent]).toDF()
+        pubsub.publish("index", df, batchId)
+      }
+
+    /** Compare-and-set `e` from `feed` into the map: the winner by
+      * [[WireIndexProcessor.latestWins]], and whether `e` replaced
+      * what was there. */
+    @scala.annotation.tailrec
+    private def merge(e: WireEvent, feed: String): (WireEvent, Boolean) = {
+      val k = (e.host, e.service)
+      state.get(k) match {
+        case None =>
+          if (state.putIfAbsent(k, Held(e, feed)).isEmpty) (e, true)
+          else merge(e, feed)
+        case Some(h) if WireIndexProcessor.latestWins.gt(e, h.e) =>
+          if (state.replace(k, h, Held(e, feed))) (e, true)
+          else merge(e, feed)
+        case Some(h) => (h.e, false)
+      }
+    }
+
+    /** One absorbed `index` op feeding this map: the stream `name`,
+      * its watermark delay, and its checkpoint directory, under which
+      * each batch logs its changes. Built (and recovered) when the
+      * Loader builds the stream, before the query starts. */
+    private final class Feed(name: String, delay: Long, ckpt: Option[Path])
+        extends Sinks.EventSink {
+      private val dir = ckpt.map(_.resolve("served-index"))
+      // Spark's event-time watermark: starts at 0, then
+      // max(time) - delay, never moving back
+      private var maxTime = Long.MinValue
+      private var watermark = 0L
+      private var lastSnapshot = -1L
+
+      for (d <- dir; c <- ckpt) {
+        val (mark, snap) = Log.recover(d, c)(merge(_, name),
+          k => state.get(k).filter(_.feed == name).foreach(state.remove(k, _)))
+        mark.foreach { m =>
+          maxTime = m.maxTime
+          watermark = m.watermark
+          if (m.wire) wireShape = true
+        }
+        lastSnapshot = snap
+      }
+
+      override def write(batch: DataFrame, batchId: Long): Unit = synchronized {
+        val wire = ConfigFile.carriesWholeEvents(batch)
+        if (wire) wireShape = true
+        val lateUpTo = watermark * 1000L
+        val rows = ConfigFile.wireEvents(batch)
+          .mapPartitions(latestPerKey(lateUpTo))(Encoders.product[WireEvent])
+          .collect()
+        val pushed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
+        val changed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
+        rows.groupMapReduce(e => (e.host, e.service))(identity)(
+            WireIndexProcessor.latestWins.max).values.foreach { e =>
+          val (winner, replaced) = merge(e, name)
+          pushed += winner
+          if (replaced) changed += e
+          maxTime = math.max(maxTime, eventMs(e))
+        }
+        val removed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+        if (maxTime != Long.MinValue && maxTime - delay > watermark) {
+          // what Spark's no-data batch does once the watermark moves:
+          // every entry of this feed whose ttl lapsed leaves once,
+          // as one expired copy
+          watermark = maxTime - delay
+          state.foreach { case (k, h) =>
+            if (h.feed == name &&
+                WireIndexProcessor.deadline(h.e).exists(_ <= watermark) &&
+                state.remove(k, h)) {
+              removed += k
+              pushed += WireIndexProcessor.expiredCopy(h.e, watermark,
+                IndexProcessor.DefaultKeep)
+            }
+          }
+        }
+        dir.foreach { d =>
+          val conf = batch.sparkSession.conf
+          val mark = Log.Mark(maxTime, watermark, wire)
+          Log.write(d, batchId, delta = true, mark, changed, removed)
+          if (batchId - lastSnapshot >= conf.get(
+              "spark.sql.streaming.stateStore.minDeltasForSnapshot", "10").toLong) {
+            Log.write(d, batchId, delta = false, mark,
+              state.values.filter(_.feed == name).map(_.e), Nil)
+            lastSnapshot = batchId
+            Log.prune(d, batchId,
+              conf.get("spark.sql.streaming.minBatchesToRetain", "100").toLong)
+          }
+        }
+        publish(batch.sparkSession, pushed.toSeq, wire, batchId)
+      }
+    }
+
+    private def live(h: Held): Boolean = h.e.state != "expired"
 
     /** The whole-event relation the serving path answers from — the
       * Catalyst parity oracle for [[search]] (tagged/attribute queries
       * included). */
     def snapshot: DataFrame = {
       import spark.implicits._
-      spark.createDataset(state.values.toSeq).toDF()
+      spark.createDataset(events).toDF()
     }
 
     /** Dump rendering matching the push-line shape: whole-event JSON
       * when the feed carries tags/attributes columns, the plain
       * 6-field shape otherwise — one format per connection. */
-    def dumpLine(e: graft.streaming.WireEvent): String =
+    def dumpLine(e: WireEvent): String =
       if (wireShape) graft.sinks.EventJson.line(e)
       else graft.sinks.EventJson.line(e.toSEvent)
 
     /** The live events, for Spark-free serving (ws/sse dumps, the wire
       * handler, specs). A TrieMap iterator is a weakly-consistent O(n)
-      * walk — no lock, no Spark job. */
-    def events: Seq[graft.streaming.WireEvent] = state.values.toSeq
+      * walk — no lock, no Spark job. An entry whose latest event is
+      * itself `state="expired"` is held, unserved, until it is
+      * outranked or reaped, as the keyed-state index holds it. */
+    def events: Seq[WireEvent] =
+      state.values.iterator.filter(live).map(_.e).toSeq
 
     /** Direct upsert, for probes and specs (the streaming path goes
-      * through [[sink]]). */
+      * through [[sinkFor]]). */
     private[graft] def put(e: SEvent): Unit =
-      putTagged(graft.streaming.WireEvent(e.host, e.service, e.state,
+      putTagged(WireEvent(e.host, e.service, e.state,
         e.metric, e.time, e.ttl, Seq.empty, Map.empty))
 
-    private[graft] def putTagged(e: graft.streaming.WireEvent): Unit =
+    private[graft] def putTagged(e: WireEvent): Unit =
       if (e.state == "expired") { state.remove((e.host, e.service)); () }
-      else state((e.host, e.service)) = e
+      else state((e.host, e.service)) = Held(e, "")
 
-    def size: Int = state.size
+    def size: Int = state.values.count(live)
 
     /** Spark-free query search (transport.clj:175-189 semantics): the
       * pkey fast path for `host = "h" and service = "s"` point lookups
       * (index.clj:44-56), the LRU-cached compiled closure for
       * everything else. The Catalyst path over [[snapshot]] remains
       * the parity oracle (EventPredicateSpec / MainSpec). */
-    def search(q: String): Seq[graft.streaming.WireEvent] =
+    def search(q: String): Seq[WireEvent] =
       searchAst(q, graft.query.QueryLanguage.parse(q))
 
     private def searchAst(q: String,
-        ast: graft.query.QueryLanguage.Ast)
-        : Seq[graft.streaming.WireEvent] = {
+        ast: graft.query.QueryLanguage.Ast): Seq[WireEvent] = {
       import graft.query.EventPredicate
       EventPredicate.pkeyLookup(ast) match {
-        case Some(key) => state.get(key).toSeq
+        case Some(key) => state.get(key).filter(live).map(_.e).toSeq
         case None =>
           val pred = EventPredicate.taggedForAst(q, ast)
-          state.values.iterator.filter(pred).toSeq
+          state.values.iterator.filter(h => live(h) && pred(h.e))
+            .map(_.e).toSeq
       }
     }
 
@@ -182,6 +301,192 @@ object Main {
             case NonFatal(e) => Left(String.valueOf(e.getMessage))
           }
         }
+    }
+  }
+
+  object ServedIndex {
+    /** A map entry: the key's latest event and the stream that wrote
+      * it ("" for direct upserts), whose watermark reaps it. */
+    private final case class Held(e: WireEvent, feed: String)
+
+    /** Epoch microseconds, as Spark's watermark predicate reads them. */
+    private def eventMicros(e: WireEvent): Long =
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(e.time)
+
+    /** Epoch milliseconds, as Spark's watermark tracks the max. */
+    private def eventMs(e: WireEvent): Long = eventMicros(e) / 1000L
+
+    private def delayMs(interval: String): Long =
+      org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark.getDelayMs(
+        org.apache.spark.sql.catalyst.util.IntervalUtils
+          .fromIntervalString(interval))
+
+    /** The executor side of a batch: one partition's latest event per
+      * key, rows at or below the watermark (`lateUpTo`, µs) dropped as
+      * late by Spark's watermark predicate. */
+    private def latestPerKey(lateUpTo: Long)(
+        rows: Iterator[WireEvent]): Iterator[WireEvent] = {
+      val latest = new java.util.HashMap[(String, String), WireEvent]()
+      rows.foreach { e =>
+        if (eventMicros(e) > lateUpTo)
+          latest.merge((e.host, e.service), e,
+            (a, b) => WireIndexProcessor.latestWins.max(a, b))
+      }
+      latest.values.iterator.asScala
+    }
+
+    /** The served index's durable log, `HDFSBackedStateStore`'s
+      * delta-plus-snapshot pattern on a local directory: each batch
+      * writes `<batchId>.delta` (the entries it changed, the keys it
+      * reaped, and the feed's [[Log.Mark]]), every
+      * `minDeltasForSnapshot` batches a `<batchId>.snapshot` holds all
+      * of the feed's entries, and files no longer needed to rebuild
+      * the last `minBatchesToRetain` batches are deleted. Each file is
+      * written to a temporary name and renamed into place, so a
+      * replayed batch overwrites its own file whole. Recovery reads up
+      * to the last batch the query committed (`<checkpoint>/commits`):
+      * a batch that ran but did not commit is replayed by Spark and
+      * logs again. */
+    private[graft] object Log {
+      private val Magic = 0x47534931 // "GSI1"
+
+      /** What each file records of its feed after the batch: the max
+        * event time, the watermark, and whether the feed carries
+        * whole events (the dump shape). */
+      final case class Mark(maxTime: Long, watermark: Long, wire: Boolean)
+
+      private def file(dir: Path, batchId: Long, delta: Boolean): Path =
+        dir.resolve(s"$batchId.${if (delta) "delta" else "snapshot"}")
+
+      /** (batch id, is delta) of every log file in `dir`. */
+      private def files(dir: Path): Seq[(Long, Boolean, Path)] =
+        Option(dir.toFile.listFiles()).toSeq.flatten.flatMap { f =>
+          f.getName.split('.') match {
+            case Array(id, ext @ ("delta" | "snapshot"))
+                if id.nonEmpty && id.forall(_.isDigit) =>
+              Some((id.toLong, ext == "delta", f.toPath))
+            case _ => None
+          }
+        }
+
+      def write(dir: Path, batchId: Long, delta: Boolean, mark: Mark,
+          upserts: Iterable[WireEvent],
+          removed: Iterable[(String, String)]): Unit = {
+        Files.createDirectories(dir)
+        val target = file(dir, batchId, delta)
+        val tmp = dir.resolve(s".${target.getFileName}.tmp")
+        val out = new DataOutputStream(
+          new BufferedOutputStream(Files.newOutputStream(tmp)))
+        try {
+          out.writeInt(Magic)
+          out.writeLong(mark.maxTime)
+          out.writeLong(mark.watermark)
+          out.writeBoolean(mark.wire)
+          out.writeInt(upserts.size)
+          upserts.foreach(writeEvent(out, _))
+          out.writeInt(removed.size)
+          removed.foreach { case (h, s) => writeStr(out, h); writeStr(out, s) }
+        } finally out.close()
+        Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+
+      /** Replays `dir` up to the last batch `checkpoint` committed,
+        * handing each file's upserts, then its removals, to `upsert`
+        * and `remove` in log order. Returns the last [[Mark]] and the
+        * id of the snapshot replay started from (-1 for none). */
+      def recover(dir: Path, checkpoint: Path)(upsert: WireEvent => Unit,
+          remove: ((String, String)) => Unit): (Option[Mark], Long) = {
+        val committed = Option(checkpoint.resolve("commits").toFile.listFiles())
+          .toSeq.flatten.map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
+          .map(_.toLong).maxOption.getOrElse(-1L)
+        val fs = files(dir).filter(_._1 <= committed)
+        val snap = fs.filter(!_._2).map(_._1).maxOption.getOrElse(-1L)
+        val chain = fs.filter { case (id, delta, _) =>
+          if (delta) id > snap else id == snap
+        }.sortBy(_._1)
+        var mark: Option[Mark] = None
+        chain.foreach { case (_, _, p) =>
+          val in = new DataInputStream(
+            new BufferedInputStream(Files.newInputStream(p)))
+          try {
+            require(in.readInt() == Magic, s"$p: not a served-index log file")
+            mark = Some(Mark(in.readLong(), in.readLong(), in.readBoolean()))
+            for (_ <- 0 until in.readInt()) upsert(readEvent(in))
+            for (_ <- 0 until in.readInt()) remove((readStr(in), readStr(in)))
+          } finally in.close()
+        }
+        (mark, snap)
+      }
+
+      /** Deletes every file older than the snapshot needed to rebuild
+        * batch `latest - retain`. */
+      def prune(dir: Path, latest: Long, retain: Long): Unit = {
+        val fs = files(dir)
+        fs.filter(f => !f._2 && f._1 <= latest - retain).map(_._1).maxOption
+          .foreach(keep => fs.filter(_._1 < keep)
+            .foreach(f => Files.deleteIfExists(f._3)))
+      }
+
+      private def writeStr(out: DataOutputStream, s: String): Unit =
+        if (s == null) out.writeInt(-1)
+        else {
+          val b = s.getBytes(StandardCharsets.UTF_8)
+          out.writeInt(b.length)
+          out.write(b)
+        }
+
+      private def readStr(in: DataInputStream): String = in.readInt() match {
+        case -1 => null
+        case n =>
+          val b = new Array[Byte](n)
+          in.readFully(b)
+          new String(b, StandardCharsets.UTF_8)
+      }
+
+      private def writeOpt(out: DataOutputStream, d: Option[Double]): Unit = {
+        out.writeBoolean(d.isDefined)
+        d.foreach(out.writeDouble)
+      }
+
+      private def readOpt(in: DataInputStream): Option[Double] =
+        if (in.readBoolean()) Some(in.readDouble()) else None
+
+      private def writeEvent(out: DataOutputStream, e: WireEvent): Unit = {
+        writeStr(out, e.host)
+        writeStr(out, e.service)
+        writeStr(out, e.state)
+        writeOpt(out, e.metric)
+        out.writeLong(e.time.getTime)
+        out.writeInt(e.time.getNanos)
+        writeOpt(out, e.ttl)
+        if (e.tags == null) out.writeInt(-1)
+        else { out.writeInt(e.tags.size); e.tags.foreach(writeStr(out, _)) }
+        if (e.attributes == null) out.writeInt(-1)
+        else {
+          out.writeInt(e.attributes.size)
+          e.attributes.foreach { case (k, v) => writeStr(out, k); writeStr(out, v) }
+        }
+      }
+
+      private def readEvent(in: DataInputStream): WireEvent = {
+        val host = readStr(in)
+        val service = readStr(in)
+        val st = readStr(in)
+        val metric = readOpt(in)
+        val time = new java.sql.Timestamp(in.readLong())
+        time.setNanos(in.readInt())
+        val ttl = readOpt(in)
+        val tags = in.readInt() match {
+          case -1 => null
+          case n => Seq.fill(n)(readStr(in))
+        }
+        val attrs = in.readInt() match {
+          case -1 => null
+          case n => Seq.fill(n)((readStr(in), readStr(in))).toMap
+        }
+        WireEvent(host, service, st, metric, time, ttl, tags, attrs)
+      }
     }
   }
 
@@ -433,27 +738,18 @@ object Main {
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.extensions", "graft.query.RiemannExtensions")
         .getOrCreate()))
-    // the index op runs on transformWithState, which needs a state
-    // store with column families — RocksDB, the production store for
-    // every stateful operator here (the HDFSBacked default cannot
+    // an index op outside the served index runs on transformWithState,
+    // which needs a state store with column families — RocksDB, the
+    // production store for every stateful operator here (the HDFSBacked default cannot
     // serve it, and conf.getOption cannot distinguish "defaulted" from
     // "explicitly chosen", so the process entry point just sets it)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     val pubsub = new Sinks.Pubsub
-    val index = new ServedIndex(spark)
-    // the index sink also publishes each batch to the "index" pubsub
-    // channel, so ws/sse subscribers see live pushes after their dump
-    val indexSink: Sinks.EventSink = new Sinks.EventSink {
-      override def write(batch: DataFrame, batchId: Long): Unit = {
-        val cached = batch.cache()
-        try {
-          index.sink.write(cached, batchId)
-          pubsub.publish("index", cached, batchId)
-        } finally { cached.unpersist(); () }
-      }
-    }
+    // the index sink publishes each batch's pushes to the "index"
+    // pubsub channel, so ws/sse subscribers see them after their dump
+    val index = new ServedIndex(spark, pubsub)
     val core = new Core(spark)
     // fanout.dir, when configured, pins the spool/tee-checkpoint area
     // to a stable path — a restarted process resumes its tees from
@@ -466,7 +762,8 @@ object Main {
       case _ => java.nio.file.Files.createTempDirectory("graft-fanout")
     }
     val loader = new ConfigFile.Loader(core, spark, path, Map.empty,
-      sinkFactories = Map("index" -> (_ => indexSink)),
+      sinkFactories = Map("index" ->
+        ConfigFile.SinkKind(index.sinkFor, absorbs = Some("index"))),
       fanoutDir = fanoutDir)
     val running = new Running(spark, core, loader, pubsub, index, path)
     // the first reload builds the ingest servers from the file, salts
@@ -743,7 +1040,6 @@ object Main {
       // best-effort checkpoint cleanup — repeated runs must not
       // accumulate /tmp directories
       try {
-        import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
           .foreach(p => java.nio.file.Files.deleteIfExists(p))
       } catch { case NonFatal(_) => () }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.json4s._
@@ -1005,47 +1005,69 @@ object ConfigFile {
             s"crosscorpus.mode: expected \"match\" or \"drop\", got $other")
         }
       case "index" =>
-        val wm = (op \ "watermark") match {
-          case JString(s) => s
-          case _ => "0 seconds"
-        }
+        val wm = indexWatermark(op)
         // a frame carrying tags or attributes indexes through the
         // whole-event processor, so the served index answers
         // `tagged "x"` and attribute queries — the reference's index
         // stores whole events (index.clj:58-126)
-        if (df.columns.contains("tags") || df.columns.contains("attributes")) {
-          val attrs =
-            if (df.columns.contains("attributes")) col("attributes")
-            else lit(null)
-          graft.streaming.WireIndexProcessor(
-            df.select(col("host"), col("service"), col("state"),
-                col("metric"), col("time"), col("ttl"),
-                coalesce(tagsCol(df), array().cast("array<string>"))
-                  .as("tags"),
-                coalesce(attrs.cast("map<string,string>"),
-                  map().cast("map<string,string>")).as("attributes"))
-              .as[graft.streaming.WireEvent], wm).toDF()
-        } else IndexProcessor(df.as[SEvent], wm).toDF()
+        if (carriesWholeEvents(df))
+          graft.streaming.WireIndexProcessor(wireEvents(df), wm).toDF()
+        else IndexProcessor(df.as[SEvent], wm).toDF()
       case other => throw new IllegalArgumentException(s"unknown op: $other")
     }
   }
 
-  def compilePipeline(df: DataFrame, stream: JObject): DataFrame =
+  /** The index op's watermark delay, "0 seconds" when absent. */
+  def indexWatermark(op: JObject): String = (op \ "watermark") match {
+    case JString(s) => s
+    case _ => "0 seconds"
+  }
+
+  /** Whether `df` carries the wire tags or attributes: the index op
+    * then keeps whole events ([[wireEvents]]) rather than [[SEvent]]s. */
+  def carriesWholeEvents(df: DataFrame): Boolean =
+    df.columns.contains("tags") || df.columns.contains("attributes")
+
+  /** The index op's input as whole events: the [[SEvent]] columns plus
+    * tags and attributes, absent or null containers read as empty. */
+  def wireEvents(df: DataFrame): Dataset[graft.streaming.WireEvent] = {
+    val attrs =
+      if (df.columns.contains("attributes")) col("attributes") else lit(null)
+    df.select(col("host"), col("service"), col("state"), col("metric"),
+        col("time"), col("ttl"),
+        coalesce(tagsCol(df), array().cast("array<string>")).as("tags"),
+        coalesce(attrs.cast("map<string,string>"),
+          map().cast("map<string,string>")).as("attributes"))
+      .as[graft.streaming.WireEvent](
+        org.apache.spark.sql.Encoders.product[graft.streaming.WireEvent])
+  }
+
+  private def pipelineOps(stream: JObject): List[JObject] =
     (stream \ "pipeline") match {
-      case JArray(ops) => ops.foldLeft(df) {
-        case (d, o: JObject) => applyOp(d, o)
-        case (_, other) =>
+      case JArray(ops) => ops.map {
+        case o: JObject => o
+        case other =>
           throw new IllegalArgumentException(s"pipeline op: $other")
       }
-      case JNothing => df
+      case JNothing => Nil
       case other => throw new IllegalArgumentException(s"pipeline: $other")
     }
+
+  def compilePipeline(df: DataFrame, stream: JObject): DataFrame =
+    pipelineOps(stream).foldLeft(df)(applyOp)
+
+  /** A sink kind the host provides. `make` gets the stream's name, its
+    * sink spec and, when `absorbs` names the op the stream's pipeline
+    * ends in, that op: the Loader then compiles the pipeline without
+    * it, and the sink does the op's work on each batch itself. */
+  final case class SinkKind(
+      make: (String, JObject, Option[JObject]) => Sinks.EventSink,
+      absorbs: Option[String] = None)
 
   /** File-driven Core assembly with reload. `sources` maps config
     * source names to streaming DataFrames (servers, kafka, testkit
     * MemoryStreams — transports are injected, as everywhere);
-    * `sinkFactories` maps extra sink kinds to builders over the sink's
-    * own JSON spec.
+    * `sinkFactories` maps extra sink kinds to their [[SinkKind]].
     *
     * '''Fan-out contract''' (the reference's core semantic: every
     * registered stream sees every event, `src/riemann/core.clj:15-20`):
@@ -1092,7 +1114,7 @@ object ConfigFile {
     * same contract as the server sources' restart handoff. */
   final class Loader(core: Core, spark: SparkSession, path: Path,
       sources0: Map[String, () => DataFrame],
-      sinkFactories: Map[String, JValue => Sinks.EventSink] = Map.empty,
+      sinkFactories: Map[String, SinkKind] = Map.empty,
       val fanoutDir: Path =
         Files.createTempDirectory("graft-fanout"),
       replayable: Set[String] = Set.empty,
@@ -1355,20 +1377,28 @@ object ConfigFile {
     private def build(stream: JObject,
         input: () => DataFrame): DataStreamWriter[_] = {
       val name = str(stream \ "name", "stream.name")
-      val out = compilePipeline(input(), stream)
       val sinkSpec = (stream \ "sink") match {
         case o: JObject => o
         case _ => JObject("kind" -> JString("console"))
       }
-      val writer = str(sinkSpec \ "kind", s"$name.sink.kind") match {
+      val kind = str(sinkSpec \ "kind", s"$name.sink.kind")
+      val ops = pipelineOps(stream)
+      val absorbed = ops.lastOption.filter(o => sinkFactories.get(kind)
+        .flatMap(_.absorbs).exists(op => (o \ "op") == JString(op)))
+      val kept = if (absorbed.isEmpty) ops else ops.init
+      val out = kept.foldLeft(input())(applyOp)
+      // the absorbed op is still analysed here, so a bad op fails this
+      // load exactly as it would compiled into the pipeline
+      absorbed.foreach(applyOp(out, _))
+      val writer = kind match {
         case "memory" =>
           Sinks.attach(out,
             memorySinks.getOrElseUpdate(name, new Sinks.MemorySink))
         case "console" => out.writeStream.format("console")
-        case kind =>
+        case _ =>
           val factory = sinkFactories.getOrElse(kind,
             throw new IllegalArgumentException(s"$name: unknown sink '$kind'"))
-          Sinks.attach(out, factory(sinkSpec))
+          Sinks.attach(out, factory.make(name, sinkSpec, absorbed))
       }
       val mode = (sinkSpec \ "outputMode") match {
         case JString(m) => m

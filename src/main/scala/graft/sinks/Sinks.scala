@@ -144,6 +144,10 @@ object Sinks {
       * from a channel — transports detach on client disconnect. */
     def unsubscribe(channel: String, sink: EventSink): Unit =
       subs.updateWith(channel)(v => v.map(_.filterNot(_._2 eq sink)))
+    /** Whether anything listens on `channel`: a publisher can skip
+      * building a batch nobody reads. */
+    def subscribed(channel: String): Boolean =
+      subs.get(channel).exists(_.nonEmpty)
     def publish(channel: String, batch: DataFrame, batchId: Long = 0L): Unit = {
       val subscribers = subs.getOrElse(channel, Vector.empty)
       if (subscribers.isEmpty) return

@@ -158,4 +158,136 @@ class IndexParitySpec extends SparkSpec {
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
+
+  test("the served index and WireIndexProcessor + upsert agree on seeded " +
+    "wire batches: exact (time, metric) ties broken by tags and " +
+    "attributes, late rows, ttl lapses, two feeds into one map") {
+    import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+    import org.json4s._
+    import graft.sinks.Sinks
+    import graft.streaming.{WireEvent, WireIndexProcessor}
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val snapEvery = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
+    val retain = "spark.sql.streaming.minBatchesToRetain"
+    spark.conf.set(provider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // small log cadences, so the recovery checks below read delta
+    // chains of every length, snapshots and pruned directories
+    spark.conf.set(snapEvery, "4")
+    spark.conf.set(retain, "3")
+    val enc = Encoders.product[WireEvent]
+    // one row per event, with the containers in a canonical order
+    def canon(e: WireEvent): String =
+      (e.host, e.service, e.state, e.metric, e.time.getTime, e.ttl,
+        Option(e.tags).map(_.toList),
+        Option(e.attributes).map(_.toSeq.sorted)).toString
+    // the two feeds of examples/graft.example.json, each over its own
+    // hosts (a key belongs to one feed) and its own watermark delay
+    val feeds = Seq("tcp" -> "3 seconds", "graphite" -> "0 seconds")
+    def batches(seed: Long): Seq[Seq[(String, Seq[WireEvent])]] = {
+      val rng = new scala.util.Random(seed)
+      def pick[A](xs: A*): A = xs(rng.nextInt(xs.size))
+      (0 until 8).map { b =>
+        feeds.map { case (feed, _) =>
+          feed -> Seq.fill(1 + rng.nextInt(14)) {
+            // times jitter around a base that moves 4 s a batch, so some
+            // rows land at or below the watermark; few metrics and
+            // states, so (time, metric) ties are common and only tags
+            // or attributes break them; integer ttls lapse exactly on
+            // the watermark
+            WireEvent(s"$feed-${rng.nextInt(3)}", pick("cpu", "mem"),
+              pick("ok", "ok", "critical", "expired"),
+              pick(None, Some(0.0), Some(1.0)),
+              ts(1000L + 4 * b + rng.nextInt(9) - 4),
+              pick(None, Some(2.0), Some(5.0), Some(9.0)),
+              pick(Seq.empty, Seq("x"), Seq("y"), Seq("x", "y")),
+              pick(Map.empty[String, String], Map("k" -> "1"), Map("k" -> "2")))
+          }
+        }
+      }
+    }
+
+    /** Each feed through WireIndexProcessor and the old per-row upsert
+      * of the served map, one micro-batch (and its no-data batch) per
+      * input batch: (final map, pushed rows). */
+    def oracle(input: Seq[Seq[(String, Seq[WireEvent])]], tag: String)
+        : (Set[String], Seq[String]) = {
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      implicit val wireEnc: org.apache.spark.sql.Encoder[WireEvent] = enc
+      val served = scala.collection.mutable.Map.empty[(String, String), WireEvent]
+      val pushed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
+      val streams = feeds.map { case (feed, wm) =>
+        val in = MemoryStream[WireEvent]
+        val q = WireIndexProcessor(in.toDS(), wm).writeStream
+          .foreachBatch { (batch: Dataset[WireEvent], _: Long) =>
+            val rows = batch.collect()
+            served.synchronized {
+              pushed ++= rows
+              rows.foreach { e =>
+                if (e.state == "expired") served.remove((e.host, e.service))
+                else served((e.host, e.service)) = e
+              }
+            }
+            ()
+          }.queryName(s"served_oracle_${tag}_$feed").start()
+        feed -> (in, q)
+      }.toMap
+      try input.foreach(_.foreach { case (feed, evs) =>
+        val (in, q) = streams(feed)
+        in.addData(evs)
+        q.processAllAvailable()
+      }) finally streams.values.foreach(_._2.stop())
+      (served.values.map(canon).toSet, pushed.map(canon).toSeq.sorted)
+    }
+
+    def feedSpec(ckpt: java.nio.file.Path) =
+      JObject("kind" -> JString("index"), "checkpoint" -> JString(ckpt.toString))
+    def indexOp(wm: String) =
+      JObject("op" -> JString("index"), "watermark" -> JString(wm))
+
+    try Seq(11L, 12L, 13L).foreach { seed =>
+      val input = batches(seed)
+      val (oracleMap, oraclePushed) = oracle(input, seed.toString)
+
+      val pubsub = new Sinks.Pubsub
+      val pushed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
+      pubsub.subscribe("index", (batch: DataFrame, _: Long) => {
+        pushed ++= batch.as[WireEvent](enc).collect(); ()
+      })
+      val idx = new Main.ServedIndex(spark, pubsub)
+      val dir = java.nio.file.Files.createTempDirectory("served-parity")
+      val ckpts = feeds.map { case (f, _) => f -> dir.resolve(f) }.toMap
+      val sinks = feeds.map { case (f, wm) =>
+        f -> idx.sinkFor(f, feedSpec(ckpts(f)), Some(indexOp(wm)))
+      }.toMap
+      input.zipWithIndex.foreach { case (b, id) =>
+        b.foreach { case (feed, evs) =>
+          // three partitions, so one key's rows meet only on the driver
+          sinks(feed).write(
+            spark.createDataset(evs)(enc).toDF().repartition(3), id.toLong)
+          // what Spark's commit log records once the batch is done
+          java.nio.file.Files.createDirectories(
+            ckpts(feed).resolve("commits"))
+          java.nio.file.Files.writeString(
+            ckpts(feed).resolve("commits").resolve(id.toString), "")
+        }
+        // after every batch, the logs under the checkpoints rebuild
+        // the same map
+        val recovered = new Main.ServedIndex(spark)
+        feeds.foreach { case (f, wm) =>
+          recovered.sinkFor(f, feedSpec(ckpts(f)), Some(indexOp(wm)))
+        }
+        assert(recovered.events.map(canon).toSet == idx.events.map(canon).toSet,
+          s"seed $seed: map recovered after batch $id differs")
+      }
+      assert(idx.events.map(canon).toSet == oracleMap,
+        s"seed $seed: final served map differs")
+      assert(pushed.map(canon).toSeq.sorted == oraclePushed,
+        s"seed $seed: pushed rows differ")
+    } finally {
+      spark.conf.unset(provider)
+      spark.conf.unset(snapEvery)
+      spark.conf.unset(retain)
+    }
+  }
 }

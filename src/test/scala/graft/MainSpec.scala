@@ -696,17 +696,25 @@ class MainSpec extends SparkSpec {
     val key = "spark.sql.shuffle.partitions"
     val prevWidth = spark.conf.get(key)
     val tcpPort = freePort()
+    val tcp2Port = freePort()
     val dir = Files.createTempDirectory("graft-main-restart")
     val cfg = dir.resolve("graft.json")
     // an hour of watermark delay, so the older copies sent after the
-    // restart are not late: they reach the recovered state and lose
+    // restart are not late: they reach the recovered state and lose.
+    // `keyed` keeps the index op in keyed state (its sink is not the
+    // served index), so its checkpoint pins the shuffle width
     Files.writeString(cfg,
-      s"""{"servers": {"tcp": {"host": "127.0.0.1", "port": $tcpPort}},
+      s"""{"servers": {"tcp": {"host": "127.0.0.1", "port": $tcpPort},
+         |   "tcp2": {"protocol": "tcp", "host": "127.0.0.1", "port": $tcp2Port}},
          | "streams": [
          |   {"name": "index", "source": "tcp",
          |    "pipeline": [{"op": "index", "watermark": "1 hour"}],
          |    "sink": {"kind": "index", "outputMode": "update",
-         |             "checkpoint": "${dir.resolve("ckpt")}"}}
+         |             "checkpoint": "${dir.resolve("ckpt")}"}},
+         |   {"name": "keyed", "source": "tcp2",
+         |    "pipeline": [{"op": "index"}],
+         |    "sink": {"kind": "memory",
+         |             "checkpoint": "${dir.resolve("ckpt-keyed")}"}}
          |]}""".stripMargin)
     val hosts = (1 to 12).map(i => s"web$i")
     val t = 1706000000L
@@ -730,6 +738,8 @@ class MainSpec extends SparkSpec {
         sendEvents(tcpPort, hosts.zipWithIndex.map { case (h, i) =>
           ev(h, i.toDouble, t) })
         awaitKeys(first)
+        sendEvents(tcp2Port, Seq(ev("keyed1", 1.0, t)))
+        first.core.activeQueries("keyed").processAllAvailable()
       } finally first.stop()
 
       spark.conf.set(key, "4")
@@ -747,7 +757,9 @@ class MainSpec extends SparkSpec {
           assert(ok.contains(true) && err.isEmpty, s"reply: $ok $err")
           assert(evs.map(_.metric) == Seq(Some(i.toDouble)), s"$h: $evs")
         }
-        val q = second.core.activeQueries("index")
+        sendEvents(tcp2Port, Seq(ev("keyed2", 2.0, t + 1)))
+        val q = second.core.activeQueries("keyed")
+        q.processAllAvailable()
         val deadline = System.currentTimeMillis() + 30000
         while ((q.lastProgress == null ||
             q.lastProgress.stateOperators.isEmpty) &&
@@ -756,6 +768,144 @@ class MainSpec extends SparkSpec {
       } finally second.stop()
     } finally {
       spark.conf.set(key, prevWidth)
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
+  /** A config with one served index stream on `tcpPort` (and a ws
+    * server when `wsPort` is given), checkpointed under `dir`. */
+  private def servedIndexConfig(dir: java.nio.file.Path, tcpPort: Int,
+      wsPort: Option[Int] = None): java.nio.file.Path = {
+    val cfg = dir.resolve("graft.json")
+    val ws = wsPort.fold("")(p => s""", "ws": {"port": $p}""")
+    Files.writeString(cfg,
+      s"""{"servers": {"tcp": {"host": "127.0.0.1", "port": $tcpPort}$ws},
+         | "streams": [
+         |   {"name": "index", "source": "tcp",
+         |    "pipeline": [{"op": "index"}],
+         |    "sink": {"kind": "index", "outputMode": "update",
+         |             "checkpoint": "${dir.resolve("ckpt")}"}}
+         |]}""".stripMargin)
+    cfg
+  }
+
+  test("a restarted process serves every key indexed before the " +
+    "restart at once, with no traffic after it") {
+    val tcpPort = freePort()
+    val cfg = servedIndexConfig(
+      Files.createTempDirectory("graft-main-recover"), tcpPort)
+    val hosts = (1 to 12).map(i => s"web$i")
+    try {
+      val first = Main.start(cfg, Some(spark))
+      try {
+        sendEvents(tcpPort, hosts.zipWithIndex.map { case (h, i) =>
+          PEvent(h, "cpu", "ok", null, Some(i.toDouble), Nil,
+            Some(1706000000L), Some(86400.0), Map.empty)
+        })
+        first.core.activeQueries("index").processAllAvailable()
+        assert(first.index.size == hosts.size)
+      } finally first.stop()
+
+      val second = Main.start(cfg, Some(spark))
+      try {
+        val (ok, err, evs) = wireQueryOn(tcpPort, "true")
+        assert(ok.contains(true) && err.isEmpty, s"reply: $ok $err")
+        assert(evs.map(e => e.host -> e.metric).toSet ==
+          hosts.zipWithIndex.map { case (h, i) => h -> Some(i.toDouble) }.toSet,
+          s"dump after restart: $evs")
+      } finally second.stop()
+    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
+
+  test("served-path expiry through graft.Main: an event whose ttl the " +
+    "watermark passes leaves the index, and one expired copy reaches a " +
+    "ws subscriber") {
+    val tcpPort = freePort()
+    val wsPort = freePort()
+    val cfg = servedIndexConfig(
+      Files.createTempDirectory("graft-main-expiry"), tcpPort, Some(wsPort))
+    val t = 1706000000L
+    def ev(host: String, time: Long, ttl: Option[Double]) =
+      PEvent(host, "cpu", "ok", null, Some(1.0), Nil, Some(time), ttl,
+        Map.empty)
+    val running = Main.start(cfg, Some(spark))
+    try {
+      val q = running.core.activeQueries("index")
+      sendEvents(tcpPort, Seq(ev("short", t, Some(5.0))))
+      q.processAllAvailable()
+      assert(running.index.search("""host = "short"""").nonEmpty)
+      val sock = connect(wsPort)
+      sock.setSoTimeout(20000)
+      try {
+        wsHandshake(sock, "/index?query=" +
+          java.net.URLEncoder.encode("true", "UTF-8"))
+        val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+        // the dump is sent after the subscription is in place
+        assert(readFrame(in)._2.contains("short"))
+        // a later event moves the watermark past t + 5 s
+        sendEvents(tcpPort, Seq(ev("later", t + 60, None)))
+        q.processAllAvailable()
+        assert(running.index.search("""host = "short"""").isEmpty)
+        assert(running.index.size == 1)
+        // one more batch: the reaper must not send the copy again
+        sendEvents(tcpPort, Seq(ev("last", t + 120, None)))
+        q.processAllAvailable()
+        val pushes = Iterator.continually(readFrame(in)._2)
+          .scanLeft(Vector.empty[String])(_ :+ _)
+          .find(_.exists(_.contains("\"last\""))).get
+        val expired = pushes.filter(l =>
+          l.contains("\"short\"") && l.contains("\"expired\""))
+        assert(expired.size == 1, s"pushes: $pushes")
+      } finally sock.close()
+    } finally {
+      running.stop()
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
+  test("the served index stream has no state store and no shuffle: no " +
+    "stateful operator or Exchange in its plan, no state operators in " +
+    "its progress, one single-stage job per data trigger") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val tcpPort = freePort()
+    val cfg = servedIndexConfig(
+      Files.createTempDirectory("graft-main-plan"), tcpPort)
+    val running = Main.start(cfg, Some(spark))
+    val q = running.core.activeQueries("index")
+    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("sql.streaming.queryId") == q.id.toString)) {
+          stagesPerJob.add(e.stageIds.size); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (1 to 3).foreach { i =>
+        sendEvents(tcpPort, Seq(PEvent(s"web$i", "cpu", "ok", null,
+          Some(i.toDouble), Nil, Some(1706000000L + i), Some(60.0), Map.empty)))
+        q.processAllAvailable()
+      }
+      org.apache.spark.sql.graft.SessionBridge.awaitListeners(spark)
+      val dataTriggers = q.recentProgress.count(_.numInputRows > 0)
+      assert(dataTriggers >= 1)
+      import scala.jdk.CollectionConverters._
+      assert(stagesPerJob.asScala.toSeq == Seq.fill(dataTriggers)(1),
+        s"stages per job: $stagesPerJob over $dataTriggers data triggers")
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      assert(plan.collect {
+        case p: StatefulOperator => p
+        case p: Exchange => p
+      }.isEmpty, plan.treeString)
+      assert(q.lastProgress.stateOperators.isEmpty)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      running.stop()
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
