@@ -109,11 +109,9 @@ object Main {
     def sinkFor(stream: String, spec: JObject,
         op: Option[JObject]): Sinks.EventSink = op match {
       case Some(o) =>
-        val ckpt = (spec \ "checkpoint") match {
-          case JString(d) => Some(Paths.get(d))
-          case _ => None
-        }
-        new Feed(stream, delayMs(ConfigFile.indexWatermark(o)), ckpt)
+        val ckpt = new ConfigFile.Args(spec, s"$stream.sink").strOpt("checkpoint")
+        new Feed(stream, delayMs(ConfigFile.indexWatermark(o)),
+          ckpt.map(Paths.get(_)))
       case None => (batch: DataFrame, batchId: Long) => {
         val wire = ConfigFile.carriesWholeEvents(batch)
         if (wire) wireShape = true
@@ -541,26 +539,29 @@ object Main {
       * touched (thunks and specs are extracted eagerly first), so a
       * failed reload keeps the old topology — the reference's
       * catch-and-log reload contract. */
-    def reload(): Seq[String] = synchronized {
-      val doc = JsonMethods.parse(
-        java.nio.file.Files.readString(path.toRealPath()))
-      val blocks = serverBlocks(doc)
+    def reload(): Seq[String] = reload(ConfigFile.read(path))
+
+    /** [[reload]] from one read of the file tree: servers, modelsKeep,
+      * fanout and streams all come from `config`, each top-level block
+      * from the last file in include order that defines it. */
+    private[Main] def reload(config: ConfigFile.Snapshot): Seq[String] =
+        synchronized {
+      val blocks = config.obj("servers").fold(
+        List.empty[(String, ConfigFile.Args)])(_.objectFields)
       // everything throw-prone happens before any mutation
-      val thunks = ingestSources(spark, blocks)
-      val salts = blocks.map { case (n, o) =>
-        n -> ("#server:" + JsonMethods.compact(JsonMethods.render(o)))
-      }.toMap
-      val newWs = blocks.collectFirst { case ("ws", o) => o }
-      val newSse = blocks.collectFirst { case ("sse", o) => o }
+      val ingest = blocks.filter { case (n, _) => n != "ws" && n != "sse" }
+        .map { case (n, o) => (n, o.str("protocol", n), o) }
+      val thunks = ingest.map { case (n, protocol, o) =>
+        n -> ingestSource(spark, n, protocol, o) }.toMap
+      val salts = blocks.map { case (n, o) => n -> ("#server:" + canon(o)) }.toMap
+      def queryServer(name: String) = blocks.collectFirst { case (`name`, o) =>
+        (canon(o), o.int("port"), o.str("host", DefaultHost)) }
+      val newWs = queryServer("ws")
+      val newSse = queryServer("sse")
       // riemann-wire index queries (transport.clj:175-181): every tcp
-      // ingest server answers `Msg{query}` from the served index.
-      // Parsed HERE, before the first mutation below, so a malformed
-      // tcp port cannot leave a half-applied reload.
-      val newPorts: Set[Int] = blocks.collect {
-        case (name, o) if name != "ws" && name != "sse" &&
-            strOr(o \ "protocol", name) == "tcp" =>
-          int(o \ "port", s"servers.$name.port")
-      }.toSet
+      // ingest server answers `Msg{query}` from the served index
+      val newPorts: Set[Int] = ingest.collect {
+        case (_, "tcp", o) => o.int("port") }.toSet
       // {"fanout": {"retentionHours": N, "replayable": ["name", ...],
       //  "dir": "<path>"}} — spool knobs for the shared-source tee.
       // `files` blocks are natively replayable (every file-source query
@@ -568,23 +569,22 @@ object Main {
       // `replayable` adds host-known names on top. `dir` is read once
       // at start() (spools + tee checkpoints must stay where a
       // restarted process can find them); retention and the replayable
-      // set re-apply on every reload. Parsed HERE, before any mutation,
-      // and include-merged like the streams (r19 ADVICE: a fanout block
-      // in an included file was silently ignored).
-      val filesNames: Set[String] = blocks.collect {
-        case (n, o) if n != "ws" && n != "sse" &&
-            strOr(o \ "protocol", n) == "files" => n
-      }.toSet
-      val fanoutBlock = obj(ConfigFile.loadKey(path, "fanout"))
-      val extraReplayable: Set[String] = fanoutBlock
-        .map(o => ConfigFile.strings(o \ "replayable").toSet)
-        .getOrElse(Set.empty)
-      val newRetentionMs: Option[Long] = fanoutBlock.flatMap(o =>
-        (o \ "retentionHours") match {
-          case JNothing => None
-          case v => Some((ConfigFile.num(v,
-            "fanout.retentionHours") * 3600 * 1000).toLong)
-        })
+      // set re-apply on every reload.
+      val filesNames = ingest.collect { case (n, "files", _) => n }.toSet
+      val fanout = config.obj("fanout")
+      val extraReplayable = fanout.fold(Set.empty[String])(
+        _.strings("replayable").toSet)
+      val newRetentionMs = fanout.flatMap(_.numOpt("retentionHours"))
+        .map(h => (h * 3600 * 1000).toLong)
+      // {"modelsKeep": {"root": "<dir>", "keepPerKind": N,
+      //  "intervalSeconds": N}} — prune once now and then on the
+      // cadence; absent block = no automatic pruning (Models.main's
+      // list/prune CLI remains the manual path). Reconfigured only on
+      // block change, like ws/sse.
+      val newPrune = config.obj("modelsKeep").map(o => (canon(o),
+        o.str("root", new org.apache.hadoop.fs.Path(
+          graft.pipeline.Models.defaultRoot("x")).getParent.toString),
+        o.int("keepPerKind", 3), o.long("intervalSeconds", 3600L)))
       loader.sources = thunks
       loader.sourceSignature = n => salts.getOrElse(n, "")
       loader.replayableSources = filesNames ++ extraReplayable
@@ -596,24 +596,24 @@ object Main {
       // ws/sse dumps serve the in-memory event snapshot (Spark-free
       // path); restart only on block change so live subscribers of an
       // untouched server keep their connections
-      val wsCanon = newWs.fold("")(o =>
-        JsonMethods.compact(JsonMethods.render(o)))
+      val wsCanon = newWs.fold("")(_._1)
       if (wsCanon != wsSpec) {
         ws.foreach(s => try s.stop() catch { case NonFatal(_) => () })
-        ws = newWs.map(o =>
-          new WsServer(pubsub, int(o \ "port", "servers.ws.port"),
-            host = hostOf(o), snapshotEvents = () => Some(index.events),
-            dumpLine = index.dumpLine))
+        ws = newWs.map { case (_, port, host) =>
+          new WsServer(pubsub, port, host = host,
+            snapshotEvents = () => Some(index.events),
+            dumpLine = index.dumpLine)
+        }
         wsSpec = wsCanon
       }
-      val sseCanon = newSse.fold("")(o =>
-        JsonMethods.compact(JsonMethods.render(o)))
+      val sseCanon = newSse.fold("")(_._1)
       if (sseCanon != sseSpec) {
         sse.foreach(s => try s.stop() catch { case NonFatal(_) => () })
-        sse = newSse.map(o =>
-          new SseServer(pubsub, int(o \ "port", "servers.sse.port"),
-            host = hostOf(o), snapshotEvents = () => Some(index.events),
-            dumpLine = index.dumpLine))
+        sse = newSse.map { case (_, port, host) =>
+          new SseServer(pubsub, port, host = host,
+            snapshotEvents = () => Some(index.events),
+            dumpLine = index.dumpLine)
+        }
         sseSpec = sseCanon
       }
       (queryPorts -- newPorts)
@@ -622,27 +622,10 @@ object Main {
         graft.sources.RiemannServers.registerQueryHandler(p,
           index.queryHandler))
       queryPorts = newPorts
-      // {"modelsKeep": {"root": "<dir>", "keepPerKind": N,
-      //  "intervalSeconds": N}} — prune once now and then on the
-      // cadence; absent block = no automatic pruning (Models.main's
-      // list/prune CLI remains the manual path). Reconfigured only on
-      // block change, like ws/sse.
-      val newPrune = obj(doc \ "modelsKeep")
-      val pruneCanon = newPrune.fold("")(o =>
-        JsonMethods.compact(JsonMethods.render(o)))
+      val pruneCanon = newPrune.fold("")(_._1)
       if (pruneCanon != pruneSpec) {
         pruneTask.foreach(_.cancel(false))
-        pruneTask = newPrune.map { o =>
-          val root = strOr(o \ "root", new org.apache.hadoop.fs.Path(
-            graft.pipeline.Models.defaultRoot("x")).getParent.toString)
-          val keep = (o \ "keepPerKind") match {
-            case JNothing => 3
-            case v => int(v, "modelsKeep.keepPerKind")
-          }
-          val interval = (o \ "intervalSeconds") match {
-            case JNothing => 3600L
-            case v => ConfigFile.num(v, "modelsKeep.intervalSeconds").toLong
-          }
+        pruneTask = newPrune.map { case (_, root, keep, interval) =>
           val job: Runnable = () =>
             try prunedCount +=
               graft.pipeline.Models.prune(spark, root, keep).size
@@ -655,7 +638,7 @@ object Main {
         }
         pruneSpec = pruneCanon
       }
-      loader.reload()
+      loader.reload(config)
     }
 
     def installSighup(): Boolean = loader.installSighup(() => { reload(); () })
@@ -674,32 +657,10 @@ object Main {
     }
   }
 
-  private def obj(v: JValue): Option[JObject] = v match {
-    case o: JObject => Some(o)
-    case _ => None
-  }
-  // strict numeric extraction shares ConfigFile's accessor; strOr is
-  // deliberately lenient (absent server fields default, they don't throw)
-  private def int(v: JValue, what: String): Int =
-    ConfigFile.num(v, what).toInt
-  private def strOr(v: JValue, dflt: String): String = v match {
-    case JString(s) => s
-    case _ => dflt
-  }
-  /** Accepts the natural JSON boolean and EXACTLY "true"/"false";
-    * absent means false. Anything else ("True", "yes", 1, …) throws —
-    * this guards security flags like tlsclientauth, where a typo'd
-    * value silently reading as false would disable client-cert
-    * verification. Same strict-extraction rule as tlskeystore. */
-  private def boolOf(v: JValue, what: String): Boolean = v match {
-    case JBool(b) => b
-    case JString("true") => true
-    case JString("false") => false
-    case JNothing | JNull => false
-    case other => throw new IllegalArgumentException(
-      s"$what: expected a boolean or \"true\"/\"false\", got " +
-        JsonMethods.compact(JsonMethods.render(other)))
-  }
+  private val DefaultHost = "127.0.0.1"
+
+  private def canon(o: ConfigFile.Args): String =
+    JsonMethods.compact(JsonMethods.render(o.json))
 
   /** Decoded-wire columns → the SEvent shape the config ops consume
     * (plus the wire tags and attributes, which the config tag/tagged-*
@@ -751,16 +712,13 @@ object Main {
     // pubsub channel, so ws/sse subscribers see them after their dump
     val index = new ServedIndex(spark, pubsub)
     val core = new Core(spark)
+    val config = ConfigFile.read(path)
     // fanout.dir, when configured, pins the spool/tee-checkpoint area
     // to a stable path — a restarted process resumes its tees from
     // their checkpoints instead of starting over in a fresh temp dir
-    val fanoutDir = (ConfigFile.loadKey(path, "fanout") \ "dir") match {
-      case JString(d) =>
-        val p = Paths.get(d)
-        java.nio.file.Files.createDirectories(p)
-        p
-      case _ => java.nio.file.Files.createTempDirectory("graft-fanout")
-    }
+    val fanoutDir = config.obj("fanout").flatMap(_.strOpt("dir")).fold(
+      java.nio.file.Files.createTempDirectory("graft-fanout"))(d =>
+      java.nio.file.Files.createDirectories(Paths.get(d)))
     val loader = new ConfigFile.Loader(core, spark, path, Map.empty,
       sinkFactories = Map("index" ->
         ConfigFile.SinkKind(index.sinkFor, absorbs = Some("index"))),
@@ -769,69 +727,49 @@ object Main {
     // the first reload builds the ingest servers from the file, salts
     // stream signatures with their server blocks, starts ws/sse, and
     // starts the stream topology — the same path SIGHUP drives later
-    running.reload()
+    running.reload(config)
     running
   }
 
-  private def hostOf(o: JObject) = strOr(o \ "host", "127.0.0.1")
-
-  /** The file's `servers` object as (name, block) pairs. */
-  private def serverBlocks(doc: JValue): List[(String, JObject)] =
-    obj(doc \ "servers").getOrElse(JObject()).obj.collect {
-      case JField(name, o: JObject) => name -> o
-    }
-
-  /** Ingest-server source thunks from the parsed server blocks.
-    * Everything that can reject a block (ports, TLS material, strict
-    * booleans) is extracted EAGERLY here, so a reload against a
-    * malformed file throws before any running state is touched. */
-  private def ingestSources(spark: SparkSession,
-      blocks: List[(String, JObject)]): Map[String, () => DataFrame] = {
-    // every non-ws/sse server block is an ingest source named after its
-    // key; `protocol` defaults to that key, so {"tcp": {...}} just
-    // works and {"tcp2": {"protocol": "tcp", ...}} opens a second one
-    blocks.collect {
-      case (name, o) if name != "ws" && name != "sse" &&
-          strOr(o \ "protocol", name) == "files" =>
-        name -> filesSource(spark, name, o)
-      case (name, o) if name != "ws" && name != "sse" =>
-        // EAGER val (not def): a malformed port must throw here, at
-        // extraction time, not when the stream first starts — reload
-        // relies on this to keep the old topology on a bad file
-        val port = int(o \ "port", s"servers.$name.port")
-        val mk: () => DataFrame = strOr(o \ "protocol", name) match {
-          case "tcp" if (o \ "tlskeystore") != JNothing =>
+  /** The source thunk of one ingest-server block — every block but
+    * `ws`/`sse` is an ingest source named after its key; `protocol`
+    * defaults to that key, so {"tcp": {...}} just works and
+    * {"tcp2": {"protocol": "tcp", ...}} opens a second one. Everything
+    * that can reject a block (ports, hosts, TLS material, strict
+    * booleans) is extracted EAGERLY here, not when the stream first
+    * starts, so a reload against a malformed file throws before any
+    * running state is touched. */
+  private def ingestSource(spark: SparkSession, name: String,
+      protocol: String, o: ConfigFile.Args): () => DataFrame =
+    if (protocol == "files") filesSource(spark, o)
+    else {
+      val port = o.int("port")
+      val host = o.str("host", DefaultHost)
+      protocol match {
+        case "tcp" => o.strOpt("tlskeystore") match {
+          case Some(keystore) =>
             // mutual-TLS termination (the reference's tls? server):
             // keystore = server identity, truststore (defaults to the
-            // keystore) anchors client certs when tlsclientauth is set.
-            // Strict extraction, EAGER (outside the thunk): a
-            // malformed keystore or tlsclientauth value must throw at
-            // config load, not silently fall back to a plaintext or
-            // no-client-auth server when the stream first starts
-            val keystore =
-              ConfigFile.str(o \ "tlskeystore", s"servers.$name.tlskeystore")
-            val password =
-              ConfigFile.str(o \ "tlspassword", s"servers.$name.tlspassword")
-            val truststore = Option(strOr(o \ "tlstruststore", null))
-            val clientAuth =
-              boolOf(o \ "tlsclientauth", s"servers.$name.tlsclientauth")
-            () => asSEvents(Sources.riemannTlsServer(spark, hostOf(o), port,
+            // keystore) anchors client certs when tlsclientauth is set —
+            // a malformed value must fail the load, not fall back to a
+            // plaintext or no-client-auth server
+            val password = o.str("tlspassword")
+            val truststore = o.strOpt("tlstruststore")
+            val clientAuth = o.bool("tlsclientauth", false)
+            () => asSEvents(Sources.riemannTlsServer(spark, host, port,
               keystore, password, truststore = truststore,
               clientAuth = clientAuth))
-          case "tcp" =>
-            () => asSEvents(Sources.riemannTcpServer(spark, hostOf(o), port))
-          case "udp" =>
-            () => asSEvents(Sources.riemannUdpServer(spark, hostOf(o), port))
-          case "graphite" =>
-            () => Sources.graphiteServer(spark, hostOf(o), port)
-          case "opentsdb" =>
-            () => Sources.opentsdbServer(spark, hostOf(o), port)
-          case other => throw new IllegalArgumentException(
-            s"servers.$name: unknown protocol '$other'")
+          case None =>
+            () => asSEvents(Sources.riemannTcpServer(spark, host, port))
         }
-        name -> mk
-    }.toMap
-  }
+        case "udp" =>
+          () => asSEvents(Sources.riemannUdpServer(spark, host, port))
+        case "graphite" => () => Sources.graphiteServer(spark, host, port)
+        case "opentsdb" => () => Sources.opentsdbServer(spark, host, port)
+        case other => throw new IllegalArgumentException(
+          s"servers.$name: unknown protocol '$other'")
+      }
+    }
 
   /** `{"protocol": "files", "path": <dir>, "format": "parquet"|"json"|
     * "csv", "schema": <DDL, optional>, "maxFilesPerTrigger": N,
@@ -844,38 +782,29 @@ object Main {
     * when given, else is inferred EAGERLY from the existing files (a
     * missing/empty dir with no DDL throws at reload, keeping the
     * old topology — same eager-extraction contract as ports/TLS). */
-  private def filesSource(spark: SparkSession, name: String,
-      o: JObject): () => DataFrame = {
-    val path = ConfigFile.str(o \ "path", s"servers.$name.path")
-    val fmt = strOr(o \ "format", "parquet")
+  private def filesSource(spark: SparkSession,
+      o: ConfigFile.Args): () => DataFrame = {
+    val path = o.str("path")
+    val fmt = o.str("format", "parquet")
     require(Set("parquet", "json", "csv")(fmt),
-      s"servers.$name.format: parquet|json|csv, got '$fmt'")
-    val opts: Map[String, String] = obj(o \ "options")
-      .map(_.obj.collect { case JField(k, JString(v)) => k -> v }.toMap)
-      .getOrElse(Map.empty)
-    val schema = (o \ "schema") match {
-      case JString(ddl) => org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      case JNothing =>
-        // eager: a reload against an empty landing zone must throw NOW
-        val inferred =
-          try spark.read.format(fmt).options(opts).load(path).schema
-          catch {
-            case NonFatal(e) => throw new IllegalArgumentException(
-              s"servers.$name: cannot infer schema from '$path' " +
-                s"(${e.getMessage}); provide \"schema\" as a DDL string " +
-                "or land at least one file first")
-          }
-        if (inferred.isEmpty) throw new IllegalArgumentException(
-          s"servers.$name: '$path' yields an empty schema; provide " +
-            "\"schema\" as a DDL string")
-        inferred
-      case other => throw new IllegalArgumentException(
-        s"servers.$name.schema: expected a DDL string, got $other")
-    }
-    val maxFiles = (o \ "maxFilesPerTrigger") match {
-      case JNothing => None
-      case v => Some(int(v, s"servers.$name.maxFilesPerTrigger"))
-    }
+      s"${o.at}.format: parquet|json|csv, got '$fmt'")
+    val opts = o.strMap("options").toMap
+    val schema = o.strOpt("schema").fold {
+      // eager: a reload against an empty landing zone must throw NOW
+      val inferred =
+        try spark.read.format(fmt).options(opts).load(path).schema
+        catch {
+          case NonFatal(e) => throw new IllegalArgumentException(
+            s"${o.at}: cannot infer schema from '$path' " +
+              s"(${e.getMessage}); provide \"schema\" as a DDL string " +
+              "or land at least one file first")
+        }
+      if (inferred.isEmpty) throw new IllegalArgumentException(
+        s"${o.at}: '$path' yields an empty schema; provide " +
+          "\"schema\" as a DDL string")
+      inferred
+    }(org.apache.spark.sql.types.StructType.fromDDL)
+    val maxFiles = o.numOpt("maxFilesPerTrigger").map(_.toInt)
     () => {
       val r = spark.readStream.schema(schema).format(fmt).options(opts)
       maxFiles.foreach(n => r.option("maxFilesPerTrigger", n))
@@ -912,13 +841,11 @@ object Main {
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val streams = ConfigFile.load(path)
+      val config = ConfigFile.read(path)
+      val streams = config.streams
         .map(s => ConfigFile.str(s \ "name", "stream.name") -> s).toMap
-      // include-merged like the streams: a suite split across includes
-      // runs whole
-      val tests = ConfigFile.loadTests(path)
       var passed, failed = 0
-      for (t <- tests) {
+      for (t <- config.tests) {
         val name = ConfigFile.str(t \ "name", "test.name")
         // one broken test must not abort the run: report it as FAIL
         // and keep going (the reference's runner reports per-deftest)
@@ -964,34 +891,20 @@ object Main {
     // honor the stream's configured outputMode ("behaves exactly as
     // deployed"): an update-mode window stream must not spuriously
     // fail because the harness forced append
-    val mode = (stream \ "sink" \ "outputMode") match {
-      case JString(m) => m
-      case _ => "append"
-    }
+    val mode = ConfigFile.outputMode(stream)
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft-test-$name")
     val q = out.writeStream.format("memory").queryName(sinkName)
       .outputMode(mode)
       .option("checkpointLocation", ckpt.toString)
       .start()
     try {
-      val events = (t \ "inject") match {
-        case JArray(es) => es.collect { case o: JObject =>
-          TestEvent(
-            strOr(o \ "host", null), strOr(o \ "service", null),
-            strOr(o \ "state", null),
-            (o \ "metric") match {
-              case JNothing => None
-              case v => Some(ConfigFile.num(v, s"$name.metric"))
-            },
-            new java.sql.Timestamp(
-              (ConfigFile.num(o \ "time_s", s"$name.time_s") * 1000).toLong),
-            (o \ "ttl") match {
-              case JNothing => None
-              case v => Some(ConfigFile.num(v, s"$name.ttl"))
-            },
-            ConfigFile.strings(o \ "tags"))
-        }
-        case _ => Nil
+      val test = new ConfigFile.Args(t, name)
+      val events = test.objs("inject").map { e =>
+        val o = new ConfigFile.Args(e, s"$name.inject")
+        TestEvent(o.str("host", null), o.str("service", null),
+          o.str("state", null), o.numOpt("metric"),
+          new java.sql.Timestamp((o.num("time_s") * 1000).toLong),
+          o.numOpt("ttl"), o.strings("tags"))
       }
       input.addData(events)
       q.processAllAvailable()
@@ -1020,19 +933,11 @@ object Main {
       }
       def matches(exp: JObject, row: org.apache.spark.sql.Row): Boolean =
         exp.obj.forall { case JField(k, v) => fieldMatches(k, v, row) }
-      val expects = (t \ "expect") match {
-        case JArray(es) => es.collect { case o: JObject => o }
-        case _ => Nil
-      }
-      val misses = expects.filterNot(e => rows.exists(matches(e, _)))
+      val misses = test.objs("expect").filterNot(e => rows.exists(matches(e, _)))
         .map(e => s"no row matches ${JsonMethods.compact(JsonMethods.render(e))}")
-      val countMiss = (t \ "expect_count") match {
-        case JNothing => Nil
-        case v =>
-          val want = ConfigFile.num(v, s"$name.expect_count").toInt
-          if (rows.length == want) Nil
-          else Seq(s"expected $want rows, got ${rows.length}")
-      }
+      val countMiss = test.numOpt("expect_count").map(_.toInt)
+        .filter(_ != rows.length)
+        .map(want => s"expected $want rows, got ${rows.length}")
       misses ++ countMiss
     } finally {
       q.stop()

@@ -44,231 +44,80 @@ case class SEventX(
   * the including file) before compilation, like config.clj's eval'd
   * include but without arbitrary code execution.
   *
-  * Op vocabulary (all compile to Catalyst plans — filters and
-  * projections stay codegen'd; windows are watermarked groupBys; the
-  * index is the transformWithState processor):
+  * The file's sections, the op vocabulary with each op's arguments,
+  * the sink spec and the argument rule every value follows are
+  * documented in `docs/config.md`; [[ops]] is the one table of ops.
   *
-  *   {"op":"where",   "expr": "<SQL boolean expr>"}
-  *   {"op":"query",   "q": "<riemann query language>"}
-  *   {"op":"with",    "set": {"field": "<SQL expr>", ...}}
-  *   {"op":"default", "set": {"field": "<SQL expr>", ...}}   // only-if-null
-  *   {"op":"scale",   "factor": <num>}                        // metric *= f
-  *   {"op":"select",  "cols": ["a","b",...]}
-  *   {"op":"window",  "agg":"sum|mean|count|max|min", "field":"metric",
-  *                    "seconds":N, "by":["host",...], "watermark":"10 seconds"}
-  *   {"op":"rate",    "seconds":N, "by":[...], "watermark":"..."}  // count/s
-  *   {"op":"index",   "watermark":"..."}   // latest-state + TTL expiry
-  *   {"op":"asof",    "table":"<parquet>", "by":["host",...],
-  *                    "timeCol":"time_s", "fields":["f",...],
-  *                    "maxValidity":N, "bin":N, "as":"asof_time_s"}
-  *                    // latest record ≤ event; "as" names the match-
-  *                    // start column (chained asof/enrich ops in one
-  *                    // stream need distinct "as" names)
-  *   {"op":"enrich",  "table":"<parquet>", "by":[...], "startCol":"...",
-  *                    "endCol":"...", "fields":[...], "bin":N,
-  *                    "as":"asof_time_s"}
-  *                    // arbitrary static [start,end) intervals
-  *   {"op":"quality", "minWords":N, "maxWords":N}
-  *                    // Gopher-rules gate over a `text` column —
-  *                    // stateless codegen'd filter (curation firehose)
-  *   {"op":"langid",  "model":"<Models.saveLangId path>"}    // or:
-  *   {"op":"langid",  "train":"<labeled parquet>", "artifact":"<cache>"}
-  *                    // annotate predicted_lang + nb_score in place
-  *                    // from the persisted (or train-once) classifier
-  *   {"op":"dedup",   "horizon":"1 hour"}
-  *                    // exact dedup on md5(text): streaming keeps the
-  *                    // FIRST arrival per content hash inside the
-  *                    // watermark horizon (state bounded by the
-  *                    // window, not the corpus); batch keeps one row
-  *                    // per distinct text
-  *   {"op":"neardup", "horizon":3600, "k":16, "bands":4, "w":3,
-  *                    "threshold":0.5, "maxBucket":N}
-  *                    // minhash-LSH near-dup PAIRS (doc_a, doc_b,
-  *                    // est_jaccard) — transforms the doc stream into
-  *                    // a pair stream (terminal analytic step);
-  *                    // streaming = saturating-bucket processor,
-  *                    // batch = the capped banded self-join, shared
-  *                    // band formula so the faces agree
-  *   {"op":"tokens",  "model":"<Models.saveBpe path>"}        // or:
-  *   {"op":"tokens",  "train":"<corpus parquet>", "artifact":"<cache>"}
-  *                    // annotate n_pretokens + n_bpe_tokens in place
-  *                    // from the persisted (or train-once) BPE
-  *                    // tokenizer — one codegen'd kernel projection
-  *   {"op":"crosscorpus", "table":"<reference docs parquet>",
-  *                    "k":16, "bands":4, "w":3, "threshold":0.5,
-  *                    "maxBucket":N, "mode":"match"|"drop"}
-  *                    // near-dup detection AGAINST a static reference
-  *                    // corpus (benchmark decontamination / don't
-  *                    // re-ingest the training set, run continuously):
-  *                    // "match" (default) emits (new_id, ref_id,
-  *                    // est_jaccard, band) pairs — stateless on a
-  *                    // stream (one row per colliding band; chain
-  *                    // dropDuplicatesWithinWatermark for uniqueness);
-  *                    // "drop" keeps only UNcontaminated input rows —
-  *                    // batch-only (needs per-doc aggregation)
-  *   {"op":"cap",     "maxPerSource":N, "orderCol":"doc_id"}
-  *                    // per-source anti-dominance cap (batch job)
-  *   {"op":"split",   "trainFrac":0.9, "valFrac":0.05,
-  *                    "idCol":"doc_id", "keep":"train"}
-  *                    // deterministic md5 train/val/test assignment —
-  *                    // narrow, works on streams too; "keep" filters
-  *                    // to one split in place
-  *   {"op":"pack",    "budget":2048, "nShards":8, "orderCol":"doc_id"}
-  *                    // concat-and-chunk packing layout (batch job)
-  *   {"op":"sample",  "alpha":0.5, "targetFrac":0.5, "by":"source"}
-  *                    // temperature sampling by source (batch job)
-  *   {"op":"mixture", "budgetTokens":N, "alpha":0.5, "maxEpochs":1.0,
-  *                    "by":"source"}
-  *                    // token-budget mixture plan, one row per source
-  *                    // (batch job)
-  *
-  * Batch jobs ([[runJobs]]) share this op compiler: a `jobs` array of
-  * {"name", "input": <parquet>, "pipeline": [ops...], "output":
-  * <parquet>, "mode": "overwrite"} entries runs each pipeline once
-  * over the input corpus — the planning passes (cap/pack/sample/
-  * mixture) that need corpus-level aggregation live here, next to the
-  * same quality/dedup/tokens ops the firehose runs continuously.
-  *
-  * Sink spec: {"kind":"memory"|"console"|<registered>, "outputMode":...,
-  * "checkpoint": "<dir>"} — `memory` instances are cached per stream
-  * name so a reload's restarted query appends to the same sink the
-  * test/operator is already reading; other kinds come from the injected
-  * factory map (graphite/influx/... transports are constructor-injected
-  * everywhere in this library, and the config layer follows suit).
+  * Batch jobs ([[runJobs]]) share this op compiler: each job's
+  * pipeline runs once over its input corpus — the planning passes
+  * (cap/pack/sample/mixture) that need corpus-level aggregation live
+  * here, next to the same quality/dedup/tokens ops the firehose runs
+  * continuously.
   */
 object ConfigFile {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Parse `path` (+ transitive includes) into one merged document.
-    * Includes resolve relative to the including file and are
-    * cycle-guarded; streams concatenate in include order, includer
-    * last, so an includer can shadow an included stream by name (last
-    * definition of a name wins, matching LinkedHashMap replacement in
-    * [[Core.stream]]). */
-  def load(path: Path, seen: Set[Path] = Set.empty): List[JObject] = {
-    val real = path.toRealPath()
-    if (seen.contains(real))
-      throw new IllegalArgumentException(s"include cycle at $real")
-    val doc = JsonMethods.parse(Files.readString(real))
-    val included = (doc \ "include") match {
-      case JArray(vs) => vs.flatMap {
-        case JString(rel) => load(real.getParent.resolve(rel), seen + real)
-        case other => throw new IllegalArgumentException(
-          s"include entries must be strings, got $other")
-      }
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(
-        s"include must be an array, got $other")
+  /** One read of a config file and its transitive includes: each
+    * file's document in include order, a file's includes (depth first,
+    * in listed order) before the file itself. Every projection reads
+    * this one list, so one reload sees one state of the files. */
+  final class Snapshot private[ConfigFile] (docs: List[(Path, Args)]) {
+
+    /** The streams in include order, includer last, so an includer can
+      * shadow an included stream by name (last definition of a name
+      * wins, matching LinkedHashMap replacement in [[Core.stream]]). */
+    def streams: List[JObject] = docs.flatMap { case (file, doc) =>
+      val own = doc.objs("streams")
+      // two definitions of one name in the SAME file is the pasted-twice
+      // typo, not the include-shadowing contract — reject it here, where
+      // the origin file is still known (reload's last-wins collapse
+      // would silently never run the first definition). Shadowing across
+      // include boundaries (includer after its includes) stays legal.
+      val names = own.map(s => str(s \ "name", "stream.name"))
+      val dups = names.diff(names.distinct).distinct
+      if (dups.nonEmpty)
+        throw new IllegalArgumentException(
+          s"duplicate stream name(s) ${dups.mkString(", ")} defined in $file" +
+            " — names must be unique within one file; use an include to" +
+            " shadow a stream")
+      own
     }
-    val own = (doc \ "streams") match {
-      case JArray(vs) => vs.collect { case o: JObject => o }
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(
-        s"streams must be an array, got $other")
-    }
-    // two definitions of one name in the SAME file is the pasted-twice
-    // typo, not the include-shadowing contract — reject it here, where
-    // the origin file is still known (reload's last-wins collapse
-    // would silently never run the first definition). Shadowing across
-    // include boundaries (includer after its includes) stays legal.
-    val ownNames = own.map(s => str(s \ "name", "stream.name"))
-    val dups = ownNames.diff(ownNames.distinct).distinct
-    if (dups.nonEmpty)
-      throw new IllegalArgumentException(
-        s"duplicate stream name(s) ${dups.mkString(", ")} defined in $real" +
-          " — names must be unique within one file; use an include to" +
-          " shadow a stream")
-    included ++ own
+
+    /** The `tests` arrays (the `riemann test` workflow), in include
+      * order: a test suite split across includes runs whole. */
+    def tests: List[JObject] = docs.flatMap(_._2.objs("tests"))
+
+    /** The `jobs` arrays — the batch half of the curation surface, see
+      * [[runJobs]]. */
+    def jobs: List[JObject] = docs.flatMap(_._2.objs("jobs"))
+
+    /** The top-level object `key` of the LAST file in include order
+      * that defines it (`servers`, `modelsKeep`, `fanout`). */
+    def obj(key: String): Option[Args] = docs.flatMap(_._2.obj(key)).lastOption
   }
 
-  /** The include-merged `tests` arrays (the `riemann test` workflow) —
-    * same walk and ordering as [[load]]: included files' tests first,
-    * includer's last. A test suite split across includes runs whole. */
-  def loadTests(path: Path, seen: Set[Path] = Set.empty): List[JObject] = {
-    val real = path.toRealPath()
-    if (seen.contains(real))
-      throw new IllegalArgumentException(s"include cycle at $real")
-    val doc = JsonMethods.parse(Files.readString(real))
-    val included = (doc \ "include") match {
-      case JArray(vs) => vs.flatMap {
-        case JString(rel) => loadTests(real.getParent.resolve(rel), seen + real)
-        case other => throw new IllegalArgumentException(
-          s"include entries must be strings, got $other")
-      }
-      case _ => Nil
+  /** Read `path` and its transitive includes. Includes resolve relative
+    * to the including file and are cycle-guarded. */
+  def read(path: Path): Snapshot = {
+    def walk(p: Path, seen: Set[Path]): List[(Path, Args)] = {
+      val real = p.toRealPath()
+      if (seen.contains(real))
+        throw new IllegalArgumentException(s"include cycle at $real")
+      val doc = new Args(obj(JsonMethods.parse(Files.readString(real)),
+        real.toString), "")
+      doc.strings("include")
+        .flatMap(rel => walk(real.getParent.resolve(rel), seen + real)) :+
+        (real -> doc)
     }
-    val own = (doc \ "tests") match {
-      case JArray(ts) => ts.collect { case o: JObject => o }
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(
-        s"tests must be an array, got $other")
-    }
-    included ++ own
+    new Snapshot(walk(path, Set.empty))
   }
 
-  /** The include-merged `jobs` arrays — the BATCH half of the curation
-    * config surface. A job is a one-shot corpus pass (the planners the
-    * streaming firehose cannot express: per-source caps, packing
-    * layouts, sampling, mixture tables):
-    *
-    * {{{
-    * "jobs": [
-    *   {"name": "train-set", "input": "<parquet path>",
-    *    "pipeline": [{"op": "cap", ...}, {"op": "split", "keep": "train"},
-    *                 {"op": "pack", "budget": 2048}],
-    *    "output": "<parquet path>", "mode": "overwrite"}
-    * ]
-    * }}}
-    */
-  def loadJobs(path: Path, seen: Set[Path] = Set.empty): List[JObject] = {
-    val real = path.toRealPath()
-    if (seen.contains(real))
-      throw new IllegalArgumentException(s"include cycle at $real")
-    val doc = JsonMethods.parse(Files.readString(real))
-    val included = (doc \ "include") match {
-      case JArray(vs) => vs.flatMap {
-        case JString(rel) =>
-          loadJobs(real.getParent.resolve(rel), seen + real)
-        case other => throw new IllegalArgumentException(
-          s"include entries must be strings, got $other")
-      }
-      case _ => Nil
-    }
-    val own = (doc \ "jobs") match {
-      case JArray(js) => js.collect { case o: JObject => o }
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(
-        s"jobs must be an array, got $other")
-    }
-    included ++ own
-  }
+  /** The include-merged streams of `path` ([[Snapshot.streams]]). */
+  def load(path: Path): List[JObject] = read(path).streams
 
-  /** The include-merged value of one top-level `key` — the same walk
-    * and shadowing contract as [[load]]: includes resolve first (in
-    * order), the includer's own definition last, and the LAST file in
-    * that order to define the key wins. `JNothing` when no file in the
-    * tree defines it. r19 ADVICE: the `fanout` block was parsed from
-    * the top-level document only while streams honor include merging,
-    * so a fanout block in an included file was silently ignored. */
-  def loadKey(path: Path, key: String,
-      seen: Set[Path] = Set.empty): JValue = {
-    val real = path.toRealPath()
-    if (seen.contains(real))
-      throw new IllegalArgumentException(s"include cycle at $real")
-    val doc = JsonMethods.parse(Files.readString(real))
-    val included = (doc \ "include") match {
-      case JArray(vs) => vs.map {
-        case JString(rel) =>
-          loadKey(real.getParent.resolve(rel), key, seen + real)
-        case other => throw new IllegalArgumentException(
-          s"include entries must be strings, got $other")
-      }
-      case _ => Nil
-    }
-    (included :+ (doc \ key)).filter(_ != JNothing)
-      .lastOption.getOrElse(JNothing)
-  }
+  /** The include-merged batch jobs of `path` ([[Snapshot.jobs]]). */
+  def loadJobs(path: Path): List[JObject] = read(path).jobs
 
   /** Run every batch job in the file: read `input` parquet, fold the
     * job's `pipeline` through [[applyOp]] on the batch frame, write
@@ -278,43 +127,27 @@ object ConfigFile {
     * pipeline op behaves identically in a job and in a stream. */
   def runJobs(spark: SparkSession, path: Path): Seq[(String, Long)] =
     loadJobs(path).map { job =>
-      val name = str(job \ "name", "job.name")
-      val in = spark.read.parquet(str(job \ "input", s"$name.input"))
-      val out = (job \ "pipeline") match {
-        case JArray(ops) =>
-          ops.foldLeft(in) {
-            case (d, o: JObject) => applyOp(d, o)
-            case (_, other) => throw new IllegalArgumentException(
-              s"$name: pipeline entries must be objects, got $other")
-          }
-        case JNothing => in
-        case other => throw new IllegalArgumentException(
-          s"$name: pipeline must be an array, got $other")
-      }
-      val target = str(job \ "output", s"$name.output")
+      val a = new Args(job, str(job \ "name", "job.name"))
+      val out = a.objs("pipeline").foldLeft(spark.read.parquet(a.str("input")))(
+        applyOp)
+      val target = a.str("output")
       // report rows WRITTEN, not rows-at-path (an "append" run must not
       // count pre-existing output), without recomputing the pipeline:
       // the write materializes the cache, the count then reads it
       val cached = out.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        cached.write.mode((job \ "mode") match {
-          case JString(m) => m
-          case _ => "overwrite"
-        }).parquet(target)
-        name -> cached.count()
+        cached.write.mode(a.str("mode", "overwrite")).parquet(target)
+        a.at -> cached.count()
       } finally { cached.unpersist(); () }
     }
 
+  private def wrongType(what: String, v: JValue) =
+    new IllegalArgumentException(s"$what: got $v")
+
   private[graft] def str(v: JValue, what: String): String = v match {
     case JString(s) => s
-    case other => throw new IllegalArgumentException(s"$what: got $other")
-  }
-
-  private[graft] def strings(v: JValue): Seq[String] = v match {
-    case JArray(vs) => vs.map(str(_, "list element"))
-    case JNothing => Nil
-    case other => throw new IllegalArgumentException(s"expected array: $other")
+    case other => throw wrongType(what, other)
   }
 
   private[graft] def num(v: JValue, what: String): Double = v match {
@@ -322,7 +155,77 @@ object ConfigFile {
     case JLong(n) => n.toDouble
     case JDouble(n) => n
     case JDecimal(n) => n.toDouble
-    case other => throw new IllegalArgumentException(s"$what: got $other")
+    case other => throw wrongType(what, other)
+  }
+
+  /** The JSON boolean, or EXACTLY the string "true"/"false". Anything
+    * else ("True", "yes", 1, …) throws — this guards security flags
+    * like tlsclientauth, where a typo'd value silently reading as false
+    * would disable client-cert verification. */
+  private def bool(v: JValue, what: String): Boolean = v match {
+    case JBool(b) => b
+    case JString("true") => true
+    case JString("false") => false
+    case other => throw wrongType(what, other)
+  }
+
+  private def obj(v: JValue, what: String): JObject = v match {
+    case o: JObject => o
+    case other => throw wrongType(what, other)
+  }
+
+  private def elems(v: JValue, what: String): List[JValue] = v match {
+    case JArray(vs) => vs
+    case other => throw wrongType(what, other)
+  }
+
+  /** The argument rule every config value follows: a key that is
+    * absent (or `null`) takes its default; a key present with the
+    * wrong type fails the load with a message naming it, e.g.
+    * `index.watermark: got JInt(30)`. `at` is the object's place in the
+    * file (an op name, `servers.tcp`, a stream name; empty for a file's
+    * top level) and prefixes every key it names. */
+  private[graft] final class Args(val json: JObject, val at: String) {
+    private def key(k: String) = if (at.isEmpty) k else s"$at.$k"
+
+    def opt[A](k: String)(parse: (JValue, String) => A): Option[A] =
+      json \ k match {
+        case JNothing | JNull => None
+        case v => Some(parse(v, key(k)))
+      }
+
+    def str(k: String): String = ConfigFile.str(json \ k, key(k))
+    def str(k: String, dflt: => String): String = strOpt(k).getOrElse(dflt)
+    def strOpt(k: String): Option[String] = opt(k)(ConfigFile.str)
+    def num(k: String): Double = ConfigFile.num(json \ k, key(k))
+    def num(k: String, dflt: Double): Double = numOpt(k).getOrElse(dflt)
+    def numOpt(k: String): Option[Double] = opt(k)(ConfigFile.num)
+    def int(k: String): Int = num(k).toInt
+    def int(k: String, dflt: Int): Int = numOpt(k).fold(dflt)(_.toInt)
+    def long(k: String): Long = num(k).toLong
+    def long(k: String, dflt: Long): Long = numOpt(k).fold(dflt)(_.toLong)
+    def bool(k: String, dflt: Boolean): Boolean =
+      opt(k)(ConfigFile.bool).getOrElse(dflt)
+
+    /** An array of strings; absent is empty. */
+    def strings(k: String): List[String] = opt(k)((v, w) =>
+      elems(v, w).map(ConfigFile.str(_, s"$w entries"))).getOrElse(Nil)
+
+    /** An array of objects; absent is empty. */
+    def objs(k: String): List[JObject] = opt(k)((v, w) =>
+      elems(v, w).map(ConfigFile.obj(_, s"$w entries"))).getOrElse(Nil)
+
+    def obj(k: String): Option[Args] =
+      opt(k)((v, w) => new Args(ConfigFile.obj(v, w), w))
+
+    /** Every field, each an object. */
+    def objectFields: List[(String, Args)] =
+      json.obj.map { case (k, v) => k -> new Args(ConfigFile.obj(v, key(k)), key(k)) }
+
+    /** An object of strings, as its fields; absent is empty. */
+    def strMap(k: String): List[(String, String)] = obj(k).fold(
+      List.empty[(String, String)])(o => o.json.obj.map { case (f, v) =>
+        f -> ConfigFile.str(v, o.key(f)) })
   }
 
   /** Static-side relations for the stream-static ops (asof/enrich
@@ -507,16 +410,19 @@ object ConfigFile {
     if (df.columns.contains("tags")) col("tags")
     else lit(Array.empty[String])
 
+  private def tags(df: DataFrame) = coalesce(tagsCol(df), array())
+
   /** Stream side of the asof/enrich ops: the events' `time` timestamp
     * becomes seconds for the interval arithmetic, the stateless
     * stream-static join runs, the helper column drops, and the match
-    * start surfaces as `timeAs` (default `asof_time_s`; the op's
-    * `"as"` field — chaining two asof/enrich ops in one stream REQUIRES
-    * distinct names or the duplicate column is rejected here instead of
+    * start surfaces as the op's `"as"` column (default `asof_time_s`;
+    * chaining two asof/enrich ops in one stream REQUIRES distinct
+    * names or the duplicate column is rejected here instead of
     * surfacing as a downstream AMBIGUOUS_REFERENCE). The helper column
     * is namespaced so no event field can be clobbered. */
   private def enrichWith(df: DataFrame, intervals: DataFrame,
-      by: Seq[String], bin: Long, timeAs: String): DataFrame = {
+      by: Seq[String], a: Args): DataFrame = {
+    val timeAs = a.str("as", "asof_time_s")
     require(!df.columns.contains(timeAs),
       s"enrich/asof output column '$timeAs' already exists on the " +
         "stream (chained asof/enrich ops?) — set a distinct \"as\" " +
@@ -541,486 +447,390 @@ object ConfigFile {
     require(!df.columns.contains(t), s"reserved column $t on input")
     graft.streaming.StreamingAsOf.enrich(
         df.withColumn(t, unix_seconds(col("time"))),
-        intervals, by, t, bin)
+        intervals, by, t, a.long("bin"))
       .withColumnRenamed(s"asof_$t", timeAs)
       .drop(t)
   }
+
+  /** The columns an op reads must be on its input. */
+  private def need(df: DataFrame, a: Args, cols: String*): Unit =
+    require(cols.forall(df.columns.contains),
+      s"${a.at} op needs ${cols.map(c => s"`$c`").mkString(" and ")} " +
+        "column(s) on its input")
+
+  /** Corpus-level planners need the whole corpus: batch jobs only. */
+  private def batchOnly(df: DataFrame, a: Args): Unit =
+    require(!df.isStreaming,
+      s"${a.at} is a corpus-level planner — run it in a batch job")
+
+  /** The event-time watermark delay of a windowed or index op. */
+  private def watermark(a: Args): String = a.str("watermark", "0 seconds")
+
+  /** The index op's watermark delay, "0 seconds" when absent. */
+  def indexWatermark(op: JObject): String = watermark(new Args(op, "index"))
+
+  /** MinHash-LSH parameters shared by neardup and crosscorpus. */
+  private final case class MinHash(k: Int, bands: Int, w: Int,
+      threshold: Double, maxBucket: Int)
+
+  private def minHash(a: Args) = MinHash(a.int("k", 16), a.int("bands", 4),
+    a.int("w", 3), a.num("threshold", 0.5),
+    a.int("maxBucket", graft.pipeline.Caps.DefaultMaxBucket))
+
+  /** A model-taking op's model: the persisted artifact at `"model"`, or
+    * trained once from the `"train"` corpus and cached at `"artifact"`
+    * (re-trained only on config/corpus drift). */
+  private def model[M](df: DataFrame, a: Args,
+      load: (SparkSession, String) => M, train: (DataFrame, String) => M): M =
+    a.strOpt("model") match {
+      case Some(p) => load(df.sparkSession, p)
+      case None => train(df.sparkSession.read.parquet(a.str("train")),
+        a.str("artifact"))
+    }
+
+  /** `window` and `rate`: a watermarked tumbling event-time aggregation
+    * of `field` per `seconds` × `by`, in the (by, time, metric) shape. */
+  private def windowAgg(df: DataFrame, a: Args, aggName: String): DataFrame = {
+    val secs = a.num("seconds")
+    val by = a.strings("by")
+    val wm = watermark(a)
+    val field = a.str("field", "metric")
+    if (aggName == "distinct") {
+      // approximate distinct-count of `field` per window × by —
+      // exact count(DISTINCT) is unsupported on streams, so this
+      // is THE way to ask "how many distinct hosts per service":
+      // the deterministic HLL sketch rolled up through chained
+      // stateful aggregations (bounded state, ~13% sigma at the
+      // default precision)
+      graft.pipeline.Sketches.streamingDistinct(df, "time",
+          s"${secs.toLong} seconds", by, field, watermark = wm)
+        .select(by.map(col) :+ col("window_start").as("time") :+
+          col("hll_est").as("metric"): _*)
+    } else if (aggName.matches("p\\d{2,3}")) {
+      // approximate quantile of `field` per window × by ("p95" =
+      // 95th percentile, "p999" = 99.9th) — the reference's
+      // percentiles op buffers and sorts every event in the
+      // window (streams.clj sorted-sample); the HDR quantile
+      // sketch answers in bounded additive state with <= 2^-5
+      // relative under-error. Metric domain: non-negative, at
+      // milli resolution (scaled to longs, estimate scaled back)
+      val digits = aggName.drop(1)
+      val qMilli =
+        if (digits.length == 2) digits.toInt * 10 else digits.toInt
+      // reject ambiguous forms: "p100" would parse as per-mille
+      // 100 (the 10th percentile) when the user almost certainly
+      // meant the max, and 3-digit values <= 100 ("p050") collide
+      // with the 2-digit reading. 2-digit = whole percentile
+      // (p95); 3-digit = per-mille and must exceed 100 (p999 =
+      // 99.9th). The maximum is agg "max", not a percentile.
+      if (qMilli < 1 || qMilli > 999 ||
+          (digits.length == 3 && qMilli <= 100))
+        throw new IllegalArgumentException(
+          s"window.agg: $aggName is ambiguous — use pNN for whole " +
+          "percentiles (p95), pNNN > 100 for per-mille (p999 = " +
+          "99.9th), or agg \"max\" for the maximum")
+      graft.pipeline.Sketches.streamingQuantiles(df, "time",
+          s"${secs.toLong} seconds", by,
+          floor(col(field) * 1000).cast("long"), Seq(qMilli),
+          watermark = wm)
+        .select(by.map(col) :+ col("window_start").as("time") :+
+          (col("hdr_est").cast("double") / lit(1000.0)).as("metric"): _*)
+    } else {
+      val agg = aggName match {
+        // riemann's rate (streams.clj:841-883): the interval's summed
+        // metric per second, as Windows.rate computes it
+        case "rate" => sum(col(field)) / lit(secs)
+        case "sum" => sum(col(field))
+        case "mean" => avg(col(field))
+        case "count" => count(col(field)).cast("double")
+        case "max" => max(col(field))
+        case "min" => min(col(field))
+        case other =>
+          throw new IllegalArgumentException(s"window.agg: $other")
+      }
+      df.withWatermark("time", wm)
+        .groupBy(window(col("time"), s"${secs.toLong} seconds") +:
+          by.map(col): _*)
+        .agg(agg.as("metric"))
+        .select(by.map(col) :+ col("window.start").as("time") :+
+          col("metric"): _*)
+    }
+  }
+
+  /** throttle: at most `n` events per (host, service) per `dt`-second
+    * event-time bucket (streams.clj:1102-1118). Columns beyond SEvent's
+    * fields (tags, projection output) ride through the typed round-trip
+    * packed as one JSON struct column and are restored after — a
+    * pipeline tag -> throttle -> tagged-any keeps its tags. */
+  private def throttle(df: DataFrame, a: Args): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val n = a.int("n")
+    val dt = a.long("dt")
+    val base = Seq("host", "service", "state", "metric", "time", "ttl")
+    val extras = df.columns.toSeq.filterNot(base.contains)
+    if (extras.isEmpty)
+      graft.streaming.StatefulOps.throttle(df.as[SEvent], n, dt).toDF()
+    else {
+      val extraSchema = org.apache.spark.sql.types.StructType(
+        extras.map(c => df.schema(c)))
+      val packed = df.select(base.map(col) :+
+        to_json(struct(extras.map(col): _*)).as("extra"): _*)
+        .as[SEventX]
+      graft.streaming.StatefulOps.throttleBy[SEventX](packed, n, dt,
+          e => (e.host, e.service), _.time)
+        .toDF()
+        .withColumn("extra", from_json(col("extra"), extraSchema))
+        .select(df.columns.toSeq.map(c =>
+          if (base.contains(c)) col(c)
+          else col("extra").getField(c).as(c)): _*)
+    }
+  }
+
+  private type Compile = (DataFrame, Args) => DataFrame
+
+  private def op(name: String)(compile: Compile) = name -> compile
+
+  /** Every config op, by name: how it compiles onto a frame. Each op
+    * compiles to a Catalyst plan — filters and projections stay
+    * codegen'd; windows are watermarked groupBys. docs/config.md's two
+    * op tables list the same names (FileConfigSpec holds them equal). */
+  private val ops: Map[String, Compile] = Map(
+    op("where")((df, a) => df.filter(expr(a.str("expr")))),
+    op("query")((df, a) => df.filter(graft.query.QueryLanguage.compile(
+      graft.query.QueryLanguage.parse(a.str("q")), df.schema))),
+    op("with")((df, a) => a.strMap("set").foldLeft(df) {
+      case (d, (k, e)) => d.withColumn(k, expr(e))
+    }),
+    // fills only where the field is null (or absent)
+    op("default")((df, a) => a.strMap("set").foldLeft(df) { case (d, (k, v)) =>
+      val e = expr(v)
+      d.withColumn(k, if (d.columns.contains(k)) coalesce(col(k), e) else e)
+    }),
+    op("scale")((df, a) =>
+      df.withColumn("metric", col("metric") * a.num("factor"))),
+    op("select")((df, a) => df.select(a.strings("cols").map(col): _*)),
+    // the tag family (streams.clj:1284-1330, 1463-1488)
+    op("tag")((df, a) => df.withColumn("tags",
+      array_union(tags(df), lit(a.strings("tags").toArray)))),
+    op("untag")((df, a) => df.withColumn("tags",
+      array_except(tags(df), lit(a.strings("tags").toArray)))),
+    op("tagged-all")((df, a) => df.filter(a.strings("tags")
+      .map(t => array_contains(tags(df), t))
+      .reduceOption(_ && _).getOrElse(lit(true)))),
+    op("tagged-any")((df, a) =>
+      df.filter(arrays_overlap(tags(df), lit(a.strings("tags").toArray)))),
+    op("over")((df, a) => df.filter(col("metric") > a.num("x"))),
+    op("under")((df, a) => df.filter(col("metric") < a.num("x"))),
+    op("throttle")(throttle),
+    op("window")((df, a) => windowAgg(df, a, a.str("agg"))),
+    op("rate")((df, a) => windowAgg(df, a, "rate")),
+    // gap-based sessions per `by` keys: one row per CLOSED session
+    // carrying (time = session start, metric = event count) — native
+    // session_window, so the same op works in batch test mode and on
+    // the live stream
+    op("sessionize")((df, a) => {
+      val by = a.strings("by")
+      graft.operators.Temporal.sessionize(
+          df.withWatermark("time", watermark(a)), by, "time",
+          s"${a.long("gap")} seconds")
+        .select(by.map(col) :+
+          timestamp_seconds(col("session_start_s")).as("time") :+
+          col("n_events").cast("double").as("metric"): _*)
+    }),
+    // the latest static reference record at-or-before each event (per
+    // key): StreamingAsOf's STATELESS validity-interval form — no
+    // state store, restart-safe
+    op("asof")((df, a) => {
+      val spark = df.sparkSession
+      val by = a.strings("by")
+      val tcol = a.str("timeCol", "time_s")
+      val table = a.str("table")
+      val fields = a.strings("fields")
+      val maxV = a.long("maxValidity")
+      val iv = cachedStatic(spark, ("asof-iv", table, by, tcol, fields,
+          maxV), tableVersion(spark, table)) {
+        graft.streaming.StreamingAsOf.validityIntervals(
+          spark.read.parquet(table), by, tcol, fields, maxV)
+      }
+      enrichWith(df, iv, by, a)
+    }),
+    // arbitrary static validity intervals (maintenance windows, deploy
+    // freezes — explicit [start, end) second columns): the same
+    // stateless stream-static interval join
+    op("enrich")((df, a) => {
+      val spark = df.sparkSession
+      val by = a.strings("by")
+      val table = a.str("table")
+      val startCol = a.str("startCol")
+      val endCol = a.str("endCol")
+      val fields = a.strings("fields")
+      val iv = cachedStatic(spark, ("enrich-iv", table, by, startCol,
+          endCol, fields), tableVersion(spark, table)) {
+        graft.streaming.StreamingAsOf.intervalsOf(
+          spark.read.parquet(table), by, startCol, endCol, fields)
+      }
+      enrichWith(df, iv, by, a)
+    }),
+    // Gopher-rules quality gate over a `text` column (the curation
+    // firehose's first stage): one narrow codegen'd kernel filter
+    op("quality")((df, a) => {
+      val minW = a.int("minWords", 50)
+      val maxW = a.int("maxWords", 100000)
+      need(df, a, "text")
+      graft.pipeline.TextAnalysis.gopherKeep(df, minW, maxW)
+    }),
+    // annotate (predicted_lang, nb_score) from the NB classifier — one
+    // narrow codegen'd projection, stateless on a stream
+    op("langid")((df, a) => {
+      need(df, a, "text")
+      graft.pipeline.TextAnalysis.langIdAnnotate(df, model(df, a,
+        graft.pipeline.Models.loadLangId,
+        graft.pipeline.Models.loadOrTrainLangId(_, _)))
+    }),
+    // exact dedup on content hash. Streaming keeps the FIRST arrival
+    // per hash inside the watermark horizon (state bounded by the
+    // window, the long tail belongs to the periodic batch pass); the
+    // batch face keeps one row per distinct text.
+    op("dedup")((df, a) => {
+      val hz = a.str("horizon", "1 hour")
+      need(df, a, "text")
+      if (df.isStreaming) {
+        need(df, a, "time")
+        graft.pipeline.Dedup.streamingExact(df, "time", hz)
+          .drop("content_hash")
+      } else df.dropDuplicates(Seq("text"))
+    }),
+    // minhash-LSH near-duplicate PAIRS (doc_a, doc_b, est_jaccard). Both
+    // faces share the signature kernels and the ONE band/bucket formula
+    // (Dedup.bandExplodeExpr), so a pair the stream emits is a pair the
+    // batch join finds on the same horizon's corpus.
+    op("neardup")((df, a) => {
+      val m = minHash(a)
+      val hz = a.long("horizon", 3600L)
+      need(df, a, "doc_id", "text")
+      if (df.isStreaming) {
+        need(df, a, "time")
+        graft.streaming.StreamingNearDup(df, "time", hz, m.k, m.bands, m.w,
+          m.threshold, m.maxBucket).toDF()
+          .select("doc_a", "doc_b", "est_jaccard")
+      } else graft.pipeline.Dedup.minhashPairs(df, m.k, m.bands,
+        m.threshold, m.w, m.maxBucket).select("doc_a", "doc_b", "est_jaccard")
+    }),
+    // annotate token counts from the BPE tokenizer — the merges reach
+    // the codegen'd BpeCountExpr kernel via a broadcast stub, so this
+    // is a pure narrow per-doc projection
+    op("tokens")((df, a) => {
+      need(df, a, "text")
+      val merges = model(df, a, graft.pipeline.Models.loadBpe,
+        graft.pipeline.Models.loadOrTrainBpe(_, _))
+      val helper = "__graft_bpe_c"
+      require(!df.columns.contains(helper),
+        s"reserved column $helper on input")
+      df.withColumn(helper, org.apache.spark.sql.graft.ColumnBridge
+          .column(graft.pipeline.BpeCountExpr(
+            org.apache.spark.sql.graft.ColumnBridge.expression(
+              col("text")),
+            graft.pipeline.Bpe.broadcastMerges(df.sparkSession, merges))))
+        .withColumn("n_pretokens", col(s"$helper.n_pretokens"))
+        .withColumn("n_bpe_tokens", col(s"$helper.n_bpe_tokens"))
+        .drop(helper)
+    }),
+    op("cap")((df, a) => {
+      batchOnly(df, a)
+      need(df, a, "source")
+      graft.pipeline.Curation.sourceCap(df, a.int("maxPerSource"),
+        a.str("orderCol", "doc_id"))
+    }),
+    // deterministic train/val/test assignment — a narrow hash
+    // projection, so it also drops into a streaming pipeline; "keep"
+    // filters to one split in place
+    op("split")((df, a) => {
+      val out = graft.pipeline.Curation.splitAssign(df,
+        a.num("trainFrac", 0.9), a.num("valFrac", 0.05),
+        a.str("idCol", "doc_id"))
+      a.strOpt("keep").fold(out) { s =>
+        require(Set("train", "val", "test")(s),
+          s"split.keep must be train|val|test, got '$s'")
+        out.filter(col("split") === s)
+      }
+    }),
+    op("pack")((df, a) => {
+      batchOnly(df, a)
+      need(df, a, "text", "lang")
+      graft.pipeline.Curation.packSequences(df, a.int("budget"),
+        a.int("nShards", 8), a.str("orderCol", "doc_id"))
+    }),
+    op("sample")((df, a) => {
+      batchOnly(df, a)
+      val by = a.str("by", "source")
+      need(df, a, by, "doc_id")
+      graft.pipeline.Curation.temperatureSample(df, a.num("alpha", 0.5),
+        a.num("targetFrac", 0.5), by)
+    }),
+    op("mixture")((df, a) => {
+      batchOnly(df, a)
+      val by = a.str("by", "source")
+      need(df, a, by, "text")
+      graft.pipeline.Curation.mixturePlan(df, a.long("budgetTokens"),
+        a.num("alpha", 0.5), a.num("maxEpochs", 1.0), by)
+    }),
+    // near-dup vs a STATIC reference corpus — the decontamination stage
+    // run continuously. The reference's banded relation is built once
+    // per (re)compile; each micro-batch stream-static equi-joins it on
+    // (band, bucket), stateless and restart-safe.
+    op("crosscorpus")((df, a) => {
+      val spark = df.sparkSession
+      need(df, a, "text", "doc_id", "time")
+      val m = minHash(a)
+      val table = a.str("table")
+      val refB = cachedStatic(spark, ("xc-ref", table, m.k, m.bands, m.w,
+          m.maxBucket), tableVersion(spark, table)) {
+        graft.streaming.StreamingCrossCorpus.referenceBanded(
+          spark.read.parquet(table), m.k, m.bands, m.w, m.maxBucket)
+      }
+      val matches = graft.streaming.StreamingCrossCorpus.matches(
+        df, refB, "time", m.k, m.bands, m.w, m.threshold)
+      a.str("mode", "match") match {
+        case "drop" =>
+          // keep only UNcontaminated rows: per-doc "no qualifying
+          // match" needs an aggregation over the match evidence, which
+          // a stateless stream cannot express — the firehose emits
+          // matches and the periodic batch pass owns the removal
+          require(!df.isStreaming,
+            "crosscorpus \"mode\":\"drop\" is batch-only (per-doc " +
+              "aggregation); stream \"mode\":\"match\" and filter in " +
+              "the periodic batch pass")
+          df.join(matches.select(col("new_id").as("doc_id")).distinct(),
+            Seq("doc_id"), "left_anti")
+        case "match" =>
+          matches.select("new_id", "ref_id", "est_jaccard", "band")
+        case other => throw new IllegalArgumentException(
+          s"crosscorpus.mode: expected \"match\" or \"drop\", got \"$other\"")
+      }
+    }),
+    // a frame carrying tags or attributes indexes through the
+    // whole-event processor, so the served index answers `tagged "x"`
+    // and attribute queries — the reference's index stores whole
+    // events (index.clj:58-126)
+    op("index")((df, a) =>
+      if (carriesWholeEvents(df))
+        graft.streaming.WireIndexProcessor(wireEvents(df), watermark(a)).toDF()
+      else IndexProcessor(df.as[SEvent](
+        org.apache.spark.sql.Encoders.product[SEvent]), watermark(a)).toDF())
+  )
+
+  /** The op names [[applyOp]] knows. */
+  private[graft] def opNames: Set[String] = ops.keySet
 
   /** Compile one op onto a DataFrame. Separate from the chain so specs
     * can exercise ops individually on batch frames (every op except
     * index/window is batch-streaming agnostic). */
   def applyOp(df: DataFrame, op: JObject): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    str(op \ "op", "op") match {
-      case "where" => df.filter(expr(str(op \ "expr", "where.expr")))
-      case "query" =>
-        val ast = graft.query.QueryLanguage.parse(str(op \ "q", "query.q"))
-        df.filter(graft.query.QueryLanguage.compile(ast, df.schema))
-      case "with" => (op \ "set") match {
-        case JObject(fields) => fields.foldLeft(df) { case (d, (k, v)) =>
-          d.withColumn(k, expr(str(v, s"with.$k")))
-        }
-        case other => throw new IllegalArgumentException(s"with.set: $other")
-      }
-      case "default" => (op \ "set") match {
-        case JObject(fields) => fields.foldLeft(df) { case (d, (k, v)) =>
-          val e = expr(str(v, s"default.$k"))
-          d.withColumn(k,
-            if (d.columns.contains(k)) coalesce(col(k), e) else e)
-        }
-        case other => throw new IllegalArgumentException(s"default.set: $other")
-      }
-      case "scale" =>
-        df.withColumn("metric", col("metric") * num(op \ "factor", "scale.factor"))
-      case "select" => df.select(strings(op \ "cols").map(col): _*)
-      case "tag" =>
-        df.withColumn("tags", array_union(
-          coalesce(tagsCol(df), array()),
-          lit(strings(op \ "tags").toArray)))
-      case "untag" =>
-        df.withColumn("tags",
-          array_except(coalesce(tagsCol(df), array()),
-            lit(strings(op \ "tags").toArray)))
-      case "tagged-all" =>
-        df.filter(strings(op \ "tags")
-          .map(t => array_contains(coalesce(tagsCol(df), array()), t))
-          .reduceOption(_ && _).getOrElse(lit(true)))
-      case "tagged-any" =>
-        df.filter(arrays_overlap(coalesce(tagsCol(df), array()),
-          lit(strings(op \ "tags").toArray)))
-      case "over" => df.filter(col("metric") > num(op \ "x", "over.x"))
-      case "under" => df.filter(col("metric") < num(op \ "x", "under.x"))
-      case "throttle" =>
-        // streaming-stateful: at most n events per (host, service) per
-        // dt-second event-time bucket (streams.clj:1102-1118). Columns
-        // beyond SEvent's fields (tags, projection output) ride
-        // through the typed round-trip packed as one JSON struct
-        // column and are restored after — a pipeline
-        // tag -> throttle -> tagged-any keeps its tags
-        val n = num(op \ "n", "throttle.n").toInt
-        val dt = num(op \ "dt", "throttle.dt").toLong
-        val base = Seq("host", "service", "state", "metric", "time", "ttl")
-        val extras = df.columns.toSeq.filterNot(base.contains)
-        if (extras.isEmpty)
-          graft.streaming.StatefulOps.throttle(df.as[SEvent], n, dt).toDF()
-        else {
-          val extraSchema = org.apache.spark.sql.types.StructType(
-            extras.map(c => df.schema(c)))
-          val packed = df.select(base.map(col) :+
-            to_json(struct(extras.map(col): _*)).as("extra"): _*)
-            .as[SEventX]
-          graft.streaming.StatefulOps.throttleBy[SEventX](packed, n, dt,
-              e => (e.host, e.service), _.time)
-            .toDF()
-            .withColumn("extra", from_json(col("extra"), extraSchema))
-            .select(df.columns.toSeq.map(c =>
-              if (base.contains(c)) col(c)
-              else col("extra").getField(c).as(c)): _*)
-        }
-      case "window" | "rate" =>
-        val secs = num(op \ "seconds", "window.seconds")
-        val by = strings(op \ "by")
-        val wm = (op \ "watermark") match {
-          case JString(s) => s
-          case _ => "0 seconds"
-        }
-        val kind = str(op \ "op", "op")
-        val field = (op \ "field") match {
-          case JString(s) => s
-          case _ => "metric"
-        }
-        val aggName = if (kind == "rate") "rate"
-          else str(op \ "agg", "window.agg")
-        if (aggName == "distinct") {
-          // approximate distinct-count of `field` per window × by —
-          // exact count(DISTINCT) is unsupported on streams, so this
-          // is THE way to ask "how many distinct hosts per service":
-          // the deterministic HLL sketch rolled up through chained
-          // stateful aggregations (bounded state, ~13% sigma at the
-          // default precision), surfaced in the op's (by, time,
-          // metric) shape like every other window agg
-          graft.pipeline.Sketches.streamingDistinct(df, "time",
-              s"${secs.toLong} seconds", by, field, watermark = wm)
-            .select(by.map(col) :+ col("window_start").as("time") :+
-              col("hll_est").as("metric"): _*)
-        } else if (aggName.matches("p\\d{2,3}")) {
-          // approximate quantile of `field` per window × by ("p95" =
-          // 95th percentile, "p999" = 99.9th) — the reference's
-          // percentiles op buffers and sorts every event in the
-          // window (streams.clj sorted-sample); the HDR quantile
-          // sketch answers in bounded additive state with <= 2^-5
-          // relative under-error. Metric domain: non-negative, at
-          // milli resolution (scaled to longs, estimate scaled back)
-          val digits = aggName.drop(1)
-          val qMilli =
-            if (digits.length == 2) digits.toInt * 10 else digits.toInt
-          // reject ambiguous forms: "p100" would parse as per-mille
-          // 100 (the 10th percentile) when the user almost certainly
-          // meant the max, and 3-digit values <= 100 ("p050") collide
-          // with the 2-digit reading. 2-digit = whole percentile
-          // (p95); 3-digit = per-mille and must exceed 100 (p999 =
-          // 99.9th). The maximum is agg "max", not a percentile.
-          if (qMilli < 1 || qMilli > 999 ||
-              (digits.length == 3 && qMilli <= 100))
-            throw new IllegalArgumentException(
-              s"window.agg: $aggName is ambiguous — use pNN for whole " +
-              "percentiles (p95), pNNN > 100 for per-mille (p999 = " +
-              "99.9th), or agg \"max\" for the maximum")
-          graft.pipeline.Sketches.streamingQuantiles(df, "time",
-              s"${secs.toLong} seconds", by,
-              floor(col(field) * 1000).cast("long"), Seq(qMilli),
-              watermark = wm)
-            .select(by.map(col) :+ col("window_start").as("time") :+
-              (col("hdr_est").cast("double") / lit(1000.0)).as("metric"): _*)
-        } else {
-          val agg = aggName match {
-            case "rate" => count(lit(1)) / lit(secs)
-            case "sum" => sum(col(field))
-            case "mean" => avg(col(field))
-            case "count" => count(col(field)).cast("double")
-            case "max" => max(col(field))
-            case "min" => min(col(field))
-            case other =>
-              throw new IllegalArgumentException(s"window.agg: $other")
-          }
-          df.withWatermark("time", wm)
-            .groupBy(window(col("time"), s"${secs.toLong} seconds") +:
-              by.map(col): _*)
-            .agg(agg.as("metric"))
-            .select(by.map(col) :+ col("window.start").as("time") :+
-              col("metric"): _*)
-        }
-      case "sessionize" =>
-        // gap-based sessions per `by` keys: one row per CLOSED session
-        // carrying (time = session start, metric = event count) — the
-        // "activity bursts per host" rollup; native session_window, so
-        // the same op works in batch test mode and on the live stream
-        val gap = num(op \ "gap", "sessionize.gap")
-        val by = strings(op \ "by")
-        val wm = (op \ "watermark") match {
-          case JString(s) => s
-          case _ => "0 seconds"
-        }
-        graft.operators.Temporal.sessionize(
-            df.withWatermark("time", wm), by, "time",
-            s"${gap.toLong} seconds")
-          .select(by.map(col) :+
-            timestamp_seconds(col("session_start_s")).as("time") :+
-            col("n_events").cast("double").as("metric"): _*)
-      case "asof" =>
-        // enrich with the latest static reference record at-or-before
-        // each event (per key): StreamingAsOf's STATELESS validity-
-        // interval form — no state store, restart-safe; the reference
-        // parquet is read once per (re)compile
-        val by = strings(op \ "by")
-        val tcol = (op \ "timeCol") match {
-          case JString(s) => s
-          case _ => "time_s"
-        }
-        val table = str(op \ "table", "asof.table")
-        val fields = strings(op \ "fields")
-        val maxV = num(op \ "maxValidity", "asof.maxValidity").toLong
-        val iv = cachedStatic(spark, ("asof-iv", table, by, tcol, fields,
-            maxV), tableVersion(spark, table)) {
-          graft.streaming.StreamingAsOf.validityIntervals(
-            spark.read.parquet(table), by, tcol, fields, maxV)
-        }
-        enrichWith(df, iv, by, num(op \ "bin", "asof.bin").toLong,
-          (op \ "as") match {
-            case JString(a) => a
-            case _ => "asof_time_s"
-          })
-      case "enrich" =>
-        // arbitrary static validity intervals (maintenance windows,
-        // deploy freezes — explicit [start, end) second columns):
-        // the same stateless stream-static interval join
-        val by = strings(op \ "by")
-        val table = str(op \ "table", "enrich.table")
-        val startCol = str(op \ "startCol", "enrich.startCol")
-        val endCol = str(op \ "endCol", "enrich.endCol")
-        val fields = strings(op \ "fields")
-        val iv = cachedStatic(spark, ("enrich-iv", table, by, startCol,
-            endCol, fields), tableVersion(spark, table)) {
-          graft.streaming.StreamingAsOf.intervalsOf(
-            spark.read.parquet(table), by, startCol, endCol, fields)
-        }
-        enrichWith(df, iv, by, num(op \ "bin", "enrich.bin").toLong,
-          (op \ "as") match {
-            case JString(a) => a
-            case _ => "asof_time_s"
-          })
-      case "quality" =>
-        // Gopher-rules quality gate over a `text` column (the curation
-        // firehose's first stage): one narrow codegen'd kernel filter —
-        // stateless, so it drops straight into a streaming pipeline
-        val minW = (op \ "minWords") match {
-          case JNothing => 50
-          case v => num(v, "quality.minWords").toInt
-        }
-        val maxW = (op \ "maxWords") match {
-          case JNothing => 100000
-          case v => num(v, "quality.maxWords").toInt
-        }
-        require(df.columns.contains("text"),
-          "quality op needs a `text` column on the stream")
-        graft.pipeline.TextAnalysis.gopherKeep(df, minW, maxW)
-      case "langid" =>
-        // annotate each document with the trained NB classifier's
-        // (predicted_lang, nb_score) — the model comes from a PERSISTED
-        // artifact ("model": a Models.saveLangId path), or is trained
-        // once from a labeled parquet corpus and cached at "artifact"
-        // (loadOrTrain — re-trains only on config/corpus drift). Apply
-        // is one narrow codegen'd projection: stateless on a stream.
-        require(df.columns.contains("text"),
-          "langid op needs a `text` column on the stream")
-        val m = (op \ "model") match {
-          case JString(p) => graft.pipeline.Models.loadLangId(spark, p)
-          case _ =>
-            val corpus = spark.read.parquet(str(op \ "train",
-              "langid.train (labeled corpus parquet) or model (artifact)"))
-            graft.pipeline.Models.loadOrTrainLangId(corpus,
-              str(op \ "artifact", "langid.artifact (cache path)"))
-        }
-        graft.pipeline.TextAnalysis.langIdAnnotate(df, m)
-      case "dedup" =>
-        // exact dedup on content hash — the curation firehose's
-        // cheapest stage. Streaming keeps the FIRST arrival per hash
-        // inside the watermark horizon (Dedup.streamingExact: state
-        // bounded by the window, the long tail belongs to the periodic
-        // batch pass); the batch face keeps one row per distinct text.
-        require(df.columns.contains("text"),
-          "dedup op needs a `text` column on the stream")
-        if (df.isStreaming) {
-          require(df.columns.contains("time"),
-            "streaming dedup op needs a `time` timestamp column")
-          val hz = (op \ "horizon") match {
-            case JString(s) => s
-            case _ => "1 hour"
-          }
-          graft.pipeline.Dedup.streamingExact(df, "time", hz)
-            .drop("content_hash")
-        } else df.dropDuplicates(Seq("text"))
-      case "neardup" =>
-        // minhash-LSH near-duplicate PAIRS — transforms the doc stream
-        // into (doc_a, doc_b, est_jaccard). Both faces share the
-        // signature kernels and the ONE band/bucket formula
-        // (Dedup.bandExplodeExpr), so a pair the stream emits is a pair
-        // the batch join finds on the same horizon's corpus.
-        require(df.columns.contains("text") &&
-          df.columns.contains("doc_id"),
-          "neardup op needs `doc_id` and `text` columns on the stream")
-        val k = (op \ "k") match {
-          case JNothing => 16; case v => num(v, "neardup.k").toInt }
-        val bands = (op \ "bands") match {
-          case JNothing => 4; case v => num(v, "neardup.bands").toInt }
-        val w = (op \ "w") match {
-          case JNothing => 3; case v => num(v, "neardup.w").toInt }
-        val thr = (op \ "threshold") match {
-          case JNothing => 0.5; case v => num(v, "neardup.threshold") }
-        val maxBucket = (op \ "maxBucket") match {
-          case JNothing => graft.pipeline.Caps.DefaultMaxBucket
-          case v => num(v, "neardup.maxBucket").toInt }
-        if (df.isStreaming) {
-          require(df.columns.contains("time"),
-            "streaming neardup op needs a `time` timestamp column")
-          val hz = (op \ "horizon") match {
-            case JNothing => 3600L
-            case v => num(v, "neardup.horizon").toLong
-          }
-          graft.streaming.StreamingNearDup(df, "time", hz, k, bands, w,
-            thr, maxBucket).toDF()
-            .select("doc_a", "doc_b", "est_jaccard")
-        } else graft.pipeline.Dedup.minhashPairs(df, k, bands, thr, w,
-          maxBucket).select("doc_a", "doc_b", "est_jaccard")
-      case "tokens" =>
-        // annotate token counts from the persisted (or train-once) BPE
-        // tokenizer — the merges reach the codegen'd BpeCountExpr
-        // kernel via a broadcast stub (r17), so this is a pure narrow
-        // per-doc projection: stateless on a stream, no exchange in
-        // batch, no per-stage model serialization.
-        require(df.columns.contains("text"),
-          "tokens op needs a `text` column on the stream")
-        val merges = (op \ "model") match {
-          case JString(p) => graft.pipeline.Models.loadBpe(spark, p)
-          case _ =>
-            val corpus = spark.read.parquet(str(op \ "train",
-              "tokens.train (corpus parquet) or model (artifact)"))
-            graft.pipeline.Models.loadOrTrainBpe(corpus,
-              str(op \ "artifact", "tokens.artifact (cache path)"))
-        }
-        val helper = "__graft_bpe_c"
-        require(!df.columns.contains(helper),
-          s"reserved column $helper on input")
-        df.withColumn(helper, org.apache.spark.sql.graft.ColumnBridge
-            .column(graft.pipeline.BpeCountExpr(
-              org.apache.spark.sql.graft.ColumnBridge.expression(
-                col("text")),
-              graft.pipeline.Bpe.broadcastMerges(spark, merges))))
-          .withColumn("n_pretokens", col(s"$helper.n_pretokens"))
-          .withColumn("n_bpe_tokens", col(s"$helper.n_bpe_tokens"))
-          .drop(helper)
-      case "cap" =>
-        // per-source anti-dominance cap (batch planning pass: needs
-        // the per-source rank, a corpus-level window)
-        require(!df.isStreaming,
-          "cap is a corpus-level planner — run it in a batch job")
-        require(df.columns.contains("source"),
-          "cap op needs a `source` column")
-        graft.pipeline.Curation.sourceCap(df,
-          num(op \ "maxPerSource", "cap.maxPerSource").toInt,
-          (op \ "orderCol") match {
-            case JString(c) => c
-            case _ => "doc_id"
-          })
-      case "split" =>
-        // deterministic train/val/test assignment — a narrow hash
-        // projection, so it also drops into a streaming pipeline;
-        // optional "keep" filters to one split in place
-        val out = graft.pipeline.Curation.splitAssign(df,
-          (op \ "trainFrac") match {
-            case JNothing => 0.9
-            case v => num(v, "split.trainFrac")
-          },
-          (op \ "valFrac") match {
-            case JNothing => 0.05
-            case v => num(v, "split.valFrac")
-          },
-          (op \ "idCol") match {
-            case JString(c) => c
-            case _ => "doc_id"
-          })
-        (op \ "keep") match {
-          case JString(s) =>
-            require(Set("train", "val", "test")(s),
-              s"split.keep must be train|val|test, got '$s'")
-            out.filter(col("split") === s)
-          case _ => out
-        }
-      case "pack" =>
-        // concat-and-chunk sequence packing layout (batch: needs the
-        // per-shard running token sum)
-        require(!df.isStreaming,
-          "pack is a corpus-level planner — run it in a batch job")
-        require(df.columns.contains("text") &&
-          df.columns.contains("lang"),
-          "pack op needs `text` and `lang` columns")
-        graft.pipeline.Curation.packSequences(df,
-          num(op \ "budget", "pack.budget").toInt,
-          (op \ "nShards") match {
-            case JNothing => 8
-            case v => num(v, "pack.nShards").toInt
-          },
-          (op \ "orderCol") match {
-            case JString(c) => c
-            case _ => "doc_id"
-          })
-      case "sample" =>
-        // temperature sampling by source frequency (batch: keep rates
-        // derive from corpus-level source counts)
-        require(!df.isStreaming,
-          "sample is a corpus-level planner — run it in a batch job")
-        val by = (op \ "by") match {
-          case JString(c) => c
-          case _ => "source"
-        }
-        require(df.columns.contains(by) && df.columns.contains("doc_id"),
-          s"sample op needs `$by` and `doc_id` columns")
-        graft.pipeline.Curation.temperatureSample(df,
-          (op \ "alpha") match {
-            case JNothing => 0.5
-            case v => num(v, "sample.alpha")
-          },
-          (op \ "targetFrac") match {
-            case JNothing => 0.5
-            case v => num(v, "sample.targetFrac")
-          }, by)
-      case "mixture" =>
-        // token-budget mixture plan — transforms the corpus into ONE
-        // auditable row per source (batch aggregation)
-        require(!df.isStreaming,
-          "mixture is a corpus-level planner — run it in a batch job")
-        val by = (op \ "by") match {
-          case JString(c) => c
-          case _ => "source"
-        }
-        require(df.columns.contains(by) && df.columns.contains("text"),
-          s"mixture op needs `$by` and `text` columns")
-        graft.pipeline.Curation.mixturePlan(df,
-          num(op \ "budgetTokens", "mixture.budgetTokens").toLong,
-          (op \ "alpha") match {
-            case JNothing => 0.5
-            case v => num(v, "mixture.alpha")
-          },
-          (op \ "maxEpochs") match {
-            case JNothing => 1.0
-            case v => num(v, "mixture.maxEpochs")
-          }, by)
-      case "crosscorpus" =>
-        // near-dup vs a STATIC reference corpus — the decontamination
-        // stage run continuously. The reference's banded relation is
-        // built once per (re)compile (at 100 TB: a bucketed table
-        // refreshed on corpus releases); each micro-batch stream-static
-        // equi-joins it on (band, bucket), stateless and restart-safe.
-        require(df.columns.contains("text") &&
-          df.columns.contains("doc_id") && df.columns.contains("time"),
-          "crosscorpus op needs `doc_id`, `text`, `time` columns")
-        val k = (op \ "k") match {
-          case JNothing => 16; case v => num(v, "crosscorpus.k").toInt }
-        val bands = (op \ "bands") match {
-          case JNothing => 4; case v => num(v, "crosscorpus.bands").toInt }
-        val w = (op \ "w") match {
-          case JNothing => 3; case v => num(v, "crosscorpus.w").toInt }
-        val thr = (op \ "threshold") match {
-          case JNothing => 0.5; case v => num(v, "crosscorpus.threshold") }
-        val maxBucket = (op \ "maxBucket") match {
-          case JNothing => graft.pipeline.Caps.DefaultMaxBucket
-          case v => num(v, "crosscorpus.maxBucket").toInt }
-        val table = str(op \ "table",
-          "crosscorpus.table (reference docs parquet)")
-        val refB = cachedStatic(spark, ("xc-ref", table, k, bands, w,
-            maxBucket), tableVersion(spark, table)) {
-          graft.streaming.StreamingCrossCorpus.referenceBanded(
-            spark.read.parquet(table), k, bands, w, maxBucket)
-        }
-        val m = graft.streaming.StreamingCrossCorpus.matches(
-          df, refB, "time", k, bands, w, thr)
-        (op \ "mode") match {
-          case JString("drop") =>
-            // keep only UNcontaminated rows: per-doc "no qualifying
-            // match" needs an aggregation over the match evidence,
-            // which a stateless stream cannot express — the firehose
-            // emits matches ("mode":"match") and the periodic batch
-            // pass owns the actual removal, same division of labor as
-            // the dedup op's streaming-horizon vs batch-long-tail
-            require(!df.isStreaming,
-              "crosscorpus \"mode\":\"drop\" is batch-only (per-doc " +
-                "aggregation); stream \"mode\":\"match\" and filter in " +
-                "the periodic batch pass")
-            df.join(m.select(col("new_id").as("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-          case JNothing | JString("match") =>
-            m.select("new_id", "ref_id", "est_jaccard", "band")
-          case other => throw new IllegalArgumentException(
-            s"crosscorpus.mode: expected \"match\" or \"drop\", got $other")
-        }
-      case "index" =>
-        val wm = indexWatermark(op)
-        // a frame carrying tags or attributes indexes through the
-        // whole-event processor, so the served index answers
-        // `tagged "x"` and attribute queries — the reference's index
-        // stores whole events (index.clj:58-126)
-        if (carriesWholeEvents(df))
-          graft.streaming.WireIndexProcessor(wireEvents(df), wm).toDF()
-        else IndexProcessor(df.as[SEvent], wm).toDF()
-      case other => throw new IllegalArgumentException(s"unknown op: $other")
-    }
-  }
-
-  /** The index op's watermark delay, "0 seconds" when absent. */
-  def indexWatermark(op: JObject): String = (op \ "watermark") match {
-    case JString(s) => s
-    case _ => "0 seconds"
+    val name = str(op \ "op", "op")
+    val compile = ops.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown op: $name (known: ${ops.keys.toSeq.sorted.mkString(", ")})"))
+    compile(df, new Args(op, name))
   }
 
   /** Whether `df` carries the wire tags or attributes: the index op
@@ -1042,19 +852,19 @@ object ConfigFile {
         org.apache.spark.sql.Encoders.product[graft.streaming.WireEvent])
   }
 
-  private def pipelineOps(stream: JObject): List[JObject] =
-    (stream \ "pipeline") match {
-      case JArray(ops) => ops.map {
-        case o: JObject => o
-        case other =>
-          throw new IllegalArgumentException(s"pipeline op: $other")
-      }
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(s"pipeline: $other")
-    }
-
   def compilePipeline(df: DataFrame, stream: JObject): DataFrame =
-    pipelineOps(stream).foldLeft(df)(applyOp)
+    new Args(stream, "stream").objs("pipeline").foldLeft(df)(applyOp)
+
+  /** A stream's sink spec; a stream without one prints to the console. */
+  private[graft] def sinkOf(stream: JObject): Args = {
+    val name = str(stream \ "name", "stream.name")
+    new Args(stream, name).obj("sink").getOrElse(
+      new Args(JObject("kind" -> JString("console")), s"$name.sink"))
+  }
+
+  /** The output mode a stream's query runs in, "append" by default. */
+  private[graft] def outputMode(stream: JObject): String =
+    sinkOf(stream).str("outputMode", "append")
 
   /** A sink kind the host provides. `make` gets the stream's name, its
     * sink spec and, when `absorbs` names the op the stream's pipeline
@@ -1376,13 +1186,11 @@ object ConfigFile {
 
     private def build(stream: JObject,
         input: () => DataFrame): DataStreamWriter[_] = {
-      val name = str(stream \ "name", "stream.name")
-      val sinkSpec = (stream \ "sink") match {
-        case o: JObject => o
-        case _ => JObject("kind" -> JString("console"))
-      }
-      val kind = str(sinkSpec \ "kind", s"$name.sink.kind")
-      val ops = pipelineOps(stream)
+      val a = new Args(stream, str(stream \ "name", "stream.name"))
+      val name = a.at
+      val sink = sinkOf(stream)
+      val kind = sink.str("kind")
+      val ops = a.objs("pipeline")
       val absorbed = ops.lastOption.filter(o => sinkFactories.get(kind)
         .flatMap(_.absorbs).exists(op => (o \ "op") == JString(op)))
       val kept = if (absorbed.isEmpty) ops else ops.init
@@ -1398,17 +1206,11 @@ object ConfigFile {
         case _ =>
           val factory = sinkFactories.getOrElse(kind,
             throw new IllegalArgumentException(s"$name: unknown sink '$kind'"))
-          Sinks.attach(out, factory.make(name, sinkSpec, absorbed))
+          Sinks.attach(out, factory.make(name, sink.json, absorbed))
       }
-      val mode = (sinkSpec \ "outputMode") match {
-        case JString(m) => m
-        case _ => "append"
-      }
-      val w = (sinkSpec \ "checkpoint") match {
-        case JString(dir) =>
-          writer.outputMode(mode).option("checkpointLocation", dir)
-        case _ => writer.outputMode(mode)
-      }
+      val moded = writer.outputMode(outputMode(stream))
+      val w = sink.strOpt("checkpoint")
+        .fold(moded)(moded.option("checkpointLocation", _))
       // per-stream trigger (r18 VERDICT #7 — the reference's scheduler
       // flushes at 0.1 s granularity, time.clj:73-75, while Spark's
       // default micro-batch cadence is as-fast-as-possible):
@@ -1419,38 +1221,33 @@ object ConfigFile {
       // SIGHUP doubles as "drain again" for batch-style streams. The
       // trigger lives in the stream's JSON subtree, so editing it
       // restarts exactly that stream.
-      (stream \ "trigger") match {
-        case JNothing => w
-        case t: JObject =>
-          import org.apache.spark.sql.streaming.Trigger
-          ((t \ "processingTime"), (t \ "availableNow")) match {
-            case (JString(interval), JNothing) =>
-              w.trigger(Trigger.ProcessingTime(interval))
-            case (JNothing, JBool(true)) =>
-              w.trigger(Trigger.AvailableNow())
-            case _ => throw new IllegalArgumentException(
-              s"$name.trigger: expected {\"processingTime\": \"<interval>\"}" +
-                " or {\"availableNow\": true}, got " +
-                JsonMethods.compact(JsonMethods.render(t)))
-          }
-        case other => throw new IllegalArgumentException(
-          s"$name.trigger: expected an object, got $other")
+      a.obj("trigger").fold(w) { t =>
+        import org.apache.spark.sql.streaming.Trigger
+        (t.strOpt("processingTime"), t.opt("availableNow")(bool)) match {
+          case (Some(interval), None) =>
+            w.trigger(Trigger.ProcessingTime(interval))
+          case (None, Some(true)) => w.trigger(Trigger.AvailableNow())
+          case _ => throw new IllegalArgumentException(
+            s"$name.trigger: expected {\"processingTime\": \"<interval>\"}" +
+              " or {\"availableNow\": true}, got " +
+              JsonMethods.compact(JsonMethods.render(t.json)))
+        }
       }
     }
 
-    /** Re-read the file, re-register every stream (signature = its
-      * canonical JSON subtree), drop streams no longer present, and
-      * transition the Core: only added/changed streams (re)start —
-      * bin.clj:39-77's reload on the transition!/equiv? lifecycle.
-      * Returns the (re)started names. */
-    def reload(): Seq[String] = synchronized {
+    /** Re-register every stream of `config` (signature = its canonical
+      * JSON subtree; by default the file is read afresh), drop streams
+      * no longer present, and transition the Core: only added/changed
+      * streams (re)start — bin.clj:39-77's reload on the
+      * transition!/equiv? lifecycle. Returns the (re)started names. */
+    def reload(config: Snapshot = read(path)): Seq[String] = synchronized {
       // last definition of a name wins — the include-shadowing contract
-      // [[load]] documents (includer concatenates after its includes,
-      // so it shadows them; a diamond include's repeated streams
-      // collapse to one). LinkedHashMap keeps first-seen order while
-      // the value updates to the last definition.
+      // [[Snapshot.streams]] documents (includer concatenates after its
+      // includes, so it shadows them; a diamond include's repeated
+      // streams collapse to one). LinkedHashMap keeps first-seen order
+      // while the value updates to the last definition.
       val streams = scala.collection.mutable.LinkedHashMap.empty[String, JObject]
-      load(path).foreach { s =>
+      config.streams.foreach { s =>
         val n = str(s \ "name", "stream.name")
         if (streams.contains(n))
           log.warn(s"stream '$n': a later definition shadows an included " +

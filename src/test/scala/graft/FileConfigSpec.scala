@@ -159,7 +159,10 @@ class FileConfigSpec extends SparkSpec {
       .map(r => (r.getAs[String]("host"),
         r.getAs[Timestamp]("time").getTime / 1000, r.getAs[Double]("metric")))
       .toSet
-    assert(gotR == Set(("a", 0L, 0.4), ("a", 5L, 0.2), ("b", 0L, 0.2)))
+    assert(gotR == Set(("a", 0L, 0.6), ("a", 5L, 2.0), ("b", 0L, 0.8)))
+    // riemann's rate (streams.clj:841-883): the window's summed metric
+    // per second, i.e. the window/sum rows divided by the 5 s interval
+    assert(gotR == got.map { case (h, t, m) => (h, t, m / 5) })
   }
 
   test("window op agg=distinct: HLL distinct-per-window through the " +
@@ -878,12 +881,69 @@ class FileConfigSpec extends SparkSpec {
       sources0 = Map.empty)
     // on this JVM sun.misc.Signal is present; a sandboxed one returns
     // false and explicit reload() remains the contract either way
-    val installed = loader.installSighup()
+    val fired = new java.util.concurrent.CountDownLatch(1)
+    val installed = loader.installSighup(() => {
+      loader.reload(); fired.countDown()
+    })
     if (installed) {
       sun.misc.Signal.raise(new sun.misc.Signal("HUP"))
-      Thread.sleep(200) // handler runs on the signal dispatch thread
+      // the handler runs on the signal dispatch thread
+      assert(fired.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the HUP handler did not run")
     }
     assert(loader.reload() == Seq())
+  }
+
+  test("a config value of the wrong type fails the load, naming its key, " +
+    "instead of running as the default") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[SEvent]
+    val docs = Seq((1L, "a document")).toDF("doc_id", "text")
+    // an op argument: the index would run at "0 seconds", the split
+    // would keep every split
+    for ((df, json, key) <- Seq(
+        (input.toDF(), """{"op":"index","watermark":30}""",
+          "index.watermark: got JInt(30)"),
+        (docs, """{"op":"split","keep":1}""", "split.keep: got JInt(1)"))) {
+      val e = intercept[IllegalArgumentException] {
+        ConfigFile.applyOp(df, op(json))
+      }
+      assert(e.getMessage.contains(key), s"$json: ${e.getMessage}")
+    }
+    // a sink spec: a string sink would run as a console sink, a numeric
+    // checkpoint would start the query with no checkpoint
+    val dir = Files.createTempDirectory("graft-config-types")
+    for ((sink, key) <- Seq(
+        "\"index\"" -> "s.sink: got JString(index)",
+        """{"kind":"memory","checkpoint":5}""" ->
+          "s.sink.checkpoint: got JInt(5)")) {
+      val f = dir.resolve(s"c${sink.hashCode.abs}.json")
+      write(f, s"""{"streams":[{"name":"s","source":"input",
+                  |  "pipeline":[],"sink":$sink}]}""".stripMargin)
+      val core = new Core(spark)
+      val loader = new ConfigFile.Loader(core, spark, f,
+        sources0 = Map("input" -> (() => input.toDF())))
+      try {
+        val e = intercept[IllegalArgumentException](loader.reload())
+        assert(e.getMessage.contains(key), s"$sink: ${e.getMessage}")
+        assert(core.activeQueries.isEmpty)
+      } finally core.stop()
+    }
+  }
+
+  test("the op table and docs/config.md's two op tables name the same ops") {
+    val doc = Files.readString(java.nio.file.Paths.get("docs/config.md"))
+    val tables = doc.split("\n### ").filter(_.contains("ops (the")).toSeq
+    assert(tables.size == 2, "the Monitoring and Curation op sections")
+    val documented = tables.flatMap(_.split("\n").toSeq
+      .filter(_.startsWith("| `"))
+      .flatMap(row => "`([a-z-]+)`".r.findAllMatchIn(row.split('|')(1))
+        .map(_.group(1)))).toSet
+    assert(documented == ConfigFile.opNames,
+      s"only in docs: ${documented -- ConfigFile.opNames}; only in the " +
+        s"table: ${ConfigFile.opNames -- documented}")
   }
 
   test("curation planner ops (cap/split/pack/sample/mixture) through " +

@@ -606,6 +606,59 @@ class MainSpec extends SparkSpec {
     spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
+  test("a wrong-typed server host or served-index checkpoint fails the " +
+    "start, naming its key, instead of binding 127.0.0.1 or feeding the " +
+    "index with no log") {
+    val dir = Files.createTempDirectory("graft-main-types")
+    val cfg = dir.resolve("graft.json")
+    for ((server, sink, key) <- Seq(
+        (s""""host": 5, "port": ${freePort()}""", """{"kind": "index"}""",
+          "servers.tcp.host: got JInt(5)"),
+        (s""""port": ${freePort()}""", """{"kind": "index", "checkpoint": 5}""",
+          "index.sink.checkpoint: got JInt(5)"))) {
+      Files.writeString(cfg,
+        s"""{"servers": {"tcp": {$server}},
+           | "streams": [{"name": "index", "source": "tcp",
+           |   "pipeline": [{"op": "index"}], "sink": $sink}]}""".stripMargin)
+      val e = intercept[IllegalArgumentException] {
+        Main.start(cfg, Some(spark)).stop()
+      }
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
+
+  test("a servers block that only an included file defines is served: " +
+    "servers, modelsKeep and fanout merge like the streams, the last " +
+    "file in include order that defines one winning") {
+    val tcpPort = freePort()
+    val dir = Files.createTempDirectory("graft-main-servers-inc")
+    Files.writeString(dir.resolve("servers.json"),
+      s"""{"servers": {"tcp": {"host": "127.0.0.1", "port": $tcpPort}}}""")
+    val cfg = dir.resolve("graft.json")
+    Files.writeString(cfg,
+      """{"include": ["servers.json"],
+        | "streams": [{"name": "index", "source": "tcp",
+        |   "pipeline": [{"op": "index"}],
+        |   "sink": {"kind": "index", "outputMode": "update"}}]}""".stripMargin)
+    val running = Main.start(cfg, Some(spark))
+    try {
+      sendEvents(tcpPort, Seq(PEvent("inc01", "cpu", "ok", null, Some(0.5),
+        Nil, Some(1706000000L), Some(3600.0), Map.empty)))
+      val deadline = System.currentTimeMillis() + 30000
+      while (running.index.size < 1 && System.currentTimeMillis() < deadline) {
+        running.core.activeQueries.values.foreach(_.processAllAvailable())
+        Thread.sleep(100)
+      }
+      val (ok, err, evs) = wireQueryOn(tcpPort, """host = "inc01"""")
+      assert(ok.contains(true) && err.isEmpty, s"reply: $ok $err")
+      assert(evs.map(_.host) == Seq("inc01"), s"events: $evs")
+    } finally {
+      running.stop()
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
   test("config test mode (bin.clj 'test'): passing and failing tests " +
     "report correctly, driven through a real streaming query") {
     val dir = Files.createTempDirectory("graft-main-test")
