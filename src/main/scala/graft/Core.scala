@@ -23,9 +23,7 @@ class Core(spark: SparkSession) {
   // (graft.streaming.LocalCheckpointFileManager; remote schemes
   // delegate to stock). Session-scoped and only a DEFAULT: a user who
   // set their own manager keeps it.
-  if (spark.conf.getOption(Core.CheckpointFileManagerKey).isEmpty)
-    spark.conf.set(Core.CheckpointFileManagerKey,
-      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+  graft.streaming.LocalCheckpointFileManager.useByDefault(spark)
 
   /** A named topology: `signature` is the config's own version stamp —
     * two defs with equal (name, signature) are `equiv?` and survive a
@@ -52,24 +50,27 @@ class Core(spark: SparkSession) {
 
   /** `apply!`/`transition!`: stop active queries that were removed or
     * whose signature changed, start new/changed ones, leave `equiv?`
-    * ones running. Returns the names (re)started. */
-  def applyConfig(): Seq[String] = synchronized {
-    val started = Seq.newBuilder[String]
-    // stop removed/changed; a terminated (crashed) query is never
-    // equiv — reuse would leave it dead with no way to restart it
-    for ((name, (df, q)) <- active.toSeq) {
-      pending.get(name) match {
-        case Some(nd) if nd.signature == df.signature && q.isActive => ()
-        case _ => q.stop(); active -= name
-      }
+    * ones running. Every new or changed stream's writer is built before
+    * anything stops, so a definition that fails to build throws with
+    * the old topology still running; `onBuilt` runs once every writer
+    * is built, before the first stop. Returns the names (re)started. */
+  def applyConfig(onBuilt: () => Unit = () => ()): Seq[String] = synchronized {
+    // a terminated (crashed) query is never equiv — reuse would leave
+    // it dead with no way to restart it
+    def equiv(name: String, d: StreamDef): Boolean = active.get(name)
+      .exists { case (old, q) => old.signature == d.signature && q.isActive }
+    val writers = pending.toSeq.collect { case (name, d) if !equiv(name, d) =>
+      (name, d, d.build()) }
+    onBuilt()
+    val replaced = writers.map(_._1).toSet
+    for ((name, (_, q)) <- active.toSeq
+        if replaced(name) || !pending.contains(name)) {
+      q.stop(); active -= name
     }
-    // start added/changed
-    for ((name, d) <- pending if !active.contains(name)) {
-      val q = d.build().queryName(name).start()
-      active += name -> (d, q)
-      started += name
+    for ((name, d, w) <- writers) {
+      active += name -> (d, w.queryName(name).start())
     }
-    started.result()
+    writers.map(_._1)
   }
 
   def activeQueries: Map[String, StreamingQuery] =
@@ -146,5 +147,5 @@ object Core {
   /** The Spark conf key [[Core]] defaults to
     * [[graft.streaming.LocalCheckpointFileManager]] when unset. */
   val CheckpointFileManagerKey =
-    "spark.sql.streaming.checkpointFileManagerClass"
+    graft.streaming.LocalCheckpointFileManager.ConfKey
 }

@@ -11,6 +11,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -82,9 +83,12 @@ object Main {
     *
     * For a stream whose pipeline ends in the `index` op, this map IS
     * the index state ([[sinkFor]] with the op): no shuffle, no keyed
-    * state store. Each batch is reduced on the executors to its latest
-    * event per key and partition, so the collect is bounded by the
-    * keys the batch updated; the driver merges those rows by
+    * state store. Each batch runs as one Spark job over the
+    * micro-batch's own plan (no second query is planned on it, and a
+    * batch without input partitions runs none), reduced on the
+    * executors to its latest event per key and partition, so the
+    * collect is bounded by the keys the batch updated; the driver
+    * merges those rows by
     * compare-and-set on [[WireIndexProcessor.latestWins]], drops late
     * rows by the feed's watermark, reaps TTL-lapsed entries once the
     * watermark advances, and logs the changed keys under the stream's
@@ -98,6 +102,12 @@ object Main {
     import ServedIndex._
 
     private val state = TrieMap[(String, String), Held]()
+    // each (stream, checkpoint)'s feed progress, its map recovered from
+    // the log once per process: a reload builds a stream's successor
+    // before it stops the running query, so the successor must not
+    // replay the log that query is still writing — it shares this
+    // progress and rewinds it at its first batch ([[Feed]])
+    private val progress = TrieMap[(String, Path), Progress]()
     // whether a feeding stream ever carried tags/attributes columns:
     // dumps must render the same JSON shape the per-batch pushes use
     // (6-column feeds push without tags/attributes keys)
@@ -112,12 +122,32 @@ object Main {
         val ckpt = new ConfigFile.Args(spec, s"$stream.sink").strOpt("checkpoint")
         new Feed(stream, delayMs(ConfigFile.indexWatermark(o)),
           ckpt.map(Paths.get(_)))
-      case None => (batch: DataFrame, batchId: Long) => {
-        val wire = ConfigFile.carriesWholeEvents(batch)
+      case None => new WireSink {
+        override def write(batch: DataFrame, batchId: Long): Unit = {
+          val rows = collectWire(batch, fromRow, identity).toSeq
+          rows.foreach(putTagged)
+          publish(batch.sparkSession, rows, wire, batchId)
+        }
+      }
+    }
+
+    /** An `index`-kind sink. Its input is the stream's output as whole
+      * events ([[ConfigFile.wireEvents]]), projected in the stream's own
+      * plan when the query is built, so a batch runs as one job over
+      * its own rows ([[collectWire]]). `wire`: whether the stream
+      * carries tags or attributes, which sets the push and dump shape. */
+    private abstract class WireSink extends Sinks.EventSink {
+      @volatile protected var wire = false
+      @volatile protected var fromRow: ExpressionEncoder.Deserializer[WireEvent] = _
+
+      override def input(stream: DataFrame): DataFrame = {
+        wire = ConfigFile.carriesWholeEvents(stream)
         if (wire) wireShape = true
-        val rows = ConfigFile.wireEvents(batch).collect().toSeq
-        rows.foreach(putTagged)
-        publish(batch.sparkSession, rows, wire, batchId)
+        val events = ConfigFile.wireEvents(stream).toDF()
+        fromRow = encoderFor(Encoders.product[WireEvent])
+          .resolveAndBind(events.queryExecution.analyzed.output)
+          .createDeserializer()
+        events
       }
     }
 
@@ -152,69 +182,80 @@ object Main {
 
     /** One absorbed `index` op feeding this map: the stream `name`,
       * its watermark delay, and its checkpoint directory, under which
-      * each batch logs its changes. Built (and recovered) when the
-      * Loader builds the stream, before the query starts. */
+      * each batch logs its changes. Built when the Loader builds the
+      * stream, before the query starts; the first Feed this process
+      * builds on a checkpoint recovers the map from its log. */
     private final class Feed(name: String, delay: Long, ckpt: Option[Path])
-        extends Sinks.EventSink {
+        extends WireSink {
       private val dir = ckpt.map(_.resolve("served-index"))
-      // Spark's event-time watermark: starts at 0, then
-      // max(time) - delay, never moving back
-      private var maxTime = Long.MinValue
-      private var watermark = 0L
-      private var lastSnapshot = -1L
+      private val at = dir.fold(new Progress)(d =>
+        progress.getOrElseUpdate((name, d), recover(d)))
+      private var started = false
 
-      for (d <- dir; c <- ckpt) {
-        val (mark, snap) = Log.recover(d, c)(merge(_, name),
+      private def recover(d: Path): Progress = {
+        val p = new Progress
+        val (mark, snap) = Log.recover(d, d.getParent)(
+          merge(_, name),
           k => state.get(k).filter(_.feed == name).foreach(state.remove(k, _)))
         mark.foreach { m =>
-          maxTime = m.maxTime
-          watermark = m.watermark
+          p.maxTime = m.maxTime
+          p.watermark = m.watermark
           if (m.wire) wireShape = true
         }
-        lastSnapshot = snap
+        p.lastSnapshot = snap
+        p
       }
 
-      override def write(batch: DataFrame, batchId: Long): Unit = synchronized {
-        val wire = ConfigFile.carriesWholeEvents(batch)
-        if (wire) wireShape = true
-        val lateUpTo = watermark * 1000L
-        val rows = ConfigFile.wireEvents(batch)
-          .mapPartitions(latestPerKey(lateUpTo))(Encoders.product[WireEvent])
-          .collect()
+      override def write(batch: DataFrame, batchId: Long): Unit = at.synchronized {
+        if (!started) {
+          // start where Spark starts the query: after the last committed
+          // batch. A predecessor stopped between its log write and
+          // Spark's commit had moved the progress past the batch Spark
+          // now replays; its rows must not read as late.
+          dir.foreach { d =>
+            val m = Log.committedMark(d, d.getParent)
+            at.maxTime = m.fold(Long.MinValue)(_.maxTime)
+            at.watermark = m.fold(0L)(_.watermark)
+          }
+          started = true
+        }
+        val rows = collectWire(batch, fromRow, latestPerKey(at.watermark * 1000L))
         val pushed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
         val changed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
         rows.groupMapReduce(e => (e.host, e.service))(identity)(
             WireIndexProcessor.latestWins.max).values.foreach { e =>
           val (winner, replaced) = merge(e, name)
           pushed += winner
-          if (replaced) changed += e
-          maxTime = math.max(maxTime, eventMs(e))
+          // an event the map already holds is logged again: a replayed
+          // batch, merged once before the stop, logs all of its keys
+          if (replaced || winner == e) changed += e
+          at.maxTime = math.max(at.maxTime, eventMs(e))
         }
         val removed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        if (maxTime != Long.MinValue && maxTime - delay > watermark) {
+        if (at.maxTime != Long.MinValue && at.maxTime - delay > at.watermark) {
           // what Spark's no-data batch does once the watermark moves:
           // every entry of this feed whose ttl lapsed leaves once,
           // as one expired copy
-          watermark = maxTime - delay
+          at.watermark = at.maxTime - delay
           state.foreach { case (k, h) =>
             if (h.feed == name &&
-                WireIndexProcessor.deadline(h.e).exists(_ <= watermark) &&
+                WireIndexProcessor.deadline(h.e).exists(_ <= at.watermark) &&
                 state.remove(k, h)) {
               removed += k
-              pushed += WireIndexProcessor.expiredCopy(h.e, watermark,
+              pushed += WireIndexProcessor.expiredCopy(h.e, at.watermark,
                 IndexProcessor.DefaultKeep)
             }
           }
         }
         dir.foreach { d =>
           val conf = batch.sparkSession.conf
-          val mark = Log.Mark(maxTime, watermark, wire)
+          val mark = Log.Mark(at.maxTime, at.watermark, wire)
           Log.write(d, batchId, delta = true, mark, changed, removed)
-          if (batchId - lastSnapshot >= conf.get(
+          if (batchId - at.lastSnapshot >= conf.get(
               "spark.sql.streaming.stateStore.minDeltasForSnapshot", "10").toLong) {
             Log.write(d, batchId, delta = false, mark,
               state.values.filter(_.feed == name).map(_.e), Nil)
-            lastSnapshot = batchId
+            at.lastSnapshot = batchId
             Log.prune(d, batchId,
               conf.get("spark.sql.streaming.minBatchesToRetain", "100").toLong)
           }
@@ -307,6 +348,28 @@ object Main {
       * it ("" for direct upserts), whose watermark reaps it. */
     private final case class Held(e: WireEvent, feed: String)
 
+    /** A feed's progress: Spark's event-time watermark (starts at 0,
+      * then max(time) - delay, never moving back), the max event time
+      * it follows, and the batch of the last log snapshot. */
+    private final class Progress {
+      var maxTime = Long.MinValue
+      var watermark = 0L
+      var lastSnapshot = -1L
+    }
+
+    /** The one Spark job of a served-index batch: the micro-batch's own
+      * plan run as it is, its whole-event rows ([[WireSink]]) read by
+      * `fromRow` and passed through `reduce` on the executors, the
+      * results collected. A batch without input partitions (a trigger
+      * with no frames) runs no job. */
+    private def collectWire(batch: DataFrame,
+        fromRow: ExpressionEncoder.Deserializer[WireEvent],
+        reduce: Iterator[WireEvent] => Iterator[WireEvent]): Array[WireEvent] = {
+      val rdd = batch.queryExecution.toRdd
+      if (rdd.getNumPartitions == 0) Array.empty
+      else rdd.mapPartitions(rows => reduce(rows.map(fromRow))).collect()
+    }
+
     /** Epoch microseconds, as Spark's watermark predicate reads them. */
     private def eventMicros(e: WireEvent): Long =
       org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(e.time)
@@ -389,16 +452,34 @@ object Main {
           StandardCopyOption.ATOMIC_MOVE)
       }
 
+      /** The last batch `checkpoint` committed, -1 for none. */
+      private def committed(checkpoint: Path): Long =
+        Option(checkpoint.resolve("commits").toFile.listFiles())
+          .toSeq.flatten.map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
+          .map(_.toLong).maxOption.getOrElse(-1L)
+
+      private def readMark(in: DataInputStream, p: Path): Mark = {
+        require(in.readInt() == Magic, s"$p: not a served-index log file")
+        Mark(in.readLong(), in.readLong(), in.readBoolean())
+      }
+
+      /** The [[Mark]] of the last batch `checkpoint` committed. */
+      def committedMark(dir: Path, checkpoint: Path): Option[Mark] = {
+        val last = committed(checkpoint)
+        files(dir).filter(_._1 <= last).maxByOption(_._1).map { case (_, _, p) =>
+          val in = new DataInputStream(
+            new BufferedInputStream(Files.newInputStream(p)))
+          try readMark(in, p) finally in.close()
+        }
+      }
+
       /** Replays `dir` up to the last batch `checkpoint` committed,
         * handing each file's upserts, then its removals, to `upsert`
         * and `remove` in log order. Returns the last [[Mark]] and the
         * id of the snapshot replay started from (-1 for none). */
       def recover(dir: Path, checkpoint: Path)(upsert: WireEvent => Unit,
           remove: ((String, String)) => Unit): (Option[Mark], Long) = {
-        val committed = Option(checkpoint.resolve("commits").toFile.listFiles())
-          .toSeq.flatten.map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
-          .map(_.toLong).maxOption.getOrElse(-1L)
-        val fs = files(dir).filter(_._1 <= committed)
+        val fs = files(dir).filter(_._1 <= committed(checkpoint))
         val snap = fs.filter(!_._2).map(_._1).maxOption.getOrElse(-1L)
         val chain = fs.filter { case (id, delta, _) =>
           if (delta) id > snap else id == snap
@@ -408,8 +489,7 @@ object Main {
           val in = new DataInputStream(
             new BufferedInputStream(Files.newInputStream(p)))
           try {
-            require(in.readInt() == Magic, s"$p: not a served-index log file")
-            mark = Some(Mark(in.readLong(), in.readLong(), in.readBoolean()))
+            mark = Some(readMark(in, p))
             for (_ <- 0 until in.readInt()) upsert(readEvent(in))
             for (_ <- 0 until in.readInt()) remove((readStr(in), readStr(in)))
           } finally in.close()

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.json4s._
@@ -13,7 +13,7 @@ import org.json4s.jackson.JsonMethods
 
 import graft.Core
 import graft.sinks.Sinks
-import graft.streaming.{IndexProcessor, SEvent}
+import graft.streaming.{IndexProcessor, SEvent, WireEvent}
 
 /** [[SEvent]] plus one JSON-packed column carrying whatever non-SEvent
   * columns a config pipeline accumulated before a stateful op — the
@@ -840,7 +840,7 @@ object ConfigFile {
 
   /** The index op's input as whole events: the [[SEvent]] columns plus
     * tags and attributes, absent or null containers read as empty. */
-  def wireEvents(df: DataFrame): Dataset[graft.streaming.WireEvent] = {
+  def wireEvents(df: DataFrame): Dataset[WireEvent] = {
     val attrs =
       if (df.columns.contains("attributes")) col("attributes") else lit(null)
     df.select(col("host"), col("service"), col("state"), col("metric"),
@@ -848,8 +848,7 @@ object ConfigFile {
         coalesce(tagsCol(df), array().cast("array<string>")).as("tags"),
         coalesce(attrs.cast("map<string,string>"),
           map().cast("map<string,string>")).as("attributes"))
-      .as[graft.streaming.WireEvent](
-        org.apache.spark.sql.Encoders.product[graft.streaming.WireEvent])
+      .as[WireEvent](Encoders.product[WireEvent])
   }
 
   def compilePipeline(df: DataFrame, stream: JObject): DataFrame =
@@ -1310,7 +1309,6 @@ object ConfigFile {
         fanoutSchemas.getOrElseUpdate(src, thunk().schema)
       }
       val unfanned = stickyFanned -- fanned.keySet
-      stickyFanned = fanned.keySet
       // spool dirs keyed by subscriber signature: an edited stream
       // rotates to a fresh spool (sees only post-restart events)
       val spools: Map[String, Map[String, String]] =
@@ -1325,11 +1323,6 @@ object ConfigFile {
         }
       spools.values.flatMap(_.values)
         .foreach(d => Files.createDirectories(Path.of(d)))
-      // publish the spool map BEFORE transition: a running (equiv) tee
-      // starts writing to a restarted subscriber's fresh spool while
-      // the old query drains its old spool — no event is delivered to
-      // both incarnations, none is lost after the map flip
-      fanoutSubs = spools
       val teeNames = fanned.keys.map(teeName).toSet
       (current -- names -- teeNames).foreach(core.removeStream)
       // tees register (and therefore start) before their subscribers
@@ -1374,7 +1367,15 @@ object ConfigFile {
         core.stream(name, signature = sig)(build(s, input))
       }
       current = names.toSet ++ teeNames
-      val started = core.applyConfig().filterNot(_.startsWith("__fanout__"))
+      // publish the spool map once every stream is built, BEFORE any
+      // stops: a running (equiv) tee starts writing to a restarted
+      // subscriber's fresh spool while the old query drains its old
+      // spool — no event is delivered to both incarnations, none is
+      // lost after the map flip. A stream that fails to build throws
+      // before the flip, so the old subscribers keep their spools.
+      val started = core.applyConfig(onBuilt = () => fanoutSubs = spools)
+        .filterNot(_.startsWith("__fanout__"))
+      stickyFanned = fanned.keySet
       // a source that left the fanned set has no tee anymore (stopped
       // by the transition above — StreamingQuery.stop joins the
       // micro-batch thread), so its whole fanoutDir subtree (spools +

@@ -28,6 +28,11 @@ object Sinks {
   /** A batch sink: receives each micro-batch (or batch write). */
   trait EventSink extends Serializable {
     def write(batch: DataFrame, batchId: Long): Unit
+
+    /** The relation this sink's query writes, built once from the
+      * stream's output when the query is built: a projection here runs
+      * in the stream's own plan instead of on every batch. */
+    def input(stream: DataFrame): DataFrame = stream
   }
 
   /** `to_json` matching cheshire's null rendering: the reference's JSON
@@ -40,9 +45,9 @@ object Sinks {
 
   /** Attach a sink to a streaming Dataset via foreachBatch — the
     * canonical integration point (SURVEY §2.2). */
-  def attach[T](ds: Dataset[T], sink: EventSink): DataStreamWriter[T] =
-    ds.writeStream.foreachBatch { (batch: Dataset[T], id: Long) =>
-      sink.write(batch.toDF(), id)
+  def attach[T](ds: Dataset[T], sink: EventSink): DataStreamWriter[Row] =
+    sink.input(ds.toDF()).writeStream.foreachBatch {
+      (batch: DataFrame, id: Long) => sink.write(batch, id)
     }
 
   /** `append` / `register` (streams.clj:1243-1253): accumulate events

@@ -4,7 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, unix_seconds}
 
 /** The riemann TCP/UDP wire format (reference
   * src/riemann/transport/tcp.clj:220-244: int32-framed protobuf `Msg`;
@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions.col
   *
   * Decode semantics mirror the client codec: metric precedence
   * sint64 → double → float; event time from time_micros when present,
-  * else time (seconds); missing time → assigned downstream by
-  * [[Sources.withDefaultTime]] (common.clj:86-89 post-load-event).
+  * else time (seconds); a missing time stays `None` unless the decode
+  * is given the payload's receive time ([[decodeMsgs]]' `receivedCol`,
+  * what the TCP/UDP servers pass), else [[Sources.defaultTimeS]]
+  * assigns it downstream (common.clj:86-89 post-load-event).
   */
 object RiemannProtobuf {
 
@@ -220,17 +222,25 @@ object RiemannProtobuf {
   /** DataFrame adapter: a binary column of (optionally framed) Msg
     * payloads — kafka values, file-stream records, a custom socket
     * source — to the event relation. Executor-side flatMap: one task
-    * decodes its partition's payloads, no driver involvement. */
+    * decodes its partition's payloads, no driver involvement. When
+    * `receivedCol` names a timestamp column stamped at receipt, an
+    * event without a time takes that payload's receive second, as
+    * riemann sets a missing time when the event arrives
+    * (common.clj:86-89). */
   def decodeMsgs(df: DataFrame, binaryCol: String = "value",
-      framed: Boolean = false): Dataset[PEvent] = {
+      framed: Boolean = false,
+      receivedCol: Option[String] = None): Dataset[PEvent] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(binaryCol)).as[Array[Byte]]
-      .flatMap { b =>
+    val received = receivedCol.fold(lit(null).cast("long"))(c =>
+      unix_seconds(col(c)))
+    df.select(col(binaryCol), received).as[(Array[Byte], Option[Long])]
+      .flatMap { case (b, at) =>
         // per-payload isolation: a truncated/corrupt message is dropped
         // (mirrors the line decoders' malformed-row drop) rather than
         // failing the task on every retry
-        try decodeMsg(if (framed) unframe(b) else b)
+        try decodeMsg(if (framed) unframe(b) else b).map(e =>
+          if (e.time_s.isEmpty) e.copy(time_s = at) else e)
         catch { case _: RuntimeException | _: ArrayIndexOutOfBoundsException =>
           Seq.empty[PEvent] }
       }

@@ -6,6 +6,7 @@ import java.util
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -24,8 +25,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * reference) accepts client connections, strips the int32 big-endian
   * length frame (tcp.clj:220-244 int32-frame-decoder), acks each Msg
   * with `Msg{ok: true}` (tcp.clj:148-158 gen-tcp-handler reply), and
-  * buffers raw Msg payloads. Each micro-batch drains the buffer and
-  * ships the payloads to EXECUTORS, where [[RiemannProtobuf.decodeMsgs]]
+  * buffers raw Msg payloads, each stamped with its receive time. Each
+  * micro-batch drains the buffer and ships the payloads to EXECUTORS
+  * in at most one input partition per core (`defaultParallelism`, so a
+  * batch runs as one task wave), where [[RiemannProtobuf.decodeMsgs]]
   * does the protobuf decode — the byte-crunching is distributed, only
   * socket assembly is central (exactly Spark's own socket source
   * architecture, and the shape a multi-receiver cluster deployment
@@ -48,7 +51,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * spark.readStream.format("riemann-server")
   *   .option("protocol", "tcp").option("port", 5555).load()
   * }}}
-  * yields (value BINARY — one Msg payload, unframed; timestamp) rows.
+  * yields (value BINARY — one Msg payload, unframed; timestamp — when
+  * the server received it) rows.
   */
 class RiemannServerProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "riemann-server"
@@ -348,8 +352,10 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
     }
     if (slice.isEmpty) Array.empty
     else {
-      // shard the batch so the protobuf decode parallelizes on executors
-      val nParts = math.min(8, slice.length)
+      // shard the batch so the protobuf decode parallelizes on
+      // executors: one partition per core, one task wave per batch
+      val nParts = math.min(
+        SparkSession.active.sparkContext.defaultParallelism, slice.length)
       slice.grouped((slice.length + nParts - 1) / nParts)
         .map(chunk => FramesPartition(chunk): InputPartition).toArray
     }

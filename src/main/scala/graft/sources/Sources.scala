@@ -38,15 +38,19 @@ object Sources {
   private def decodedServer(spark: SparkSession, protocol: String,
       host: String, port: Int,
       extra: Map[String, String] = Map.empty): DataFrame = {
+    // a restart hands acked, undrained frames to the next query on the
+    // same checkpoint, so a stop must never leave that checkpoint
+    // unable to start (see LocalCheckpointFileManager)
+    graft.streaming.LocalCheckpointFileManager.useByDefault(spark)
     val raw = extra.foldLeft(
         spark.readStream.format("riemann-server")
           .option("protocol", protocol).option("host", host)
           .option("port", port)) { case (r, (k, v)) => r.option(k, v) }
       .load()
-    RiemannProtobuf.decodeMsgs(raw).toDF()
-      // decode-time default clock (common.clj:86-89): events arriving
-      // without a time get the processing time
-      .withColumn("time_s", defaultTimeS(col("time_s")))
+    // an event arriving without a time gets its frame's receive time
+    // (common.clj:86-89), stamped by the server on receipt — a column
+    // of the batch, so the generated code is the same for every batch
+    RiemannProtobuf.decodeMsgs(raw, receivedCol = Some("timestamp")).toDF()
   }
 
   /** `graphite-server` (transport/graphite.clj:37-160): socket text
@@ -91,8 +95,10 @@ object Sources {
   /** Un-framed `Msg{ok: true}` — the rabbitmq reply payload. */
   val rabbitReplyOk: Array[Byte] = Array[Byte](0x10, 1)
 
-  /** Decode-time default assignment (common.clj:86-89,132-137): events
-    * without a time get the processing clock. */
+  /** Decode-time default assignment (common.clj:86-89,132-137) for
+    * the library-only sources (kafka, rabbitmq), which carry no receive
+    * time: events without a time get the processing clock. The TCP/UDP
+    * servers stamp each frame on receipt and use that instead. */
   def withDefaultTime(events: DataFrame): DataFrame =
     events.withColumn("time",
       coalesce(col("time"), current_timestamp()))

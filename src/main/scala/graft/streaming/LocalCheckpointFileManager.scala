@@ -34,8 +34,20 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *  - open/list/delete go through the RAW local FileSystem (no CRC
   *    sidecars), throwing FileNotFoundException where callers expect.
   *
-  * Wired by [[graft.Core]] as the session default when the user has
-  * not set `spark.sql.streaming.checkpointFileManagerClass`; remote
+  * It is also what lets a stopped query restart. Without Hadoop's
+  * native library the stock local `create` runs `chmod` as a child
+  * process after the temp file exists; a `stop()` that lands there
+  * interrupts the wait, the write fails before Spark can cancel it,
+  * and the temp file stays. On a checkpoint with no batch logged yet,
+  * Spark 4.1 then refuses every later start
+  * (`STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY` on `offsets/`). Nothing
+  * here waits on a process, so an interrupt cannot split a write.
+  *
+  * Wired as the session default ([[LocalCheckpointFileManager.useByDefault]])
+  * by [[graft.Core]] and by the tcp/udp servers
+  * ([[graft.sources.Sources]]), whose restart handoff depends on a
+  * restartable checkpoint, when the user has not set
+  * `spark.sql.streaming.checkpointFileManagerClass`; remote
   * checkpoint roots (hdfs:, s3a:, ...) see the stock manager via
   * delegation either way. */
 final class LocalCheckpointFileManager(path: Path, conf: Configuration)
@@ -63,7 +75,9 @@ final class LocalCheckpointFileManager(path: Path, conf: Configuration)
     Files.createDirectories(target.getParent)
     val tmp = Files.createTempFile(target.getParent,
       s".${target.getFileName}.", ".tmp")
-    val fos = new FileOutputStream(tmp.toFile)
+    val fos =
+      try new FileOutputStream(tmp.toFile)
+      catch { case e: java.io.IOException => Files.deleteIfExists(tmp); throw e }
     val buf = new BufferedOutputStream(fos, 64 * 1024)
     new CancellableFSDataOutputStream(buf) {
       private var terminated = false
@@ -126,4 +140,14 @@ final class LocalCheckpointFileManager(path: Path, conf: Configuration)
       Files.createDirectories(nio(path))
       rawFs.makeQualified(path)
     } else delegate.createCheckpointDirectory()
+}
+
+object LocalCheckpointFileManager {
+  /** The Spark conf key naming a session's checkpoint file manager. */
+  val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Make this manager `spark`'s default; a manager the user set wins. */
+  def useByDefault(spark: org.apache.spark.sql.SparkSession): Unit =
+    if (spark.conf.getOption(ConfKey).isEmpty)
+      spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
 }

@@ -814,6 +814,68 @@ class FileConfigSpec extends SparkSpec {
     core.stop()
   }
 
+  test("a reload whose edited stream fails to build keeps the old " +
+    "topology: every stream still runs") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val main = Files.createTempDirectory("graft-config-failed").resolve("g.json")
+    def streams(bOps: String): Unit = write(main,
+      s"""{"streams":[
+         |  {"name":"a","source":"in_a","pipeline":[],"sink":{"kind":"memory"}},
+         |  {"name":"b","source":"in_b","pipeline":[$bOps],
+         |   "sink":{"kind":"memory"}}]}""".stripMargin)
+    val (inA, inB) = (MemoryStream[SEvent], MemoryStream[SEvent])
+    val core = new Core(spark)
+    val loader = new ConfigFile.Loader(core, spark, main, sources0 = Map(
+      "in_a" -> (() => inA.toDF()), "in_b" -> (() => inB.toDF())))
+    try {
+      streams("""{"op":"where","expr":"state = 'ok'"}""")
+      assert(loader.reload().toSet == Set("a", "b"))
+      streams("""{"op":"where","expr":"state = 'ok'"},{"op":"nosuch"}""")
+      val err = intercept[IllegalArgumentException](loader.reload())
+      assert(err.getMessage.contains("nosuch"))
+      assert(core.activeQueries.keySet == Set("a", "b"))
+      assert(core.activeQueries.values.forall(_.isActive))
+    } finally core.stop()
+  }
+
+  test("a failed reload keeps fanned-out subscribers on their spools: " +
+    "a stream that shares its source and fails to build still gets " +
+    "every event") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val main = Files.createTempDirectory("graft-config-failed-fan")
+      .resolve("g.json")
+    def streams(bOps: String): Unit = write(main,
+      s"""{"streams":[
+         |  {"name":"a","source":"in","pipeline":[],"sink":{"kind":"memory"}},
+         |  {"name":"b","source":"in","pipeline":[$bOps],
+         |   "sink":{"kind":"memory"}}]}""".stripMargin)
+    val in = MemoryStream[SEvent]
+    val core = new Core(spark)
+    val loader = new ConfigFile.Loader(core, spark, main,
+      sources0 = Map("in" -> (() => in.toDF())))
+    try {
+      streams("""{"op":"where","expr":"state = 'ok'"}""")
+      assert(loader.reload().toSet == Set("a", "b"))
+      in.addData(SEvent("h1", "s", "ok", Some(1.0), new Timestamp(1000), None))
+      core.processAllAvailable()
+      assert(loader.memorySinks("b").rows.size == 1)
+
+      streams("""{"op":"where","expr":"state = 'ok'"},{"op":"nosuch"}""")
+      intercept[IllegalArgumentException](loader.reload())
+      assert(core.activeQueries.keySet == Set("a", "b", "__fanout__in"))
+      assert(core.activeQueries.values.forall(_.isActive))
+      // the tee still writes b's old spool, which b's old query reads
+      in.addData(SEvent("h2", "s", "ok", Some(2.0), new Timestamp(2000), None))
+      core.processAllAvailable()
+      assert(loader.memorySinks("a").rows.size == 2)
+      assert(loader.memorySinks("b").rows.size == 2)
+    } finally core.stop()
+  }
+
   test("Loader rejects include cycles; duplicate stream names collapse " +
     "last-wins, so an includer shadows an included stream (load's " +
     "documented include-shadowing contract)") {

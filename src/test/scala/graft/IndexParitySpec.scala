@@ -262,9 +262,11 @@ class IndexParitySpec extends SparkSpec {
       }.toMap
       input.zipWithIndex.foreach { case (b, id) =>
         b.foreach { case (feed, evs) =>
-          // three partitions, so one key's rows meet only on the driver
-          sinks(feed).write(
-            spark.createDataset(evs)(enc).toDF().repartition(3), id.toLong)
+          // three partitions, so one key's rows meet only on the driver;
+          // `input` is the projection a query over the sink runs
+          val sink = sinks(feed)
+          sink.write(sink.input(
+            spark.createDataset(evs)(enc).toDF().repartition(3)), id.toLong)
           // what Spark's commit log records once the batch is done
           java.nio.file.Files.createDirectories(
             ckpts(feed).resolve("commits"))
@@ -289,5 +291,53 @@ class IndexParitySpec extends SparkSpec {
       spark.conf.unset(snapEvery)
       spark.conf.unset(retain)
     }
+  }
+
+  test("a successor feed replays the batch its predecessor logged but " +
+    "Spark never committed: the rows are not late, they are pushed, and " +
+    "the log keeps them") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.{DataFrame, Encoders}
+    import org.json4s._
+    import graft.sinks.Sinks
+    import graft.streaming.WireEvent
+    val enc = Encoders.product[WireEvent]
+    val ckpt = Files.createTempDirectory("served-replay")
+    val spec = JObject("kind" -> JString("index"),
+      "checkpoint" -> JString(ckpt.toString))
+    val op = Some(JObject("op" -> JString("index"),
+      "watermark" -> JString("0 seconds")))
+    def ev(host: String, s: Long) = WireEvent(host, "cpu", "ok", Some(1.0),
+      ts(s), None, Seq.empty, Map.empty)
+    def write(sink: Sinks.EventSink, id: Long, e: WireEvent): Unit =
+      sink.write(sink.input(spark.createDataset(Seq(e))(enc).toDF()), id)
+    // what Spark's commit log records once the batch is done
+    def commit(id: Long): Unit = {
+      Files.createDirectories(ckpt.resolve("commits"))
+      Files.writeString(ckpt.resolve("commits").resolve(id.toString), "")
+      ()
+    }
+    val pubsub = new Sinks.Pubsub
+    val pushed = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    pubsub.subscribe("index", (batch: DataFrame, id: Long) => {
+      pushed ++= batch.as[WireEvent](enc).collect().map(e => (id, e.host)); ()
+    })
+    val idx = new Main.ServedIndex(spark, pubsub)
+    val first = idx.sinkFor("s", spec, op)
+    write(first, 0, ev("a", 100))
+    commit(0)
+    // batch 1 is logged, then the query stops before Spark commits it
+    write(first, 1, ev("b", 200))
+    // a reload builds the successor while the old query still runs;
+    // the restarted query replays batch 1 at batch 0's watermark
+    val successor = idx.sinkFor("s", spec, op)
+    write(successor, 1, ev("b", 200))
+    commit(1)
+    assert(pushed.count(_ == ((1L, "b"))) == 2, s"pushes: $pushed")
+    assert(idx.events.map(_.host).toSet == Set("a", "b"))
+    // a process restart rebuilds both keys from the log
+    val restarted = new Main.ServedIndex(spark)
+    restarted.sinkFor("s", spec, op)
+    assert(restarted.events.map(_.host).toSet == Set("a", "b"))
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.streaming.LocalCheckpointFileManager
 
@@ -89,6 +90,37 @@ class LocalCheckpointSpec extends SparkSpec {
     assert(!Files.exists(dir.resolve("sub")))
     // deleting a missing path is a no-op, not an error
     m.delete(new Path(dir.resolve("nope").toUri))
+  }
+
+  test("a write on an interrupted thread (a query stop landing on a " +
+    "checkpoint write) completes and leaves no temp file, so the " +
+    "checkpoint stays startable") {
+    val dir = Files.createTempDirectory("graft-lcfm-int")
+    val m = mgr(dir)
+    val target = new Path(dir.resolve("offsets").resolve("0").toUri)
+    Thread.currentThread().interrupt()
+    try {
+      val out = m.createAtomic(target, overwriteIfPossible = false)
+      out.write("v1".getBytes)
+      out.close()
+    } finally { Thread.interrupted(); () }
+    import scala.jdk.CollectionConverters._
+    assert(Files.list(dir.resolve("offsets")).iterator().asScala
+      .map(_.getFileName.toString).toSeq == Seq("0"))
+  }
+
+  test("the tcp and udp servers make the manager their session's " +
+    "default, as Core does") {
+    val key = Core.CheckpointFileManagerKey
+    for (server <- Seq[SparkSession => DataFrame](
+        s => graft.sources.Sources.riemannTcpServer(s, "127.0.0.1", 1),
+        s => graft.sources.Sources.riemannUdpServer(s, "127.0.0.1", 1))) {
+      val session = spark.newSession()
+      session.conf.unset(key)
+      server(session) // builds the relation; nothing binds before start
+      assert(session.conf.get(key) ==
+        classOf[LocalCheckpointFileManager].getName)
+    }
   }
 
   test("Core wires the manager as the session DEFAULT and respects a " +

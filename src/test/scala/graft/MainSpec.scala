@@ -48,6 +48,22 @@ class MainSpec extends SparkSpec {
     } finally sock.close()
   }
 
+  /** Each inner Seq as one Msg, all written before any ack is read, so
+    * the frames reach the server together. */
+  private def sendMsgs(port: Int, msgs: Seq[Seq[PEvent]]): Unit = {
+    val sock = connect(port)
+    try {
+      val out = new DataOutputStream(sock.getOutputStream)
+      val in = new DataInputStream(sock.getInputStream)
+      msgs.foreach(m => out.write(RiemannProtobuf.frame(RiemannProtobuf.encodeMsg(m))))
+      out.flush()
+      msgs.foreach { _ =>
+        val len = in.readInt()
+        in.readFully(new Array[Byte](len)) // the ok-ack
+      }
+    } finally sock.close()
+  }
+
   private def wsHandshake(sock: Socket, path: String): Unit = {
     val key = Base64.getEncoder.encodeToString(
       Array.tabulate[Byte](16)(i => (i * 5 + 1).toByte))
@@ -851,10 +867,12 @@ class MainSpec extends SparkSpec {
     try {
       val first = Main.start(cfg, Some(spark))
       try {
-        sendEvents(tcpPort, hosts.zipWithIndex.map { case (h, i) =>
+        // one Msg, so one batch: events split over two batches would
+        // meet the index op's 0 s watermark, which drops the later ones
+        sendMsgs(tcpPort, Seq(hosts.zipWithIndex.map { case (h, i) =>
           PEvent(h, "cpu", "ok", null, Some(i.toDouble), Nil,
             Some(1706000000L), Some(86400.0), Map.empty)
-        })
+        }))
         first.core.activeQueries("index").processAllAvailable()
         assert(first.index.size == hosts.size)
       } finally first.stop()
@@ -956,6 +974,74 @@ class MainSpec extends SparkSpec {
         case p: Exchange => p
       }.isEmpty, plan.treeString)
       assert(q.lastProgress.stateOperators.isEmpty)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      running.stop()
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
+  test("a served index data trigger costs what its data costs: after " +
+    "warm-up it compiles no code, starts one SQL execution and runs at " +
+    "most one task per core in its job") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val tcpPort = freePort()
+    val cfg = servedIndexConfig(
+      Files.createTempDirectory("graft-main-cost"), tcpPort)
+    val running = Main.start(cfg, Some(spark))
+    val q = running.core.activeQueries("index")
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val tasksPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("sql.streaming.queryId") == q.id.toString)) {
+          tasksPerJob.add(e.stageInfos.map(_.numTasks).sum); ()
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    // one trigger's frames: one-event Msgs, one more than a task wave
+    // has tasks
+    def trigger(n: Int): Unit = {
+      val frames = spark.sparkContext.defaultParallelism + 1
+      sendMsgs(tcpPort, (1 to frames).map(f => Seq(PEvent(s"web$f", "cpu",
+        "ok", null, Some(n.toDouble), Nil, Some(1706000000L + n), Some(60.0),
+        Map.empty))))
+      q.processAllAvailable()
+      // the batch commits a moment before its progress is recorded
+      val last = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.currentBatchId
+      val deadline = System.currentTimeMillis() + 30000
+      while (Option(q.lastProgress).forall(_.batchId < last) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+    }
+    def dataTriggers(): Seq[Long] =
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    try {
+      (1 to 2).foreach(trigger)
+      org.apache.spark.sql.graft.SessionBridge.awaitListeners(spark)
+      val warm = dataTriggers()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      spark.sparkContext.addSparkListener(listener)
+      (3 to 5).foreach(trigger)
+      org.apache.spark.sql.graft.SessionBridge.awaitListeners(spark)
+      val measured = dataTriggers().filterNot(warm.contains)
+      assert(measured.size >= 3, s"data triggers ${dataTriggers()}")
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        "a warm data trigger compiled generated code")
+      assert(executions.get == measured.size,
+        s"${executions.get} SQL executions over ${measured.size} data triggers")
+      import scala.jdk.CollectionConverters._
+      assert(tasksPerJob.asScala.forall(
+        _ <= spark.sparkContext.defaultParallelism),
+        s"tasks per job: $tasksPerJob")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       running.stop()

@@ -95,6 +95,52 @@ class RiemannServerSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("tcp server: an event without a time gets its frame's receive " +
+    "time, not the time of the batch that decodes it (common.clj:86-89)") {
+    val msg = RiemannProtobuf.encodeMsg(Seq(
+      pe("timed", "cpu", "ok", 0.1, 1706000000L),
+      pe("untimed", "cpu", "ok", 0.2, 0L).copy(time_s = None)))
+    def timesOf(df: org.apache.spark.sql.DataFrame): Map[String, Option[Long]] =
+      df.select("host", "time_s").collect()
+        .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+
+    // the decode takes the payload's own receive column, whenever the
+    // batch runs: a frame received in 2024 keeps its 2024 second
+    val received = {
+      import spark.implicits._
+      Seq((msg, new java.sql.Timestamp(1706000400750L))).toDF("value", "timestamp")
+    }
+    assert(timesOf(RiemannProtobuf.decodeMsgs(received,
+      receivedCol = Some("timestamp")).toDF()) ==
+      Map("timed" -> Some(1706000000L), "untimed" -> Some(1706000400L)))
+    // without a receive column the time stays unset for the caller
+    assert(timesOf(RiemannProtobuf.decodeMsgs(received).toDF()) ==
+      Map("timed" -> Some(1706000000L), "untimed" -> None))
+
+    // end to end, the tcp server stamps each frame when it reads it
+    val port = freePort()
+    val q = Sources.riemannTcpServer(spark, "127.0.0.1", port)
+      .writeStream.format("memory").queryName("tcp_receive_time")
+      .outputMode("append").start()
+    try {
+      val sock = connectRetry(port)
+      val (before, after) = try {
+        val out = new DataOutputStream(sock.getOutputStream)
+        val in = new DataInputStream(sock.getInputStream)
+        val before = System.currentTimeMillis()
+        out.write(RiemannProtobuf.frame(msg))
+        out.flush()
+        in.readFully(new Array[Byte](in.readInt()))
+        (before, System.currentTimeMillis())
+      } finally sock.close()
+      awaitRows(q, "tcp_receive_time", 2)
+      val times = timesOf(spark.table("tcp_receive_time"))
+      assert(times("timed").contains(1706000000L), s"rows: $times")
+      assert(times("untimed").exists(t => t >= before / 1000 && t <= after / 1000),
+        s"rows: $times, sent in [$before, $after] ms")
+    } finally q.stop()
+  }
+
   test("tcp server: a query Msg with no registered index answers " +
     "{ok: false, error: \"no index\"} and never enters the ingest buffer " +
     "(transport.clj:175-181)") {
@@ -321,6 +367,10 @@ class RiemannServerSpec extends SparkSpec {
         }
         .queryName(name).start()
     val q1 = startQuery("udp_handoff1")
+    // the bind happens at stream construction, after start() returns:
+    // a datagram sent before it is refused by the kernel, never
+    // enqueued. A trigger that finds no new data comes after the bind.
+    q1.processAllAvailable()
     val sock = new DatagramSocket()
     try {
       val addr = InetAddress.getByName("127.0.0.1")
