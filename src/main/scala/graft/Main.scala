@@ -10,6 +10,7 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
 import org.apache.spark.sql.functions._
@@ -768,17 +769,69 @@ object Main {
     spark
   }
 
+  /** The session a command builds for itself: `GRAFT_MASTER` (default
+    * `local[*]`), UTC, [[graft.query.RiemannExtensions]], `conf`, and
+    * [[perCoreShuffle]]. Start-up is bound by class loading on one
+    * thread, so Scala runtime reflection, which the session builder and
+    * every case-class encoder initialize first, warms on a daemon thread
+    * while this one starts the `SparkContext`; the session is then built
+    * on that context. */
+  private[graft] def ownSession(app: String, conf: (String, String)*): SparkSession = {
+    background("graft-warm-reflect") { scala.reflect.runtime.universe; () }
+    val sc = startupLayer("context")(SparkContext.getOrCreate(new SparkConf()
+      .setMaster(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
+      .setAppName(app)
+      .set("spark.sql.session.timeZone", "UTC")
+      .set("spark.sql.extensions", "graft.query.RiemannExtensions")
+      .setAll(conf)))
+    startupLayer("session")(perCoreShuffle(
+      org.apache.spark.sql.graft.SessionBridge.onContext(sc)))
+  }
+
+  /** Runs `body` on a started daemon thread, which logs a non-fatal
+    * failure to stderr and passes nothing on: start-up work beside the
+    * critical path never delays or fails a start. */
+  private def background(name: String)(body: => Unit): Thread = {
+    val t = new Thread(() =>
+      try body
+      catch {
+        case NonFatal(e) => System.err.println(s"[$name] failed: $e")
+      }, name)
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+
+  /** `body`, then one `riemann startup <layer> <ms> ms` line on stderr:
+    * the set-up split, under the names the process's own `riemann
+    * startup` events are to take. */
+  private def startupLayer[T](layer: String)(body: => T): T = {
+    val t0 = System.nanoTime()
+    val out = body
+    System.err.println(s"riemann startup $layer ${(System.nanoTime() - t0) / 1000000} ms")
+    out
+  }
+
+  /** Starts the cold work of a first query on a daemon thread, so the
+    * first triggers do not pay it alone: one small query through
+    * analysis, whole-stage codegen and one job of at most one task per
+    * core. Leaves the session's conf as it found it. */
+  private[graft] def warmUp(spark: SparkSession): Thread =
+    background("graft-warm-up") {
+      val n = spark.sparkContext.defaultParallelism
+      spark.range(0, n, 1, n).selectExpr("id + 1").collect()
+      ()
+    }
+
   /** Assemble the process from a config file: servers, sources, Core +
     * Loader, the served index, and the ws/sse query surfaces. The
-    * returned handle owns everything [[main]] blocks on. */
+    * returned handle owns everything [[main]] blocks on. With its own
+    * session, [[warmUp]] runs while this thread reads the config and
+    * builds the streams. Prints the set-up layers `context` and
+    * `session` (own session only), `config`, and `streams` (the stream
+    * build and query start). */
   def start(path: Path, spark0: Option[SparkSession] = None): Running = {
-    val spark = spark0.getOrElse(perCoreShuffle(
-      SparkSession.builder()
-        .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-        .appName("graft")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.query.RiemannExtensions")
-        .getOrCreate()))
+    val spark = spark0.getOrElse(ownSession("graft"))
     // an index op outside the served index runs on transformWithState,
     // which needs a state store with column families — RocksDB, the
     // production store for every stateful operator here (the HDFSBacked default cannot
@@ -791,8 +844,9 @@ object Main {
     // the index sink publishes each batch's pushes to the "index"
     // pubsub channel, so ws/sse subscribers see them after their dump
     val index = new ServedIndex(spark, pubsub)
+    if (spark0.isEmpty) warmUp(spark)
     val core = new Core(spark)
-    val config = ConfigFile.read(path)
+    val config = startupLayer("config")(ConfigFile.read(path))
     // fanout.dir, when configured, pins the spool/tee-checkpoint area
     // to a stable path — a restarted process resumes its tees from
     // their checkpoints instead of starting over in a fresh temp dir
@@ -807,7 +861,7 @@ object Main {
     // the first reload builds the ingest servers from the file, salts
     // stream signatures with their server blocks, starts ws/sse, and
     // starts the stream topology — the same path SIGHUP drives later
-    running.reload(config)
+    startupLayer("streams")(running.reload(config))
     running
   }
 
@@ -953,12 +1007,6 @@ object Main {
     }
   }
 
-  /** An injected test event: SEvent's fields plus tags, so streams
-    * using the tag/tagged-* ops are testable. */
-  private case class TestEvent(host: String, service: String,
-      state: String, metric: Option[Double], time: java.sql.Timestamp,
-      ttl: Option[Double], tags: Seq[String])
-
   private def runOneTest(spark: SparkSession, name: String,
       stream: JObject, t: JObject): Seq[String] = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -1048,12 +1096,7 @@ object Main {
   def main(args: Array[String]): Unit = args.toList match {
     case "version" :: _ => println(Version)
     case "jobs" :: cfg :: _ =>
-      val spark = perCoreShuffle(SparkSession.builder()
-        .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-        .appName("graft-jobs")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
+      val spark = ownSession("graft-jobs", "spark.ui.enabled" -> "false")
       val code =
         try { runJobsCmd(Paths.get(cfg), spark); 0 }
         catch {
@@ -1065,12 +1108,7 @@ object Main {
       sys.exit(code)
     case "test" :: cfg :: _ =>
       // bin.clj's "test" command: exit 0 iff every config test passes
-      val spark = perCoreShuffle(SparkSession.builder()
-        .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-        .appName("graft-test")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
+      val spark = ownSession("graft-test", "spark.ui.enabled" -> "false")
       val (_, failedN) = runTests(Paths.get(cfg), spark)
       spark.stop()
       sys.exit(if (failedN == 0) 0 else 1)
@@ -1088,3 +1126,12 @@ object Main {
       running.done.await()
   }
 }
+
+/** An event a config test injects (`graft.Main test`): SEvent's fields
+  * plus tags, so streams using the tag/tagged-* ops are testable.
+  * Top-level, as generated code builds it through its constructor: a
+  * case class nested in `object Main` sends Spark to interpreted
+  * execution. */
+private[graft] final case class TestEvent(host: String, service: String,
+    state: String, metric: Option[Double], time: java.sql.Timestamp,
+    ttl: Option[Double], tags: Seq[String])

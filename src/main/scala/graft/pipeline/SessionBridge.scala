@@ -1,12 +1,14 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic
 
 /** Bridge into Spark's `private[spark]` internals: the classic
   * session-cloning path (sessionStateBuilder/cloneSession), to evaluate
   * ONE DataFrame under a scoped SQL-conf override without mutating the
-  * caller's session, and the listener bus.
+  * caller's session, the listener bus, and the builder's
+  * `sparkContext`.
   *
   * r22 (r21 VERDICT "what's wrong" #4): [[graft.pipeline.Dedup]]'s
   * union-find probe used to set `spark.sql.limit.initialNumPartitions`
@@ -31,4 +33,11 @@ object SessionBridge {
     * so counts a listener keeps are complete when read. */
   def awaitListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The session on `sc`, a context the caller started itself (the
+    * classic builder's `sparkContext`). The plain builder would look
+    * the context up again from a fresh `SparkConf` and warn that some
+    * configuration may not take effect. */
+  def onContext(sc: SparkContext): SparkSession =
+    classic.SparkSession.builder().sparkContext(sc).getOrCreate()
 }

@@ -759,6 +759,59 @@ class MainSpec extends SparkSpec {
     finally running.stop()
   }
 
+  test("the start-up warm-up runs one small job of at most one task per " +
+    "core and leaves the session's conf and streams as it found them; " +
+    "on a stopped context it logs the failure and does not throw") {
+    import org.apache.spark.scheduler._
+    val tag = "graft.test.warm-up"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) { tasks.incrementAndGet(); () }
+    }
+    val conf0 = spark.conf.getAll
+    val active0 = spark.streams.active.map(_.id).toSet
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, "1")
+    try {
+      Main.warmUp(spark).join()
+      org.apache.spark.sql.graft.SessionBridge.awaitListeners(spark)
+    } finally {
+      spark.sparkContext.setLocalProperty(tag, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get >= 1, "the warm-up ran no job")
+    assert(tasks.get >= 1 && tasks.get <= spark.sparkContext.defaultParallelism,
+      s"${tasks.get} tasks on ${spark.sparkContext.defaultParallelism} cores")
+    assert(spark.conf.getAll == conf0)
+    assert(spark.streams.active.map(_.id).toSet == active0)
+
+    // a stopped context, in a JVM of its own: this one's context is shared
+    import scala.jdk.CollectionConverters._
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java")
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xm")).toSeq
+    val log = Files.createTempFile("graft-warm-up", ".log")
+    val cmd = Seq(javaBin.toString, "-Xmx1g") ++ jvmArgs ++ Seq("-cp",
+      System.getProperty("java.class.path"), "graft.WarmUpProbe")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log.toFile).start()
+    assert(proc.waitFor(120, java.util.concurrent.TimeUnit.SECONDS),
+      "the probe JVM did not exit")
+    val out = Files.readString(log)
+    assert(proc.exitValue == 0, out.takeRight(2000))
+    assert(out.linesIterator.exists(l => l.startsWith("[graft-warm-up] failed:") &&
+      l.contains("stopped SparkContext")), out.takeRight(2000))
+    assert(out.contains("WARM-UP RETURNED"))
+  }
+
   test("a restart over a checkpoint made at 32 shuffle partitions keeps " +
     "32 on a session set to 4: every earlier key is still served from " +
     "its recovered state over the wire") {
@@ -1146,5 +1199,18 @@ class MainSpec extends SparkSpec {
       running.stop()
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+  }
+}
+
+/** Runs [[Main.warmUp]] on a session whose context has stopped: it
+  * must log and return. Prints WARM-UP RETURNED when it does. */
+object WarmUpProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").appName("graft-warm-up-probe")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.stop()
+    Main.warmUp(spark).join()
+    println("WARM-UP RETURNED")
   }
 }
