@@ -26,21 +26,19 @@ private[graft] object BenchStreams {
     *
     *   - end-to-end THROUGHPUT: K events injected in chunks, wall time
     *     until every subscriber's sink holds all K (N = 1 is the direct
-    *     path — no tee — so the N ≥ 2 rows read as "tee + N spools vs
+    *     path — no tee — so the N ≥ 2 rows read as "tee + N buffers vs
     *     direct");
     *   - end-to-end LATENCY: single-event probes under natural
     *     micro-batch flow (no forced drains), wall time from inject
-    *     until ALL N sinks contain the event — the tee adds one spool
-    *     write plus one subscriber trigger of latency per hop.
+    *     until ALL N sinks contain the event — the tee adds one collect
+    *     plus one subscriber trigger of latency per hop.
     *
     * Emits one JSON line and appends it to `bench_fanout.json`. The
-    * numbers quantify the documented trade: the parquet spool is the
-    * local-mode stand-in for a durable bus, so its per-subscriber cost
-    * should be linear-ish in N with a fixed per-hop latency tax; a
-    * superlinear slope would mean the tee re-materializes per
-    * subscriber (it must not — one persist, N hard links). For every N
-    * each query's micro-batch `durationMs` breakdown goes to stderr
-    * (see [[printPhases]]).
+    * per-subscriber cost should be linear-ish in N with a fixed per-hop
+    * latency tax; a superlinear slope would mean the tee
+    * re-materializes per subscriber (it must not — one collect, N
+    * buffers sharing its rows). For every N each query's micro-batch
+    * `durationMs` breakdown goes to stderr (see [[printPhases]]).
     *
     * Env: FANOUT_BENCH_EVENTS (default 60000), FANOUT_BENCH_CHUNK
     * (6000), FANOUT_BENCH_PROBES (7), SPARK_GRAFT_CPUS.
@@ -68,15 +66,13 @@ private[graft] object BenchStreams {
       val in = MemoryStream[SEvent]
       val core = new Core(spark)
       val loader = new ConfigFile.Loader(core, spark, cfg,
-        sources0 = Map("in" -> (() => in.toDF())),
-        fanoutDir = dir.resolve("fanout"))
-      Files.createDirectories(dir.resolve("fanout"))
+        sources0 = Map("in" -> (() => in.toDF())))
       try {
         loader.reload()
         def sinkSizes(): Seq[Int] =
           (1 to n).map(i => loader.memorySinks(s"s$i").rows.size())
         // warm-up: codegen + first micro-batch + (for n >= 2) the
-        // tee's first spool write
+        // tee's first hand-over
         in.addData(ev(0))
         core.processAllAvailable()
         val deadline0 = System.currentTimeMillis() + 60000

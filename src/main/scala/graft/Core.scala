@@ -78,9 +78,9 @@ class Core(spark: SparkSession) {
 
   /** Drain every active query — the deterministic test/await hook.
     * Two passes: a fan-out tee ([[graft.config.ConfigFile.Loader]])
-    * lands files for its downstream file-source subscribers during the
-    * first pass, so a single pass over an arbitrary iteration order
-    * could leave a subscriber unaware of data its tee just wrote.
+    * appends to its subscribers' buffers during the first pass, so a
+    * single pass over an arbitrary iteration order could leave a
+    * subscriber unaware of data its tee just handed over.
     * Topologies are one hop deep (source → tee → subscriber; a
     * subscriber's sink is never a config source), so two passes drain
     * everything available at call time. */

@@ -65,9 +65,10 @@ import graft.streaming.{IndexProcessor, SEvent, WireEvent, WireIndexProcessor}
   * core fan-out semantic (every registered stream sees every event,
   * core.clj:15-20). The [[ConfigFile.Loader]] consumes each shared
   * source with ONE tee query (one server instance, one bind) and fans
-  * micro-batches out to per-stream spools, so each stream still runs
-  * as a full StreamingQuery with its own state and checkpoint. The
-  * name a server block registers under doubles as its source name.
+  * micro-batches out to per-stream in-memory buffers, so each stream
+  * still runs as a full StreamingQuery with its own state and
+  * checkpoint. The name a server block registers under doubles as its
+  * source name.
   */
 object Main {
 
@@ -266,14 +267,6 @@ object Main {
     }
 
     private def live(h: Held): Boolean = h.e.state != "expired"
-
-    /** The whole-event relation the serving path answers from — the
-      * Catalyst parity oracle for [[search]] (tagged/attribute queries
-      * included). */
-    def snapshot: DataFrame = {
-      import spark.implicits._
-      spark.createDataset(events).toDF()
-    }
 
     /** Dump rendering matching the push-line shape: whole-event JSON
       * when the feed carries tags/attributes columns, the plain
@@ -602,8 +595,6 @@ object Main {
     }
     /** Deleted-artifact counter, for specs and ops visibility. */
     @volatile private[graft] var prunedCount: Long = 0L
-    def wsServer: Option[WsServer] = synchronized(ws)
-    def sseServer: Option[SseServer] = synchronized(sse)
 
     /** Full server-aware reload — what SIGHUP drives (bin.clj:39-77 +
       * core.clj:105-161's restart of non-equiv services). Re-reads the
@@ -643,20 +634,24 @@ object Main {
       // ingest server answers `Msg{query}` from the served index
       val newPorts: Set[Int] = ingest.collect {
         case (_, "tcp", o) => o.int("port") }.toSet
-      // {"fanout": {"retentionHours": N, "replayable": ["name", ...],
-      //  "dir": "<path>"}} — spool knobs for the shared-source tee.
-      // `files` blocks are natively replayable (every file-source query
-      // tracks its own seen-files set) and register automatically;
-      // `replayable` adds host-known names on top. `dir` is read once
-      // at start() (spools + tee checkpoints must stay where a
-      // restarted process can find them); retention and the replayable
-      // set re-apply on every reload.
+      // {"fanout": {"replayable": ["name", ...]}} — sources that fan
+      // out natively, so their subscribers need no tee. `files` blocks
+      // are natively replayable (every file-source query tracks its
+      // own seen-files set) and register automatically; `replayable`
+      // adds host-known names on top, re-applied on every reload. Any
+      // other key fails the load — the keys of the former on-disk
+      // fan-out store included, so a deployment that relied on it
+      // learns at start, not after a crash
       val filesNames = ingest.collect { case (n, "files", _) => n }.toSet
       val fanout = config.obj("fanout")
+      for (o <- fanout; (k, v) <- o.json.obj
+          if k != "replayable" && v != JNull)
+        throw new IllegalArgumentException(s"fanout.$k: unknown key; " +
+          "fanout takes only \"replayable\". Fan-out is in memory now: " +
+          "the on-disk fan-out store and its keys are gone, so use " +
+          "fanout.replayable for durable fan-out")
       val extraReplayable = fanout.fold(Set.empty[String])(
         _.strings("replayable").toSet)
-      val newRetentionMs = fanout.flatMap(_.numOpt("retentionHours"))
-        .map(h => (h * 3600 * 1000).toLong)
       // {"modelsKeep": {"root": "<dir>", "keepPerKind": N,
       //  "intervalSeconds": N}} — prune once now and then on the
       // cadence; absent block = no automatic pruning (Models.main's
@@ -669,11 +664,6 @@ object Main {
       loader.sources = thunks
       loader.sourceSignature = n => salts.getOrElse(n, "")
       loader.replayableSources = filesNames ++ extraReplayable
-      // absent key reverts to the constructor default — without this a
-      // reload that REMOVES retentionHours pins the last applied value
-      // forever (r19 ADVICE)
-      loader.retentionMs =
-        newRetentionMs.getOrElse(loader.fanoutRetentionMs)
       // ws/sse dumps serve the in-memory event snapshot (Spark-free
       // path); restart only on block change so live subscribers of an
       // untouched server keep their connections
@@ -847,16 +837,9 @@ object Main {
     if (spark0.isEmpty) warmUp(spark)
     val core = new Core(spark)
     val config = startupLayer("config")(ConfigFile.read(path))
-    // fanout.dir, when configured, pins the spool/tee-checkpoint area
-    // to a stable path — a restarted process resumes its tees from
-    // their checkpoints instead of starting over in a fresh temp dir
-    val fanoutDir = config.obj("fanout").flatMap(_.strOpt("dir")).fold(
-      java.nio.file.Files.createTempDirectory("graft-fanout"))(d =>
-      java.nio.file.Files.createDirectories(Paths.get(d)))
     val loader = new ConfigFile.Loader(core, spark, path, Map.empty,
       sinkFactories = Map("index" ->
-        ConfigFile.SinkKind(index.sinkFor, absorbs = Some("index"))),
-      fanoutDir = fanoutDir)
+        ConfigFile.SinkKind(index.sinkFor, absorbs = Some("index"))))
     val running = new Running(spark, core, loader, pubsub, index, path)
     // the first reload builds the ingest servers from the file, salts
     // stream signatures with their server blocks, starts ws/sse, and

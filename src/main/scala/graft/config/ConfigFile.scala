@@ -13,6 +13,7 @@ import org.json4s.jackson.JsonMethods
 
 import graft.Core
 import graft.sinks.Sinks
+import graft.sources.FanoutBuffer
 import graft.streaming.{IndexProcessor, SEvent, WireEvent}
 
 /** [[SEvent]] plus one JSON-packed column carrying whatever non-SEvent
@@ -314,94 +315,6 @@ object ConfigFile {
 
   /** Test hook: current static-cache entry count. */
   private[graft] def staticCacheSize: Int = staticCache.size
-
-  /** Delete a fan-out spool's DATA files with mtime before `cutoff`
-    * (metadata files `_*`/`.*` untouched). Files the subscriber's
-    * file source has already seen may be deleted safely (it never
-    * re-reads them); unseen files past the cutoff are the retention
-    * contract's loss window. Local filesystem by construction — the
-    * spool lives under the Loader's fanoutDir. */
-  private[graft] def pruneSpool(dir: Path, cutoff: Long): Int = {
-    val files = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-    files.count { f =>
-      f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith(".") && f.lastModified() < cutoff &&
-        f.delete()
-    }
-  }
-
-  /** Timestamp format for the JSON spool, used on BOTH the tee's
-    * `to_json` write and the subscriber's json read — micros precision
-    * with zone offset so event times round-trip exactly (the json
-    * datasource's default pattern truncates to millis). */
-  private[graft] val SpoolTimestampFormat =
-    "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
-  /** Above this many rows a JSON spool batch is written by a Spark
-    * task instead of collected to the driver. The driver fast path
-    * exists for LATENCY (one job, no committer); past this bound the
-    * collect's driver-heap cost outweighs the saved job round-trip. */
-  private[graft] val SpoolDriverWriteRows = 20000
-
-  /** One spool batch past this size is outside the single-file spool's
-    * design point (r19 VERDICT #8): the message tells the operator to
-    * move the source onto a durable bus BEFORE the local tee becomes
-    * an OOM, not after. */
-  private[graft] val SpoolBatchWarnBytes: Long = 512L * 1024 * 1024
-
-  private[graft] def spoolSizeWarning(bytes: Long): Option[String] =
-    if (bytes <= SpoolBatchWarnBytes) None
-    else Some(f"fan-out spool batch is ${bytes / (1024.0 * 1024)}%.0f MB " +
-      f"(threshold ${SpoolBatchWarnBytes / (1024 * 1024)} MB): the " +
-      "single-file spool is the local-mode stand-in for a durable bus " +
-      "and this batch is past its design point — route the source " +
-      "through kafka or a `files` landing zone (fanout `replayable`), " +
-      "or shorten the tee's trigger interval (docs/config.md)")
-
-  /** Whether JSON lines can represent `dt` EXACTLY: no binary, no
-    * interval, no local (zoneless) timestamps, map keys strings.
-    * Decides the spool format per source — a pure function of the
-    * source schema, so replays and restarts agree on file names. */
-  private[graft] def jsonSafeSchema(
-      dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case BinaryType | CalendarIntervalType | TimestampNTZType => false
-      case s: StructType => s.fields.forall(f => jsonSafeSchema(f.dataType))
-      case a: ArrayType => jsonSafeSchema(a.elementType)
-      case m: MapType =>
-        m.keyType == StringType && jsonSafeSchema(m.valueType)
-      case _: UserDefinedType[_] => false
-      case _ => true
-    }
-  }
-
-  /** Delete staged-delivery leftovers under a spool dir: `.stage-*`
-    * dirs (a crashed attempt's full batch copy) and `.copy-*.tmp`
-    * files (the link-fallback's temp that never reached its atomic
-    * rename). Callers hold the source's tee lock, which serializes
-    * this with [[Loader]]'s `deliverBatch` — any staged entry present
-    * here is from a crashed attempt, never an in-flight one, so age
-    * checks are unnecessary (r19 ADVICE: `pruneSpool` skips dot
-    * prefixes and only deletes files, so these leaked forever). */
-  private[graft] def sweepStaged(dir: Path): Int = {
-    val files = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-    val stale = files.filter { f =>
-      // .stage-* may be a DIR (Spark-written staged part) or a FILE
-      // (the driver-side JSON fast path's staged temp)
-      f.getName.startsWith(".stage-") ||
-        (f.isFile && f.getName.startsWith(".copy-") &&
-          f.getName.endsWith(".tmp"))
-    }
-    stale.foreach { f =>
-      def rm(g: java.io.File): Unit = {
-        Option(g.listFiles()).getOrElse(Array.empty).foreach(rm)
-        g.delete(); ()
-      }
-      rm(f)
-    }
-    stale.length
-  }
 
   /** The tags column if the source carries one, else an empty array —
     * a sourceless/stripped stream must not fail ANALYSIS on a tag op
@@ -887,47 +800,45 @@ object ConfigFile {
     * binds one socket — so when a source has two or more subscribers
     * the Loader inserts a '''tee''': ONE streaming query consumes the
     * source (the thunk is invoked once, so one server instance, one
-    * bind) and appends each micro-batch to a per-subscriber parquet
-    * spool under [[fanoutDir]]; each subscriber then runs as its own
-    * full StreamingQuery over a file source on its spool — watermarks,
-    * stateful ops, and checkpoints all behave exactly as on a direct
-    * source. Delivery is exactly-once per subscriber in normal
-    * operation (the tee's checkpoint serializes batches; the file
-    * source tracks seen files) and at-least-once across a tee crash
-    * (foreachBatch replay), the same contract as every other sink
-    * here.
+    * bind), collects each micro-batch to the driver once and appends
+    * it to every live subscriber's in-memory [[FanoutBuffer]]; each
+    * subscriber then runs as its own full StreamingQuery over its
+    * buffer — watermarks, stateful ops, and checkpoints all behave
+    * exactly as on a direct source, and a subscriber's filters fold
+    * into its buffer scan. Delivery is exactly-once per subscriber:
+    * the tee's checkpoint serializes batches, and a tee restarted on
+    * it replays its last batch under the same id, which each buffer
+    * ignores. The buffers hold a bounded number of rows
+    * ([[FanoutBuffer.Capacity]]): the tee waits for a subscriber that
+    * lags that far behind, the backpressure the ingest servers apply
+    * to their clients. A stopped or removed subscriber's buffer is
+    * dropped and never blocks the tee.
     *
-    * Spool directories are keyed by the subscriber's signature hash,
-    * so an EDITED stream rotates to a fresh spool and sees only events
-    * ingested after its restart — riemann's restart-loses-state reload
-    * semantics (pure.clj:1-30), not a replay of history. A source
-    * listed in `replayable` skips the tee: each subscriber invokes the
-    * thunk itself (kafka-style sources track per-query offsets and
-    * fan out natively — at 100 TB the durable bus IS the tee; the
-    * parquet spool is the local-mode stand-in).
+    * Across process death, fan-out has the contract of its source: the
+    * buffers and the tee's checkpoint (under a temporary directory
+    * made on the first tee) die with the process. The ingest servers
+    * hold acked frames only in memory too. A source listed in
+    * `replayable` skips the tee: each subscriber invokes the thunk
+    * itself (kafka-style sources track per-query offsets and fan out
+    * natively — at scale the durable bus IS the tee).
     *
-    * Spools are retention-pruned from the tee (every 64 batches, data
-    * files older than `fanoutRetentionMs`, default 24 h, are deleted —
-    * subscribers drain files within a trigger, so the spool stays
-    * bounded on a long-running firehose; a subscriber down past the
-    * window loses those events, the standard durable-bus retention
-    * contract).
+    * Buffers are keyed by the subscriber's signature, so an EDITED
+    * stream starts on a fresh buffer and sees only events ingested
+    * after its restart — riemann's restart-loses-state reload
+    * semantics (pure.clj:1-30), not a replay of history.
     *
-    * Subscriber-set changes update the running tee's spool map without
-    * restarting it; once fanned, a source stays teed while it keeps
-    * any subscriber (dropping to one must not restart the survivor).
-    * A source crossing the 1→2 subscriber boundary restarts the
-    * previously-direct stream (its input plan changes), and data the
-    * source still RETAINS at that transition may be re-delivered by
-    * the fresh tee — at-least-once across topology transitions, the
+    * Subscriber-set changes update the running tee's buffer map
+    * without restarting it; once fanned, a source stays teed while it
+    * keeps any subscriber (dropping to one must not restart the
+    * survivor). A source crossing the 1→2 subscriber boundary restarts
+    * the previously-direct stream (its input plan changes), and data
+    * the source still RETAINS at that transition may be re-delivered
+    * by the fresh tee — at-least-once across topology transitions, the
     * same contract as the server sources' restart handoff. */
   final class Loader(core: Core, spark: SparkSession, path: Path,
       sources0: Map[String, () => DataFrame],
       sinkFactories: Map[String, SinkKind] = Map.empty,
-      val fanoutDir: Path =
-        Files.createTempDirectory("graft-fanout"),
-      replayable: Set[String] = Set.empty,
-      val fanoutRetentionMs: Long = 24L * 3600 * 1000) {
+      replayable: Set[String] = Set.empty) {
 
     /** Sources that fan out natively (file/kafka-style: every query
       * tracks its own offsets, so N subscribers need no tee) — LIVE
@@ -936,10 +847,6 @@ object ConfigFile {
       * `fanout.replayable` list) updates it before reloading.
       * Initialized from the constructor's `replayable`. */
     @volatile var replayableSources: Set[String] = replayable
-
-    /** Spool retention window, reload-adjustable (the `fanout
-      * .retentionHours` block); the running tee reads it per batch. */
-    @volatile var retentionMs: Long = fanoutRetentionMs
 
     /** Config source names → streaming-DataFrame thunks. Mutable so a
       * host ([[graft.Main]]) can swap in thunks rebuilt from the edited
@@ -963,18 +870,11 @@ object ConfigFile {
     val memorySinks = TrieMap[String, Sinks.MemorySink]()
     private var current: Set[String] = Set.empty
 
-    /** Source schemas observed for fanned-out sources (the file-source
-      * subscribers need a schema at plan time). Populated eagerly in
-      * [[reload]] from a side-effect-free thunk invocation — sources
-      * bind sockets at query START, not at DataFrame construction. */
-    private val fanoutSchemas =
-      TrieMap[String, org.apache.spark.sql.types.StructType]()
-
-    /** source name → (subscriber stream name → spool dir). The running
-      * tee reads this volatilely each micro-batch, so subscriber-set
+    /** source name → (subscriber signature → buffer). The running tee
+      * reads this volatilely each micro-batch, so subscriber-set
       * changes take effect without restarting the tee. */
     @volatile private var fanoutSubs
-        : Map[String, Map[String, String]] = Map.empty
+        : Map[String, Map[String, FanoutBuffer]] = Map.empty
 
     /** Sources whose tee is live — sticky while the source keeps any
       * subscriber (see [[reload]]). */
@@ -982,12 +882,17 @@ object ConfigFile {
 
     private def teeName(source: String) = s"__fanout__$source"
 
-    /** Per-source monitor serializing the tee's spool writes with
-      * reload-time orphan-spool deletion: a reload must not delete a
-      * rotated-out spool dir while a tee micro-batch started before the
-      * subscriber-map flip is still appending to it. Uncontended except
-      * during a reload. */
-    private val teeLocks = TrieMap[String, Object]()
+    // removed at JVM exit, as Spark removes its own temporary dirs
+    private lazy val teeRoot = {
+      val d = Files.createTempDirectory("graft-tee")
+      sys.addShutdownHook(deleteRecursively(d.toFile))
+      d
+    }
+
+    /** Where `source`'s tee keeps its checkpoint while it is teed: a
+      * tee restarted in-process resumes from it. */
+    private[graft] def teeCheckpoint(source: String): Path =
+      teeRoot.resolve(source)
 
     private def deleteRecursively(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty)
@@ -995,192 +900,21 @@ object ConfigFile {
       f.delete(); ()
     }
 
-    /** Link `part` into `d` as `fname` — hard link when the filesystem
-      * allows (subscriber count adds links, not write amplification),
-      * else copy + atomic rename, same visibility contract. */
-    private def linkInto(part: Path, d: String, fname: String): Unit = {
-      val target = Path.of(d, fname)
-      try { Files.createLink(target, part); () }
-      catch {
-        // link-averse filesystems (no hard links, cross-device mounts)
-        // throw FileSystemException subclasses
-        case _: UnsupportedOperationException
-             | _: java.nio.file.FileSystemException =>
-          val t = Files.createTempFile(Path.of(d), ".copy-", ".tmp")
-          Files.copy(part, t,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          Files.move(t, target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          ()
-      }
-    }
-
-    /** Exactly-once spool delivery (r18 VERDICT #6): each micro-batch
-      * lands in a subscriber's spool as ONE deterministically-named
-      * file, `b<batchId>.<ext>`, staged hidden and linked in
-      * atomically. A tee crash between spool writes and its checkpoint
-      * commit replays the batch with the SAME batchId — the existing
-      * target file makes the replay a no-op, so the subscriber's file
-      * source (which tracks seen paths) never sees a duplicate.
-      *
-      * Format (r19 VERDICT #2 — the tee hop cost 2.7× throughput and
-      * +290 ms p50): binary-free schemas spool as JSON LINES, written
-      * DRIVER-SIDE for small batches — ONE Spark job (a limit-probed
-      * `to_json` collect) replaces the old persist + count + coalesced
-      * parquet-write job chain and its commit protocol. Batches past
-      * [[SpoolDriverWriteRows]] fall back to a single-task Spark text
-      * write of the same JSON (the probe's persist makes the fallback
-      * re-scan cheap). Schemas carrying binary (or other
-      * JSON-unrepresentable types) keep the parquet path. The format
-      * is a pure function of the source schema, so it is stable across
-      * replays and restarts — exactly-once's deterministic-name check
-      * stays sound. At 100 TB the durable bus (`replayable`) is the
-      * tee and this whole path is the local-mode stand-in, so the
-      * single-file form is not the scale path — [[spoolSizeWarning]]
-      * says so loudly when a batch outgrows it. */
-    private def deliverBatch(batch: org.apache.spark.sql.Dataset[
-        org.apache.spark.sql.Row], batchId: Long,
-        dirs: Seq[String], ext: String): Unit = {
-      val fname = f"b$batchId%020d.$ext"
-      val pending = dirs.filterNot(d => Files.exists(Path.of(d, fname)))
-      if (pending.isEmpty) return
-      val stageRoot = Path.of(pending.head)
-      // clear half-staged leftovers from a crashed attempt — across
-      // ALL subscriber dirs, not just pending ones: the original
-      // attempt staged under ITS pending.head, and a crash after
-      // linking into that dir excludes it from this replay's
-      // `pending` (its target file exists), so a pending-only scan
-      // would leak the stage dir (a full batch copy) forever
-      // (r19 ADVICE)
-      dirs.foreach { d =>
-        Option(Path.of(d).toFile.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith(s".stage-b$batchId-"))
-          .foreach(deleteRecursively)
-      }
-      if (ext == "json") {
-        val cols = batch.columns.map(org.apache.spark.sql.functions.col)
-        val js = batch.select(org.apache.spark.sql.functions.to_json(
-          org.apache.spark.sql.functions.struct(cols.toSeq: _*),
-          java.util.Map.of("timestampFormat", SpoolTimestampFormat))
-          .as("j"))
-        // no persist: the common case (small batch) is fully served
-        // by this ONE limit-probed collect; only a batch past the
-        // driver-write bound pays a second scan, and there the
-        // single-task text write dominates anyway
-        val probe = js.limit(SpoolDriverWriteRows + 1).collect()
-        if (probe.nonEmpty) {
-          if (probe.length <= SpoolDriverWriteRows) {
-            // fast path: the probe IS the batch — write it on the
-            // driver (no write job, no committer), link N times
-            val tmp = Files.createTempFile(stageRoot,
-              s".stage-b$batchId-", ".json")
-            try {
-              Files.write(tmp, probe.map(_.getString(0))
-                .mkString("", "\n", "\n")
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              spoolSizeWarning(Files.size(tmp)).foreach(log.warn)
-              pending.foreach(linkInto(tmp, _, fname))
-            } finally { Files.deleteIfExists(tmp); () }
-          } else {
-            val tmp = Files.createTempDirectory(stageRoot,
-              s".stage-b$batchId-")
-            try {
-              js.coalesce(1).write.mode("overwrite").text(tmp.toString)
-              val part = Option(tmp.toFile.listFiles())
-                .getOrElse(Array.empty)
-                .find(_.getName.startsWith("part-"))
-                .getOrElse(throw new IllegalStateException(
-                  s"no part file staged under $tmp"))
-              spoolSizeWarning(part.length()).foreach(log.warn)
-              pending.foreach(linkInto(part.toPath, _, fname))
-            } finally deleteRecursively(tmp.toFile)
-          }
-        }
-      } else {
-        // parquet path (binary-carrying schemas): one source read, ONE
-        // staged write; persist-count short-circuits empty batches
-        val b = batch.persist()
-        try {
-          if (b.count() > 0L) {
-            val tmp =
-              Files.createTempDirectory(stageRoot, s".stage-b$batchId-")
-            try {
-              b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-              val part = Option(tmp.toFile.listFiles())
-                .getOrElse(Array.empty)
-                .find(_.getName.startsWith("part-"))
-                .getOrElse(throw new IllegalStateException(
-                  s"no part file staged under $tmp"))
-              spoolSizeWarning(part.length()).foreach(log.warn)
-              pending.foreach(linkInto(part.toPath, _, fname))
-            } finally deleteRecursively(tmp.toFile)
-          }
-        } finally { b.unpersist(); () }
-      }
-    }
-
-    /** Spool file format for `source` — JSON lines when the schema is
-      * exactly JSON-representable (the latency fast path), parquet
-      * otherwise. Derived from the schema only, so every tee replay
-      * and process restart picks the same extension. */
-    private def spoolExt(source: String): String =
-      if (jsonSafeSchema(fanoutSchemas(source))) "json" else "parquet"
-
     private def buildTee(source: String): DataStreamWriter[_] = {
       val src = sources.getOrElse(source,
         throw new IllegalArgumentException(
           s"fan-out tee: unknown source '$source'"))
-      val df = src()
-      fanoutSchemas(source) = df.schema
-      val ext = spoolExt(source)
-      df.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          teeLocks.getOrElseUpdate(source, new Object).synchronized {
-            val subs = fanoutSubs.getOrElse(source, Map.empty)
-            val dirs = subs.values.toSeq
-            if (dirs.nonEmpty) deliverBatch(batch, batchId, dirs, ext)
-            // spool retention: subscribers drain files within a
-            // trigger, so anything older than the retention window is
-            // long-consumed — without this a long-running firehose
-            // grows the spool without bound (a subscriber down past
-            // the window loses those events: the standard retention
-            // contract of any durable bus). Orphaned sub-* dirs
-            // (rotated or removed subscribers) are deleted whole on
-            // the same cadence — serialized with the spool writes by
-            // the tee lock (r18 ADVICE: without this, SIGHUP config
-            // churn grows fanoutDir without bound)
-            if (dirs.nonEmpty && batchId % 64 == 0) {
-              val cutoff = System.currentTimeMillis() - retentionMs
-              dirs.foreach { d =>
-                pruneSpool(java.nio.file.Path.of(d), cutoff)
-                // crashed-attempt leftovers (.stage-* dirs, .copy-*.tmp
-                // files) are invisible to pruneSpool and can sit in a
-                // dir excluded from a replay's `pending` — sweep them
-                // on the same cadence, serialized with deliverBatch by
-                // the tee lock (r19 ADVICE)
-                sweepStaged(java.nio.file.Path.of(d))
-              }
-              pruneOrphanSpools(source)
-            }
+      src().writeStream
+        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
+            batchId: Long) =>
+          val subs = fanoutSubs.getOrElse(source, Map.empty).values
+          if (subs.nonEmpty) {
+            // one collect; every subscriber shares the rows
+            val rows = batch.queryExecution.executedPlan.executeCollect()
+            if (rows.nonEmpty) subs.foreach(_.offer(batchId, rows))
           }
         }
-        .option("checkpointLocation",
-          fanoutDir.resolve(source).resolve("_tee_ckpt").toString)
-    }
-
-    /** Delete sub-* dirs under fanoutDir/`source` absent from the
-      * current subscriber map. Callers hold the source's tee lock (the
-      * tee's prune cadence) or know its tee is stopped ([[reload]]'s
-      * source-removal path). */
-    private def pruneOrphanSpools(source: String): Unit = {
-      val live = fanoutSubs.getOrElse(source, Map.empty).values
-        .map(d => Path.of(d).getFileName.toString).toSet
-      val srcDir = fanoutDir.resolve(source).toFile
-      Option(srcDir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("sub-") &&
-          !live.contains(f.getName))
-        .foreach(deleteRecursively)
+        .option("checkpointLocation", teeCheckpoint(source).toString)
     }
 
     private def build(stream: JObject,
@@ -1301,28 +1035,25 @@ object ConfigFile {
       // everything throw-prone first: resolve + schema-probe every
       // fanned source before any mutation (thunk invocation is
       // side-effect-free; sources bind at query start) — a failed
-      // reload must leave stickiness untouched too
-      fanned.keys.foreach { src =>
-        val thunk = sources.getOrElse(src,
-          throw new IllegalArgumentException(
-            s"fan-out: unknown source '$src'"))
-        fanoutSchemas.getOrElseUpdate(src, thunk().schema)
+      // reload must leave stickiness untouched too. A subscriber's
+      // buffer carries its source's schema.
+      val schemas = fanned.map { case (src, _) =>
+        src -> sources.getOrElse(src, throw new IllegalArgumentException(
+          s"fan-out: unknown source '$src'"))().schema
       }
       val unfanned = stickyFanned -- fanned.keySet
-      // spool dirs keyed by subscriber signature: an edited stream
-      // rotates to a fresh spool (sees only post-restart events)
-      val spools: Map[String, Map[String, String]] =
-        fanned.map { case (src, subs) =>
-          src -> subs.map { n =>
-            val h = java.security.MessageDigest.getInstance("MD5")
-              .digest(baseSig(streams(n))
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              .map("%02x".format(_)).mkString.take(12)
-            n -> fanoutDir.resolve(src).resolve(s"sub-$n-$h").toString
-          }.toMap
+      // one buffer per subscriber, keyed by its signature: an edited
+      // stream starts on a fresh buffer (sees only post-restart
+      // events); a running, unchanged one keeps reading its own
+      val subscribers = fanned.toSeq.flatMap { case (src, subs) =>
+        subs.map { n =>
+          val key = baseSig(streams(n))
+          (src, n, key, fanoutSubs.get(src).flatMap(_.get(key))
+            .filter(_.isOpen).getOrElse(new FanoutBuffer(schemas(src))))
         }
-      spools.values.flatMap(_.values)
-        .foreach(d => Files.createDirectories(Path.of(d)))
+      }
+      val buffers: Map[String, Map[String, FanoutBuffer]] = subscribers
+        .groupBy(_._1).view.mapValues(_.map(t => t._3 -> t._4).toMap).toMap
       val teeNames = fanned.keys.map(teeName).toSet
       (current -- names -- teeNames).foreach(core.removeStream)
       // tees register (and therefore start) before their subscribers
@@ -1333,29 +1064,15 @@ object ConfigFile {
       for ((name, s) <- streams) {
         val srcs = sourcesOf(s)
         val legs: Seq[() => DataFrame] = srcs.map { src =>
-          spools.get(src).flatMap(_.get(name)) match {
-            case Some(dir) => () => {
-              // nullability loosened: both spool formats round-trip
-              // non-nullable encoder schemas as optional fields
-              val schema = org.apache.spark.sql.types.StructType(
-                fanoutSchemas(src).fields.map(_.copy(nullable = true)))
-              val ext = spoolExt(src)
-              // only tee-delivered batch files: a stray foreign file
-              // dropped into the spool dir must never poison the stream
-              val r = spark.readStream.schema(schema)
-                .option("pathGlobFilter", s"b*.$ext")
-              if (ext == "json")
-                r.option("timestampFormat", SpoolTimestampFormat).json(dir)
-              else r.parquet(dir)
-            }
+          buffers.get(src).map(_(baseSig(s))) match {
+            case Some(buffer) => () => buffer.toDF(spark)
             case None => sources.getOrElse(src,
               throw new IllegalArgumentException(
                 s"$name: unknown source '$src'"))
           }
         }
-        val sig = baseSig(s) + srcs
-          .flatMap(src => spools.get(src).flatMap(_.get(name)))
-          .map("#fanout:" + _).mkString
+        val sig = baseSig(s) +
+          srcs.filter(fanned.contains).map("#fanout:" + _).mkString
         // a multi-source stream unions its legs BY NAME (transports
         // decode to different column sets — a tcp SEvent leg and a
         // graphite leg union into the superset, absent columns null):
@@ -1367,31 +1084,26 @@ object ConfigFile {
         core.stream(name, signature = sig)(build(s, input))
       }
       current = names.toSet ++ teeNames
-      // publish the spool map once every stream is built, BEFORE any
-      // stops: a running (equiv) tee starts writing to a restarted
-      // subscriber's fresh spool while the old query drains its old
-      // spool — no event is delivered to both incarnations, none is
-      // lost after the map flip. A stream that fails to build throws
-      // before the flip, so the old subscribers keep their spools.
-      val started = core.applyConfig(onBuilt = () => fanoutSubs = spools)
+      // publish the buffer map once every stream is built, BEFORE any
+      // stops: a running (equiv) tee starts feeding a restarted
+      // subscriber's fresh buffer while the old query drains its old
+      // one — no event is delivered to both incarnations, none is lost
+      // after the map flip. A stream that fails to build throws before
+      // the flip, so the old subscribers keep their buffers. A stopped
+      // query closes its buffer; a subscriber whose query did not start
+      // has its buffer closed here — neither ever blocks the tee.
+      val started = try core.applyConfig(onBuilt = () => fanoutSubs = buffers)
         .filterNot(_.startsWith("__fanout__"))
+      finally {
+        val active = core.activeQueries
+        for ((_, n, _, buffer) <- subscribers
+            if !active.get(n).exists(_.isActive)) buffer.close()
+      }
       stickyFanned = fanned.keySet
       // a source that left the fanned set has no tee anymore (stopped
       // by the transition above — StreamingQuery.stop joins the
-      // micro-batch thread), so its whole fanoutDir subtree (spools +
-      // tee checkpoint) is dead weight; rotated-out spools of LIVE
-      // tees are pruned by the tee itself on its cadence, serialized
-      // with its writes (r18 ADVICE: unbounded fanoutDir growth under
-      // SIGHUP churn)
-      unfanned.foreach { src =>
-        val d = fanoutDir.resolve(src).toFile
-        if (d.isDirectory) deleteRecursively(d)
-      }
-      fanned.keys.foreach { src =>
-        teeLocks.getOrElseUpdate(src, new Object).synchronized {
-          pruneOrphanSpools(src)
-        }
-      }
+      // micro-batch thread), so its tee checkpoint is dead weight
+      unfanned.foreach(src => deleteRecursively(teeCheckpoint(src).toFile))
       started
     }
 

@@ -2,13 +2,19 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.streaming.Source
+import org.apache.spark.sql.execution.streaming.runtime.StreamingExecutionRelation
 
 /** Bridge into Spark's `private[spark]` internals: the classic
   * session-cloning path (sessionStateBuilder/cloneSession), to evaluate
   * ONE DataFrame under a scoped SQL-conf override without mutating the
   * caller's session, the listener bus, and the builder's
-  * `sparkContext`.
+  * `sparkContext`, and the Dataset constructor behind an in-memory
+  * streaming source.
   *
   * r22 (r21 VERDICT "what's wrong" #4): [[graft.pipeline.Dedup]]'s
   * union-find probe used to set `spark.sql.limit.initialNumPartitions`
@@ -40,4 +46,17 @@ object SessionBridge {
     * configuration may not take effect. */
   def onContext(sc: SparkContext): SparkSession =
     classic.SparkSession.builder().sparkContext(sc).getOrCreate()
+
+  /** The streaming DataFrame a query over `source` starts from. */
+  def streamOf(spark: SparkSession, source: Source): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s, StreamingExecutionRelation(source, s))
+  }
+
+  /** One micro-batch of `source` as a streaming local relation. */
+  def streamingRows(spark: SparkSession, source: Source,
+      rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(source.schema), rows,
+        isStreaming = true, stream = Some(source)))
 }

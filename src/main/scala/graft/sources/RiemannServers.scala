@@ -34,8 +34,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * architecture, and the shape a multi-receiver cluster deployment
   * would shard by port).
   *
-  * Flow control: when `capacity` frames are buffered, the reader
-  * threads block before reading the next frame, so TCP backpressure
+  * The frames sit in an [[OffsetBuffer]], the offset rule every
+  * in-memory source here shares (the fan-out subscribers' too).
+  *
+  * Flow control: when `capacity` frames wait for a batch, the reader
+  * threads block before acking the next frame, so TCP backpressure
   * propagates to clients instead of OOMing the driver (the reference
   * relies on netty's channel watermarks for the same thing).
   *
@@ -43,7 +46,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * offset commits. An IN-PROCESS restart (query stop/start, a
   * [[graft.Core]] reload) loses nothing: `stop()` parks the undrained
   * buffer in [[RiemannServers.parked]] and the next instance on the
-  * same address adopts it, offsets continuing the old lineage. A JVM
+  * same address reopens it, offsets continuing the old lineage. A JVM
   * crash still loses the in-memory tail — at-most-once across process
   * death, same contract as Spark's socket source (front with Kafka for
   * replay). Usage:
@@ -107,9 +110,9 @@ object RiemannServers {
   }
 
   /** Buffer handoff across IN-PROCESS restarts (a [[graft.Core]] reload,
-    * a stopped-and-restarted query): `stop()` parks the undrained
-    * (frames, base) here keyed by bind address, and the next stream
-    * instance on the same address adopts them, so frames that were
+    * a stopped-and-restarted query): `stop()` parks the closed
+    * [[OffsetBuffer]] here keyed by bind address, and the next stream
+    * instance on the same address reopens it, so frames that were
     * ACKED before the stop are delivered by the restarted query instead
     * of dying with the old instance — riemann's "reload keeps serving"
     * (core.clj:105-161) strengthened to "reload loses nothing". Only a
@@ -128,8 +131,8 @@ object RiemannServers {
     * group). If no successor ever binds, the one parked entry stays
     * until process exit — bounded per address; a long-lived JVM should
     * keep stable ports per stream rather than cycling fresh ones. */
-  private[sources] val parked =
-    new java.util.concurrent.ConcurrentHashMap[String, (ArrayBuffer[(Array[Byte], Long)], Long)]()
+  private[sources] val parked = new java.util.concurrent.ConcurrentHashMap[
+    String, OffsetBuffer[(Array[Byte], Long)]]()
 }
 
 private[sources] class RiemannServerTable(options: CaseInsensitiveStringMap)
@@ -166,8 +169,7 @@ private[sources] class RiemannServerTable(options: CaseInsensitiveStringMap)
     }
 }
 
-/** Frame offset: epoch base + frames enqueued (monotone, including
-  * across restarts — see RiemannServerStream.base). */
+/** Frame offset: see [[OffsetBuffer]]. */
 private[sources] case class FrameOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
@@ -176,59 +178,18 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
     port: Int, maxFrame: Int, capacity: Int,
     tls: Option[graft.TlsFiles] = None) extends MicroBatchStream {
 
-  // (payload, receive-time-micros); `base` = offset of frames(0).
-  // The epoch start (wall-clock ms * 1e6) makes a fresh instance's
-  // offsets start strictly above anything a previous incarnation
-  // checkpointed: the engine detects "new data" by offset inequality,
-  // and a restarted server whose frame COUNT happened to equal the
-  // recovered offset would otherwise stall until one more frame
-  // arrived (offsets are opaque counts to the engine, so the jump is
-  // invisible to it; planInputPartitions/commit clamp against base).
-  private val frames = new ArrayBuffer[(Array[Byte], Long)]()
-  private var base = System.currentTimeMillis() * 1000000L
-  // in-process restart handoff: adopt a predecessor's undrained buffer
-  // AND its base — offsets then continue the old lineage exactly. The
-  // parked base is the last SOURCE-committed offset, which may TRAIL
-  // the engine's checkpoint (source.commit is lazy): frames the engine
-  // already committed are adopted too, but planInputPartitions slices
-  // each recovered batch from its checkpointed start, so the stale
-  // prefix is never re-delivered and the first commit() drops it.
-  // That only holds while base stays on the old lineage — hence
-  // handoffAdopted disables the clock-skew re-base in adopt(), which
-  // would RELABEL the stale prefix as fresh offsets (= duplicates).
-  // Must run before the listener below starts enqueueing.
+  // (payload, receive-time-micros). An in-process predecessor on the
+  // same address parked its undrained buffer: reopening it continues
+  // the old offset lineage exactly (see RiemannServers.parked). Must
+  // run before the listener below starts enqueueing.
   private val handoffKey = s"$protocol://$host:$port"
-  private var handoffAdopted = false
-  locally {
-    val p = RiemannServers.parked.remove(handoffKey)
-    if (p != null) { frames ++= p._1; base = p._2; handoffAdopted = true }
-  }
+  private val frames = Option(RiemannServers.parked.remove(handoffKey))
+    .fold(new OffsetBuffer[(Array[Byte], Long)](capacity))(_.reopen(capacity))
   @volatile private var running = true
   private val threads = new ArrayBuffer[Thread]()
   private val clients = new ArrayBuffer[Socket]()
   private var serverSocket: ServerSocket = _
   private var datagramSocket: DatagramSocket = _
-
-  /** Clock-skew guard for the epoch base: if a recovered checkpoint
-    * offset is somehow AHEAD of this instance's epoch (wall clock
-    * stepped backwards across the restart), re-base to it before the
-    * first batch is planned — relabeling the unprocessed buffer upward
-    * never drops or repeats a frame. Recovery may interleave
-    * initialOffset and deserializeOffset in any order (Spark 4.1 asks
-    * for the initial offset even when a checkpoint exists), and a
-    * replayed batch hands BOTH its start and end through
-    * deserializeOffset, hence max-until-processing rather than
-    * adopt-once. initialOffset's 0 never re-bases anything. A handoff
-    * adoption opts out entirely: its base already continues the
-    * checkpoint's own lineage (always <= the checkpointed offset), and
-    * re-basing would relabel the adopted frames — the engine would see
-    * already-committed frames as new data and deliver them twice. */
-  @volatile private var processing = false
-  private def adopt(n: Long, fromCheckpoint: Boolean): Unit =
-    frames.synchronized {
-      if (fromCheckpoint && !processing && !handoffAdopted && n > base)
-        base = n
-    }
 
   locally {
     protocol match {
@@ -319,37 +280,26 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
     }
   }
 
-  private def enqueue(payload: Array[Byte]): Unit = frames.synchronized {
-    while (running && frames.size >= capacity) frames.wait(100)
+  private def enqueue(payload: Array[Byte]): Unit =
     // a frame must not land (or be acked) after stop(): the stopped
     // buffer is never drained, so the ack would confirm a silent drop
-    if (!running) throw new IOException("server stopped")
-    frames += ((payload, System.currentTimeMillis() * 1000L))
-  }
+    if (!running ||
+        !frames.append(Seq((payload, System.currentTimeMillis() * 1000L))))
+      throw new IOException("server stopped")
 
-  override def initialOffset(): Offset = {
-    adopt(0, fromCheckpoint = false)
-    FrameOffset(0)
-  }
-  override def latestOffset(): Offset =
-    frames.synchronized(FrameOffset(base + frames.size))
+  // Spark 4.1 asks for the initial offset even when a checkpoint
+  // exists; its 0 never re-bases anything
+  override def initialOffset(): Offset = FrameOffset(0)
+  override def latestOffset(): Offset = FrameOffset(frames.latest)
   override def deserializeOffset(json: String): Offset = {
-    // checkpointed offsets reach the fresh instance through here on
-    // restart (possibly AFTER an initialOffset call — see adopt); only
-    // the first one re-bases, so replayed batch starts can't move it
-    val n = json.toLong
-    adopt(n, fromCheckpoint = true)
-    FrameOffset(n)
+    // checkpointed offsets reach the fresh instance through here
+    frames.adopt(json.toLong)
+    FrameOffset(json.toLong)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    processing = true
-    val (s, e) = (start.asInstanceOf[FrameOffset].n, end.asInstanceOf[FrameOffset].n)
-    val slice = frames.synchronized {
-      val from = math.max(0L, s - base).toInt
-      val to = math.max(0L, math.min(e - base, frames.size.toLong)).toInt
-      frames.slice(from, to).toArray
-    }
+    val slice = frames.slice(start.asInstanceOf[FrameOffset].n,
+      end.asInstanceOf[FrameOffset].n)
     if (slice.isEmpty) Array.empty
     else {
       // shard the batch so the protobuf decode parallelizes on
@@ -364,13 +314,8 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
   override def createReaderFactory(): PartitionReaderFactory =
     FramesReaderFactory
 
-  override def commit(end: Offset): Unit = frames.synchronized {
-    val done = math.max(0L, math.min(end.asInstanceOf[FrameOffset].n - base,
-      frames.size.toLong)).toInt
-    frames.remove(0, done)
-    base += done
-    frames.notifyAll()
-  }
+  override def commit(end: Offset): Unit =
+    frames.commit(end.asInstanceOf[FrameOffset].n)
 
   override def stop(): Unit = {
     running = false
@@ -381,18 +326,15 @@ private[sources] class RiemannServerStream(protocol: String, host: String,
     // the CLIENT hangs up, still acking into the dead buffer
     clients.synchronized { clients.foreach(c =>
       try c.close() catch { case _: IOException => () }) }
-    frames.synchronized {
-      // park the undrained tail for the next same-address instance (an
-      // in-process query restart / Core reload): acked frames are
-      // delivered by the successor, not lost. A frame enqueued during
-      // this race whose ack then failed on the closed socket is parked
-      // too — delivered once; whether the client also resends (making
-      // it at-least-once) is the client's retry policy, same boundary
-      // as any acked protocol.
-      if (frames.nonEmpty)
-        RiemannServers.parked.put(handoffKey, (frames.clone(), base))
-      frames.notifyAll()
-    }
+    // park the undrained tail for the next same-address instance (an
+    // in-process query restart / Core reload): acked frames are
+    // delivered by the successor, not lost. A frame enqueued during
+    // this race whose ack then failed on the closed socket is parked
+    // too — delivered once; whether the client also resends (making
+    // it at-least-once) is the client's retry policy, same boundary
+    // as any acked protocol.
+    frames.close()
+    if (!frames.isEmpty) RiemannServers.parked.put(handoffKey, frames)
   }
 }
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * Why it exists (r19 VERDICT #2c, measured with `Bench fanout`): on
   * this engine every micro-batch pays three-plus checkpoint metadata
   * writes — the offset WAL before the batch, the commit log after,
-  * and (for spool/file subscribers) the file-source seen-files log.
+  * and (for file-source queries) the seen-files log.
   * Through Hadoop's FileContext each write costs ~50 ms on a LOCAL
   * disk (AbstractFileSystem resolution + ChecksumFs double-writing
   * CRC sidecars), which made the 40 ms `walCommit`/`commitOffsets`

@@ -22,7 +22,7 @@ class ExampleConfigSpec extends SparkSpec {
       java.nio.file.Files.readString(path))
     import org.json4s._
     assert((doc \ "servers" \ "docs" \ "protocol") == JString("files"))
-    assert((doc \ "fanout" \ "retentionHours") == JInt(24))
+    assert((doc \ "fanout" \ "replayable") == JArray(List(JString("docs"))))
     val streams = graft.config.ConfigFile.load(path)
     assert(streams.map(s =>
       graft.config.ConfigFile.str(s \ "name", "name")) ==

@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.config.ConfigFile
+import graft.sinks.Sinks
+import graft.sources.{FanoutBuffer, OffsetBuffer}
 import graft.streaming.SEvent
 
 /** The config-surface fan-out contract (reference src/riemann/core.clj:
@@ -13,43 +17,69 @@ import graft.streaming.SEvent
   * several config streams naming one source must each see every event
   * exactly once, with full per-stream streaming-stateful semantics —
   * the Loader tees the single-consumer source into per-subscriber
-  * spools (ConfigFile.Loader scaladoc). These tests pin:
-  *   - N sinks × M events, exactly-once per sink, across rounds
+  * in-memory buffers (ConfigFile.Loader scaladoc). These tests pin:
+  *   - N sinks × M events, exactly-once per sink, across rounds and
+  *     across a tee restart that replays a batch
   *   - cross-batch STATEFUL state survives the tee hop (the property a
   *     foreachBatch-routing fan-out would silently break)
-  *   - an edited stream rotates to a fresh spool: restart-loses-state
+  *   - an edited stream starts on a fresh buffer: restart-loses-state
   *     reload semantics (pure.clj:1-30), no history replay, and the
   *     untouched sibling keeps its query
   *   - the 1→2 subscriber transition re-plans the previously-direct
   *     stream onto the tee
+  *   - the buffer bound: a stalled subscriber makes the tee wait, a
+  *     removed one never does
   *   - a `replayable` source skips the tee (native fan-out)
   */
 class FanoutSpec extends SparkSpec {
 
   private def write(p: Path, s: String): Unit = { Files.writeString(p, s); () }
 
-  test("sweepStaged removes crashed-attempt leftovers (.stage-* dirs, " +
-    ".copy-*.tmp files) and nothing else — the pruneSpool blind spot " +
-    "that leaked full batch copies forever (r19 ADVICE)") {
-    val dir = Files.createTempDirectory("graft-sweep-staged")
-    // a crashed attempt's stage dir, with the staged part file inside
-    val stage = dir.resolve(".stage-b00000000000000000007-abc123")
-    Files.createDirectories(stage)
-    Files.writeString(stage.resolve("part-00000.parquet"), "x")
-    // a link-fallback temp that never reached its atomic rename
-    Files.writeString(dir.resolve(".copy-42.tmp"), "x")
-    // the driver-side JSON fast path stages a FILE, not a dir
-    Files.writeString(dir.resolve(".stage-b00000000000000000008-x.json"), "x")
-    // survivors: delivered data, spool metadata, an unrelated dotfile
-    Files.writeString(dir.resolve("b00000000000000000006.parquet"), "x")
-    Files.writeString(dir.resolve("_spark_metadata"), "x")
-    Files.writeString(dir.resolve(".hidden-other"), "x")
-    assert(ConfigFile.sweepStaged(dir) == 3)
-    val left = Option(dir.toFile.listFiles()).get.map(_.getName).toSet
-    assert(left == Set("b00000000000000000006.parquet",
-      "_spark_metadata", ".hidden-other"), s"left: $left")
-    // idempotent
-    assert(ConfigFile.sweepStaged(dir) == 0)
+  /** A sink kind whose writes wait for `gate`, then record each row's
+    * host: a subscriber that stalls on demand. */
+  private def gated(gate: CountDownLatch,
+      hosts: ConcurrentLinkedQueue[String]) = ConfigFile.SinkKind(
+    (_, _, _) => new Sinks.EventSink {
+      override def write(batch: DataFrame, batchId: Long): Unit = {
+        gate.await()
+        batch.collect().foreach(r => hosts.add(r.getAs[String]("host")))
+      }
+    })
+
+  private def ev(i: Int) = SEvent(s"h$i", "s", "ok", Some(i.toDouble),
+    new Timestamp(i * 1000L), None)
+
+  /** Whether `source`'s tee is waiting for room in a buffer. */
+  private def teeWaiting(source: String): Boolean = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.asScala.exists { case (t, stack) =>
+      t.getName.contains(s"__fanout__$source") &&
+        t.getState == Thread.State.WAITING && stack.exists(f =>
+          f.getClassName == classOf[OffsetBuffer[_]].getName &&
+            f.getMethodName == "append")
+    }
+  }
+
+  /** Feed `in` half a buffer at a time until its tee waits on a buffer
+    * that nobody drains. Returns the row count fed. */
+  private def overfill(in: MemoryStream[SEvent]): Int = {
+    val half = FanoutBuffer.Capacity / 2
+    var sent = 0
+    while (!teeWaiting("in") && sent < 8 * half) {
+      in.addData((sent until sent + half).map(ev))
+      sent += half
+      val deadline = System.currentTimeMillis() + 5000
+      while (!teeWaiting("in") && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    }
+    assert(teeWaiting("in"), "the tee never waited for the stalled subscriber")
+    sent
+  }
+
+  private def await(what: String)(done: => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + 120000
+    while (!done && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(done, what)
   }
 
   test("fan-out: three sinks x two rounds, every subscriber sees every " +
@@ -222,7 +252,7 @@ class FanoutSpec extends SparkSpec {
           |  "sink":{"kind":"memory"}},
           | {"name":"b","source":"in","pipeline":[],
           |  "sink":{"kind":"memory"}}]}""".stripMargin)
-      // a restarts (its input plan flips from direct to the spool)
+      // a restarts (its input plan flips from direct to its buffer)
       assert(loader.reload().toSet == Set("a", "b"))
       assert(core.activeQueries.keySet == Set("a", "b", "__fanout__in"))
 
@@ -242,84 +272,11 @@ class FanoutSpec extends SparkSpec {
     } finally core.stop()
   }
 
-  test("spool retention: pruneSpool deletes data files past the cutoff, " +
-    "keeps metadata and fresh files; the tee wires it on a 64-batch " +
-    "cadence so a long-running firehose's spool stays bounded") {
-    val dir = Files.createTempDirectory("graft-spool-ret")
-    def plant(name: String, ageMs: Long): Path = {
-      val p = dir.resolve(name)
-      Files.writeString(p, "x")
-      Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - ageMs))
-      p
-    }
-    val old1 = plant("part-00000-old.parquet", 3600 * 1000L)
-    val meta = plant("_SUCCESS", 3600 * 1000L)
-    val hidden = plant(".crc-thing", 3600 * 1000L)
-    val fresh = plant("part-00001-fresh.parquet", 0L)
-    val n = graft.config.ConfigFile.pruneSpool(dir,
-      System.currentTimeMillis() - 60 * 1000L)
-    assert(n == 1, s"pruned $n")
-    assert(!Files.exists(old1))
-    assert(Files.exists(meta) && Files.exists(hidden) && Files.exists(fresh))
-
-    // wiring: a Loader with a tiny retention deletes an 8-day-old
-    // planted spool file on the tee's first batch (batchId 0 hits the
-    // 64-batch cadence); the live stream is unaffected
-    val spark0 = spark
-    import spark0.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val cdir = Files.createTempDirectory("graft-spool-ret-e2e")
-    val cfg = cdir.resolve("c.json")
-    write(cfg,
-      """{"streams":[
-        | {"name":"a","source":"in","pipeline":[],"sink":{"kind":"memory"}},
-        | {"name":"b","source":"in","pipeline":[],"sink":{"kind":"memory"}}]}"""
-        .stripMargin)
-    val in = MemoryStream[SEvent]
-    val core = new Core(spark)
-    val loader = new graft.config.ConfigFile.Loader(core, spark, cfg,
-      sources0 = Map("in" -> (() => in.toDF())),
-      fanoutRetentionMs = 24L * 3600 * 1000)
-    import scala.jdk.CollectionConverters._
-    try {
-      loader.reload()
-      // plant a VALID parquet file (the subscriber's file source may
-      // read it — a retention test must not poison the stream) with
-      // an ancient mtime, in each subscriber's spool
-      val seed = cdir.resolve("seed")
-      Seq(SEvent("planted", "s", "ok", Some(0.0),
-        new java.sql.Timestamp(500), None))
-        .toDF().coalesce(1).write.parquet(seed.toString)
-      val seedPart = Files.list(seed).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val spools = Files.list(loader.fanoutDir.resolve("in")).iterator()
-      var planted: Seq[Path] = Nil
-      spools.forEachRemaining { d =>
-        if (d.getFileName.toString.startsWith("sub-")) {
-          val p = d.resolve("part-ancient.parquet")
-          Files.copy(seedPart, p)
-          Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis() - 8L * 24 * 3600 * 1000))
-          planted = planted :+ p
-        }
-      }
-      assert(planted.size == 2)
-      in.addData(SEvent("h1", "s", "ok", Some(1.0),
-        new java.sql.Timestamp(1000), None))
-      core.processAllAvailable()
-      planted.foreach(p => assert(!Files.exists(p),
-        s"retention did not delete $p"))
-      assert(loader.memorySinks("a").rows.asScala
-        .exists(_.getAs[String]("host") == "h1"))
-    } finally core.stop()
-  }
-
   test("plan discipline: a subscriber's where-filter pushes down into " +
     "its spool parquet scan (the fan-out hop costs a spool write, " +
     "never scan-level pushdown)") {
+    // the test name predates the in-memory buffer: the scan is now the
+    // buffer's, and the filter still runs inside it
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -339,16 +296,21 @@ class FanoutSpec extends SparkSpec {
     try {
       loader.reload()
       in.addData(SEvent("h1", "s", "critical", Some(1.0),
-        new java.sql.Timestamp(1000), None))
+        new java.sql.Timestamp(1000), None),
+        SEvent("h2", "s", "ok", Some(2.0), new java.sql.Timestamp(2000), None))
       core.processAllAvailable()
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(new java.io.PrintStream(out)) {
         core.activeQueries("crit").explain()
       }
+      // the buffer's batch is a streaming local relation: the optimizer
+      // evaluates the filter inside the scan, so no Filter node is left
       val plan = out.toString
-      assert(plan.contains("PushedFilters") &&
-        plan.contains("EqualTo(state,critical)"),
-        s"filter not pushed to the spool scan:\n$plan")
+      assert(plan.contains("LocalTableScan") && !plan.contains("Filter"),
+        s"filter not pushed into the buffer scan:\n$plan")
+      import scala.jdk.CollectionConverters._
+      assert(loader.memorySinks("crit").rows.asScala
+        .map(_.getAs[String]("host")).toSeq == Seq("h1"))
     } finally core.stop()
   }
 
@@ -377,7 +339,7 @@ class FanoutSpec extends SparkSpec {
     try {
       assert(loader.reload() == Seq("uniq"))
       // each source has exactly ONE subscriber: the union consumes both
-      // directly in one query — no tee, no spool hop
+      // directly in one query — no tee, no buffer hop
       assert(core.activeQueries.keySet == Set("uniq"))
       def ts(s: Long) = new Timestamp(s * 1000)
       inA.addData((1L, "the same document text", ts(100)))
@@ -529,10 +491,9 @@ class FanoutSpec extends SparkSpec {
     } finally core.stop()
   }
 
-  test("exactly-once across a tee crash: a replayed micro-batch (commit " +
-    "marker deleted, process restarted) is a spool NO-OP — the batch " +
-    "lands as ONE deterministically-named file and the replay finds it " +
-    "(r18 VERDICT #6 upgrade from at-least-once)") {
+  test("exactly-once across a tee restart: the tee replays its last " +
+    "micro-batch under the same batch id (commit marker deleted), every " +
+    "buffer ignores it, and each subscriber sees event_ids 1, 2 once") {
     val spark0 = spark
     import spark0.implicits._
     val dir = Files.createTempDirectory("graft-fanout-eo")
@@ -548,89 +509,48 @@ class FanoutSpec extends SparkSpec {
         |  "sink":{"kind":"memory"}},
         | {"name":"q","source":"log","pipeline":[],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
-    val fdir = dir.resolve("fanout")
-    Files.createDirectories(fdir)
-    val mkSources = Map("log" -> (() =>
-      spark.readStream.schema(schema).parquet(srcDir.toString)))
-
+    val core = new Core(spark)
+    val loader = new ConfigFile.Loader(core, spark, cfg,
+      sources0 = Map("log" -> (() =>
+        spark.readStream.schema(schema).parquet(srcDir.toString))))
     import scala.jdk.CollectionConverters._
-    // run 1: tee consumes the file source, spools land b*.json
-    val core1 = new Core(spark)
-    val loader1 = new ConfigFile.Loader(core1, spark, cfg,
-      sources0 = mkSources, fanoutDir = fdir)
+    def ids(n: String) = loader.memorySinks(n).rows.asScala
+      .map(_.getAs[Long]("event_id")).toSeq.sorted
     try {
-      loader1.reload()
-      core1.processAllAvailable()
-      assert(loader1.memorySinks("p").rows.asScala.size == 2)
-    } finally core1.stop()
+      loader.reload()
+      core.processAllAvailable()
+      assert(ids("p") == Seq(1L, 2L) && ids("q") == Seq(1L, 2L))
 
-    // crash simulation: the spool write happened but the tee died
-    // before committing — delete the newest commit marker, restart
-    val commits = fdir.resolve("log").resolve("_tee_ckpt").resolve("commits")
-    val newest = Files.list(commits).iterator().asScala
-      .filter(p => p.getFileName.toString.forall(_.isDigit))
-      .maxBy(_.getFileName.toString.toLong)
-    Files.delete(newest)
-    // the local checksum FS keeps a .N.crc sidecar; a real crash leaves
-    // neither file
-    Files.deleteIfExists(
-      commits.resolve(s".${newest.getFileName.toString}.crc"))
+      // crash simulation: the tee handed its batch over but died before
+      // committing it — stop it, delete its newest commit marker
+      core.activeQueries("__fanout__log").stop()
+      val commits = loader.teeCheckpoint("log").resolve("commits")
+      val newest = Files.list(commits).iterator().asScala
+        .filter(p => p.getFileName.toString.forall(_.isDigit))
+        .maxBy(_.getFileName.toString.toLong)
+      Files.delete(newest)
+      Files.deleteIfExists(
+        commits.resolve(s".${newest.getFileName.toString}.crc"))
 
-    val core2 = new Core(spark)
-    val loader2 = new ConfigFile.Loader(core2, spark, cfg,
-      sources0 = mkSources, fanoutDir = fdir)
-    try {
-      loader2.reload() // same config -> same spool dirs; tee replays
-      core2.processAllAvailable()
-      // fresh subscribers re-read the WHOLE spool: a duplicated spool
-      // file would read 4 rows; exactly-once reads 2
+      // the next reload restarts the dead tee on its checkpoint; the
+      // subscribers keep running on their buffers
+      assert(loader.reload() == Seq())
+      core.processAllAvailable()
+      assert(core.activeQueries("__fanout__log").recentProgress
+        .exists(_.numInputRows == 2), "the tee did not replay its batch")
       for (n <- Seq("p", "q"))
-        assert(loader2.memorySinks(n).rows.asScala
-          .map(_.getAs[Long]("event_id")).toSeq.sorted == Seq(1L, 2L),
-          s"subscriber $n saw a replayed duplicate")
-      // and the spool holds exactly the deterministic per-batch files
-      val spoolDirs = Files.list(fdir.resolve("log")).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("sub-")).toSeq
-      assert(spoolDirs.nonEmpty)
-      spoolDirs.foreach { d =>
-        val data = Files.list(d).iterator().asScala
-          .filter(p => !p.getFileName.toString.startsWith("_") &&
-            !p.getFileName.toString.startsWith(".")).toSeq
-        assert(data.size == 1 &&
-          data.head.getFileName.toString.matches("b\\d+\\.json"),
-          s"unexpected spool contents: ${data.map(_.getFileName)}")
-      }
-    } finally core2.stop()
+        assert(ids(n) == Seq(1L, 2L), s"subscriber $n saw a replayed duplicate")
+    } finally core.stop()
   }
 
-  test("JSON spool fidelity: micros timestamps, NaN metrics, nulls, " +
-    "tags and attributes round-trip the tee hop exactly; a binary-" +
-    "carrying schema keeps the parquet spool; oversized batches warn " +
-    "(r19 VERDICT #2 + #8)") {
-    // format selection is a pure function of the schema
-    import org.apache.spark.sql.types._
-    assert(ConfigFile.jsonSafeSchema(StructType(Seq(
-      StructField("s", StringType), StructField("m", DoubleType),
-      StructField("t", TimestampType),
-      StructField("tags", ArrayType(StringType)),
-      StructField("attrs", MapType(StringType, StringType))))))
-    assert(!ConfigFile.jsonSafeSchema(StructType(Seq(
-      StructField("payload", BinaryType)))))
-    assert(!ConfigFile.jsonSafeSchema(StructType(Seq(
-      StructField("m", MapType(IntegerType, StringType))))),
-      "non-string map keys do not round-trip JSON")
-    // the oversized-batch warning (r19 VERDICT #8)
-    assert(ConfigFile.spoolSizeWarning(512L * 1024 * 1024).isEmpty)
-    assert(ConfigFile.spoolSizeWarning(513L * 1024 * 1024)
-      .exists(_.contains("durable bus")))
-
+  test("value fidelity: micros timestamps, NaN metrics, nulls, tags, " +
+    "attributes and binary payloads round-trip the tee hop exactly") {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    // e2e: a WireEvent source (tags + attributes) through a
-    // 2-subscriber tee — values must survive the JSON hop bit-exactly
-    val dir = Files.createTempDirectory("graft-fanout-json")
+    // a WireEvent source (tags + attributes) through a 2-subscriber tee
+    val dir = Files.createTempDirectory("graft-fanout-values")
     val cfg = dir.resolve("c.json")
     write(cfg,
       """{"streams":[
@@ -670,21 +590,9 @@ class FanoutSpec extends SparkSpec {
         assert(hn.isNullAt(hn.fieldIndex("metric")) &&
           hn.getAs[String]("state") == null)
       }
-      // and the spool files are JSON lines
-      val subDirs = Files.list(loader.fanoutDir.resolve("in")).iterator()
-        .asScala.filter(_.getFileName.toString.startsWith("sub-")).toSeq
-      assert(subDirs.nonEmpty)
-      subDirs.foreach { d =>
-        val data = Files.list(d).iterator().asScala
-          .filter(p => !p.getFileName.toString.startsWith("_") &&
-            !p.getFileName.toString.startsWith(".")).toSeq
-        assert(data.nonEmpty && data.forall(
-          _.getFileName.toString.matches("b\\d+\\.json")),
-          s"expected JSON spool files, got ${data.map(_.getFileName)}")
-      }
     } finally core.stop()
 
-    // e2e: binary payloads force the parquet spool and round-trip
+    // binary payloads round-trip too
     val dir2 = Files.createTempDirectory("graft-fanout-bin")
     val cfg2 = dir2.resolve("c.json")
     write(cfg2,
@@ -707,78 +615,147 @@ class FanoutSpec extends SparkSpec {
         assert(rows.head.getAs[Array[Byte]]("payload").toSeq ==
           Seq[Byte](0, 1, 2, -1))
       }
-      val subDirs2 = Files.list(loader2.fanoutDir.resolve("blobs"))
-        .iterator().asScala
-        .filter(_.getFileName.toString.startsWith("sub-")).toSeq
-      subDirs2.foreach { d =>
-        val data = Files.list(d).iterator().asScala
-          .filter(p => !p.getFileName.toString.startsWith("_") &&
-            !p.getFileName.toString.startsWith(".")).toSeq
-        assert(data.nonEmpty && data.forall(
-          _.getFileName.toString.matches("b\\d+\\.parquet")),
-          s"expected parquet spool files, got ${data.map(_.getFileName)}")
-      }
     } finally core2.stop()
   }
 
-  test("orphan spool hygiene: an edited subscriber's rotated-out spool " +
-    "dir is deleted on reload; a source dropping to ZERO subscribers " +
-    "loses its whole fanoutDir subtree, tee checkpoint included " +
-    "(r18 ADVICE: SIGHUP churn must not grow fanoutDir unboundedly)") {
+  test("a stalled subscriber: the tee waits at the buffer bound, and once " +
+    "the subscriber resumes no row is lost or repeated") {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-fanout-orphan")
-    val cfg = dir.resolve("c.json")
-    def conf(factor: Double) =
-      s"""{"streams":[
-         | {"name":"a","source":"in","pipeline":[],
-         |  "sink":{"kind":"memory"}},
-         | {"name":"b","source":"in",
-         |  "pipeline":[{"op":"scale","factor":$factor}],
-         |  "sink":{"kind":"memory"}}]}""".stripMargin
-    write(cfg, conf(2.0))
+    val cfg = Files.createTempDirectory("graft-fanout-stall").resolve("c.json")
+    write(cfg,
+      """{"streams":[
+        | {"name":"slow","source":"in","pipeline":[],"sink":{"kind":"gate"}},
+        | {"name":"fast","source":"in","pipeline":[],
+        |  "sink":{"kind":"memory"}}]}""".stripMargin)
+    val gate = new CountDownLatch(1)
+    val slow = new ConcurrentLinkedQueue[String]()
+    val in = MemoryStream[SEvent]
+    val core = new Core(spark)
+    val loader = new ConfigFile.Loader(core, spark, cfg,
+      sources0 = Map("in" -> (() => in.toDF())),
+      sinkFactories = Map("gate" -> gated(gate, slow)))
+    try {
+      loader.reload()
+      val n = overfill(in)
+      def fast = loader.memorySinks("fast").rows.size
+      gate.countDown()
+      await(s"rows lost: slow ${slow.size}, fast $fast of $n")(
+        slow.size == n && fast == n)
+      import scala.jdk.CollectionConverters._
+      assert(slow.asScala.toSet.size == n)
+      assert(loader.memorySinks("fast").rows.asScala
+        .map(_.getAs[String]("host")).toSet.size == n)
+    } finally { gate.countDown(); core.stop() }
+  }
+
+  test("a removed subscriber never blocks the tee: dropping a stalled " +
+    "subscriber frees the tee, and the survivor gets every row") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cfg = Files.createTempDirectory("graft-fanout-drop").resolve("c.json")
+    val keep = """{"name":"a","source":"in","pipeline":[],
+      |  "sink":{"kind":"memory"}}""".stripMargin
+    write(cfg, s"""{"streams":[$keep,
+      | {"name":"b","source":"in","pipeline":[],"sink":{"kind":"gate"}}]}"""
+      .stripMargin)
+    val gate = new CountDownLatch(1)
+    val in = MemoryStream[SEvent]
+    val core = new Core(spark)
+    val loader = new ConfigFile.Loader(core, spark, cfg,
+      sources0 = Map("in" -> (() => in.toDF())),
+      sinkFactories = Map("gate" ->
+        gated(gate, new ConcurrentLinkedQueue[String]())))
+    try {
+      loader.reload()
+      val n = overfill(in)
+      // b is never released: only its removal can free the tee
+      write(cfg, s"""{"streams":[$keep]}""")
+      assert(loader.reload() == Seq())
+      assert(core.activeQueries.keySet == Set("a", "__fanout__in"))
+      def a = loader.memorySinks("a").rows.size
+      await(s"a got $a of $n rows")(a == n)
+    } finally { gate.countDown(); core.stop() }
+  }
+
+  test("a subscriber whose query fails to start never blocks the tee: " +
+    "the other subscriber gets every row of more than a full buffer") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cfg = Files.createTempDirectory("graft-fanout-nostart")
+      .resolve("c.json")
+    // complete mode without an aggregation is refused at query start
+    write(cfg,
+      """{"streams":[
+        | {"name":"a","source":"in","pipeline":[],"sink":{"kind":"memory"}},
+        | {"name":"bad","source":"in","pipeline":[],
+        |  "sink":{"kind":"memory","outputMode":"complete"}}]}""".stripMargin)
     val in = MemoryStream[SEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("in" -> (() => in.toDF())))
-    import scala.jdk.CollectionConverters._
-    def subDirs(): Set[String] =
-      Files.list(loader.fanoutDir.resolve("in")).iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("sub-")).toSet
     try {
-      loader.reload()
-      val before = subDirs()
-      assert(before.size == 2)
-      in.addData(SEvent("h1", "s", "ok", Some(1.0),
-        new Timestamp(1000), None))
-      core.processAllAvailable()
-
-      write(cfg, conf(10.0)) // b rotates to a fresh spool
-      loader.reload()
-      val after = subDirs()
-      assert(after.size == 2, s"rotated-out spool not pruned: $after")
-      assert((before -- after).size == 1 && (after -- before).size == 1)
-
-      // drop BOTH subscribers: the source leaves the fanned set and its
-      // whole subtree (spools + _tee_ckpt) goes away
-      write(cfg, """{"streams":[]}""")
-      loader.reload()
-      assert(!Files.exists(loader.fanoutDir.resolve("in")),
-        "unfanned source's fanout subtree must be deleted")
+      intercept[org.apache.spark.sql.AnalysisException](loader.reload())
+      assert(core.activeQueries.keySet == Set("a", "__fanout__in"))
+      // one buffer's worth per tee batch: an open, unread buffer for
+      // `bad` would make the tee wait from the second batch on
+      def a = loader.memorySinks("a").rows.size
+      val c = FanoutBuffer.Capacity
+      for (k <- 0 until 3) {
+        in.addData((k * c until (k + 1) * c).map(ev))
+        await(s"a got $a of ${(k + 1) * c} rows")(a == (k + 1) * c)
+      }
     } finally core.stop()
+  }
+
+  test("a subscriber with a sink checkpoint, restarted by a fresh Core " +
+    "and Loader, receives new events: its fresh buffer's offsets " +
+    "continue above the checkpointed ones") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-fanout-ckpt")
+    val cfg = dir.resolve("c.json")
+    write(cfg,
+      s"""{"streams":[
+         | {"name":"p","source":"in","pipeline":[],
+         |  "sink":{"kind":"memory","checkpoint":"${dir.resolve("p")}"}},
+         | {"name":"q","source":"in","pipeline":[],
+         |  "sink":{"kind":"memory"}}]}""".stripMargin)
+    import scala.jdk.CollectionConverters._
+    // each run is one process: its own source, Core and Loader
+    def run(i: Int): Seq[String] = {
+      val in = MemoryStream[SEvent]
+      val core = new Core(spark)
+      val loader = new ConfigFile.Loader(core, spark, cfg,
+        sources0 = Map("in" -> (() => in.toDF())))
+      try {
+        loader.reload()
+        in.addData(ev(i))
+        core.processAllAvailable()
+        loader.memorySinks("p").rows.asScala.map(_.getAs[String]("host")).toSeq
+      } finally core.stop()
+    }
+    assert(run(1) == Seq("h1"))
+    assert(Files.exists(dir.resolve("p").resolve("commits")))
+    assert(run(2) == Seq("h2"))
   }
 
   test("plan discipline x multi-source: a where-filter pushes down " +
     "through the unionByName into BOTH spool parquet scans (the union " +
     "never blocks scan-level pushdown)") {
+    // the test name predates the in-memory buffer: the scans are now the
+    // buffers', and the filter still runs inside each
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft-multisrc-plan")
     val cfg = dir.resolve("c.json")
     // xa/xb force both sources onto tees, so crit's two legs are both
-    // file-source spool scans
+    // buffer scans
     write(cfg,
       """{"streams":[
         | {"name":"crit","source":["a","b"],
@@ -796,43 +773,42 @@ class FanoutSpec extends SparkSpec {
       loader.reload()
       assert(core.activeQueries.keySet ==
         Set("crit", "xa", "xb", "__fanout__a", "__fanout__b"))
-      inA.addData(SEvent("h1", "s", "critical", Some(1.0),
-        new Timestamp(1000), None))
-      inB.addData(SEvent("h2", "s", "ok", Some(2.0),
-        new Timestamp(2000), None))
-      core.processAllAvailable()
+      var t = 1000L
+      def feed(): Unit = {
+        inA.addData(SEvent("h1", "s", "critical", Some(1.0),
+          new Timestamp(t), None))
+        inB.addData(SEvent("h2", "s", "ok", Some(2.0),
+          new Timestamp(t + 1000), None),
+          SEvent("h3", "s", "critical", Some(3.0),
+            new Timestamp(t + 1000), None))
+        t += 2000
+        core.processAllAvailable()
+      }
       // explain() shows the LAST micro-batch's plan; on a loaded box the
-      // two tees' spool files can land in different subscriber batches,
+      // two tees' batches can land in different subscriber batches,
       // leaving only one leg's scan in that final plan (the other leg is
-      // an empty LocalRelation for the batch). Re-feed both sources and
-      // re-drain until some batch carries files from BOTH spools —
-      // bounded, and a genuine pushdown regression fails every attempt.
-      def pushedCount(): Int = {
+      // empty and pruned). Re-feed both sources and re-drain until some
+      // batch carries rows from BOTH buffers — bounded, and a genuine
+      // pushdown regression (a Filter left above a scan) fails every
+      // attempt.
+      def plan(): String = {
         val out = new java.io.ByteArrayOutputStream()
         Console.withOut(new java.io.PrintStream(out)) {
           core.activeQueries("crit").explain()
         }
-        out.toString.sliding("EqualTo(state,critical)".length)
-          .count(_ == "EqualTo(state,critical)")
+        out.toString
       }
-      var pushed = pushedCount()
+      def scans(p: String): Int = p.sliding("LocalTableScan".length)
+        .count(_ == "LocalTableScan")
+      feed()
       var attempt = 0
-      var t = 3000L
-      while (pushed < 2 && attempt < 10) {
-        inA.addData(SEvent("h1", "s", "critical", Some(1.0),
-          new Timestamp(t), None))
-        inB.addData(SEvent("h2", "s", "ok", Some(2.0),
-          new Timestamp(t + 1000), None))
-        t += 2000
-        core.processAllAvailable()
-        pushed = pushedCount()
-        attempt += 1
-      }
-      assert(pushed >= 2,
-        s"filter not pushed into both union legs' scans ($pushed)")
+      while (scans(plan()) < 2 && attempt < 10) { feed(); attempt += 1 }
+      val p = plan()
+      assert(scans(p) >= 2 && !p.contains("Filter"),
+        s"filter not pushed into both union legs' scans:\n$p")
       import scala.jdk.CollectionConverters._
       assert(loader.memorySinks("crit").rows.asScala
-        .map(_.getAs[String]("host")).toSet == Set("h1"))
+        .map(_.getAs[String]("host")).toSet == Set("h1", "h3"))
     } finally core.stop()
   }
 

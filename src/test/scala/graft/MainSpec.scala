@@ -353,7 +353,7 @@ class MainSpec extends SparkSpec {
       s"""{"servers": {
          |   "docs": {"protocol": "files", "path": "$zone",
          |            "format": "parquet"} },
-         | "fanout": {"retentionHours": 2},
+         | "fanout": {"replayable": ["docs"]},
          | "streams": [
          |   {"name": "uniq", "source": "docs",
          |    "pipeline": [{"op": "dedup", "horizon": "1 hour"}],
@@ -367,7 +367,6 @@ class MainSpec extends SparkSpec {
       // itself — no tee query, no spool
       assert(running.core.activeQueries.keySet == Set("uniq", "raw"))
       assert(running.loader.replayableSources.contains("docs"))
-      assert(running.loader.retentionMs == 2L * 3600 * 1000)
       def drain(): Unit = running.core.processAllAvailable()
       drain()
       import scala.jdk.CollectionConverters._
@@ -456,9 +455,9 @@ class MainSpec extends SparkSpec {
     }
   }
 
-  test("the fanout block is include-merged like the streams, and a " +
-    "reload that removes retentionHours reverts to the constructor " +
-    "default instead of pinning the last applied value (r19 ADVICE)") {
+  test("the fanout block is include-merged like the streams: a " +
+    "replayable name from an included file registers, and a reload that " +
+    "drops the include removes it") {
     val spark0 = spark
     import spark0.implicits._
     val dir = Files.createTempDirectory("graft-main-fanout-inc")
@@ -468,7 +467,7 @@ class MainSpec extends SparkSpec {
       .selectExpr("doc_id", "text", "timestamp_seconds(time_s) AS time")
       .write.mode("append").parquet(zone.toString)
     val inc = dir.resolve("fanout.json")
-    Files.writeString(inc, """{"fanout": {"retentionHours": 3}}""")
+    Files.writeString(inc, """{"fanout": {"replayable": ["bus"]}}""")
     val cfg = dir.resolve("graft.json")
     def writeCfg(withInclude: Boolean): Unit = Files.writeString(cfg,
       s"""{${if (withInclude) "\"include\": [\"fanout.json\"]," else ""}
@@ -479,19 +478,33 @@ class MainSpec extends SparkSpec {
     writeCfg(withInclude = true)
     val running = Main.start(cfg, Some(spark))
     try {
-      assert(running.loader.retentionMs == 3L * 3600 * 1000,
+      assert(running.loader.replayableSources == Set("docs", "bus"),
         "a fanout block in an INCLUDED file must be honored")
-      // drop the include: retentionHours is now absent everywhere, so
-      // retention reverts to the constructor default
+      // drop the include: the replayable list is now absent everywhere
       writeCfg(withInclude = false)
       running.reload()
-      assert(running.loader.retentionMs ==
-        running.loader.fanoutRetentionMs)
-      assert(running.loader.retentionMs == 24L * 3600 * 1000)
+      assert(running.loader.replayableSources == Set("docs"))
     } finally {
       running.stop()
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+  }
+
+  test("a fanout block that still sets a key of the removed on-disk " +
+    "fan-out store fails the start, naming the key and pointing at " +
+    "replayable") {
+    val cfg = Files.createTempDirectory("graft-main-fanout-gone")
+      .resolve("graft.json")
+    for (key <- Seq("dir", "retentionHours")) {
+      Files.writeString(cfg,
+        s"""{"fanout": {"$key": "x"}, "streams": []}""")
+      val e = intercept[IllegalArgumentException] {
+        Main.start(cfg, Some(spark)).stop()
+      }
+      assert(e.getMessage.contains(s"fanout.$key") &&
+        e.getMessage.contains("replayable"), e.getMessage)
+    }
+    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("Running.reload rebinds an edited ingest server socket: the " +

@@ -350,6 +350,33 @@ class RiemannServerSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("backpressure never deadlocks: with a 2-frame capacity, a client " +
+    "sending 12 acked frames one after another gets every one delivered " +
+    "(a batch that takes a full buffer leaves room before its commit)") {
+    val port = freePort()
+    val q = spark.readStream.format("riemann-server")
+      .option("protocol", "tcp").option("host", "127.0.0.1")
+      .option("port", port).option("capacity", 2).load()
+      .writeStream.format("memory").queryName("tcp_capacity")
+      .outputMode("append").start()
+    try {
+      val sock = connectRetry(port)
+      sock.setSoTimeout(30000) // a deadlocked server fails the read
+      try {
+        val out = new DataOutputStream(sock.getOutputStream)
+        val in = new DataInputStream(sock.getInputStream)
+        (1 to 12).foreach { i =>
+          out.write(RiemannProtobuf.frame(RiemannProtobuf.encodeMsg(Seq(
+            pe(s"h$i", "cpu", "ok", 1.0, 1706000000L + i)))))
+          out.flush()
+          in.readFully(new Array[Byte](in.readInt())) // waits for the ack
+        }
+      } finally sock.close()
+      awaitRows(q, "tcp_capacity", 12)
+      assert(spark.table("tcp_capacity").count() == 12)
+    } finally q.stop()
+  }
+
   test("udp handoff: datagrams enqueued before a stop survive the " +
     "restart (same parked-buffer path as tcp, no acks)") {
     val port = freePort()
