@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.json4s.JObject
 import org.json4s.jackson.JsonMethods
 
-import graft.streaming.{IndexProcessor, SEvent}
+import graft.streaming.{KeyedIndex, SEvent}
 
 /** The `Bench` subcommands that run the soak legs: `soak` (every leg at
   * once, for minutes, through restarts) and `ceiling` (each leg alone,
@@ -68,7 +68,7 @@ private[graft] object BenchSoak {
     val all: Seq[(String, Int => DataFrame)] = Seq(
       // index: per-key latest + TTL expiry — state rows bounded by the
       // live key universe (nKeys * 3), NOT by events processed
-      "index" -> (r => IndexProcessor(events(r), "30 seconds").toDF()),
+      "index" -> (r => KeyedIndex(events(r), "30 seconds").toDF()),
       // windowed agg: 10 s windows, watermark-bounded retention
       "window" -> (r => events(r).withWatermark("time", "30 seconds")
         .groupBy(window(col("time"), "10 seconds"), col("service"))

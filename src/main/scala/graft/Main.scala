@@ -20,7 +20,7 @@ import org.json4s.jackson.JsonMethods
 import graft.config.ConfigFile
 import graft.sinks.{Sinks, SseServer, WsServer}
 import graft.sources.Sources
-import graft.streaming.{IndexProcessor, SEvent, WireEvent, WireIndexProcessor}
+import graft.streaming.{IndexStep, SEvent, WireEvent}
 
 /** The deployable process entry point — the `bin.clj` equivalent
   * (reference src/riemann/bin.clj:135-167 `-main`): load a config
@@ -91,13 +91,15 @@ object Main {
     * executors to its latest event per key and partition, so the
     * collect is bounded by the keys the batch updated; the driver
     * merges those rows by
-    * compare-and-set on [[WireIndexProcessor.latestWins]], drops late
+    * compare-and-set on [[IndexStep.latestWins]], drops late
     * rows by the feed's watermark, reaps TTL-lapsed entries once the
     * watermark advances, and logs the changed keys under the stream's
     * checkpoint so a restarted process serves them at once (see
-    * [[ServedIndex.Log]]). [[WireIndexProcessor]] keeps the same
-    * contract for streams that do not feed this map and is its parity
-    * oracle. A stream with an `index` sink and any other pipeline
+    * [[ServedIndex.Log]]). The index step
+    * ([[graft.streaming.KeyedIndex]], on the one keyed-state processor)
+    * keeps the same contract for streams that do not feed this map and
+    * is its parity oracle, beside [[graft.streaming.StreamingIndex]]. A
+    * stream with an `index` sink and any other pipeline
     * upserts its rows as they come (`state="expired"` deletes). */
   final class ServedIndex(spark: SparkSession,
       pubsub: Sinks.Pubsub = new Sinks.Pubsub) {
@@ -166,7 +168,7 @@ object Main {
       }
 
     /** Compare-and-set `e` from `feed` into the map: the winner by
-      * [[WireIndexProcessor.latestWins]], and whether `e` replaced
+      * [[IndexStep.latestWins]], and whether `e` replaced
       * what was there. */
     @scala.annotation.tailrec
     private def merge(e: WireEvent, feed: String): (WireEvent, Boolean) = {
@@ -175,7 +177,7 @@ object Main {
         case None =>
           if (state.putIfAbsent(k, Held(e, feed)).isEmpty) (e, true)
           else merge(e, feed)
-        case Some(h) if WireIndexProcessor.latestWins.gt(e, h.e) =>
+        case Some(h) if IndexStep.latestWins.gt(e, h.e) =>
           if (state.replace(k, h, Held(e, feed))) (e, true)
           else merge(e, feed)
         case Some(h) => (h.e, false)
@@ -225,7 +227,7 @@ object Main {
         val pushed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
         val changed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
         rows.groupMapReduce(e => (e.host, e.service))(identity)(
-            WireIndexProcessor.latestWins.max).values.foreach { e =>
+            IndexStep.latestWins.max).values.foreach { e =>
           val (winner, replaced) = merge(e, name)
           pushed += winner
           // an event the map already holds is logged again: a replayed
@@ -241,11 +243,11 @@ object Main {
           at.watermark = at.maxTime - delay
           state.foreach { case (k, h) =>
             if (h.feed == name &&
-                WireIndexProcessor.deadline(h.e).exists(_ <= at.watermark) &&
+                IndexStep.deadline(h.e).exists(_ <= at.watermark) &&
                 state.remove(k, h)) {
               removed += k
-              pushed += WireIndexProcessor.expiredCopy(h.e, at.watermark,
-                IndexProcessor.DefaultKeep)
+              pushed += IndexStep.expiredCopy(h.e, at.watermark,
+                IndexStep.DefaultKeep)
             }
           }
         }
@@ -298,8 +300,8 @@ object Main {
     /** Spark-free query search (transport.clj:175-189 semantics): the
       * pkey fast path for `host = "h" and service = "s"` point lookups
       * (index.clj:44-56), the LRU-cached compiled closure for
-      * everything else. The Catalyst path over [[snapshot]] remains
-      * the parity oracle (EventPredicateSpec / MainSpec). */
+      * everything else. Its parity oracle is the query's Catalyst
+      * predicate over a relation of [[events]] (EventPredicateSpec). */
     def search(q: String): Seq[WireEvent] =
       searchAst(q, graft.query.QueryLanguage.parse(q))
 
@@ -385,7 +387,7 @@ object Main {
       rows.foreach { e =>
         if (eventMicros(e) > lateUpTo)
           latest.merge((e.host, e.service), e,
-            (a, b) => WireIndexProcessor.latestWins.max(a, b))
+            (a, b) => IndexStep.latestWins.max(a, b))
       }
       latest.values.iterator.asScala
     }

@@ -14,7 +14,7 @@ import org.json4s.jackson.JsonMethods
 import graft.Core
 import graft.sinks.Sinks
 import graft.sources.FanoutBuffer
-import graft.streaming.{IndexProcessor, SEvent, WireEvent}
+import graft.streaming.{KeyedIndex, SEvent, WireEvent}
 
 /** [[SEvent]] plus one JSON-packed column carrying whatever non-SEvent
   * columns a config pipeline accumulated before a stateful op — the
@@ -722,15 +722,14 @@ object ConfigFile {
           s"crosscorpus.mode: expected \"match\" or \"drop\", got \"$other\"")
       }
     }),
-    // a frame carrying tags or attributes indexes through the
-    // whole-event processor, so the served index answers `tagged "x"`
-    // and attribute queries — the reference's index stores whole
-    // events (index.clj:58-126)
-    op("index")((df, a) =>
-      if (carriesWholeEvents(df))
-        graft.streaming.WireIndexProcessor(wireEvents(df), watermark(a)).toDF()
-      else IndexProcessor(df.as[SEvent](
-        org.apache.spark.sql.Encoders.product[SEvent]), watermark(a)).toDF())
+    // the index keeps whole events, so a frame's tags and attributes
+    // answer `tagged "x"` and attribute queries — the reference's index
+    // stores whole events (index.clj:58-126); a frame without them gets
+    // its six event columns back
+    op("index") { (df, a) =>
+      val out = KeyedIndex.wire(wireEvents(df), watermark(a)).toDF()
+      if (carriesWholeEvents(df)) out else out.drop("tags", "attributes")
+    }
   )
 
   /** The op names [[applyOp]] knows. */

@@ -1,14 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** Shared kernel of the streaming bucket-bounded pairing family
-  * ([[NearDupProcessor]], [[WinnowOverlapProcessor]]): per-key member
-  * state where an arriving row pairs against the bucket's LIVE members
-  * only, with the scale posture of the batch [[graft.pipeline.Caps]]
-  * rule transplanted to streams:
+/** The [[Step]] of the streaming bucket-bounded pairing family
+  * ([[StreamingNearDup]], [[StreamingWinnowOverlap]],
+  * [[StreamingEmbeddingNearDup]]): per-key member state where an
+  * arriving row pairs against the bucket's LIVE members only, with the
+  * scale posture of the batch [[graft.pipeline.Caps]] rule
+  * transplanted to streams:
   *
   *  - state per key is bounded twice over: members older than
   *    `horizonMs` behind the watermark are evicted (event-time bound),
@@ -19,9 +18,11 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   *    *partial* bucket would silently under-report);
   *  - comparisons are within-bucket only — never an all-pairs scan.
   *
-  * Timers: one live timer per key at (newest member + horizon); on
-  * expiry every member is eviction-due, so the key's state clears
-  * entirely — a quiet bucket costs nothing forever after.
+  * Timers: one live timer per key, one horizon past the newest member
+  * (or, saturated, past the newest swallowed row); when it fires every
+  * member is eviction-due and a saturated bucket has been quiet, so the
+  * key's state clears entirely — a quiet bucket costs nothing forever
+  * after.
   *
   * Cap-boundary divergence from batch `Caps.cap` (by construction):
   * batch sees the whole bucket before pairing, so an over-cap bucket
@@ -34,90 +35,55 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * (StreamingWinnowOverlapSpec / StreamingEmbeddingNearDupSpec /
   * StreamingNearDupSpec) pin that regime; at the boundary the stream
   * over-reports relative to batch by at most the pre-saturation
-  * pairs of that one bucket. */
-abstract class SaturatingBucketProcessor[K, In, Member <: Product, Out](
-    horizonMs: Long, maxBucket: Int, memberEncoder: Encoder[Member])
-    extends StatefulProcessor[K, In, Out] with ArmedTimer[K, In, Out] {
+  * pairs of that one bucket.
+  *
+  * `member` is the state payload an arriving row leaves behind, `time`
+  * a member's event time (ms), `id` its document, and `pair` the
+  * emission for (key, live member, arriving row). State: the time the
+  * bucket saturated at (the quiet-period clock); buffer: the members. */
+final class SaturatingBucket[K, In, M, Out](horizonMs: Long, maxBucket: Int,
+    memberEncoder: Encoder[M], member: In => M, time: M => Long, id: M => Long,
+    pair: (K, M, In) => Out) extends Step[K, In, Long, M, Out] {
 
-  /** Event-time (ms) of an arriving row. */
-  protected def timeOf(in: In): Long
-  /** The state payload an arriving row leaves behind. */
-  protected def toMember(in: In): Member
-  /** The event-time (ms) a member carries (for horizon eviction). */
-  protected def memberTime(m: Member): Long
-  /** True when the member IS the arriving row's document (no self-pair). */
-  protected def sameId(m: Member, in: In): Boolean
-  /** The emission for (live member, arriving row). */
-  protected def pair(key: K, m: Member, in: In): Out
+  def state: (String, Encoder[Long]) = ("saturatedAt", Encoders.scalaLong)
+  override def buffer: Option[(String, Encoder[M])] =
+    Some(("members", memberEncoder))
+  def order: Ordering[In] = Ordering.by(d => time(member(d)))
 
-  @transient private var members: ListState[Member] = _
-  @transient private var saturatedAt: ValueState[Long] = _
-  @transient private var _armed: ValueState[Long] = _
-  override protected def armed: ValueState[Long] = _armed
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    members = getHandle.getListState[Member]("members",
-      memberEncoder, TTLConfig.NONE)
-    saturatedAt = getHandle.getValueState[Long]("saturatedAt",
-      Encoders.scalaLong, TTLConfig.NONE)
-    _armed = getHandle.getValueState[Long]("armed",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: K, rows: Iterator[In],
-      timerValues: TimerValues): Iterator[Out] = {
-    val wm = timerValues.getCurrentWatermarkInMs()
-    val out = Seq.newBuilder[Out]
-    for (d <- rows.toSeq.sortBy(timeOf)) {
-      val t = timeOf(d)
-      if (saturatedAt.exists()) {
-        // saturated bucket: swallow, and extend the quiet-period clock
-        saturatedAt.update(math.max(saturatedAt.get(), t))
-        rearm(math.max(t + horizonMs + 1, wm + 1))
-      } else {
-        // evict members the watermark has aged out of the horizon
-        val all = members.get().toSeq
-        val live = all.filter(m => memberTime(m) + horizonMs >= wm)
-        if (live.size >= maxBucket) {
-          // over-full: drop the WHOLE bucket (partial pairing would
-          // silently under-report; mirrors Caps.cap's semantics)
-          members.clear()
-          saturatedAt.update(t)
-          rearm(math.max(t + horizonMs + 1, wm + 1))
-        } else {
-          for (m <- live if !sameId(m, d)) out += pair(key, m, d)
-          if (live.size != all.size) {
-            members.clear()
-            live.foreach(members.appendValue)
+  def rows(key: K, at: Keyed[Long, M], rows: Seq[In],
+      wm: Long): (Keyed[Long, M], Seq[Out]) = {
+    val out = Vector.newBuilder[Out]
+    val next = rows.foldLeft(at) { (at, d) =>
+      val m = member(d)
+      val t = time(m)
+      at.state match {
+        case Some(saturatedAt) =>
+          // saturated bucket: swallow, and extend the quiet-period clock
+          val quiet = math.max(saturatedAt, t)
+          at.copy(state = Some(quiet),
+            deadline = Some(math.max(quiet + horizonMs + 1, wm + 1)))
+        case None =>
+          // evict members the watermark has aged out of the horizon
+          val all = at.buffer.all
+          val live = all.filter(x => time(x) + horizonMs >= wm)
+          if (live.size >= maxBucket)
+            // over-full: drop the WHOLE bucket (partial pairing would
+            // silently under-report; mirrors Caps.cap's semantics)
+            Keyed(Some(t), at.buffer.cleared,
+              Some(math.max(t + horizonMs + 1, wm + 1)))
+          else {
+            for (x <- live if id(x) != id(m)) out += pair(key, x, d)
+            val kept =
+              if (live.size == all.size) at.buffer else at.buffer.cleared ++ live
+            Keyed(None, kept :+ m, Some(math.max(
+              math.max(t, live.map(time).maxOption.getOrElse(0L)) +
+                horizonMs + 1, wm + 1)))
           }
-          members.appendValue(toMember(d))
-          rearm(math.max(math.max(t, live.map(memberTime).maxOption
-            .getOrElse(0L)) + horizonMs + 1, wm + 1))
-        }
       }
     }
-    out.result().iterator
+    (next, out.result())
   }
 
-  override def handleExpiredTimer(key: K, timerValues: TimerValues,
-      expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-      : Iterator[Out] = {
-    val wm = timerValues.getCurrentWatermarkInMs()
-    if (saturatedAt.exists()) {
-      if (saturatedAt.get() + horizonMs < wm) { // quiet: forgive
-        saturatedAt.clear(); armed.clear()
-      } else armed.clear()
-    } else {
-      val live = members.get().toSeq.filter(m =>
-        memberTime(m) + horizonMs >= wm)
-      members.clear()
-      if (live.isEmpty) armed.clear()
-      else {
-        live.foreach(members.appendValue)
-        armed.clear()
-        rearm(live.map(memberTime).max + horizonMs + 1)
-      }
-    }
-    Iterator.empty
-  }
+  def timer(key: K, at: Keyed[Long, M], wm: Long): (Keyed[Long, M], Seq[Out]) =
+    (Keyed(None, at.buffer.cleared, None), Nil)
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * benchmark-decontamination filter, run continuously).
   *
   * STATELESS by design, unlike the stateful within-stream family
-  * ([[NearDupProcessor]] et al.): the reference is fixed for the run,
+  * ([[StreamingNearDup]] et al.): the reference is fixed for the run,
   * so no per-bucket state, watermark, or timers are needed — the
   * stream side derives signature + bands as a narrow kernel map (the
   * SAME [[graft.pipeline.MinhashSigExpr]]/[[graft.pipeline.ShinglesExpr]]

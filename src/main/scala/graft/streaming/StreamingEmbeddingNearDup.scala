@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.pipeline.{Caps, Similarity}
 
@@ -25,15 +24,11 @@ case class EmbNearDupPair(vec_a: Long, vec_b: Long, cosine: Double,
 /** Streaming embedding near-duplicate detection — the incremental form
   * of [[graft.pipeline.Dedup.embeddingNearDups]], completing the
   * streaming dedup family (exact / minhash-LSH / winnow / embedding)
-  * on the shared [[SaturatingBucketProcessor]] kernel: keyed by
-  * (band, hyperplane bucket), each arriving vector is cosine-scored
-  * against the bucket's LIVE members only; horizon eviction and
-  * whole-bucket saturation bound state and fan-out exactly like the
-  * batch Caps rule. */
-class EmbeddingNearDupProcessor(horizonMs: Long, maxBucket: Int)
-    extends SaturatingBucketProcessor[(Int, Long), EmbBandedDoc,
-      EmbMember, EmbNearDupPair](horizonMs, maxBucket,
-      Encoders.product[EmbMember]) {
+  * on the shared [[SaturatingBucket]] step: keyed by (band, hyperplane
+  * bucket), each arriving vector is cosine-scored against the bucket's
+  * LIVE members only; horizon eviction and whole-bucket saturation
+  * bound state and fan-out exactly like the batch Caps rule. */
+object StreamingEmbeddingNearDup {
 
   /** The batch pipeline's exact cosine: Σ floor(aᵢ·bᵢ·1e16) as a long,
     * /1e16, rounded half-up to 6 — bit-identical to
@@ -50,26 +45,22 @@ class EmbeddingNearDupProcessor(horizonMs: Long, maxBucket: Int)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  override protected def timeOf(d: EmbBandedDoc): Long = d.time.getTime
-  override protected def toMember(d: EmbBandedDoc): EmbMember =
-    EmbMember(d.vec_id, d.unit, d.time.getTime)
-  override protected def memberTime(m: EmbMember): Long = m.tMs
-  override protected def sameId(m: EmbMember, d: EmbBandedDoc): Boolean =
-    m.vec_id == d.vec_id
-  override protected def pair(key: (Int, Long), m: EmbMember,
-      d: EmbBandedDoc): EmbNearDupPair =
-    EmbNearDupPair(math.min(m.vec_id, d.vec_id),
-      math.max(m.vec_id, d.vec_id), cosineExact(m.unit, d.unit),
-      key._1, key._2, d.time)
-}
-
-object StreamingEmbeddingNearDup {
+  /** The per-(band, bucket) pairing step. */
+  private def step(horizonMs: Long, maxBucket: Int)
+      : SaturatingBucket[(Int, Long), EmbBandedDoc, EmbMember, EmbNearDupPair] =
+    new SaturatingBucket(horizonMs, maxBucket, Encoders.product[EmbMember],
+      (d: EmbBandedDoc) => EmbMember(d.vec_id, d.unit, d.time.getTime),
+      (m: EmbMember) => m.tMs, (m: EmbMember) => m.vec_id,
+      (key: (Int, Long), m: EmbMember, d: EmbBandedDoc) =>
+        EmbNearDupPair(math.min(m.vec_id, d.vec_id),
+          math.max(m.vec_id, d.vec_id), cosineExact(m.unit, d.unit),
+          key._1, key._2, d.time))
 
   /** Wire an embedding stream (vec_id, embedding array<float>,
     * `eventTimeCol` timestamp) through the BATCH banding expressions
     * (raw-vector hyperplane sign buckets per band — scale-invariant,
     * exactly `Similarity.bandedCandUnits`' derivation) into the
-    * per-bucket processor. `threshold` filters on the exact cosine
+    * per-bucket step. `threshold` filters on the exact cosine
     * like the batch path. */
   def apply(embeddings: DataFrame, eventTimeCol: String,
       horizonSeconds: Long = 3600L, threshold: Double = 0.4,
@@ -83,17 +74,15 @@ object StreamingEmbeddingNearDup {
         Similarity.bucketExpr(dv, planesPerBand, dims,
           b * planesPerBand).as("bucket"))
     }: _*)
-    embeddings.withWatermark(eventTimeCol, s"$horizonSeconds seconds")
+    val banded = embeddings
       .select(col("vec_id"),
         Similarity.normalized(col("embedding")).as("unit"),
         col(eventTimeCol).as("time"), explode(bandCols).as("bb"))
       .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"),
         col("vec_id"), col("unit"), col("time"))
       .as[EmbBandedDoc]
-      .groupByKey(b => (b.band, b.bucket))
-      .transformWithState(new EmbeddingNearDupProcessor(
-        horizonSeconds * 1000L, maxBucket),
-        TimeMode.EventTime(), OutputMode.Append())
+    KeyedProcessor(banded, s"$horizonSeconds seconds",
+        step(horizonSeconds * 1000L, maxBucket))(b => (b.band, b.bucket))
       .filter(_.cosine >= threshold)
   }
 }

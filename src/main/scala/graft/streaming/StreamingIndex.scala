@@ -34,9 +34,10 @@ case class WireEvent(
 object SEvent {
   /** TOTAL order over every non-key field for same-key latest-wins
     * ties — (time, metric presence, metric, state, ttl presence, ttl).
-    * Both index forms ([[StreamingIndex]], [[IndexProcessor]]) break
-    * ties with THIS key so shuffle arrival order can never decide the
-    * winner and the two implementations agree event-for-event: metric
+    * Both index forms ([[StreamingIndex]], and [[IndexStep]] through
+    * [[IndexStep.latestWins]]) break ties with THIS key so shuffle
+    * arrival order can never decide the winner and the two
+    * implementations agree event-for-event: metric
     * None sorts below Some(0.0) instead of conflating with it, and
     * events equal on (time, metric, state) but differing in ttl still
     * land deterministically. State needs the same presence component
@@ -95,7 +96,7 @@ object StreamingIndex {
               Iterator.empty
             }
           } else {
-            // same total order as IndexProcessor (SEvent.totalKey):
+            // same total order as IndexStep (SEvent.totalKey):
             // maxBy keeps the first maximal element, so an exact
             // full-key duplicate of the stored event keeps the stored
             // one — identical semantics in both implementations

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** One LSH bucket's member in streaming state: (doc, signature,
   * event-time ms). */
@@ -28,33 +27,26 @@ private[streaming] case class BandedDoc(band: Int, bucket: String,
   * doc is compared against the bucket's LIVE members only (signature
   * agreement = the batch path's est_jaccard), then joins the state.
   * Horizon eviction, saturation, and the timer discipline live in
-  * [[SaturatingBucketProcessor]]. */
-class NearDupProcessor(horizonMs: Long, maxBucket: Int)
-    extends SaturatingBucketProcessor[(Int, String), BandedDoc,
-      BucketMember, NearDupPair](horizonMs, maxBucket,
-      Encoders.product[BucketMember]) {
+  * [[SaturatingBucket]]. */
+object StreamingNearDup {
 
   private def estJaccard(a: Seq[Long], b: Seq[Long]): Double =
     if (a.isEmpty) 0.0
     else a.iterator.zip(b.iterator).count { case (x, y) => x == y }
       .toDouble / a.size
 
-  override protected def timeOf(d: BandedDoc): Long = d.time.getTime
-  override protected def toMember(d: BandedDoc): BucketMember =
-    BucketMember(d.doc_id, d.sig, d.time.getTime)
-  override protected def memberTime(m: BucketMember): Long = m.tMs
-  override protected def sameId(m: BucketMember, d: BandedDoc): Boolean =
-    m.doc_id == d.doc_id
-  override protected def pair(key: (Int, String), m: BucketMember,
-      d: BandedDoc): NearDupPair =
-    NearDupPair(math.min(m.doc_id, d.doc_id), math.max(m.doc_id, d.doc_id),
-      estJaccard(m.sig, d.sig), key._1, key._2, d.time)
-}
-
-object StreamingNearDup {
+  /** The per-(band, bucket) pairing step. */
+  private def step(horizonMs: Long, maxBucket: Int)
+      : SaturatingBucket[(Int, String), BandedDoc, BucketMember, NearDupPair] =
+    new SaturatingBucket(horizonMs, maxBucket, Encoders.product[BucketMember],
+      (d: BandedDoc) => BucketMember(d.doc_id, d.sig, d.time.getTime),
+      (m: BucketMember) => m.tMs, (m: BucketMember) => m.doc_id,
+      (key: (Int, String), m: BucketMember, d: BandedDoc) =>
+        NearDupPair(math.min(m.doc_id, d.doc_id), math.max(m.doc_id, d.doc_id),
+          estJaccard(m.sig, d.sig), key._1, key._2, d.time))
 
   /** Wire a doc stream (doc_id, text, `eventTimeCol` timestamp) through
-    * signature → banding → the per-bucket processor. The signature and
+    * signature → banding → the per-bucket step. The signature and
     * band/bucket derivation reuse the BATCH kernels and expressions
     * ([[graft.pipeline.MinhashSigExpr]]/[[graft.pipeline.ShinglesExpr]]
     * and `Dedup.lshBands`' banding SQL), so a pair this stream emits is
@@ -73,16 +65,15 @@ object StreamingNearDup {
       ColumnBridge.expression(ColumnBridge.column(
         graft.pipeline.ShinglesExpr(
           ColumnBridge.expression(col("text")), w))), k))
-    val sigd = docs.withWatermark(eventTimeCol, s"$horizonSeconds seconds")
+    val sigd = docs
       .select(col("doc_id"), sig.as("sig"), col(eventTimeCol).as("time"))
       .select(col("doc_id"), col("sig"), col("time"),
         graft.pipeline.Dedup.bandExplodeExpr(k, bands).as("bb"))
       .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"),
         col("doc_id"), col("sig"), col("time"))
       .as[BandedDoc]
-    sigd.groupByKey(b => (b.band, b.bucket))
-      .transformWithState(new NearDupProcessor(horizonSeconds * 1000L,
-        maxBucket), TimeMode.EventTime(), OutputMode.Append())
+    KeyedProcessor(sigd, s"$horizonSeconds seconds",
+        step(horizonSeconds * 1000L, maxBucket))(b => (b.band, b.bucket))
       .filter(_.est_jaccard >= threshold)
   }
 }

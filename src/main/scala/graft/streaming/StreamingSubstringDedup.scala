@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
 
-/** One row into the substring-dedup processor: a gram occurrence
+/** One row into the substring-dedup step: a gram occurrence
   * (`p >= 1`, `text` null) or the per-document text carrier (`p == 0`,
   * its own key, passed straight through so the downstream per-doc
   * aggregation can rebuild the cleaned text without a stream-stream
@@ -17,77 +15,6 @@ private[streaming] case class GramRow(h: String, doc_id: Long, p: Int,
 case class SpanMark(doc_id: Long, p: Int, text: String,
     time: java.sql.Timestamp)
 
-/** Keyed by gram hash: the FIRST occurrence inside the horizon is the
-  * canonical one (keeps its text, emits nothing); every later
-  * occurrence emits a duplicated-span mark. Emission volume is LINEAR
-  * in the arriving grams (one mark per non-canonical occurrence — no
-  * O(bucket²) pairing, so no saturation kernel needed); state is one
-  * (doc, pos, lastSeen) triple per distinct gram inside the horizon,
-  * cleared by a quiet-period timer exactly like the bucket kernel's.
-  *
-  * Batch-parity caveat (pinned in StreamingSubstringDedupSpec): the
-  * batch [[graft.pipeline.Dedup.substringDedup]] picks the GLOBAL
-  * minimum (doc, pos) as canonical; the stream picks the first
-  * arrival — within one trigger rows sort by (doc, pos) so a batch
-  * arriving together agrees exactly, and across triggers
-  * first-arrival == min-key whenever doc ids are assigned in arrival
-  * order (the common ingest shape). */
-class SubstringDedupProcessor(horizonMs: Long)
-    extends StatefulProcessor[String, GramRow, SpanMark]
-    with ArmedTimer[String, GramRow, SpanMark] {
-
-  @transient private var canonical: ValueState[(Long, Int, Long)] = _
-  @transient private var _armed: ValueState[Long] = _
-  override protected def armed: ValueState[Long] = _armed
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    canonical = getHandle.getValueState[(Long, Int, Long)]("canonical",
-      Encoders.product[(Long, Int, Long)], TTLConfig.NONE)
-    _armed = getHandle.getValueState[Long]("armed",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[GramRow],
-      timerValues: TimerValues): Iterator[SpanMark] = {
-    val wm = timerValues.getCurrentWatermarkInMs()
-    val out = Seq.newBuilder[SpanMark]
-    for (r <- rows.toSeq.sortBy(r => (r.doc_id, r.p))) {
-      if (r.p == 0) {
-        // text carrier: unique key per doc, stateless pass-through
-        out += SpanMark(r.doc_id, 0, r.text, r.time)
-      } else {
-        val t = r.time.getTime
-        if (!canonical.exists()) {
-          canonical.update((r.doc_id, r.p, t))
-        } else {
-          val (cd, cp, seen) = canonical.get()
-          if (cd == r.doc_id && cp == r.p) {
-            // replay of the canonical occurrence itself: no mark
-            canonical.update((cd, cp, math.max(seen, t)))
-          } else {
-            out += SpanMark(r.doc_id, r.p, null, r.time)
-            canonical.update((cd, cp, math.max(seen, t)))
-          }
-        }
-        val seen = canonical.get()._3
-        rearm(math.max(seen + horizonMs + 1, wm + 1))
-      }
-    }
-    out.result().iterator
-  }
-
-  override def handleExpiredTimer(key: String, timerValues: TimerValues,
-      expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-      : Iterator[SpanMark] = {
-    // a quiet gram is forgotten: its next occurrence starts a fresh
-    // canonical (the batch horizon semantics). armed.clear(), not
-    // disarm(): the firing timer was already consumed by the framework
-    canonical.clear()
-    armed.clear()
-    Iterator.empty
-  }
-}
-
 /** Streaming exact substring dedup — the incremental form of
   * [[graft.pipeline.Dedup.substringDedup]] (Lee et al. 2021): arriving
   * documents are stripped of ≥ `minLen`-token spans already seen
@@ -95,6 +22,58 @@ class SubstringDedupProcessor(horizonMs: Long)
   * trigger), the first occurrence keeping its text. Cleaned documents
   * emit when the watermark closes their event-time window. */
 object StreamingSubstringDedup {
+
+  /** Keyed by gram hash: the FIRST occurrence inside the horizon is the
+    * canonical one (keeps its text, emits nothing); every later
+    * occurrence emits a duplicated-span mark. Emission volume is LINEAR
+    * in the arriving grams (one mark per non-canonical occurrence — no
+    * O(bucket²) pairing, so no saturation kernel needed); state is one
+    * (doc, pos, lastSeen) triple per distinct gram inside the horizon,
+    * cleared by a quiet-period timer exactly like the bucket step's: a
+    * quiet gram is forgotten, and its next occurrence starts a fresh
+    * canonical (the batch horizon semantics).
+    *
+    * Batch-parity caveat (pinned in StreamingSubstringDedupSpec): the
+    * batch [[graft.pipeline.Dedup.substringDedup]] picks the GLOBAL
+    * minimum (doc, pos) as canonical; the stream picks the first
+    * arrival — within one trigger rows sort by (doc, pos) so a batch
+    * arriving together agrees exactly, and across triggers
+    * first-arrival == min-key whenever doc ids are assigned in arrival
+    * order (the common ingest shape). */
+  private def step(horizonMs: Long)
+      : Step[String, GramRow, (Long, Int, Long), Unit, SpanMark] =
+      new Step[String, GramRow, (Long, Int, Long), Unit, SpanMark] {
+    def state: (String, Encoder[(Long, Int, Long)]) =
+      ("canonical", Encoders.product[(Long, Int, Long)])
+    def order: Ordering[GramRow] = Ordering.by(r => (r.doc_id, r.p))
+
+    def rows(key: String, at: Keyed[(Long, Int, Long), Unit],
+        rows: Seq[GramRow], wm: Long)
+        : (Keyed[(Long, Int, Long), Unit], Seq[SpanMark]) = {
+      val out = Vector.newBuilder[SpanMark]
+      val next = rows.foldLeft(at) { (at, r) =>
+        if (r.p == 0) {
+          // text carrier: unique key per doc, stateless pass-through
+          out += SpanMark(r.doc_id, 0, r.text, r.time)
+          at
+        } else {
+          val t = r.time.getTime
+          val (cd, cp, seen) = at.state.getOrElse((r.doc_id, r.p, t))
+          // a replay of the canonical occurrence itself marks nothing
+          if (cd != r.doc_id || cp != r.p)
+            out += SpanMark(r.doc_id, r.p, null, r.time)
+          val lastSeen = math.max(seen, t)
+          at.copy(state = Some((cd, cp, lastSeen)),
+            deadline = Some(math.max(lastSeen + horizonMs + 1, wm + 1)))
+        }
+      }
+      (next, out.result())
+    }
+
+    def timer(key: String, at: Keyed[(Long, Int, Long), Unit],
+        wm: Long): (Keyed[(Long, Int, Long), Unit], Seq[SpanMark]) =
+      (at.copy(state = None), Nil)
+  }
 
   /** docs (doc_id, text, `eventTimeCol` timestamp) → duplicated-span
     * marks + text carriers. Grams reuse the batch operator's md5 over
@@ -104,9 +83,8 @@ object StreamingSubstringDedup {
       horizonSeconds: Long = 3600L): Dataset[SpanMark] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val base = docs.withWatermark(eventTimeCol, s"$horizonSeconds seconds")
-      .select(col("doc_id"), col("text"), col(eventTimeCol).as("time"),
-        split(col("text"), " ").as("w"))
+    val base = docs.select(col("doc_id"), col("text"),
+      col(eventTimeCol).as("time"), split(col("text"), " ").as("w"))
     val grams = base.filter(size(col("w")) >= minLen)
       .select(col("doc_id"), col("time"), col("w"),
         explode(sequence(lit(1), size(col("w")) - minLen + 1)).as("p"))
@@ -119,10 +97,9 @@ object StreamingSubstringDedup {
     val carrier = base.select(
       md5(concat(lit("doc:"), col("doc_id").cast("string"))).as("h"),
       col("doc_id"), lit(0).as("p"), col("text"), col("time"))
-    grams.union(carrier).as[GramRow]
-      .groupByKey(_.h)
-      .transformWithState(new SubstringDedupProcessor(horizonSeconds * 1000L),
-        "time", OutputMode.Append())
+    KeyedProcessor(grams.union(carrier).as[GramRow],
+      s"$horizonSeconds seconds", step(horizonSeconds * 1000L),
+      Some("time"))(_.h)
   }
 
   /** Cleaned documents from the mark stream: per (window, doc) the

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** A (fingerprint, document) arrival: one winnowed fingerprint of one
   * ingested doc. */
@@ -22,32 +21,25 @@ case class WinnowShared(doc_a: Long, doc_b: Long, fp: Long,
   * [[graft.pipeline.Dedup.winnowOverlapPairs]] (Schleimer et al. 2003):
   * keyed by fingerprint, each arriving doc emits one evidence row per
   * LIVE bucket member sharing the fingerprint; counting evidence per
-  * (doc_a, doc_b) to `minShared` happens downstream
-  * ([[StreamingWinnowOverlap.pairs]]). Horizon eviction, hot-fp
-  * saturation, and the timer discipline are the shared
-  * [[SaturatingBucketProcessor]] kernel — a boilerplate fingerprint
+  * (doc_a, doc_b) to `minShared` happens downstream ([[pairs]]).
+  * Horizon eviction, hot-fp saturation, and the timer discipline are
+  * the shared [[SaturatingBucket]] step — a boilerplate fingerprint
   * (page template, license header) saturates rather than flooding
   * O(bucket²) pairs. */
-class WinnowOverlapProcessor(horizonMs: Long, maxBucket: Int)
-    extends SaturatingBucketProcessor[Long, FpDoc, FpMember, WinnowShared](
-      horizonMs, maxBucket, Encoders.product[FpMember]) {
-
-  override protected def timeOf(d: FpDoc): Long = d.time.getTime
-  override protected def toMember(d: FpDoc): FpMember =
-    FpMember(d.doc_id, d.time.getTime)
-  override protected def memberTime(m: FpMember): Long = m.tMs
-  override protected def sameId(m: FpMember, d: FpDoc): Boolean =
-    m.doc_id == d.doc_id
-  override protected def pair(key: Long, m: FpMember, d: FpDoc)
-      : WinnowShared =
-    WinnowShared(math.min(m.doc_id, d.doc_id),
-      math.max(m.doc_id, d.doc_id), key, d.time)
-}
-
 object StreamingWinnowOverlap {
 
+  /** The per-fingerprint pairing step. */
+  private def step(horizonMs: Long, maxBucket: Int)
+      : SaturatingBucket[Long, FpDoc, FpMember, WinnowShared] =
+    new SaturatingBucket(horizonMs, maxBucket, Encoders.product[FpMember],
+      (d: FpDoc) => FpMember(d.doc_id, d.time.getTime),
+      (m: FpMember) => m.tMs, (m: FpMember) => m.doc_id,
+      (fp: Long, m: FpMember, d: FpDoc) =>
+        WinnowShared(math.min(m.doc_id, d.doc_id),
+          math.max(m.doc_id, d.doc_id), fp, d.time))
+
   /** Wire a doc stream (doc_id, text, `eventTimeCol` timestamp) through
-    * the winnow kernel → fingerprint explode → the per-fp processor.
+    * the winnow kernel → fingerprint explode → the per-fp step.
     * The fingerprints are the BATCH [[graft.pipeline.WinnowExpr]]
     * kernel's, so the evidence this stream emits is exactly the
     * within-fp pairing the batch `winnowOverlapPairs` counts on the
@@ -62,17 +54,14 @@ object StreamingWinnowOverlap {
     import org.apache.spark.sql.graft.ColumnBridge
     val fps = ColumnBridge.column(graft.pipeline.WinnowExpr(
       ColumnBridge.expression(col("text")), k, w))
-    docs.withWatermark(eventTimeCol, s"$horizonSeconds seconds")
+    val fpd = docs
       .select(col("doc_id"), fps.as("fps"), col(eventTimeCol).as("time"))
       .select(explode(col("fps")).as("fp"), col("doc_id"), col("time"))
       .as[FpDoc]
-      .groupByKey(_.fp)
-      // the eventTimeColumnName overload (implies TimeMode.EventTime)
-      // declares the OUTPUT's event-time column, so the downstream
-      // [[pairs]] aggregation can chain as a second stateful operator
-      .transformWithState(new WinnowOverlapProcessor(
-        horizonSeconds * 1000L, maxBucket),
-        "time", OutputMode.Append())
+    // the output declares its event-time column, so the downstream
+    // [[pairs]] aggregation can chain as a second stateful operator
+    KeyedProcessor(fpd, s"$horizonSeconds seconds",
+      step(horizonSeconds * 1000L, maxBucket), Some("time"))(_.fp)
   }
 
   /** Overlap pairs from the evidence stream: count shared fingerprints

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{BatchProcessor, SEvent}
+import graft.streaming.{SEvent, StreamingBatch}
 
 /** Streaming batch: size-OR-time bounded vector delivery
   * (streams.clj:1158-1185, streams_test.clj batch-test). */
@@ -21,7 +21,7 @@ class BatchProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = BatchProcessor(input.toDS(), n = 3, dtSeconds = 1000)
+      val q = StreamingBatch(input.toDS(), n = 3, dtSeconds = 1000)
         .writeStream.format("memory").queryName("bt").outputMode("append")
         .start()
       try {
@@ -29,7 +29,7 @@ class BatchProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev(5, 140), ev(6, 150))
         q.processAllAvailable()
-        val out = spark.table("bt").as[BatchProcessor.Flush].collect()
+        val out = spark.table("bt").as[StreamingBatch.Flush].collect()
           .sortBy(_.emitted_at.getTime)
         assert(out.length == 2)
         assert(out.forall(!_.by_timer))
@@ -48,7 +48,7 @@ class BatchProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = BatchProcessor(input.toDS(), n = 10, dtSeconds = 50)
+      val q = StreamingBatch(input.toDS(), n = 10, dtSeconds = 50)
         .writeStream.format("memory").queryName("bt2").outputMode("append")
         .start()
       try {
@@ -59,7 +59,7 @@ class BatchProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev(9, 301, svc = "other"))
         q.processAllAvailable()
-        val out = spark.table("bt2").as[BatchProcessor.Flush].collect()
+        val out = spark.table("bt2").as[StreamingBatch.Flush].collect()
           .filter(_.key == "bulk")
         assert(out.length == 1)
         assert(out.head.by_timer)

@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 import graft.operators.Index
-import graft.streaming.{IndexProcessor, SEvent, StreamingIndex}
+import graft.streaming.{KeyedIndex, SEvent, StreamingIndex}
 
 /** Randomized parity: the three index implementations — batch
   * snapshot/reaper (operators/Index), flatMapGroupsWithState
-  * (StreamingIndex), and transformWithState (IndexProcessor) — must
+  * (StreamingIndex), and transformWithState (KeyedIndex) — must
   * agree on (a) the latest event per pkey and (b) which keys the
   * reaper expires, for arbitrary event sequences. This is the
   * batch/streaming contract SURVEY §2.7 promises, checked by property
@@ -104,7 +104,7 @@ class IndexParitySpec extends SparkSpec {
         val (gsSnap, gsExpired) =
           runStreaming(evs, StreamingIndex(_), s"par_gs_$i")
         val (twsSnap, twsExpired) =
-          runStreaming(evs, IndexProcessor(_), s"par_tws_$i")
+          runStreaming(evs, KeyedIndex(_), s"par_tws_$i")
         assert(gsSnap == snap, s"GroupState latest mismatch for $evs")
         assert(twsSnap == snap, s"transformWithState latest mismatch for $evs")
         assert(gsExpired == expired, s"GroupState expiry mismatch for $evs")
@@ -151,10 +151,10 @@ class IndexParitySpec extends SparkSpec {
       Seq(se(null, Some(1.0), None), se("", Some(1.0), None)))
     try corners.zipWithIndex.foreach { case (evs, i) =>
       val gs = winner(StreamingIndex(_), s"corner_gs_$i", evs)
-      val tws = winner(IndexProcessor(_), s"corner_tws_$i", evs)
+      val tws = winner(KeyedIndex(_), s"corner_tws_$i", evs)
       val expect = evs.maxBy(SEvent.totalKey)
       assert(gs == expect, s"StreamingIndex corner $i picked $gs")
-      assert(tws == expect, s"IndexProcessor corner $i picked $tws")
+      assert(tws == expect, s"KeyedIndex corner $i picked $tws")
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
@@ -165,7 +165,7 @@ class IndexParitySpec extends SparkSpec {
     import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
     import org.json4s._
     import graft.sinks.Sinks
-    import graft.streaming.{WireEvent, WireIndexProcessor}
+    import graft.streaming.{KeyedIndex, WireEvent}
     val provider = "spark.sql.streaming.stateStore.providerClass"
     val snapEvery = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
     val retain = "spark.sql.streaming.minBatchesToRetain"
@@ -207,7 +207,7 @@ class IndexParitySpec extends SparkSpec {
       }
     }
 
-    /** Each feed through WireIndexProcessor and the old per-row upsert
+    /** Each feed through KeyedIndex.wire and the old per-row upsert
       * of the served map, one micro-batch (and its no-data batch) per
       * input batch: (final map, pushed rows). */
     def oracle(input: Seq[Seq[(String, Seq[WireEvent])]], tag: String)
@@ -218,7 +218,7 @@ class IndexParitySpec extends SparkSpec {
       val pushed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
       val streams = feeds.map { case (feed, wm) =>
         val in = MemoryStream[WireEvent]
-        val q = WireIndexProcessor(in.toDS(), wm).writeStream
+        val q = KeyedIndex.wire(in.toDS(), wm).writeStream
           .foreachBatch { (batch: Dataset[WireEvent], _: Long) =>
             val rows = batch.collect()
             served.synchronized {

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{IndexProcessor, SEvent, StableProcessor}
+import graft.streaming.{IndexStep, KeyedIndex, SEvent, StreamingStable}
 
 /** transformWithState index: same reaper golden case as the
   * flatMapGroupsWithState form, on the modern API with per-key timers
@@ -23,7 +23,7 @@ class IndexProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = IndexProcessor(input.toDS())
+      val q = KeyedIndex(input.toDS())
         .writeStream.format("memory").queryName("tws").outputMode("append")
         .start()
       try {
@@ -55,7 +55,7 @@ class IndexProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = IndexProcessor(input.toDS(), keepKeys = IndexProcessor.All,
+      val q = KeyedIndex(input.toDS(), keepKeys = IndexStep.All,
         deleteState = Some("delete"))
         .writeStream.format("memory").queryName("twsall").outputMode("append")
         .start()
@@ -96,7 +96,7 @@ class IndexProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = IndexProcessor(input.toDS(), deleteState = Some("delete"))
+      val q = KeyedIndex(input.toDS(), deleteState = Some("delete"))
         .writeStream.format("memory").queryName("twsrearm")
         .outputMode("append").start()
       try {
@@ -150,7 +150,7 @@ class IndexProcessorSpec extends SparkSpec {
       def winner(order: Seq[SEvent], name: String): SEvent = {
         implicit val sqlCtx = spark.sqlContext
         val input = MemoryStream[SEvent]
-        val q = IndexProcessor(input.toDS())
+        val q = KeyedIndex(input.toDS())
           .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
         try {
@@ -178,7 +178,7 @@ class IndexProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = StableProcessor(input.toDS(), 50)
+      val q = StreamingStable(input.toDS(), 50)
         .writeStream.format("memory").queryName("stbl").outputMode("append")
         .start()
       try {

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{RateProcessor, SEvent}
+import graft.streaming.{SEvent, StreamingRate}
 
 /** Streaming rate with the reference's expiry semantics
   * (streams.clj:841-883, streams_test.clj rate-expiration): interval
@@ -30,7 +30,7 @@ class RateProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = RateProcessor(input.toDS(), 1, _.service)
+      val q = StreamingRate(input.toDS(), 1, _.service)
         .writeStream.format("memory").queryName("srate").outputMode("append")
         .start()
       try {
@@ -46,7 +46,7 @@ class RateProcessorSpec extends SparkSpec {
           input.addData(ev("x", 0.0, t))
           q.processAllAvailable()
         }
-        val got = spark.table("srate").as[RateProcessor.RateEmission]
+        val got = spark.table("srate").as[StreamingRate.RateEmission]
           .collect().filter(_.key == "s").sortBy(_.time_s)
           .map(e => (e.time_s, e.rate, e.ttl)).toSeq
         assert(got == Seq(
@@ -55,7 +55,7 @@ class RateProcessorSpec extends SparkSpec {
           (13L, Some(0.0), Some(1.0))))
         // the clock key itself never expires (no ttl): its ticks keep
         // coming and carry no ttl
-        val xs = spark.table("srate").as[RateProcessor.RateEmission]
+        val xs = spark.table("srate").as[StreamingRate.RateEmission]
           .collect().filter(_.key == "x")
         assert(xs.nonEmpty && xs.forall(_.ttl.isEmpty))
       } finally q.stop()
@@ -72,7 +72,7 @@ class RateProcessorSpec extends SparkSpec {
         (10L, 2.0, Some(4.0)), (11L, 3.0, Some(4.0)),
         (14L, 5.0, Some(2.0)), (21L, 7.0, Some(3.0)))
       val input = MemoryStream[SEvent]
-      val q = RateProcessor(input.toDS(), 1, _.service)
+      val q = StreamingRate(input.toDS(), 1, _.service)
         .writeStream.format("memory").queryName("srate3").outputMode("append")
         .start()
       try {
@@ -86,7 +86,7 @@ class RateProcessorSpec extends SparkSpec {
           q.processAllAvailable()
         }
         val streaming = spark.table("srate3")
-          .as[RateProcessor.RateEmission].collect()
+          .as[StreamingRate.RateEmission].collect()
           .filter(_.key == "s")
           .map(e => (e.time_s, e.rate.get, e.ttl)).toSet
         val batchDf = events(table.zipWithIndex.map { case ((t, m, ttl), i) =>
@@ -111,7 +111,7 @@ class RateProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = RateProcessor(input.toDS(), 1, _.service)
+      val q = StreamingRate(input.toDS(), 1, _.service)
         .writeStream.format("memory").queryName("srate2").outputMode("append")
         .start()
       try {
@@ -129,7 +129,7 @@ class RateProcessorSpec extends SparkSpec {
           input.addData(ev("x", 0.0, t))
           q.processAllAvailable()
         }
-        val got = spark.table("srate2").as[RateProcessor.RateEmission]
+        val got = spark.table("srate2").as[StreamingRate.RateEmission]
           .collect().filter(_.key == "s").sortBy(_.time_s)
           .map(e => (e.time_s, e.rate, e.ttl)).toSeq
         assert(got == Seq(

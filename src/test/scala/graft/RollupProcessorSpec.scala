@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{RollupProcessor, SEvent}
+import graft.streaming.{SEvent, StreamingRollup}
 
 /** Streaming rollup: pass n per period, buffer the overflow, deliver
   * the buffered vector when the period's timer fires
@@ -22,7 +22,7 @@ class RollupProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = RollupProcessor(input.toDS(), n = 2, dtSeconds = 100)
+      val q = StreamingRollup(input.toDS(), n = 2, dtSeconds = 100)
         .writeStream.format("memory").queryName("ru").outputMode("append")
         .start()
       try {
@@ -36,7 +36,7 @@ class RollupProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev("zz", 9, 1301, svc = "other"))
         q.processAllAvailable()
-        val out = spark.table("ru").as[RollupProcessor.Emission].collect()
+        val out = spark.table("ru").as[StreamingRollup.Emission].collect()
           .filter(_.key == "alerts")
         val passed = out.filter(!_.rolled).flatMap(_.events)
           .flatMap(_.metric).sorted.toSeq
@@ -58,7 +58,7 @@ class RollupProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = RollupProcessor(input.toDS(), n = 1, dtSeconds = 100)
+      val q = StreamingRollup(input.toDS(), n = 1, dtSeconds = 100)
         .writeStream.format("memory").queryName("ru3").outputMode("append")
         .start()
       try {
@@ -72,7 +72,7 @@ class RollupProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev("zz", 9, 1401, svc = "other"))
         q.processAllAvailable()
-        val out = spark.table("ru3").as[RollupProcessor.Emission].collect()
+        val out = spark.table("ru3").as[StreamingRollup.Emission].collect()
           .filter(_.key == "alerts").sortBy(_.emitted_at.getTime)
         val flushes = out.filter(_.rolled)
         assert(flushes.map(_.events.flatMap(_.metric).toSeq).toSeq
@@ -92,7 +92,7 @@ class RollupProcessorSpec extends SparkSpec {
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[SEvent]
-      val q = RollupProcessor(input.toDS(), n = 2, dtSeconds = 100)
+      val q = StreamingRollup(input.toDS(), n = 2, dtSeconds = 100)
         .writeStream.format("memory").queryName("ru2").outputMode("append")
         .start()
       try {
@@ -105,7 +105,7 @@ class RollupProcessorSpec extends SparkSpec {
         // next event opens a fresh period and passes immediately
         input.addData(ev("a", 5, 1400))
         q.processAllAvailable()
-        val out = spark.table("ru2").as[RollupProcessor.Emission].collect()
+        val out = spark.table("ru2").as[StreamingRollup.Emission].collect()
           .filter(_.key == "alerts")
         assert(out.forall(!_.rolled)) // no overflow ever buffered
         assert(out.flatMap(_.events).flatMap(_.metric).sorted.toSeq

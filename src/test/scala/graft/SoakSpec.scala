@@ -13,8 +13,8 @@ import graft.operators.Index
 import graft.sinks.{Sinks, SseServer}
 import graft.sources.{RiemannProtobuf, Sources}
 import graft.sources.RiemannProtobuf.PEvent
-import graft.streaming.{CombineStreams, IndexProcessor, RateProcessor,
-  RollupProcessor, SEvent}
+import graft.streaming.{CombineStreams, KeyedIndex, SEvent, StreamingRate,
+  StreamingRollup}
 
 /** Long-haul chaos soak (the r6 verdict's top item): ONE composed
   * topology — riemann TCP server sources → where → index / rollup /
@@ -101,7 +101,7 @@ class SoakSpec extends SparkSpec {
 
     val core = new Core(spark)
     core.stream("soak-index") {
-      IndexProcessor(
+      KeyedIndex(
         sevents(Sources.riemannTcpServer(spark, "127.0.0.1", ports("index"))
           .filter(col("service") =!= "noise")), // the `where` stage
         deleteState = Some("delete"))
@@ -109,14 +109,14 @@ class SoakSpec extends SparkSpec {
         .foreachBatch(SoakChaos.indexBatch _)
     }
     core.stream("soak-rollup") {
-      RollupProcessor(
+      StreamingRollup(
         sevents(Sources.riemannTcpServer(spark, "127.0.0.1", ports("rollup"))),
         n = 1, dtSeconds = 60)
         .writeStream.option("checkpointLocation", ckpts("rollup"))
         .foreachBatch(SoakChaos.rollupBatch _)
     }
     core.stream("soak-rate") {
-      RateProcessor(
+      StreamingRate(
         sevents(Sources.riemannTcpServer(spark, "127.0.0.1", ports("rate"))),
         dtSeconds = 60)
         .writeStream.option("checkpointLocation", ckpts("rate"))
@@ -376,8 +376,8 @@ object SoakChaos {
   val pubsub = new Sinks.Pubsub
 
   val idx = new ConcurrentLinkedQueue[(Int, SEvent)]()
-  val roll = new ConcurrentLinkedQueue[(Int, RollupProcessor.Emission)]()
-  val rate = new ConcurrentLinkedQueue[(Int, RateProcessor.RateEmission)]()
+  val roll = new ConcurrentLinkedQueue[(Int, StreamingRollup.Emission)]()
+  val rate = new ConcurrentLinkedQueue[(Int, StreamingRate.RateEmission)]()
   val coal = new ConcurrentLinkedQueue[(Int, CombineStreams.Snapshot)]()
   private val idxLast, rollLast, rateLast, coalLast = new AtomicLong(-1)
 
@@ -429,13 +429,13 @@ object SoakChaos {
       if (alerts.nonEmpty) sendMsg(indexPort, alerts)
     }
 
-  def rollupBatch(b: Dataset[RollupProcessor.Emission], id: Long): Unit =
+  def rollupBatch(b: Dataset[StreamingRollup.Emission], id: Long): Unit =
     if (id > rollLast.get) {
       rollLast.set(id)
       b.collect().foreach(e => roll.add((phase, e)))
     }
 
-  def rateBatch(b: Dataset[RateProcessor.RateEmission], id: Long): Unit =
+  def rateBatch(b: Dataset[StreamingRate.RateEmission], id: Long): Unit =
     if (id > rateLast.get) {
       rateLast.set(id)
       b.collect().foreach(e => rate.add((phase, e)))

@@ -97,7 +97,7 @@ class StreamingEmbeddingNearDupSpec extends SparkSpec {
     }
     // the surviving pre-saturation pair (1,2) pins the documented
     // cap-boundary divergence from batch Caps.cap (zero pairs for an
-    // over-cap bucket) — see SaturatingBucketProcessor scaladoc
+    // over-cap bucket) — see SaturatingBucket scaladoc
     assert(saturated.map(p => (p._1, p._2)) == Seq((1L, 2L)))
   }
 

@@ -109,7 +109,7 @@ class StreamingWinnowOverlapSpec extends SparkSpec {
     // This (1,2) pair is ALSO the pinned cap-boundary divergence from
     // batch Caps.cap, which sees the whole bucket up front and drops
     // it with ZERO pairs — append mode cannot retract what was emitted
-    // before the cap tripped (SaturatingBucketProcessor scaladoc)
+    // before the cap tripped (SaturatingBucket scaladoc)
     assert(got.keySet == Set((1L, 2L)))
   }
 
