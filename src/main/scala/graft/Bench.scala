@@ -244,7 +244,8 @@ object Bench {
     def wireRun(threads: Int): Double = try {
       val idx = new Main.ServedIndex(spark)
       (0 until 10000).foreach { i =>
-        idx.put(graft.streaming.SEvent(s"host-${i % 1000}", s"svc-${i / 1000}",
+        idx.putTagged(graft.streaming.SEvent(s"host-${i % 1000}",
+          s"svc-${i / 1000}",
           if (i % 17 == 0) "critical" else "ok", Some((i % 100) / 100.0),
           new java.sql.Timestamp(1706000000000L + i), Some(60.0)))
       }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.json4s.JObject
 import org.json4s.jackson.JsonMethods
 
-import graft.streaming.{KeyedIndex, SEvent}
+import graft.streaming.{KeyedIndex, WireEvent}
 
 /** The `Bench` subcommands that run the soak legs: `soak` (every leg at
   * once, for minutes, through restarts) and `ceiling` (each leg alone,
@@ -55,15 +55,14 @@ private[graft] object BenchSoak {
       .option("numPartitions", partitions)
       .load()
 
-    def events(rowsPerSec: Int): Dataset[SEvent] = rate(rowsPerSec)
-      .select(
+    def events(rowsPerSec: Int): Dataset[WireEvent] =
+      WireEvent.from(rate(rowsPerSec).select(
         concat(lit("host-"), (col("value") % nKeys).cast("string")).as("host"),
         concat(lit("svc-"), (col("value") % 3).cast("string")).as("service"),
         when(col("value") % 100 === 0, "critical").otherwise("ok").as("state"),
         (col("value") % 1000).cast("double").as("metric"),
         col("timestamp").as("time"),
-        lit(60.0).as("ttl"))
-      .as[SEvent]
+        lit(60.0).as("ttl")))
 
     val all: Seq[(String, Int => DataFrame)] = Seq(
       // index: per-key latest + TTL expiry — state rows bounded by the

@@ -13,7 +13,7 @@ import org.json4s.JObject
 import org.json4s.jackson.JsonMethods
 
 import graft.config.ConfigFile
-import graft.streaming.SEvent
+import graft.streaming.{SEvent, WireEvent}
 
 /** The `Bench` subcommands that measure streaming topologies:
   * `fanout`, `static-cache` and `zone`. */
@@ -63,7 +63,7 @@ private[graft] object BenchStreams {
            |"sink":{"kind":"memory"}}""".stripMargin.replace("\n", ""))
         .mkString("[", ",", "]")
       Files.writeString(cfg, s"""{"streams":$streams}""")
-      val in = MemoryStream[SEvent]
+      val in = MemoryStream[WireEvent]
       val core = new Core(spark)
       val loader = new ConfigFile.Loader(core, spark, cfg,
         sources0 = Map("in" -> (() => in.toDF())))

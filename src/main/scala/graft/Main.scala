@@ -20,7 +20,7 @@ import org.json4s.jackson.JsonMethods
 import graft.config.ConfigFile
 import graft.sinks.{Sinks, SseServer, WsServer}
 import graft.sources.Sources
-import graft.streaming.{IndexStep, SEvent, WireEvent}
+import graft.streaming.{IndexStep, WireEvent}
 
 /** The deployable process entry point — the `bin.clj` equivalent
   * (reference src/riemann/bin.clj:135-167 `-main`): load a config
@@ -112,10 +112,6 @@ object Main {
     // replay the log that query is still writing — it shares this
     // progress and rewinds it at its first batch ([[Feed]])
     private val progress = TrieMap[(String, Path), Progress]()
-    // whether a feeding stream ever carried tags/attributes columns:
-    // dumps must render the same JSON shape the per-batch pushes use
-    // (6-column feeds push without tags/attributes keys)
-    @volatile private var wireShape = false
 
     /** The sink of an `index`-kind stream: a [[Feed]] that does the
       * `index` op's work when the pipeline's trailing op was absorbed,
@@ -130,24 +126,20 @@ object Main {
         override def write(batch: DataFrame, batchId: Long): Unit = {
           val rows = collectWire(batch, fromRow, identity).toSeq
           rows.foreach(putTagged)
-          publish(batch.sparkSession, rows, wire, batchId)
+          publish(batch.sparkSession, rows, batchId)
         }
       }
     }
 
     /** An `index`-kind sink. Its input is the stream's output as whole
-      * events ([[ConfigFile.wireEvents]]), projected in the stream's own
-      * plan when the query is built, so a batch runs as one job over
-      * its own rows ([[collectWire]]). `wire`: whether the stream
-      * carries tags or attributes, which sets the push and dump shape. */
+      * events ([[WireEvent.from]]), projected in the stream's own plan
+      * when the query is built, so a batch runs as one job over its own
+      * rows ([[collectWire]]). */
     private abstract class WireSink extends Sinks.EventSink {
-      @volatile protected var wire = false
       @volatile protected var fromRow: ExpressionEncoder.Deserializer[WireEvent] = _
 
       override def input(stream: DataFrame): DataFrame = {
-        wire = ConfigFile.carriesWholeEvents(stream)
-        if (wire) wireShape = true
-        val events = ConfigFile.wireEvents(stream).toDF()
+        val events = WireEvent.from(stream).toDF()
         fromRow = encoderFor(Encoders.product[WireEvent])
           .resolveAndBind(events.queryExecution.analyzed.output)
           .createDeserializer()
@@ -158,14 +150,11 @@ object Main {
     /** The pushes of one batch, as a local relation Catalyst folds
       * without a job — built only when someone subscribes. */
     private def publish(session: SparkSession, rows: Seq[WireEvent],
-        wire: Boolean, batchId: Long): Unit =
-      if (pubsub.subscribed("index")) {
-        val df =
-          if (wire) session.createDataset(rows)(Encoders.product[WireEvent]).toDF()
-          else session.createDataset(rows.map(_.toSEvent))(
-            Encoders.product[SEvent]).toDF()
-        pubsub.publish("index", df, batchId)
-      }
+        batchId: Long): Unit =
+      if (pubsub.subscribed("index"))
+        pubsub.publish("index",
+          session.createDataset(rows)(Encoders.product[WireEvent]).toDF(),
+          batchId)
 
     /** Compare-and-set `e` from `feed` into the map: the winner by
       * [[IndexStep.latestWins]], and whether `e` replaced
@@ -204,7 +193,6 @@ object Main {
         mark.foreach { m =>
           p.maxTime = m.maxTime
           p.watermark = m.watermark
-          if (m.wire) wireShape = true
         }
         p.lastSnapshot = snap
         p
@@ -253,7 +241,7 @@ object Main {
         }
         dir.foreach { d =>
           val conf = batch.sparkSession.conf
-          val mark = Log.Mark(at.maxTime, at.watermark, wire)
+          val mark = Log.Mark(at.maxTime, at.watermark)
           Log.write(d, batchId, delta = true, mark, changed, removed)
           if (batchId - at.lastSnapshot >= conf.get(
               "spark.sql.streaming.stateStore.minDeltasForSnapshot", "10").toLong) {
@@ -264,18 +252,11 @@ object Main {
               conf.get("spark.sql.streaming.minBatchesToRetain", "100").toLong)
           }
         }
-        publish(batch.sparkSession, pushed.toSeq, wire, batchId)
+        publish(batch.sparkSession, pushed.toSeq, batchId)
       }
     }
 
     private def live(h: Held): Boolean = h.e.state != "expired"
-
-    /** Dump rendering matching the push-line shape: whole-event JSON
-      * when the feed carries tags/attributes columns, the plain
-      * 6-field shape otherwise — one format per connection. */
-    def dumpLine(e: WireEvent): String =
-      if (wireShape) graft.sinks.EventJson.line(e)
-      else graft.sinks.EventJson.line(e.toSEvent)
 
     /** The live events, for Spark-free serving (ws/sse dumps, the wire
       * handler, specs). A TrieMap iterator is a weakly-consistent O(n)
@@ -286,11 +267,7 @@ object Main {
       state.values.iterator.filter(live).map(_.e).toSeq
 
     /** Direct upsert, for probes and specs (the streaming path goes
-      * through [[sinkFor]]). */
-    private[graft] def put(e: SEvent): Unit =
-      putTagged(WireEvent(e.host, e.service, e.state,
-        e.metric, e.time, e.ttl, Seq.empty, Map.empty))
-
+      * through [[sinkFor]]); `state="expired"` deletes. */
     private[graft] def putTagged(e: WireEvent): Unit =
       if (e.state == "expired") { state.remove((e.host, e.service)); () }
       else state((e.host, e.service)) = Held(e, "")
@@ -311,7 +288,7 @@ object Main {
       EventPredicate.pkeyLookup(ast) match {
         case Some(key) => state.get(key).filter(live).map(_.e).toSeq
         case None =>
-          val pred = EventPredicate.taggedForAst(q, ast)
+          val pred = EventPredicate.forAst(q, ast)
           state.values.iterator.filter(h => live(h) && pred(h.e))
             .map(_.e).toSeq
       }
@@ -408,9 +385,12 @@ object Main {
       private val Magic = 0x47534931 // "GSI1"
 
       /** What each file records of its feed after the batch: the max
-        * event time, the watermark, and whether the feed carries
-        * whole events (the dump shape). */
-      final case class Mark(maxTime: Long, watermark: Long, wire: Boolean)
+        * event time and the watermark. A flag follows it in the file,
+        * written true: the events' containers are as logged. A file
+        * with it false was written by a feed without tags or attributes
+        * columns before events carried absent containers as null; its
+        * empty containers read as absent. */
+      final case class Mark(maxTime: Long, watermark: Long)
 
       private def file(dir: Path, batchId: Long, delta: Boolean): Path =
         dir.resolve(s"$batchId.${if (delta) "delta" else "snapshot"}")
@@ -438,7 +418,7 @@ object Main {
           out.writeInt(Magic)
           out.writeLong(mark.maxTime)
           out.writeLong(mark.watermark)
-          out.writeBoolean(mark.wire)
+          out.writeBoolean(true)
           out.writeInt(upserts.size)
           upserts.foreach(writeEvent(out, _))
           out.writeInt(removed.size)
@@ -456,7 +436,7 @@ object Main {
 
       private def readMark(in: DataInputStream, p: Path): Mark = {
         require(in.readInt() == Magic, s"$p: not a served-index log file")
-        Mark(in.readLong(), in.readLong(), in.readBoolean())
+        Mark(in.readLong(), in.readLong())
       }
 
       /** The [[Mark]] of the last batch `checkpoint` committed. */
@@ -486,7 +466,12 @@ object Main {
             new BufferedInputStream(Files.newInputStream(p)))
           try {
             mark = Some(readMark(in, p))
-            for (_ <- 0 until in.readInt()) upsert(readEvent(in))
+            val asLogged = in.readBoolean()
+            for (_ <- 0 until in.readInt()) {
+              val e = readEvent(in)
+              upsert(if (asLogged) e
+                else e.copy(tags = null, attributes = null))
+            }
             for (_ <- 0 until in.readInt()) remove((readStr(in), readStr(in)))
           } finally in.close()
         }
@@ -674,8 +659,7 @@ object Main {
         ws.foreach(s => try s.stop() catch { case NonFatal(_) => () })
         ws = newWs.map { case (_, port, host) =>
           new WsServer(pubsub, port, host = host,
-            snapshotEvents = () => Some(index.events),
-            dumpLine = index.dumpLine)
+            snapshotEvents = () => Some(index.events))
         }
         wsSpec = wsCanon
       }
@@ -684,8 +668,7 @@ object Main {
         sse.foreach(s => try s.stop() catch { case NonFatal(_) => () })
         sse = newSse.map { case (_, port, host) =>
           new SseServer(pubsub, port, host = host,
-            snapshotEvents = () => Some(index.events),
-            dumpLine = index.dumpLine)
+            snapshotEvents = () => Some(index.events))
         }
         sseSpec = sseCanon
       }
@@ -735,11 +718,10 @@ object Main {
   private def canon(o: ConfigFile.Args): String =
     JsonMethods.compact(JsonMethods.render(o.json))
 
-  /** Decoded-wire columns → the SEvent shape the config ops consume
-    * (plus the wire tags and attributes, which the config tag/tagged-*
-    * ops and the whole-event index consume; extra columns pass through
-    * `.as[SEvent]` untouched). */
-  private def asSEvents(df: DataFrame): DataFrame =
+  /** Decoded-wire columns → the whole-event columns the config ops
+    * consume ([[WireEvent]]'s: the wire tags and attributes feed the
+    * tag/tagged-* ops and the index). */
+  private def asEvents(df: DataFrame): DataFrame =
     df.select(col("host"), col("service"), col("state"), col("metric"),
       timestamp_seconds(col("time_s")).as("time"), col("ttl"), col("tags"),
       col("attributes"))
@@ -875,14 +857,14 @@ object Main {
             val password = o.str("tlspassword")
             val truststore = o.strOpt("tlstruststore")
             val clientAuth = o.bool("tlsclientauth", false)
-            () => asSEvents(Sources.riemannTlsServer(spark, host, port,
+            () => asEvents(Sources.riemannTlsServer(spark, host, port,
               keystore, password, truststore = truststore,
               clientAuth = clientAuth))
           case None =>
-            () => asSEvents(Sources.riemannTcpServer(spark, host, port))
+            () => asEvents(Sources.riemannTcpServer(spark, host, port))
         }
         case "udp" =>
-          () => asSEvents(Sources.riemannUdpServer(spark, host, port))
+          () => asEvents(Sources.riemannUdpServer(spark, host, port))
         case "graphite" => () => Sources.graphiteServer(spark, host, port)
         case "opentsdb" => () => Sources.opentsdbServer(spark, host, port)
         case other => throw new IllegalArgumentException(
@@ -997,7 +979,7 @@ object Main {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val input = MemoryStream[TestEvent]
+    val input = MemoryStream[WireEvent]
     val out = ConfigFile.compilePipeline(input.toDF(), stream)
     val sinkName = s"graft_test_${name.replaceAll("[^A-Za-z0-9_]", "_")}" +
       s"_${System.nanoTime()}"
@@ -1014,10 +996,10 @@ object Main {
       val test = new ConfigFile.Args(t, name)
       val events = test.objs("inject").map { e =>
         val o = new ConfigFile.Args(e, s"$name.inject")
-        TestEvent(o.str("host", null), o.str("service", null),
+        WireEvent(o.str("host", null), o.str("service", null),
           o.str("state", null), o.numOpt("metric"),
           new java.sql.Timestamp((o.num("time_s") * 1000).toLong),
-          o.numOpt("ttl"), o.strings("tags"))
+          o.numOpt("ttl"), o.strings("tags"), null)
       }
       input.addData(events)
       q.processAllAvailable()
@@ -1111,12 +1093,3 @@ object Main {
       running.done.await()
   }
 }
-
-/** An event a config test injects (`graft.Main test`): SEvent's fields
-  * plus tags, so streams using the tag/tagged-* ops are testable.
-  * Top-level, as generated code builds it through its constructor: a
-  * case class nested in `object Main` sends Spark to interpreted
-  * execution. */
-private[graft] final case class TestEvent(host: String, service: String,
-    state: String, metric: Option[Double], time: java.sql.Timestamp,
-    ttl: Option[Double], tags: Seq[String])

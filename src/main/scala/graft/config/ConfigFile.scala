@@ -14,20 +14,7 @@ import org.json4s.jackson.JsonMethods
 import graft.Core
 import graft.sinks.Sinks
 import graft.sources.FanoutBuffer
-import graft.streaming.{KeyedIndex, SEvent, WireEvent}
-
-/** [[SEvent]] plus one JSON-packed column carrying whatever non-SEvent
-  * columns a config pipeline accumulated before a stateful op — the
-  * typed shape [[ConfigFile.applyOp]]'s throttle rides through
-  * [[graft.streaming.StatefulOps.throttleBy]]. */
-case class SEventX(
-    host: String,
-    service: String,
-    state: String,
-    metric: Option[Double],
-    time: java.sql.Timestamp,
-    ttl: Option[Double],
-    extra: String)
+import graft.streaming.{KeyedIndex, StatefulOps, WireEvent}
 
 /** External config-file surface — the riemann.config analog (reference
   * `src/riemann/config.clj:444-467` `include`, `src/riemann/bin.clj:39-77`
@@ -316,14 +303,13 @@ object ConfigFile {
   /** Test hook: current static-cache entry count. */
   private[graft] def staticCacheSize: Int = staticCache.size
 
-  /** The tags column if the source carries one, else an empty array —
-    * a sourceless/stripped stream must not fail ANALYSIS on a tag op
-    * (the reference treats a tagless event as having no tags). */
-  private def tagsCol(df: DataFrame) =
-    if (df.columns.contains("tags")) col("tags")
+  /** The tags column if the source carries one (null read as empty),
+    * else an empty array — a sourceless/stripped stream must not fail
+    * ANALYSIS on a tag op (the reference treats a tagless event as
+    * having no tags). */
+  private def tags(df: DataFrame) =
+    if (df.columns.contains("tags")) coalesce(col("tags"), array())
     else lit(Array.empty[String])
-
-  private def tags(df: DataFrame) = coalesce(tagsCol(df), array())
 
   /** Stream side of the asof/enrich ops: the events' `time` timestamp
     * becomes seconds for the interval arithmetic, the stateless
@@ -471,33 +457,14 @@ object ConfigFile {
   }
 
   /** throttle: at most `n` events per (host, service) per `dt`-second
-    * event-time bucket (streams.clj:1102-1118). Columns beyond SEvent's
-    * fields (tags, projection output) ride through the typed round-trip
-    * packed as one JSON struct column and are restored after — a
-    * pipeline tag -> throttle -> tagged-any keeps its tags. */
+    * event-time bucket (streams.clj:1102-1118), over the frame's own
+    * rows: every column rides through with its own type. */
   private def throttle(df: DataFrame, a: Args): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val n = a.int("n")
-    val dt = a.long("dt")
-    val base = Seq("host", "service", "state", "metric", "time", "ttl")
-    val extras = df.columns.toSeq.filterNot(base.contains)
-    if (extras.isEmpty)
-      graft.streaming.StatefulOps.throttle(df.as[SEvent], n, dt).toDF()
-    else {
-      val extraSchema = org.apache.spark.sql.types.StructType(
-        extras.map(c => df.schema(c)))
-      val packed = df.select(base.map(col) :+
-        to_json(struct(extras.map(col): _*)).as("extra"): _*)
-        .as[SEventX]
-      graft.streaming.StatefulOps.throttleBy[SEventX](packed, n, dt,
-          e => (e.host, e.service), _.time)
-        .toDF()
-        .withColumn("extra", from_json(col("extra"), extraSchema))
-        .select(df.columns.toSeq.map(c =>
-          if (base.contains(c)) col(c)
-          else col("extra").getField(c).as(c)): _*)
-    }
+    val Seq(host, service, time) =
+      Seq("host", "service", "time").map(df.schema.fieldIndex)
+    StatefulOps.throttleBy[org.apache.spark.sql.Row](df, a.int("n"),
+      a.long("dt"), r => (r.getString(host), r.getString(service)),
+      _.getTimestamp(time))(Encoders.row(df.schema)).toDF()
   }
 
   private type Compile = (DataFrame, Args) => DataFrame
@@ -724,12 +691,8 @@ object ConfigFile {
     }),
     // the index keeps whole events, so a frame's tags and attributes
     // answer `tagged "x"` and attribute queries — the reference's index
-    // stores whole events (index.clj:58-126); a frame without them gets
-    // its six event columns back
-    op("index") { (df, a) =>
-      val out = KeyedIndex.wire(wireEvents(df), watermark(a)).toDF()
-      if (carriesWholeEvents(df)) out else out.drop("tags", "attributes")
-    }
+    // stores whole events (index.clj:58-126)
+    op("index")((df, a) => KeyedIndex(WireEvent.from(df), watermark(a)).toDF())
   )
 
   /** The op names [[applyOp]] knows. */
@@ -743,24 +706,6 @@ object ConfigFile {
     val compile = ops.getOrElse(name, throw new IllegalArgumentException(
       s"unknown op: $name (known: ${ops.keys.toSeq.sorted.mkString(", ")})"))
     compile(df, new Args(op, name))
-  }
-
-  /** Whether `df` carries the wire tags or attributes: the index op
-    * then keeps whole events ([[wireEvents]]) rather than [[SEvent]]s. */
-  def carriesWholeEvents(df: DataFrame): Boolean =
-    df.columns.contains("tags") || df.columns.contains("attributes")
-
-  /** The index op's input as whole events: the [[SEvent]] columns plus
-    * tags and attributes, absent or null containers read as empty. */
-  def wireEvents(df: DataFrame): Dataset[WireEvent] = {
-    val attrs =
-      if (df.columns.contains("attributes")) col("attributes") else lit(null)
-    df.select(col("host"), col("service"), col("state"), col("metric"),
-        col("time"), col("ttl"),
-        coalesce(tagsCol(df), array().cast("array<string>")).as("tags"),
-        coalesce(attrs.cast("map<string,string>"),
-          map().cast("map<string,string>")).as("attributes"))
-      .as[WireEvent](Encoders.product[WireEvent])
   }
 
   def compilePipeline(df: DataFrame, stream: JObject): DataFrame =
@@ -1073,7 +1018,7 @@ object ConfigFile {
         val sig = baseSig(s) +
           srcs.filter(fanned.contains).map("#fanout:" + _).mkString
         // a multi-source stream unions its legs BY NAME (transports
-        // decode to different column sets — a tcp SEvent leg and a
+        // decode to different column sets — a tcp event leg and a
         // graphite leg union into the superset, absent columns null):
         // one streaming query, one checkpoint, ONE state store for
         // every stateful op downstream — the property that splitting

@@ -3,25 +3,27 @@ package graft.query
 import java.util.regex.Pattern
 
 import graft.query.QueryLanguage._
-import graft.streaming.{SEvent, WireEvent}
+import graft.streaming.WireEvent
 
 /** The serving-path query evaluator: compiles a parsed query AST to a
-  * plain closure over [[SEvent]], so the in-memory index answers wire /
-  * ws / sse queries WITHOUT scheduling a Spark job per query — the
-  * reference answers from an in-memory map through an LRU cache of
+  * plain closure over [[WireEvent]], so the in-memory index answers
+  * wire / ws / sse queries WITHOUT scheduling a Spark job per query —
+  * the reference answers from an in-memory map through an LRU cache of
   * eval'd predicate fns (query.clj:193-216) and serves thousands of
   * queries per second; a per-query Catalyst plan caps out at tens.
   *
   * Semantics mirror [[QueryLanguage.compile]] against the
-  * [[WireEvent]] schema (host/service/state strings, metric/ttl
-  * doubles, time timestamp, tags array — `tagged "x"` is a real
-  * membership test; no attributes column, unknown fields are nil).
-  * The SEvent entry points evaluate with empty tags, matching compile
-  * on a tagless relation. EventPredicateSpec pins closure == Catalyst
-  * on randomized queries over randomized snapshots, and the Catalyst
-  * path stays on as the oracle. Three-valued logic is preserved: the
-  * node evaluator returns java.lang.Boolean with null for SQL NULL,
-  * coalesced to false at the top exactly like the compiled Column. */
+  * [[WireEvent]] schema: host/service/state strings, metric/ttl
+  * doubles, time timestamp, the tags array (`tagged "x"` is a real
+  * membership test) and the attributes map, through which a field
+  * outside the schema resolves (`paws = 4`; absent ≈ nil). A null
+  * container answers as the null column of a relation without it:
+  * `tags = nil` is true and `tagged "x"` false. EventPredicateSpec pins
+  * closure == Catalyst on randomized queries over randomized
+  * snapshots, and the Catalyst path stays on as the oracle.
+  * Three-valued logic is preserved: the node evaluator returns
+  * java.lang.Boolean with null for SQL NULL, coalesced to false at the
+  * top exactly like the compiled Column. */
 object EventPredicate {
 
   /** LRU over compiled closures, keyed by query text — the reference's
@@ -36,45 +38,24 @@ object EventPredicate {
         size() > MaxCached
     }
 
-  private def lift(e: SEvent): WireEvent =
-    // NULL tags/attributes, not empty: a tagless relation's Catalyst
-    // compile resolves `tags` to a null literal (so `tags = nil` is
-    // true, bare `tags` falsy) — empty containers would flip both
-    WireEvent(e.host, e.service, e.state, e.metric, e.time, e.ttl,
-      null, null)
-
   /** Attribute lookup for an unknown field — QueryLanguage.compile's
     * `attributes[name]` resolution (field absent ≈ nil). */
   private def attr(e: WireEvent, name: String): String =
     if (e.attributes == null) null else e.attributes.getOrElse(name, null)
 
-  /** Parse + compile for a tagless event, LRU-cached (`tagged` is
-    * false, as on any relation without a tags column). Throws
-    * ParseException on bad input (callers reply `parse error: …` like
-    * transport.clj). */
-  def apply(query: String): SEvent => Boolean = {
-    val tp = tagged(query)
-    e => tp(lift(e))
-  }
-
-  /** Same, for a caller that already parsed (the wire handler parses
-    * once for validation + the pkey fast path — don't parse again). */
-  def forAst(query: String, ast: Ast): SEvent => Boolean = {
-    val tp = taggedForAst(query, ast)
-    e => tp(lift(e))
-  }
-
-  /** The full evaluator over [[WireEvent]] — `tagged "x"` is a real
-    * membership test, like the reference index's whole-event queries. */
-  def tagged(query: String): WireEvent => Boolean = {
+  /** Parse + compile, LRU-cached. Throws ParseException on bad input
+    * (callers reply `parse error: …` like transport.clj). */
+  def apply(query: String): WireEvent => Boolean = {
     cache.synchronized {
       val hit = cache.get(query)
       if (hit != null) return hit
     }
-    taggedForAst(query, QueryLanguage.parse(query))
+    forAst(query, QueryLanguage.parse(query))
   }
 
-  def taggedForAst(query: String, ast: Ast): WireEvent => Boolean = {
+  /** Same, for a caller that already parsed (the wire handler parses
+    * once for validation + the pkey fast path — don't parse again). */
+  def forAst(query: String, ast: Ast): WireEvent => Boolean = {
     cache.synchronized {
       val hit = cache.get(query)
       if (hit != null) return hit
@@ -205,7 +186,7 @@ object EventPredicate {
   }
 
   /** Null-safe `<=>` with Catalyst's binary-comparison coercions over
-    * the value types SEvent can produce. */
+    * the value types a WireEvent can produce. */
   private def nullSafeEq(l: Val, r: Val): Boolean = (l, r) match {
     case (null, null) => true
     case (null, _) | (_, null) => false
@@ -262,7 +243,7 @@ object EventPredicate {
 
   private def isBoolAst(a: Ast): Boolean = a match {
     case _: BoolLit => true
-    case _ => false // no boolean columns in SEvent
+    case _ => false // no boolean columns in WireEvent
   }
 
   private def eq(l: Ast, r: Ast): WireEvent => java.lang.Boolean = {

@@ -5,21 +5,25 @@ import java.time.format.DateTimeFormatter
 
 import com.fasterxml.jackson.core.JsonFactory
 
-import graft.streaming.{SEvent, WireEvent}
+import graft.streaming.WireEvent
 
-/** Driver-side JSON rendering of one [[SEvent]], byte-identical to the
-  * Spark relation form the push path uses —
-  * `to_json(struct(host, service, state, metric, time, ttl))` with a
-  * UTC session timezone (what [[graft.Main]] sets) — so a ws/sse
-  * client sees ONE format whether a line came from the Spark-free
-  * index dump or a streamed micro-batch. Parity is pinned by
-  * EventPredicateSpec against actual `to_json` output.
+/** Driver-side JSON rendering of one [[WireEvent]], byte-identical to
+  * the Spark relation form the push path uses —
+  * `to_json(struct(host, service, state, metric, time, ttl, tags,
+  * attributes))` with a UTC session timezone (what [[graft.Main]] sets)
+  * — so a ws/sse client sees ONE format whether a line came from the
+  * Spark-free index dump or a streamed micro-batch. Parity is pinned
+  * by EventPredicateSpec against actual `to_json` output.
   *
   * Uses the same Jackson generator Spark's JacksonGenerator wraps, so
   * string escaping and double rendering agree by construction; the
   * timestamp format is to_json's write default
   * (`yyyy-MM-dd'T'HH:mm:ss.SSSXXX`, offset rendered `Z` at UTC) and
-  * null fields are omitted (to_json's default ignoreNullFields). */
+  * null fields are omitted (to_json's default ignoreNullFields): an
+  * event without tags or attributes renders the six-field shape, an
+  * empty list/map renders `[]`/`{}`. Attribute KEY ORDER inside the
+  * object follows map iteration and is unspecified beyond small maps,
+  * as with any JSON object. */
 object EventJson {
 
   private val factory = new JsonFactory()
@@ -27,21 +31,7 @@ object EventJson {
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
     .withZone(ZoneOffset.UTC)
 
-  def line(e: SEvent): String = render(e, None, None)
-
-  /** The whole-event form: a `tags` array then an `attributes` object
-    * after `ttl`, exactly where the index stream's to_json pushes
-    * place them (the column order the config index op selects) — an
-    * empty list/map renders `[]`/`{}`, as to_json does for non-null
-    * containers. Attribute KEY ORDER inside the object follows map
-    * iteration and is unspecified beyond small maps, as with any JSON
-    * object. */
-  def line(e: WireEvent): String =
-    render(e.toSEvent, Some(Option(e.tags).getOrElse(Seq.empty)),
-      Some(Option(e.attributes).getOrElse(Map.empty)))
-
-  private def render(e: SEvent, tags: Option[Seq[String]],
-      attributes: Option[Map[String, String]]): String = {
+  def line(e: WireEvent): String = {
     val sw = new java.io.StringWriter(96)
     val g = factory.createGenerator(sw)
     g.writeStartObject()
@@ -52,14 +42,14 @@ object EventJson {
     if (e.time != null)
       g.writeStringField("time", TsFmt.format(e.time.toInstant))
     e.ttl.foreach(t => g.writeNumberField("ttl", t))
-    tags.foreach { ts =>
+    if (e.tags != null) {
       g.writeArrayFieldStart("tags")
-      ts.foreach(g.writeString)
+      e.tags.foreach(g.writeString)
       g.writeEndArray()
     }
-    attributes.foreach { as =>
+    if (e.attributes != null) {
       g.writeObjectFieldStart("attributes")
-      as.foreach { case (k, v) =>
+      e.attributes.foreach { case (k, v) =>
         if (v == null) g.writeNullField(k) else g.writeStringField(k, v)
       }
       g.writeEndObject()

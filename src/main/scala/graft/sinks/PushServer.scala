@@ -25,8 +25,7 @@ import graft.query.QueryLanguage
 private[sinks] abstract class PushServer(val pubsub: Sinks.Pubsub, port: Int,
     snapshot: () => Option[DataFrame], host: String, threadPrefix: String,
     snapshotEvents: () => Option[Seq[graft.streaming.WireEvent]] =
-      () => None,
-    dumpLine: graft.streaming.WireEvent => String = EventJson.line) {
+      () => None) {
 
   private val server = new ServerSocket()
   server.bind(new InetSocketAddress(host, port))
@@ -191,10 +190,10 @@ private[sinks] abstract class PushServer(val pubsub: Sinks.Pubsub, port: Int,
     // remains for callers that only have a relation
     snapshotEvents() match {
       case Some(events) =>
-        val pred = query.map(graft.query.EventPredicate.tagged(_))
+        val pred = query.map(graft.query.EventPredicate(_))
         events.iterator
           .filter(e => pred.forall(_(e)))
-          .foreach(e => w.offer(encode(dumpLine(e))))
+          .foreach(e => w.offer(encode(EventJson.line(e))))
       case None =>
         snapshot().foreach { idx =>
           val hits = query.fold(idx)(q =>

@@ -134,6 +134,10 @@ object Sinks {
       }
   }
 
+  /** The columns of a [[graft.streaming.WireEvent]] frame, in order. */
+  private val EventColumns = Seq("host", "service", "state", "metric",
+    "time", "ttl", "tags", "attributes")
+
   /** Pubsub registry (reference src/riemann/pubsub.clj:35-109): named
     * channels fan out each published batch to subscribers; a
     * query-filtered subscription reproduces the websocket/SSE
@@ -156,40 +160,24 @@ object Sinks {
     def publish(channel: String, batch: DataFrame, batchId: Long = 0L): Unit = {
       val subscribers = subs.getOrElse(channel, Vector.empty)
       if (subscribers.isEmpty) return
-      // Fan-out fast path: when the batch is exactly the SEvent shape
-      // or the tagged index shape (SEvent + tags — what Main's index
-      // channel publishes) and several subscribers
-      // filter it, collect ONCE and evaluate each subscriber's query
-      // as the serving-path compiled closure — one Spark job per batch
-      // instead of one filter+collect job PER SUBSCRIBER per batch
-      // (1 000 ws clients = 1 000 jobs each micro-batch on the legacy
-      // path). Each subscriber still receives a DataFrame: a local
-      // relation Catalyst folds without submitting jobs. Closure ==
-      // Catalyst on these schemas is EventPredicateSpec's pinned
-      // parity (tagged/attribute membership included); any OTHER
-      // shape — renamed, reordered, or extra columns — falls back to
-      // the per-subscriber Catalyst filter.
-      val base = Seq("host", "service", "state", "metric", "time", "ttl")
-      val cols = batch.columns.toSeq
-      val hasTags = cols == base :+ "tags" ||
-        cols == base :+ "tags" :+ "attributes"
-      val hasAttrs = cols == base :+ "tags" :+ "attributes"
+      // Fan-out fast path: when the batch is exactly the event shape
+      // (the eight [[graft.streaming.WireEvent]] columns — what Main's
+      // index channel publishes) and several subscribers filter it,
+      // collect ONCE and evaluate each subscriber's query as the
+      // serving-path compiled closure — one Spark job per batch instead
+      // of one filter+collect job PER SUBSCRIBER per batch (1 000 ws
+      // clients = 1 000 jobs each micro-batch on the legacy path). Each
+      // subscriber still receives a DataFrame: a local relation
+      // Catalyst folds without submitting jobs. Closure == Catalyst on
+      // this schema is EventPredicateSpec's pinned parity (null, tag
+      // and attribute semantics included); any OTHER shape — renamed,
+      // reordered, missing or extra columns — falls back to the
+      // per-subscriber Catalyst filter.
       val fanout: Option[Seq[graft.streaming.WireEvent]] =
         if (subscribers.count(_._1.isDefined) >= 2 &&
-            (cols == base || hasTags))
+            batch.columns.toSeq == EventColumns)
           try {
-            // NULL (not empty) containers for columns the batch lacks:
-            // Catalyst on the original schema resolves absent fields to
-            // null literals, so `tags = nil` must stay true there
-            val withTags =
-              if (hasTags) batch
-              else batch.withColumn("tags",
-                lit(null).cast("array<string>"))
-            val typed =
-              if (hasAttrs) withTags
-              else withTags.withColumn("attributes",
-                expr("cast(null as map<string,string>)"))
-            Some(typed.as[graft.streaming.WireEvent](
+            Some(batch.as[graft.streaming.WireEvent](
               org.apache.spark.sql.Encoders
                 .product[graft.streaming.WireEvent])
               .collect().toSeq)
@@ -205,16 +193,15 @@ object Sinks {
             case (Some(events), _) =>
               val hits = q match {
                 case Some(query) =>
-                  events.filter(graft.query.EventPredicate.tagged(query))
+                  events.filter(graft.query.EventPredicate(query))
                 case None => events
               }
               batch.sparkSession.createDataFrame(
                 java.util.Arrays.asList(hits.map(e =>
-                  org.apache.spark.sql.Row(Seq(e.host, e.service, e.state,
+                  org.apache.spark.sql.Row(e.host, e.service, e.state,
                     e.metric.map(Double.box).orNull, e.time,
-                    e.ttl.map(Double.box).orNull) ++
-                    (if (hasTags) Seq(e.tags) else Nil) ++
-                    (if (hasAttrs) Seq(e.attributes) else Nil): _*)): _*),
+                    e.ttl.map(Double.box).orNull, e.tags,
+                    e.attributes)): _*),
                 batch.schema)
             case (None, Some(query)) => batch.filter(
               graft.query.QueryLanguage.predicate(query, batch.schema))

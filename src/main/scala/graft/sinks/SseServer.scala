@@ -25,10 +25,8 @@ class SseServer(pubsub: Sinks.Pubsub, port: Int,
     snapshot: () => Option[DataFrame] = () => None,
     host: String = "127.0.0.1",
     snapshotEvents: () => Option[Seq[graft.streaming.WireEvent]] =
-      () => None,
-    dumpLine: graft.streaming.WireEvent => String = EventJson.line)
-    extends PushServer(pubsub, port, snapshot, host, "sse", snapshotEvents,
-      dumpLine) {
+      () => None)
+    extends PushServer(pubsub, port, snapshot, host, "sse", snapshotEvents) {
 
   private def sseFrame(json: String): Array[Byte] =
     s"data: $json\n\n".getBytes(StandardCharsets.UTF_8)

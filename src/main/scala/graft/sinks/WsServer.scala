@@ -29,10 +29,8 @@ class WsServer(pubsub: Sinks.Pubsub, port: Int,
     onEvent: String => Unit = _ => (),
     host: String = "127.0.0.1",
     snapshotEvents: () => Option[Seq[graft.streaming.WireEvent]] =
-      () => None,
-    dumpLine: graft.streaming.WireEvent => String = EventJson.line)
-    extends PushServer(pubsub, port, snapshot, host, "ws", snapshotEvents,
-      dumpLine) {
+      () => None)
+    extends PushServer(pubsub, port, snapshot, host, "ws", snapshotEvents) {
 
   private val WsGuid = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 

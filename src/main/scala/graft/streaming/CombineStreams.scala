@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object CombineStreams {
 
   /** One emitted coalesce snapshot: the remembered set. */
-  case class Snapshot(events: Seq[SEvent], emitted_at: java.sql.Timestamp)
+  case class Snapshot(events: Seq[WireEvent], emitted_at: java.sql.Timestamp)
 
   /** `coalesce` (streams.clj:1187-1241): remembers the latest event per
     * [service, host] within each `scope` key and emits the whole
@@ -24,14 +24,14 @@ object CombineStreams {
     * once and dropped. `scope` keys partition the state (the `by`
     * composition from the reference docstring); use a constant for the
     * reference's global form. */
-  def coalesce(events: Dataset[SEvent], scope: SEvent => String = _ => "")
+  def coalesce(events: Dataset[WireEvent], scope: WireEvent => String = _ => "")
       : Dataset[Snapshot] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(scope)
-      .flatMapGroupsWithState[Map[(String, String), SEvent], Snapshot](
+      .flatMapGroupsWithState[Map[(String, String), WireEvent], Snapshot](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (_, rows, st: GroupState[Map[(String, String), SEvent]]) =>
+        case (_, rows, st: GroupState[Map[(String, String), WireEvent]]) =>
           var m = st.getOption.getOrElse(Map.empty)
           var maxT = 0L
           for (e <- rows) {
@@ -58,7 +58,7 @@ object CombineStreams {
 
   /** One emitted project vector: slot i = latest event matching
     * predicate i (None while unmatched). */
-  case class Basis(slots: Seq[Option[SEvent]])
+  case class Basis(slots: Seq[Option[WireEvent]])
 
   /** `project` (streams.clj:2032-2101): N predicates, state = latest
     * match per slot, the whole vector re-emitted on any update.
@@ -67,21 +67,21 @@ object CombineStreams {
     * vs the max event time seen — is emitted ONCE as the stripped
     * `(expire event)` copy (host+service only, state="expired",
     * time=now; common.clj:119-124) and the retained slot cleared. */
-  def project(events: Dataset[SEvent], preds: Seq[SEvent => Boolean])
+  def project(events: Dataset[WireEvent], preds: Seq[WireEvent => Boolean])
       : Dataset[Basis] = {
     val spark = events.sparkSession
     import spark.implicits._
     implicit val basisEnc = Encoders.product[Basis]
     // state = (slots, max event time seen — the event-time "now")
     events.groupByKey(_ => "")
-      .flatMapGroupsWithState[(Seq[Option[SEvent]], Long), Basis](
+      .flatMapGroupsWithState[(Seq[Option[WireEvent]], Long), Basis](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (_, rows, st: GroupState[(Seq[Option[SEvent]], Long)]) =>
+        case (_, rows, st: GroupState[(Seq[Option[WireEvent]], Long)]) =>
           var (slots, now) = st.getOption
-            .getOrElse((Seq.fill(preds.size)(None: Option[SEvent]), 0L))
-          def isExpired(e: SEvent) = e.state == "expired" ||
+            .getOrElse((Seq.fill(preds.size)(None: Option[WireEvent]), 0L))
+          def isExpired(e: WireEvent) = e.state == "expired" ||
             e.ttl.exists(t => now - e.time.getTime > t * 1000)
-          def expireCopy(e: SEvent) = SEvent(e.host, e.service, "expired",
+          def expireCopy(e: WireEvent) = SEvent(e.host, e.service, "expired",
             None, new java.sql.Timestamp(now), None)
           val out = Seq.newBuilder[Basis]
           for (e <- rows.toSeq.sortBy(_.time.getTime)) {
@@ -107,17 +107,17 @@ object CombineStreams {
     * last event with the filler metric — realized as an event-time
     * timer per [host, service] that re-arms and back-fills every
     * missing interval up to the watermark. */
-  def fillIn(events: Dataset[SEvent], intervalS: Long, fillMetric: Double,
-      watermarkDelay: String = "0 seconds"): Dataset[SEvent] = {
+  def fillIn(events: Dataset[WireEvent], intervalS: Long, fillMetric: Double,
+      watermarkDelay: String = "0 seconds"): Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
       .withWatermark("time", watermarkDelay)
       .groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[SEvent, SEvent](
+      .flatMapGroupsWithState[WireEvent, WireEvent](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((host, service), rows, st: GroupState[SEvent]) =>
-          val out = Seq.newBuilder[SEvent]
+        case ((host, service), rows, st: GroupState[WireEvent]) =>
+          val out = Seq.newBuilder[WireEvent]
           if (st.hasTimedOut) {
             // synthesize fillers for every interval between the last
             // event and the watermark, then re-arm. "Stops inserting

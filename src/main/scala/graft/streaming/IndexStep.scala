@@ -70,18 +70,18 @@ object IndexStep {
   private def lp(parts: Seq[String]): String =
     parts.map(p => s"${p.length}:$p").mkString(",")
 
-  private val bySEventKey: Ordering[WireEvent] =
-    Ordering.by(e => SEvent.totalKey(e.toSEvent))
+  private val byTotalKey: Ordering[WireEvent] = Ordering.by(SEvent.totalKey)
 
   /** The latest-wins order over same-key events, shared by the index
     * step and the served index (graft.Main.ServedIndex):
     * [[SEvent.totalKey]], then the tag list, then the sorted
-    * attributes. The two containers are rendered and compared only on
-    * an exact tie of the SEvent key. The greatest event wins; an
-    * exact tie on every component is the same event. */
+    * attributes, a null container read as empty. The two containers
+    * are rendered and compared only on an exact tie of the total key.
+    * The greatest event wins; an exact tie on every component is the
+    * same event. */
   val latestWins: Ordering[WireEvent] = new Ordering[WireEvent] {
     def compare(a: WireEvent, b: WireEvent): Int = {
-      val c = bySEventKey.compare(a, b)
+      val c = byTotalKey.compare(a, b)
       if (c != 0) c
       else {
         def tags(e: WireEvent) = if (e.tags == null) "" else lp(e.tags)
@@ -105,7 +105,7 @@ object IndexStep {
     * tags under their own names, every field under [[All]].
     * riemann's keep-keys is select-keys over the EVENT MAP, where
     * attributes are top-level keys, so single attribute names can be
-    * kept. */
+    * kept. An absent (null) container stays absent. */
   def expiredCopy(cur: WireEvent, atMs: Long,
       keepKeys: Set[String]): WireEvent = {
     val keepAll = keepKeys == All
@@ -113,9 +113,11 @@ object IndexStep {
       time = new java.sql.Timestamp(atMs),
       metric = if (keepAll || keepKeys("metric")) cur.metric else None,
       ttl = if (keepAll || keepKeys("ttl")) cur.ttl else None,
-      tags = if (keepAll || keepKeys("tags")) cur.tags else Seq.empty,
+      tags =
+        if (keepAll || keepKeys("tags") || cur.tags == null) cur.tags
+        else Seq.empty,
       attributes =
-        if (keepAll) cur.attributes
+        if (keepAll || cur.attributes == null) cur.attributes
         else cur.attributes.filter(kv => keepKeys(kv._1)))
   }
 }
@@ -126,25 +128,12 @@ object IndexStep {
   * tagged with that state to get `delete-from-index`
   * (config.clj:258-271). */
 object KeyedIndex {
-  /** Whole events in, whole events out. */
-  def wire(events: Dataset[WireEvent], watermarkDelay: String = "0 seconds",
+  def apply(events: Dataset[WireEvent], watermarkDelay: String = "0 seconds",
       keepKeys: Set[String] = IndexStep.DefaultKeep,
       deleteState: Option[String] = None): Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     KeyedProcessor(events, watermarkDelay,
       new IndexStep(keepKeys, deleteState))(e => (e.host, e.service))
-  }
-
-  /** [[SEvent]]s in and out: each indexes as a whole event without tags
-    * or attributes. */
-  def apply(events: Dataset[SEvent], watermarkDelay: String = "0 seconds",
-      keepKeys: Set[String] = IndexStep.DefaultKeep,
-      deleteState: Option[String] = None): Dataset[SEvent] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    wire(events.map(e => WireEvent(e.host, e.service, e.state, e.metric,
-      e.time, e.ttl, Seq.empty, Map.empty)), watermarkDelay, keepKeys,
-      deleteState).map(_.toSEvent)
   }
 }

@@ -31,12 +31,12 @@ class ReinjectLoop(maxBatchRows: Int = ReinjectLoop.DefaultMaxBatchRows)(
 
   require(maxBatchRows > 0, s"maxBatchRows must be > 0, got $maxBatchRows")
 
-  private val loop = MemoryStream[SEvent]
+  private val loop = MemoryStream[WireEvent]
   private var lastRun: String = null
   private var lastBatch = Long.MinValue
 
   /** The loopback source: union this with the primary input. */
-  def source: Dataset[SEvent] = loop.toDS()
+  def source: Dataset[WireEvent] = loop.toDS()
 
   /** The loopback sink: attach via foreachBatch / [[Sinks.attach]].
     * foreachBatch is at-least-once — a failed/restarted batch replays
@@ -54,7 +54,7 @@ class ReinjectLoop(maxBatchRows: Int = ReinjectLoop.DefaultMaxBatchRows)(
           // limit(cap + 1) bounds driver memory even on the failing
           // path: we learn "over cap" from one extra row, not from
           // materializing the runaway batch
-          val rows = batch.limit(maxBatchRows + 1).as[SEvent].collect()
+          val rows = WireEvent.from(batch.limit(maxBatchRows + 1)).collect()
           if (rows.length > maxBatchRows)
             throw new IllegalStateException(
               s"reinject batch $batchId exceeds maxBatchRows=$maxBatchRows: " +

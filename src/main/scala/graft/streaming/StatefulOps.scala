@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * trigger's rows in event-time order and keeps O(1) state per key. */
 object StatefulOps {
 
-  private def sorted(rows: Iterator[SEvent]): Seq[SEvent] =
+  private def sorted(rows: Iterator[WireEvent]): Seq[WireEvent] =
     rows.toSeq.sortBy(e => e.time.getTime)
 
   /** `changed-state` (streams.clj:1614-1659), streaming: pass events
@@ -17,15 +17,15 @@ object StatefulOps {
     * (seen-anything, previous-state) so a null state is remembered too —
     * consecutive null states are unchanged, matching the batch form's
     * null-safe `<=>`. */
-  def changedState(events: Dataset[SEvent]): Dataset[SEvent] = {
+  def changedState(events: Dataset[WireEvent]): Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[(Boolean, String), SEvent](
+      .flatMapGroupsWithState[(Boolean, String), WireEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (_, rows, st: GroupState[(Boolean, String)]) =>
           var (seen, prev) = st.getOption.getOrElse((false, null: String))
-          val out = Seq.newBuilder[SEvent]
+          val out = Seq.newBuilder[WireEvent]
           for (e <- sorted(rows)) {
             if (!seen || !java.util.Objects.equals(prev, e.state)) out += e
             seen = true
@@ -39,15 +39,16 @@ object StatefulOps {
   /** `ewma-timeless r` (streams.clj:961-977), streaming: zero-init
     * accumulator, m ← (1−r)·m + r·x per event (nil metrics skipped),
     * each event re-emitted with the running average as its metric. */
-  def ewmaTimeless(events: Dataset[SEvent], r: Double): Dataset[SEvent] = {
+  def ewmaTimeless(events: Dataset[WireEvent], r: Double)
+      : Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[Double, SEvent](
+      .flatMapGroupsWithState[Double, WireEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (_, rows, st: GroupState[Double]) =>
           var m = st.getOption.getOrElse(0.0)
-          val out = Seq.newBuilder[SEvent]
+          val out = Seq.newBuilder[WireEvent]
           for (e <- sorted(rows)) {
             e.metric.foreach(x => m = (1 - r) * m + r * x)
             out += e.copy(metric = Some(m))
@@ -63,15 +64,15 @@ object StatefulOps {
     * nil metric or a zero time delta are skipped, matching the batch
     * form's `time_s <> prev_time` guard. State = the previous
     * (time ms, metric). */
-  def ddt(events: Dataset[SEvent]): Dataset[SEvent] = {
+  def ddt(events: Dataset[WireEvent]): Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[(Long, Double), SEvent](
+      .flatMapGroupsWithState[(Long, Double), WireEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (_, rows, st: GroupState[(Long, Double)]) =>
           var prev = st.getOption
-          val out = Seq.newBuilder[SEvent]
+          val out = Seq.newBuilder[WireEvent]
           for (e <- sorted(rows); x <- e.metric) {
             val t = e.time.getTime
             prev match {
@@ -96,18 +97,18 @@ object StatefulOps {
   /** `fixed-event-window n` (streams.clj:305-320), streaming: buffer n
     * events per key, emit the full vector when the nth arrives. State =
     * the partial buffer (bounded by n). */
-  def fixedEventWindow(events: Dataset[SEvent], n: Int)
-      : Dataset[Seq[SEvent]] = {
+  def fixedEventWindow(events: Dataset[WireEvent], n: Int)
+      : Dataset[Seq[WireEvent]] = {
     require(n > 0, s"fixed-event-window needs n > 0 (got $n): " +
       "a non-positive n would buffer per-key state forever without emitting")
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[Seq[SEvent], Seq[SEvent]](
+      .flatMapGroupsWithState[Seq[WireEvent], Seq[WireEvent]](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (_, rows, st: GroupState[Seq[SEvent]]) =>
+        case (_, rows, st: GroupState[Seq[WireEvent]]) =>
           var buf = st.getOption.getOrElse(Seq.empty)
-          val out = Seq.newBuilder[Seq[SEvent]]
+          val out = Seq.newBuilder[Seq[WireEvent]]
           for (e <- sorted(rows)) {
             buf :+= e
             if (buf.length >= n) { out += buf; buf = Seq.empty }
@@ -120,16 +121,16 @@ object StatefulOps {
   /** `moving-event-window n` (streams.clj:292-303), streaming: emit the
     * window of the last ≤ n events on every arrival. State = the ring
     * buffer (bounded by n). */
-  def movingEventWindow(events: Dataset[SEvent], n: Int)
-      : Dataset[Seq[SEvent]] = {
+  def movingEventWindow(events: Dataset[WireEvent], n: Int)
+      : Dataset[Seq[WireEvent]] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[Seq[SEvent], Seq[SEvent]](
+      .flatMapGroupsWithState[Seq[WireEvent], Seq[WireEvent]](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (_, rows, st: GroupState[Seq[SEvent]]) =>
+        case (_, rows, st: GroupState[Seq[WireEvent]]) =>
           var buf = st.getOption.getOrElse(Seq.empty)
-          val out = Seq.newBuilder[Seq[SEvent]]
+          val out = Seq.newBuilder[Seq[WireEvent]]
           for (e <- sorted(rows)) {
             buf = (buf :+ e).takeRight(n)
             out += buf
@@ -144,16 +145,17 @@ object StatefulOps {
     * seconds of the maximum time seen (the horizon). Events at or
     * behind horizon − n are dropped without emission — the reference's
     * late-data rule. State = (horizon ms, pruned buffer). */
-  def movingTimeWindow(events: Dataset[SEvent], nSeconds: Long)
-      : Dataset[Seq[SEvent]] = {
+  def movingTimeWindow(events: Dataset[WireEvent], nSeconds: Long)
+      : Dataset[Seq[WireEvent]] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[(Long, Seq[SEvent]), Seq[SEvent]](
+      .flatMapGroupsWithState[(Long, Seq[WireEvent]), Seq[WireEvent]](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (_, rows, st: GroupState[(Long, Seq[SEvent])]) =>
-          var (horizon, buf) = st.getOption.getOrElse((Long.MinValue, Seq.empty[SEvent]))
-          val out = Seq.newBuilder[Seq[SEvent]]
+        case (_, rows, st: GroupState[(Long, Seq[WireEvent])]) =>
+          var (horizon, buf) =
+            st.getOption.getOrElse((Long.MinValue, Seq.empty[WireEvent]))
+          val out = Seq.newBuilder[Seq[WireEvent]]
           for (e <- sorted(rows)) {
             val t = e.time.getTime
             if (nSeconds > 0 && (horizon == Long.MinValue ||
@@ -175,13 +177,13 @@ object StatefulOps {
     * is emitted once as an expired copy (the reference's demotion
     * mirror, mirroring `dual`). State = the totals map, partitioned by
     * `scope` (constant scope = the reference's global top). */
-  def top(events: Dataset[SEvent], k: Int,
-      scope: SEvent => String = _ => "",
-      maxKeys: Int = 10000): Dataset[SEvent] = {
+  def top(events: Dataset[WireEvent], k: Int,
+      scope: WireEvent => String = _ => "",
+      maxKeys: Int = 10000): Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(scope)
-      .flatMapGroupsWithState[Map[(String, String), Double], SEvent](
+      .flatMapGroupsWithState[Map[(String, String), Double], WireEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (_, rows, st: GroupState[Map[(String, String), Double]]) =>
           var totals = st.getOption.getOrElse(Map.empty)
@@ -194,7 +196,7 @@ object StatefulOps {
           def minTotal = if (topSet.isEmpty) Double.NegativeInfinity
             else topSet.map(totals).min
           var threshold = minTotal
-          val out = Seq.newBuilder[SEvent]
+          val out = Seq.newBuilder[WireEvent]
           for (e <- sorted(rows)) {
             val key = (e.host, e.service)
             val m = e.metric.getOrElse(0.0)
@@ -244,18 +246,18 @@ object StatefulOps {
     * the reference uses the wall clock (`unix-time`), which would race
     * the watermark here; event-time keeps goldens deterministic.
     * State is bounded at k entries per scope by construction. */
-  def topLatest(events: Dataset[SEvent], k: Int, demote: Boolean = false,
-      scope: SEvent => String = _ => ""): Dataset[SEvent] = {
+  def topLatest(events: Dataset[WireEvent], k: Int, demote: Boolean = false,
+      scope: WireEvent => String = _ => ""): Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def expireOf(e: SEvent): SEvent =
+    def expireOf(e: WireEvent): WireEvent =
       SEvent(e.host, e.service, "expired", None, e.time, None)
     events.groupByKey(scope)
-      .flatMapGroupsWithState[Map[(String, String), Double], SEvent](
+      .flatMapGroupsWithState[Map[(String, String), Double], WireEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (_, rows, st: GroupState[Map[(String, String), Double]]) =>
           var top = st.getOption.getOrElse(Map.empty[(String, String), Double])
-          val out = Seq.newBuilder[SEvent]
+          val out = Seq.newBuilder[WireEvent]
           for (e <- sorted(rows)) {
             val ekey = (e.host, e.service)
             val v = if (e.state == "expired") None else e.metric
@@ -293,16 +295,16 @@ object StatefulOps {
   /** `sreduce f init` (streams.clj:206-250), streaming: running reduce
     * over the metric with visible intermediates — each event re-emitted
     * carrying the accumulator. */
-  def sreduce(events: Dataset[SEvent], init: Double, f: (Double, Double) => Double)
-      : Dataset[SEvent] = {
+  def sreduce(events: Dataset[WireEvent], init: Double,
+      f: (Double, Double) => Double): Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[Double, SEvent](
+      .flatMapGroupsWithState[Double, WireEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (_, rows, st: GroupState[Double]) =>
           var acc = st.getOption.getOrElse(init)
-          val out = Seq.newBuilder[SEvent]
+          val out = Seq.newBuilder[WireEvent]
           for (e <- sorted(rows)) {
             e.metric.foreach(x => acc = f(acc, x))
             out += e.copy(metric = Some(acc))
@@ -315,18 +317,18 @@ object StatefulOps {
   /** `throttle n dt` (streams.clj:1102-1118), streaming: at most n
     * events per key per dt-second event-time bucket. State = (bucket,
     * count). */
-  def throttle(events: Dataset[SEvent], n: Int, dtSeconds: Long)
-      : Dataset[SEvent] = {
+  def throttle(events: Dataset[WireEvent], n: Int, dtSeconds: Long)
+      : Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
-    throttleBy[SEvent](events, n, dtSeconds,
+    throttleBy[WireEvent](events, n, dtSeconds,
       e => (e.host, e.service), _.time)
   }
 
   /** Generic throttle over any typed row: same (bucket, count) state,
-    * caller supplies the key and the event-time accessor. Lets config
-    * pipelines carry columns SEvent lacks (tags, projection output)
-    * through the stateful op instead of dropping them. */
+    * caller supplies the key and the event-time accessor. The config
+    * `throttle` op runs it on a frame's own rows, so every column rides
+    * through with its own type. */
   def throttleBy[T](events: Dataset[T], n: Int, dtSeconds: Long,
       key: T => (String, String), time: T => java.sql.Timestamp)
       (implicit te: org.apache.spark.sql.Encoder[T]): Dataset[T] = {

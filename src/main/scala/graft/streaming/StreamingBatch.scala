@@ -15,11 +15,11 @@ object StreamingBatch {
     * event to deadline; an out-of-order arrival that is still inside
     * the watermark joins the open batch, so the EVENT-time span can
     * stretch up to dt + the watermark delay. */
-  case class Flush(key: String, events: Seq[SEvent], by_timer: Boolean,
+  case class Flush(key: String, events: Seq[WireEvent], by_timer: Boolean,
       emitted_at: java.sql.Timestamp)
 
-  def apply(events: Dataset[SEvent], n: Int, dtSeconds: Long,
-      scope: SEvent => String = _.service,
+  def apply(events: Dataset[WireEvent], n: Int, dtSeconds: Long,
+      scope: WireEvent => String = _.service,
       watermarkDelay: String = null): Dataset[Flush] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -30,19 +30,19 @@ object StreamingBatch {
   /** State: the open batch's event count; buffer: its events; deadline:
     * its dt timer, armed by its first event. */
   private def step(n: Int, dtSeconds: Long)
-      : Step[String, SEvent, Int, SEvent, Flush] =
-      new Step[String, SEvent, Int, SEvent, Flush] {
+      : Step[String, WireEvent, Int, WireEvent, Flush] =
+      new Step[String, WireEvent, Int, WireEvent, Flush] {
     private val dtMs = dtSeconds * 1000
 
     def state: (String, Encoder[Int]) = ("count", Encoders.scalaInt)
-    override def buffer: Option[(String, Encoder[SEvent])] =
-      Some(("buf", Encoders.product[SEvent]))
-    def order: Ordering[SEvent] = Ordering.by(_.time.getTime)
+    override def buffer: Option[(String, Encoder[WireEvent])] =
+      Some(("buf", Encoders.product[WireEvent]))
+    def order: Ordering[WireEvent] = Ordering.by(_.time.getTime)
 
     /** Deliver the buffer and close the batch: a size flush also retires
       * the batch's dt timer. */
-    private def flush(key: String, at: Keyed[Int, SEvent], stampMs: Long,
-        byTimer: Boolean): (Keyed[Int, SEvent], Flush) = {
+    private def flush(key: String, at: Keyed[Int, WireEvent], stampMs: Long,
+        byTimer: Boolean): (Keyed[Int, WireEvent], Flush) = {
       val events = at.buffer.all
       // stamp at the batch's max event time (a late-but-on-time arrival
       // can be buffered after a newer one) or the timer's watermark
@@ -52,8 +52,8 @@ object StreamingBatch {
         Flush(key, events, byTimer, stamp))
     }
 
-    def rows(key: String, at: Keyed[Int, SEvent], rows: Seq[SEvent],
-        wm: Long): (Keyed[Int, SEvent], Seq[Flush]) = {
+    def rows(key: String, at: Keyed[Int, WireEvent], rows: Seq[WireEvent],
+        wm: Long): (Keyed[Int, WireEvent], Seq[Flush]) = {
       val out = Vector.newBuilder[Flush]
       val next = rows.foldLeft(at) { (at, e) =>
         val t = e.time.getTime
@@ -70,8 +70,8 @@ object StreamingBatch {
       (next, out.result())
     }
 
-    def timer(key: String, at: Keyed[Int, SEvent],
-        wm: Long): (Keyed[Int, SEvent], Seq[Flush]) = {
+    def timer(key: String, at: Keyed[Int, WireEvent],
+        wm: Long): (Keyed[Int, WireEvent], Seq[Flush]) = {
       val (closed, f) = flush(key, at, wm, byTimer = true)
       (closed, Seq(f))
     }

@@ -3,53 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** A streaming event row for the stateful operators: `time` is the
-  * event-time column (watermarkable), `time_s` its epoch seconds. */
-case class SEvent(
-    host: String,
-    service: String,
-    state: String,
-    metric: Option[Double],
-    time: java.sql.Timestamp,
-    ttl: Option[Double])
-
-/** [[SEvent]] plus the wire tags AND custom attributes — the
-  * whole-event shape the index path carries so `tagged "x"` and
-  * attribute queries (`paws = 4`) work against the SERVED index like
-  * the reference's (whose index stores whole events,
-  * index.clj:58-126). Flat fields so `.as[WireEvent]` maps the
-  * decoded wire columns directly. */
-case class WireEvent(
-    host: String,
-    service: String,
-    state: String,
-    metric: Option[Double],
-    time: java.sql.Timestamp,
-    ttl: Option[Double],
-    tags: Seq[String],
-    attributes: Map[String, String]) {
-  def toSEvent: SEvent = SEvent(host, service, state, metric, time, ttl)
-}
-
-object SEvent {
-  /** TOTAL order over every non-key field for same-key latest-wins
-    * ties — (time, metric presence, metric, state, ttl presence, ttl).
-    * Both index forms ([[StreamingIndex]], and [[IndexStep]] through
-    * [[IndexStep.latestWins]]) break ties with THIS key so shuffle
-    * arrival order can never decide the winner and the two
-    * implementations agree event-for-event: metric
-    * None sorts below Some(0.0) instead of conflating with it, and
-    * events equal on (time, metric, state) but differing in ttl still
-    * land deterministically. State needs the same presence component
-    * as the Options: the wire decoder emits null state for events
-    * lacking the field, and null must not conflate with "". */
-  def totalKey(e: SEvent)
-      : (Long, Boolean, Double, Boolean, String, Boolean, Double) =
-    (e.time.getTime, e.metric.isDefined, e.metric.getOrElse(0.0),
-      e.state != null, Option(e.state).getOrElse(""),
-      e.ttl.isDefined, e.ttl.getOrElse(0.0))
-}
-
 /** The riemann index as Structured Streaming keyed state
   * (reference src/riemann/index.clj:58-126): latest event per
   * [host, service], with the reaper (src/riemann/core.clj:276-309,
@@ -67,16 +20,16 @@ object StreamingIndex {
     * key per trigger (the index "insert" pubsub channel) plus
     * `state="expired"` rows when a key's TTL lapses past the watermark
     * (the reaper channel). */
-  def apply(events: Dataset[SEvent], watermarkDelay: String = "0 seconds")
-      : Dataset[SEvent] = {
+  def apply(events: Dataset[WireEvent], watermarkDelay: String = "0 seconds")
+      : Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
       .withWatermark("time", watermarkDelay)
       .groupByKey(e => (e.host, e.service))
-      .flatMapGroupsWithState[SEvent, SEvent](
+      .flatMapGroupsWithState[WireEvent, WireEvent](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((host, service), rows, state: GroupState[SEvent]) =>
+        case ((host, service), rows, state: GroupState[WireEvent]) =>
           if (state.hasTimedOut) {
             // reaper: emit the expired copy once, then forget the key
             // (expire sets state="expired", time=now ≈ watermark;

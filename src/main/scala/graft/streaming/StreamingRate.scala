@@ -33,8 +33,8 @@ object StreamingRate {
       carryTtl: Double)
 
   /** Keyed by `scope` (riemann composes `(by [:service] (rate ...))`). */
-  def apply(events: Dataset[SEvent], dtSeconds: Long,
-      scope: SEvent => String = _.service,
+  def apply(events: Dataset[WireEvent], dtSeconds: Long,
+      scope: WireEvent => String = _.service,
       watermarkDelay: String = "0 seconds"): Dataset[RateEmission] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -42,12 +42,12 @@ object StreamingRate {
   }
 
   private def step(dtSeconds: Long)
-      : Step[String, SEvent, Open, Unit, RateEmission] =
-      new Step[String, SEvent, Open, Unit, RateEmission] {
+      : Step[String, WireEvent, Open, Unit, RateEmission] =
+      new Step[String, WireEvent, Open, Unit, RateEmission] {
     private val dtMs = dtSeconds * 1000
 
     def state: (String, Encoder[Open]) = ("open", Encoders.product[Open])
-    def order: Ordering[SEvent] = Ordering.by(_.time.getTime)
+    def order: Ordering[WireEvent] = Ordering.by(_.time.getTime)
 
     /** Decayed ttl for the interval starting `startMs`: Some(v) counts
       * down from the carried event's interval; None = never expires. */
@@ -68,7 +68,7 @@ object StreamingRate {
     private def fillLive(o: Open, startMs: Long): Boolean =
       decayedTtl(o, startMs).forall(_ > 0)
 
-    def rows(key: String, at: Keyed[Open, Unit], rows: Seq[SEvent],
+    def rows(key: String, at: Keyed[Open, Unit], rows: Seq[WireEvent],
         wm: Long): (Keyed[Open, Unit], Seq[RateEmission]) = {
       val out = Vector.newBuilder[RateEmission]
       val open = rows.foldLeft(at.state) { (cur, e) =>

@@ -19,14 +19,14 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 object StreamingRollup {
   /** One rollup delivery: a pass-through event (`rolled = false`, one
     * element) or the period-end buffered vector (`rolled = true`). */
-  case class Emission(key: String, events: Seq[SEvent], rolled: Boolean,
+  case class Emission(key: String, events: Seq[WireEvent], rolled: Boolean,
       emitted_at: java.sql.Timestamp)
 
   /** Key the rollup by `scope` (riemann composes `(by [:service] (rollup
     * ...))`; service is the usual alerting scope). Watermark delay
     * defaults to the period so late stragglers still buffer. */
-  def apply(events: Dataset[SEvent], n: Int, dtSeconds: Long,
-      scope: SEvent => String = _.service,
+  def apply(events: Dataset[WireEvent], n: Int, dtSeconds: Long,
+      scope: WireEvent => String = _.service,
       watermarkDelay: String = null): Dataset[Emission] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -37,17 +37,17 @@ object StreamingRollup {
   /** State: (period start ms, events passed this period); buffer: the
     * period's overflow, only ever appended to until it is delivered. */
   private def step(n: Int, dtSeconds: Long)
-      : Step[String, SEvent, (Long, Int), SEvent, Emission] =
-      new Step[String, SEvent, (Long, Int), SEvent, Emission] {
+      : Step[String, WireEvent, (Long, Int), WireEvent, Emission] =
+      new Step[String, WireEvent, (Long, Int), WireEvent, Emission] {
     private val dtMs = dtSeconds * 1000
 
     def state: (String, Encoder[(Long, Int)]) =
       ("period", Encoders.product[(Long, Int)])
-    override def buffer: Option[(String, Encoder[SEvent])] =
-      Some(("buf", Encoders.product[SEvent]))
-    def order: Ordering[SEvent] = Ordering.by(_.time.getTime)
+    override def buffer: Option[(String, Encoder[WireEvent])] =
+      Some(("buf", Encoders.product[WireEvent]))
+    def order: Ordering[WireEvent] = Ordering.by(_.time.getTime)
 
-    private def drain(key: String, buf: Buffer[SEvent],
+    private def drain(key: String, buf: Buffer[WireEvent],
         stampMs: Long): Option[Emission] = {
       val rolled = buf.all
       if (rolled.isEmpty) None
@@ -58,8 +58,8 @@ object StreamingRollup {
       }
     }
 
-    def rows(key: String, at: Keyed[(Long, Int), SEvent], rows: Seq[SEvent],
-        wm: Long): (Keyed[(Long, Int), SEvent], Seq[Emission]) = {
+    def rows(key: String, at: Keyed[(Long, Int), WireEvent],
+        rows: Seq[WireEvent], wm: Long): (Keyed[(Long, Int), WireEvent], Seq[Emission]) = {
       val out = Vector.newBuilder[Emission]
       val next = rows.foldLeft(at) { (at, e) =>
         val t = e.time.getTime
@@ -84,8 +84,8 @@ object StreamingRollup {
     }
 
     /** The live period closed: deliver its overflow. */
-    def timer(key: String, at: Keyed[(Long, Int), SEvent],
-        wm: Long): (Keyed[(Long, Int), SEvent], Seq[Emission]) =
+    def timer(key: String, at: Keyed[(Long, Int), WireEvent],
+        wm: Long): (Keyed[(Long, Int), WireEvent], Seq[Emission]) =
       (at.copy(state = None, buffer = at.buffer.cleared),
         drain(key, at.buffer, wm).toSeq)
   }

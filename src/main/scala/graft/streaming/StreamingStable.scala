@@ -18,8 +18,8 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
   * would silently lose the buffer. The default watermark delay equals
   * the probation window for the same reason. */
 object StreamingStable {
-  def apply(events: Dataset[SEvent], dtSeconds: Long,
-      watermarkDelay: String = null): Dataset[SEvent] = {
+  def apply(events: Dataset[WireEvent], dtSeconds: Long,
+      watermarkDelay: String = null): Dataset[WireEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
     val delay = Option(watermarkDelay).getOrElse(s"$dtSeconds seconds")
@@ -32,21 +32,21 @@ object StreamingStable {
   /** State: the key's [[Cur]]; buffer: the probation events. The timer
     * is armed only while the value is on probation. */
   private def step(dtSeconds: Long)
-      : Step[(String, String), SEvent, Cur, SEvent, SEvent] =
-      new Step[(String, String), SEvent, Cur, SEvent, SEvent] {
+      : Step[(String, String), WireEvent, Cur, WireEvent, WireEvent] =
+      new Step[(String, String), WireEvent, Cur, WireEvent, WireEvent] {
     private val dtMs = dtSeconds * 1000
 
     def state: (String, Encoder[Cur]) = ("cur", Encoders.product[Cur])
-    override def buffer: Option[(String, Encoder[SEvent])] =
-      Some(("buf", Encoders.product[SEvent]))
-    def order: Ordering[SEvent] = Ordering.by(_.time.getTime)
+    override def buffer: Option[(String, Encoder[WireEvent])] =
+      Some(("buf", Encoders.product[WireEvent]))
+    def order: Ordering[WireEvent] = Ordering.by(_.time.getTime)
 
-    private def flush(buf: Buffer[SEvent], stampMs: Long): Seq[SEvent] =
+    private def flush(buf: Buffer[WireEvent], stampMs: Long): Seq[WireEvent] =
       buf.all.map(_.copy(time = new java.sql.Timestamp(stampMs)))
 
-    def rows(key: (String, String), at: Keyed[Cur, SEvent], rows: Seq[SEvent],
-        wm: Long): (Keyed[Cur, SEvent], Seq[SEvent]) = {
-      val out = Vector.newBuilder[SEvent]
+    def rows(key: (String, String), at: Keyed[Cur, WireEvent],
+        rows: Seq[WireEvent], wm: Long): (Keyed[Cur, WireEvent], Seq[WireEvent]) = {
+      val out = Vector.newBuilder[WireEvent]
       val next = rows.foldLeft(at) { (at, e) =>
         val t = e.time.getTime
         at.state match {
@@ -72,8 +72,8 @@ object StreamingStable {
 
     /** Probation passed without a flap: the buffer flushes, stamped at
       * the watermark. */
-    def timer(key: (String, String), at: Keyed[Cur, SEvent],
-        wm: Long): (Keyed[Cur, SEvent], Seq[SEvent]) =
+    def timer(key: (String, String), at: Keyed[Cur, WireEvent],
+        wm: Long): (Keyed[Cur, WireEvent], Seq[WireEvent]) =
       (at.copy(state = at.state.map(_.copy(_3 = true)),
         buffer = at.buffer.cleared), flush(at.buffer, wm))
   }

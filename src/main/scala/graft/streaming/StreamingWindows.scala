@@ -18,7 +18,7 @@ object StreamingWindows {
 
   /** `rate interval` (streams.clj:841-883), streaming: per service,
     * Σmetric/interval per tumbling event-time window. */
-  def rate(events: Dataset[SEvent], intervalS: Long,
+  def rate(events: Dataset[WireEvent], intervalS: Long,
       watermarkDelay: String = "0 seconds"): DataFrame =
     events.withWatermark("time", watermarkDelay)
       .groupBy(col("service"), window(col("time"), s"$intervalS seconds"))
@@ -30,7 +30,7 @@ object StreamingWindows {
   /** `percentiles interval points` (streams.clj:885-898), streaming:
     * nearest-rank percentiles over each closed window's actual metrics
     * (folds.clj:16-49 sorted-sample). */
-  def percentiles(events: Dataset[SEvent], intervalS: Long,
+  def percentiles(events: Dataset[WireEvent], intervalS: Long,
       points: Seq[Double], watermarkDelay: String = "0 seconds"): DataFrame = {
     val bucketed = events.withWatermark("time", watermarkDelay)
       .groupBy(col("service"), window(col("time"), s"$intervalS seconds"))
@@ -53,7 +53,7 @@ object StreamingWindows {
     * tumbling window, (satisfied + tolerated/2) / total, with the
     * reference's precedence (a satisfied event never also counts as
     * tolerated) and its expired-event drop. */
-  def apdex(events: Dataset[SEvent], intervalS: Long,
+  def apdex(events: Dataset[WireEvent], intervalS: Long,
       satisfied: org.apache.spark.sql.Column,
       tolerated: org.apache.spark.sql.Column,
       watermarkDelay: String = "0 seconds"): DataFrame =
@@ -78,7 +78,7 @@ object StreamingWindows {
     * uniform-reservoir holds the window's sample; here the window IS
     * the reservoir); at 100 TB swap the collect_list for
     * percentile_approx as in Windows.instrumentApprox. */
-  def instrument(events: Dataset[SEvent], intervalS: Long,
+  def instrument(events: Dataset[WireEvent], intervalS: Long,
       latencyNs: org.apache.spark.sql.Column,
       quantiles: Seq[Double] = Seq(0.0, 0.5, 0.95, 0.99, 0.999),
       watermarkDelay: String = "0 seconds"): DataFrame = {
@@ -111,7 +111,7 @@ object StreamingWindows {
   /** `fold-interval` (streams.clj:663-681), streaming: apply any
     * aggregate expression (a §2.6b fold over the `metric` column) to
     * each service's tumbling window. */
-  def foldInterval(events: Dataset[SEvent], intervalS: Long,
+  def foldInterval(events: Dataset[WireEvent], intervalS: Long,
       fold: org.apache.spark.sql.Column,
       watermarkDelay: String = "0 seconds"): DataFrame =
     events.withWatermark("time", watermarkDelay)

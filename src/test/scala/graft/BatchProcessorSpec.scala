@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{SEvent, StreamingBatch}
+import graft.streaming.{SEvent, StreamingBatch, WireEvent}
 
 /** Streaming batch: size-OR-time bounded vector delivery
   * (streams.clj:1158-1185, streams_test.clj batch-test). */
@@ -20,7 +20,7 @@ class BatchProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingBatch(input.toDS(), n = 3, dtSeconds = 1000)
         .writeStream.format("memory").queryName("bt").outputMode("append")
         .start()
@@ -47,7 +47,7 @@ class BatchProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingBatch(input.toDS(), n = 10, dtSeconds = 50)
         .writeStream.format("memory").queryName("bt2").outputMode("append")
         .start()

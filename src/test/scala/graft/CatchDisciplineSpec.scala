@@ -7,22 +7,27 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-/** Lines of the main sources matching a pattern, as `file:line: text`. */
+/** The main sources, and their lines matching a pattern. */
 private object SourceScan {
-  def hits(pattern: Regex): Seq[String] = {
-    val root = Paths.get("src/main/scala")
+  /** Every Scala source under `dir`, with its lines. */
+  def sources(dir: String = "src/main/scala"): Seq[(Path, Seq[String])] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the project root, not $root")
     val stream = Files.walk(root)
     try {
       stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .toSeq.flatMap { (p: Path) =>
-          Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i) if pattern.findFirstIn(line).isDefined =>
-              s"$p:${i + 1}: ${line.trim}"
-          }
-        }
+        .toSeq.map(p => (p, Files.readAllLines(p).asScala.toSeq))
     } finally stream.close()
   }
+
+  /** Lines of the main sources matching `pattern`, as `file:line: text`. */
+  def hits(pattern: Regex): Seq[String] =
+    sources().flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if pattern.findFirstIn(line).isDefined =>
+          s"$p:${i + 1}: ${line.trim}"
+      }
+    }
 }
 
 /** No main source swallows fatal errors: a `case _: Throwable` or
@@ -61,5 +66,28 @@ class KeyedStateDisciplineSpec extends AnyFunSuite {
       """\b(registerTimer|deleteTimer|getValueState|getListState)\b""".r)
       .filterNot(_.startsWith(file + ":"))
     assert(outside.isEmpty, outside.mkString("\n", "\n", ""))
+  }
+}
+
+/** One event class: riemann passes whole event maps everywhere, so
+  * graft.streaming declares one case class with the event's fields, and
+  * no narrower copy of it, or conversion to one, comes back. */
+class EventShapeDisciplineSpec extends AnyFunSuite {
+  import SourceScan.{hits, sources}
+
+  test("one event case class in graft.streaming, and no second event " +
+    "shape or conversion to one in src/main/scala") {
+    val prefix = ("""case\s+class\s+(\w+)\s*\(\s*host\s*:[^,]*,""" +
+      """\s*service\s*:[^,]*,\s*state\s*:[^,]*,\s*metric\s*:[^,]*,""" +
+      """\s*time\s*:[^,]*,\s*ttl\s*:""").r
+    val shapes = sources("src/main/scala/graft/streaming").flatMap {
+      case (p, lines) =>
+        prefix.findAllMatchIn(lines.mkString("\n"))
+          .map(m => s"$p: ${m.group(1)}")
+    }
+    assert(shapes.size == 1, shapes.mkString("\n", "\n", ""))
+    val forks =
+      hits("""\b(SEventX|toSEvent|carriesWholeEvents|wireShape)\b""".r)
+    assert(forks.isEmpty, forks.mkString("\n", "\n", ""))
   }
 }

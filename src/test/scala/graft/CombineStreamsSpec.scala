@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{CombineStreams, SEvent}
+import graft.streaming.{CombineStreams, SEvent, WireEvent}
 
 /** Golden cases for streaming coalesce / project / fill-in. */
 class CombineStreamsSpec extends SparkSpec {
@@ -17,7 +17,7 @@ class CombineStreamsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.coalesce(input.toDS())
       .writeStream.format("memory").queryName("co").outputMode("append").start()
     try {
@@ -46,7 +46,7 @@ class CombineStreamsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.project(input.toDS(), Seq(
       e => e.service == "enq", e => e.service == "deq"))
       .writeStream.format("memory").queryName("pj").outputMode("append").start()
@@ -67,7 +67,7 @@ class CombineStreamsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.fillIn(input.toDS(), 10, 0.0)
       .writeStream.format("memory").queryName("fi2").outputMode("append").start()
     try {
@@ -77,7 +77,7 @@ class CombineStreamsSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ev("a", "hb", 7.0, 135))
       q.processAllAvailable()
-      val rows = spark.table("fi2").as[SEvent].collect()
+      val rows = spark.table("fi2").as[WireEvent].collect()
         .filter(_.host == "a").sortBy(_.time.getTime)
       // fillers at 110,120,130 synthesized inline, then the real event
       assert(rows.map(e => (e.time.getTime / 1000, e.metric.get)).toSeq ==
@@ -89,7 +89,7 @@ class CombineStreamsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.fillIn(input.toDS(), 10, 0.0)
       .writeStream.format("memory").queryName("fi").outputMode("append").start()
     try {
@@ -100,7 +100,7 @@ class CombineStreamsSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ev("zz", "other", 1.0, 141)) // extra trigger fires timers
       q.processAllAvailable()
-      val rows = spark.table("fi").as[SEvent].collect()
+      val rows = spark.table("fi").as[WireEvent].collect()
         .filter(_.host == "a").sortBy(_.time.getTime)
       // original at 100 plus fillers at 110..140 (the 130-140 interval
       // completes exactly at the watermark)
@@ -119,7 +119,7 @@ class CombineStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def se(service: String, state: String, t: Long, ttl: Option[Double] = None) =
       SEvent("h", service, state, Some(1.0), ts(t), ttl)
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.coalesce(input.toDS())
       .writeStream.format("memory").queryName("cogold").outputMode("append")
       .start()
@@ -151,7 +151,7 @@ class CombineStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def se(service: String, state: String, t: Long, ttl: Option[Double] = None) =
       SEvent("h", service, state, Some(1.0), ts(t), ttl)
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.project(input.toDS(), Seq(
       e => e.service == "foo", e => e.service == "bar"))
       .writeStream.format("memory").queryName("pjexp").outputMode("append")
@@ -180,7 +180,7 @@ class CombineStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def se(service: String, state: String, t: Long, ttl: Option[Double] = None) =
       SEvent("h", service, state, Some(1.0), ts(t), ttl)
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.project(input.toDS(), Seq(
       e => e.service == "foo", e => e.service == "bar"))
       .writeStream.format("memory").queryName("pjexp2").outputMode("append")
@@ -211,7 +211,7 @@ class CombineStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def se(service: String, state: String, t: Long, ttl: Option[Double] = None) =
       SEvent("h", service, state, Some(1.0), ts(t), ttl)
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.project(input.toDS(), Seq(
       e => e.service == "foo", e => e.service == "bar"))
       .writeStream.format("memory").queryName("pjttl").outputMode("append")
@@ -241,7 +241,7 @@ class CombineStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def se(m: Double, t: Long, state: String = "ok") =
       SEvent("h", "s", state, Some(m), ts(t), None)
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = CombineStreams.fillIn(input.toDS(), 5, 0.0)
       .writeStream.format("memory").queryName("figold").outputMode("append")
       .start()
@@ -253,7 +253,7 @@ class CombineStreamsSpec extends SparkSpec {
       input.addData(se(3.0, 107)); q.processAllAvailable() // quick succession
       input.addData(se(4.0, 115, "expired")); q.processAllAvailable() // gap, then expired
       input.addData(se(5.0, 121)); q.processAllAvailable() // gap after expired: NO fill
-      val got = spark.table("figold").as[SEvent].collect()
+      val got = spark.table("figold").as[WireEvent].collect()
         .sortBy(_.time.getTime).map(_.metric.get)
       assert(got.toSeq == Seq(1.0, 0.0, 2.0, 3.0, 0.0, 4.0, 5.0))
     } finally q.stop()

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{SEvent, StatefulOps}
+import graft.streaming.{SEvent, StatefulOps, WireEvent}
 
 /** Config lifecycle (core.clj:105-161 transition!) and instrumentation
   * (instrumentation.clj:50-74) tests. */
@@ -16,7 +16,7 @@ class CoreSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val core = new Core(spark)
 
     core.stream("ewma", signature = "r=0.5") {
@@ -115,7 +115,7 @@ class CoreSpec extends SparkSpec {
     val instr = new Instrumentation
     spark.streams.addListener(instr)
     try {
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = input.toDS().writeStream.format("memory")
         .queryName("instrumented").outputMode("append").start()
       input.addData(ev(1, 1), ev(2, 2))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.LineProtocols
-import graft.streaming.{SEvent, StreamingIndex}
+import graft.streaming.{StreamingIndex, WireEvent}
 
 /** Full-topology integration: the reference's primary deployment shape
   * (SURVEY §3.1-3.2) wired end to end — a graphite line transport
@@ -21,7 +21,7 @@ class EndToEndSpec extends SparkSpec {
 
     val lines = MemoryStream[String]
     // transport -> decoder -> riemann event shape -> keyed index state
-    val decoded = LineProtocols.decodeGraphite(
+    val decoded = WireEvent.from(LineProtocols.decodeGraphite(
       lines.toDF().withColumnRenamed("value", "line"))
       .select(
         coalesce(element_at(col("attributes"), "host"), lit("unknown"))
@@ -30,8 +30,7 @@ class EndToEndSpec extends SparkSpec {
         lit("ok").as("state"),
         col("metric"),
         to_timestamp(col("time_s")).as("time"),
-        lit(60.0).as("ttl"))
-      .as[SEvent]
+        lit(60.0).as("ttl")))
     val q = StreamingIndex(decoded)
       .writeStream.format("memory").queryName("e2e").outputMode("append")
       .start()

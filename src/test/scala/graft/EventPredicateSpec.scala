@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{col, struct, to_json}
 
 import graft.query.{EventPredicate, QueryLanguage}
 import graft.sinks.EventJson
-import graft.streaming.SEvent
+import graft.streaming.{SEvent, WireEvent}
 
 /** The serving-path evaluator's contract: the compiled closure must
   * agree with the Catalyst predicate (the oracle) on the same snapshot
@@ -20,7 +20,7 @@ class EventPredicateSpec extends SparkSpec {
 
   private val rnd = new scala.util.Random(42)
 
-  private def randomEvents(n: Int): Seq[SEvent] = (1 to n).map { i =>
+  private def randomEvents(n: Int): Seq[WireEvent] = (1 to n).map { i =>
     SEvent(
       host = rnd.nextInt(5) match {
         case 0 => null
@@ -76,7 +76,7 @@ class EventPredicateSpec extends SparkSpec {
     }
   }
 
-  private def key(e: SEvent) =
+  private def key(e: WireEvent) =
     (e.host, e.service, e.state, e.metric, e.time, e.ttl)
 
   test("closure == Catalyst on randomized queries over a randomized " +
@@ -91,7 +91,7 @@ class EventPredicateSpec extends SparkSpec {
       queries.foreach { q =>
         val catalyst = snap
           .filter(QueryLanguage.predicate(q, snap.schema))
-          .as[SEvent].collect().map(key).toSet
+          .as[WireEvent].collect().map(key).toSet
         val pred = EventPredicate(q)
         val closure = events.filter(pred).map(key).toSet
         assert(closure == catalyst,
@@ -122,7 +122,7 @@ class EventPredicateSpec extends SparkSpec {
       "time != \"2024-01-23 10:16:40\"")
     queries.foreach { q =>
       val catalyst = snap.filter(QueryLanguage.predicate(q, snap.schema))
-        .as[SEvent].collect().map(key).toSet
+        .as[WireEvent].collect().map(key).toSet
       assert(events.filter(EventPredicate(q)).map(key).toSet == catalyst,
         s"for query: $q")
     }
@@ -137,10 +137,12 @@ class EventPredicateSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     val events = randomEvents(20)
-    val snap = spark.createDataset(events).toDF() // no tags column
+    val snap = spark.createDataset(events).toDF()
+      .drop("tags", "attributes") // no tags column
     Seq("tags = nil", "tags", "not tags", "tags != nil").foreach { q =>
-      val catalyst = snap.filter(QueryLanguage.predicate(q, snap.schema))
-        .as[SEvent].collect().map(key).toSet
+      val catalyst = WireEvent.from(
+        snap.filter(QueryLanguage.predicate(q, snap.schema)))
+        .collect().map(key).toSet
       assert(events.filter(EventPredicate(q)).map(key).toSet == catalyst,
         s"for query: $q")
     }
@@ -171,7 +173,7 @@ class EventPredicateSpec extends SparkSpec {
     val idx = new Main.ServedIndex(spark)
     val events = randomEvents(60)
       .groupBy(e => (e.host, e.service)).map(_._2.head).toSeq // unique pkeys
-    events.foreach(idx.put)
+    events.foreach(idx.putTagged)
     val spark0 = spark
     import spark0.implicits._
     val snap = spark.createDataset(idx.events).toDF()
@@ -180,13 +182,13 @@ class EventPredicateSpec extends SparkSpec {
       "metric > 1 or ttl >= 90",
       "not host =~ \"h%\"").foreach { q =>
       val catalyst = snap.filter(QueryLanguage.predicate(q, snap.schema))
-        .as[SEvent].collect().map(key).toSet
-      assert(idx.search(q).map(e => key(e.toSEvent)).toSet == catalyst,
+        .as[WireEvent].collect().map(key).toSet
+      assert(idx.search(q).map(key).toSet == catalyst,
         s"for query: $q")
     }
     // tombstone via put: an expired event deletes its key
     events.headOption.foreach { e =>
-      idx.put(e.copy(state = "expired"))
+      idx.putTagged(e.copy(state = "expired"))
       assert(idx.search(
         s"""host = "${e.host}" and service = "${e.service}"""").isEmpty)
     }
@@ -253,7 +255,7 @@ class EventPredicateSpec extends SparkSpec {
     "index stay consistent (the nbhm-index concurrency story)") {
     val idx = new Main.ServedIndex(spark)
     (0 until 2000).foreach { i =>
-      idx.put(SEvent(s"h${i % 200}", s"s${i / 200}",
+      idx.putTagged(SEvent(s"h${i % 200}", s"s${i / 200}",
         if (i % 7 == 0) "critical" else "ok", Some(i / 2000.0),
         ts(1706000000L + i), Some(60.0)))
     }
@@ -279,7 +281,7 @@ class EventPredicateSpec extends SparkSpec {
         } catch { case e: Throwable => errors.add(e); () })
     }
     val writer = new Thread(() => (0 until 5000).foreach { i =>
-      idx.put(SEvent(s"h${i % 200}", s"s${i % 10}",
+      idx.putTagged(SEvent(s"h${i % 200}", s"s${i % 10}",
         if (i % 2 == 0) "expired" else "ok", Some(0.5),
         ts(1706001000L + i), Some(60.0)))
     })

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.config.ConfigFile
 import graft.sinks.Sinks
 import graft.sources.{FanoutBuffer, OffsetBuffer}
-import graft.streaming.SEvent
+import graft.streaming.{SEvent, WireEvent}
 
 /** The config-surface fan-out contract (reference src/riemann/core.clj:
   * 15-20: `stream!` hands EVERY event to EVERY registered stream):
@@ -62,7 +62,7 @@ class FanoutSpec extends SparkSpec {
 
   /** Feed `in` half a buffer at a time until its tee waits on a buffer
     * that nobody drains. Returns the row count fed. */
-  private def overfill(in: MemoryStream[SEvent]): Int = {
+  private def overfill(in: MemoryStream[WireEvent]): Int = {
     val half = FanoutBuffer.Capacity / 2
     var sent = 0
     while (!teeWaiting("in") && sent < 8 * half) {
@@ -100,7 +100,7 @@ class FanoutSpec extends SparkSpec {
         |  "pipeline":[{"op":"scale","factor":2.0}],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
 
-    val in = MemoryStream[SEvent]
+    val in = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("in" -> (() => in.toDF())))
@@ -193,7 +193,7 @@ class FanoutSpec extends SparkSpec {
          |  "sink":{"kind":"memory"}}]}""".stripMargin
     write(cfg, conf(2.0))
 
-    val in = MemoryStream[SEvent]
+    val in = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("in" -> (() => in.toDF())))
@@ -234,7 +234,7 @@ class FanoutSpec extends SparkSpec {
         | {"name":"a","source":"in","pipeline":[],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
 
-    val in = MemoryStream[SEvent]
+    val in = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("in" -> (() => in.toDF())))
@@ -289,7 +289,7 @@ class FanoutSpec extends SparkSpec {
         |  "sink":{"kind":"memory"}},
         | {"name":"all","source":"in","pipeline":[],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
-    val in = MemoryStream[SEvent]
+    val in = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new graft.config.ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("in" -> (() => in.toDF())))
@@ -374,8 +374,8 @@ class FanoutSpec extends SparkSpec {
         |  "pipeline":[{"op":"window","seconds":10,
         |               "watermark":"0 seconds","agg":"count"}],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
-    val inA = MemoryStream[SEvent]
-    val inB = MemoryStream[SEvent]   // never fed: the quiet leg
+    val inA = MemoryStream[WireEvent]
+    val inB = MemoryStream[WireEvent]   // never fed: the quiet leg
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("a" -> (() => inA.toDF()), "b" -> (() => inB.toDF())))
@@ -418,8 +418,8 @@ class FanoutSpec extends SparkSpec {
         |  "sink":{"kind":"memory"}},
         | {"name":"onlyA","source":"a","pipeline":[],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
-    val inA = MemoryStream[SEvent]
-    val inB = MemoryStream[SEvent]
+    val inA = MemoryStream[WireEvent]
+    val inB = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("a" -> (() => inA.toDF()), "b" -> (() => inB.toDF())))
@@ -466,7 +466,7 @@ class FanoutSpec extends SparkSpec {
       """{"streams":[
         | {"name":"merged","source":["ev","lines"],"pipeline":[],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
-    val inEv = MemoryStream[SEvent]
+    val inEv = MemoryStream[WireEvent]
     val inLn = MemoryStream[(String, Double, Timestamp)]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
@@ -631,7 +631,7 @@ class FanoutSpec extends SparkSpec {
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
     val gate = new CountDownLatch(1)
     val slow = new ConcurrentLinkedQueue[String]()
-    val in = MemoryStream[SEvent]
+    val in = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("in" -> (() => in.toDF())),
@@ -662,7 +662,7 @@ class FanoutSpec extends SparkSpec {
       | {"name":"b","source":"in","pipeline":[],"sink":{"kind":"gate"}}]}"""
       .stripMargin)
     val gate = new CountDownLatch(1)
-    val in = MemoryStream[SEvent]
+    val in = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("in" -> (() => in.toDF())),
@@ -693,7 +693,7 @@ class FanoutSpec extends SparkSpec {
         | {"name":"a","source":"in","pipeline":[],"sink":{"kind":"memory"}},
         | {"name":"bad","source":"in","pipeline":[],
         |  "sink":{"kind":"memory","outputMode":"complete"}}]}""".stripMargin)
-    val in = MemoryStream[SEvent]
+    val in = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("in" -> (() => in.toDF())))
@@ -728,7 +728,7 @@ class FanoutSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     // each run is one process: its own source, Core and Loader
     def run(i: Int): Seq[String] = {
-      val in = MemoryStream[SEvent]
+      val in = MemoryStream[WireEvent]
       val core = new Core(spark)
       val loader = new ConfigFile.Loader(core, spark, cfg,
         sources0 = Map("in" -> (() => in.toDF())))
@@ -764,8 +764,8 @@ class FanoutSpec extends SparkSpec {
         | {"name":"xa","source":"a","pipeline":[],"sink":{"kind":"memory"}},
         | {"name":"xb","source":"b","pipeline":[],"sink":{"kind":"memory"}}
         |]}""".stripMargin)
-    val inA = MemoryStream[SEvent]
-    val inB = MemoryStream[SEvent]
+    val inA = MemoryStream[WireEvent]
+    val inB = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, cfg,
       sources0 = Map("a" -> (() => inA.toDF()), "b" -> (() => inB.toDF())))

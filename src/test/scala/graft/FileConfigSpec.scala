@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.config.ConfigFile
-import graft.streaming.SEvent
+import graft.streaming.{SEvent, WireEvent}
 
 /** External config-file surface tests (reference
   * src/riemann/config.clj:444-467 include, src/riemann/bin.clj:39-77
@@ -91,7 +91,7 @@ class FileConfigSpec extends SparkSpec {
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[SEvent]
+      .MemoryStream[WireEvent]
     val out = ConfigFile.applyOp(input.toDF(),
       op("""{"op":"throttle","n":2,"dt":60}"""))
     val q = out.writeStream.format("memory").queryName("cfg_throttle")
@@ -112,7 +112,7 @@ class FileConfigSpec extends SparkSpec {
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[SEvent]
+      .MemoryStream[WireEvent]
     val out = Seq(
       op("""{"op":"tag","tags":["alert"]}"""),
       op("""{"op":"throttle","n":2,"dt":60}"""),
@@ -136,6 +136,52 @@ class FileConfigSpec extends SparkSpec {
       assert(rows.select("metric").as[Option[Double]].collect().toSet ==
         Set(Some(1.0), Some(2.0)))
     } finally q.stop()
+  }
+
+  test("throttle keeps every column as it was: a microsecond timestamp " +
+    "and a map<int,string> column a with op added come out unchanged") {
+    val spark0 = spark
+    import spark0.implicits._
+    val events = spark.createDataset((1 to 3).map(i =>
+      SEvent("h", "s", "ok", Some(i.toDouble), new Timestamp(1000L * i),
+        None))).toDF()
+    val withCols = ConfigFile.applyOp(events, op(
+      """{"op":"with","set":{"at":"timestamp_micros(1706000000123456)",
+        |"codes":"map(1, 'a', 2, 'b')"}}""".stripMargin))
+    val out = ConfigFile.applyOp(withCols,
+      op("""{"op":"throttle","n":10,"dt":60}"""))
+    assert(out.schema == withCols.schema)
+    assert(out.collect().toSet == withCols.collect().toSet)
+    assert(out.select("at").as[Timestamp].collect()
+      .forall(_.getNanos == 123456000))
+  }
+
+  test("a tag and a custom attribute survive throttle and the index op") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the index runs on transformWithState: column families -> RocksDB
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val input = MemoryStream[WireEvent]
+    val out = Seq(op("""{"op":"throttle","n":2,"dt":60}"""),
+      op("""{"op":"index"}"""))
+      .foldLeft(input.toDF(): org.apache.spark.sql.DataFrame)(
+        ConfigFile.applyOp)
+    val q = out.writeStream.format("memory").queryName("cfg_whole_events")
+      .outputMode("append").start()
+    try {
+      input.addData(WireEvent("h", "s", "ok", Some(1.0), new Timestamp(1000L),
+        Some(60.0), Seq("prod"), Map("paws" -> "4")))
+      q.processAllAvailable()
+      val rows = spark.table("cfg_whole_events")
+        .select("tags", "attributes").as[(Seq[String], Map[String, String])]
+        .collect()
+      assert(rows.toSeq == Seq((Seq("prod"), Map("paws" -> "4"))))
+    } finally {
+      q.stop()
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("window/rate ops: watermarked per-key time-window aggregation") {
@@ -760,7 +806,7 @@ class FileConfigSpec extends SparkSpec {
         |  "pipeline":[{"op":"scale","factor":2.0}],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
 
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, main,
       sources0 = Map("input" -> (() => input.toDF())))
@@ -825,7 +871,7 @@ class FileConfigSpec extends SparkSpec {
          |  {"name":"a","source":"in_a","pipeline":[],"sink":{"kind":"memory"}},
          |  {"name":"b","source":"in_b","pipeline":[$bOps],
          |   "sink":{"kind":"memory"}}]}""".stripMargin)
-    val (inA, inB) = (MemoryStream[SEvent], MemoryStream[SEvent])
+    val (inA, inB) = (MemoryStream[WireEvent], MemoryStream[WireEvent])
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, main, sources0 = Map(
       "in_a" -> (() => inA.toDF()), "in_b" -> (() => inB.toDF())))
@@ -853,7 +899,7 @@ class FileConfigSpec extends SparkSpec {
          |  {"name":"a","source":"in","pipeline":[],"sink":{"kind":"memory"}},
          |  {"name":"b","source":"in","pipeline":[$bOps],
          |   "sink":{"kind":"memory"}}]}""".stripMargin)
-    val in = MemoryStream[SEvent]
+    val in = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, main,
       sources0 = Map("in" -> (() => in.toDF())))
@@ -904,7 +950,7 @@ class FileConfigSpec extends SparkSpec {
         |"streams":[{"name":"x","source":"input",
         |  "pipeline":[{"op":"scale","factor":2.0}],
         |  "sink":{"kind":"memory"}}]}""".stripMargin)
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val core = new Core(spark)
     val loader = new ConfigFile.Loader(core, spark, main,
       sources0 = Map("input" -> (() => input.toDF())))
@@ -961,7 +1007,7 @@ class FileConfigSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val docs = Seq((1L, "a document")).toDF("doc_id", "text")
     // an op argument: the index would run at "0 seconds", the split
     // would keep every split

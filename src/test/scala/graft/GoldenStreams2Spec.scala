@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Streams, Windows}
 import graft.operators.Streams.EventOps
-import graft.streaming.{SEvent, StatefulOps}
+import graft.streaming.{SEvent, StatefulOps, WireEvent}
 
 /** Fifth tranche of golden cases ported from the reference stream tests
   * (test/riemann/streams_test.clj): moving-time-window's arrival-order
@@ -22,7 +22,7 @@ class GoldenStreams2Spec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.movingTimeWindow(input.toDS(), 2)
       .map(w => w.map(_.time.getTime / 1000))
       .writeStream.format("memory").queryName("mtw").outputMode("append")
@@ -46,7 +46,7 @@ class GoldenStreams2Spec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.movingTimeWindow(input.toDS(), 0)
       .map(_.size)
       .writeStream.format("memory").queryName("mtw0").outputMode("append")

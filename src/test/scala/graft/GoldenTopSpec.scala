@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Streams.EventOps
-import graft.streaming.{SEvent, StatefulOps}
+import graft.streaming.{SEvent, StatefulOps, WireEvent}
 
 /** The reference's `top` golden tables, ported verbatim
   * (test/riemann/streams_test.clj top-test): latest-metric ranking,
@@ -28,7 +28,7 @@ class GoldenTopSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     n += 1
     val name = s"golden_top_$n"
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.topLatest(input.toDS(), k, demote)
       .writeStream.format("memory").queryName(name).outputMode("append")
       .start()
@@ -39,7 +39,7 @@ class GoldenTopSpec extends SparkSpec {
       }
       input.addData(evs: _*)
       q.processAllAvailable()
-      spark.table(name).as[SEvent].collect()
+      spark.table(name).as[WireEvent].collect()
         // demote mirrors share the passing event's time; expired first
         .sortBy(e => (e.time.getTime, if (e.state == "expired") 0 else 1))
         .map(e => (e.service, e.state, e.metric)).toSeq

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 import graft.operators.Index
-import graft.streaming.{KeyedIndex, SEvent, StreamingIndex}
+import graft.streaming.{KeyedIndex, SEvent, StreamingIndex, WireEvent}
 
 /** Randomized parity: the three index implementations — batch
   * snapshot/reaper (operators/Index), flatMapGroupsWithState
@@ -61,12 +61,12 @@ class IndexParitySpec extends SparkSpec {
   }
 
   private def runStreaming(evs: Seq[Ev],
-      wire: org.apache.spark.sql.Dataset[SEvent] => org.apache.spark.sql.Dataset[SEvent],
+      wire: org.apache.spark.sql.Dataset[WireEvent] => org.apache.spark.sql.Dataset[WireEvent],
       name: String): (Set[(String, Double, Long)], Set[String]) = {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = wire(input.toDS())
       .writeStream.format("memory").queryName(name).outputMode("append")
       .start()
@@ -81,7 +81,7 @@ class IndexParitySpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(SEvent("wm", "s", "ok", Some(0.0), ts(NowS), None))
       q.processAllAvailable()
-      val rows = spark.table(name).as[SEvent].collect()
+      val rows = spark.table(name).as[WireEvent].collect()
         .filter(_.host != "wm")
       val latest = rows.filter(_.state != "expired")
         .groupBy(_.host).map { case (_, rs) =>
@@ -123,17 +123,17 @@ class IndexParitySpec extends SparkSpec {
     import spark0.implicits._
     def se(state: String, m: Option[Double], ttl: Option[Double]) =
       SEvent("h", "s", state, m, ts(100), ttl)
-    def winner(wire: org.apache.spark.sql.Dataset[SEvent] =>
-        org.apache.spark.sql.Dataset[SEvent], name: String,
-        evs: Seq[SEvent]): SEvent = {
+    def winner(wire: org.apache.spark.sql.Dataset[WireEvent] =>
+        org.apache.spark.sql.Dataset[WireEvent], name: String,
+        evs: Seq[WireEvent]): WireEvent = {
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = wire(input.toDS()).writeStream.format("memory")
         .queryName(name).outputMode("append").start()
       try {
         input.addData(evs)
         q.processAllAvailable()
-        val rows = spark.table(name).as[SEvent].collect()
+        val rows = spark.table(name).as[WireEvent].collect()
         assert(rows.length == 1, s"$name emitted ${rows.length} rows")
         rows.head
       } finally q.stop()
@@ -218,7 +218,7 @@ class IndexParitySpec extends SparkSpec {
       val pushed = scala.collection.mutable.ArrayBuffer.empty[WireEvent]
       val streams = feeds.map { case (feed, wm) =>
         val in = MemoryStream[WireEvent]
-        val q = KeyedIndex.wire(in.toDS(), wm).writeStream
+        val q = KeyedIndex(in.toDS(), wm).writeStream
           .foreachBatch { (batch: Dataset[WireEvent], _: Long) =>
             val rows = batch.collect()
             served.synchronized {

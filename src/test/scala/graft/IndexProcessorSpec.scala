@@ -3,7 +3,8 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{IndexStep, KeyedIndex, SEvent, StreamingStable}
+import graft.streaming.{IndexStep, KeyedIndex, SEvent, StreamingStable,
+  WireEvent}
 
 /** transformWithState index: same reaper golden case as the
   * flatMapGroupsWithState form, on the modern API with per-key timers
@@ -22,7 +23,7 @@ class IndexProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = KeyedIndex(input.toDS())
         .writeStream.format("memory").queryName("tws").outputMode("append")
         .start()
@@ -35,7 +36,7 @@ class IndexProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev("b", "cpu", "ok", 4.0, 600, Some(1000.0)))
         q.processAllAvailable()
-        val rows = spark.table("tws").as[SEvent].collect()
+        val rows = spark.table("tws").as[WireEvent].collect()
         val expired = rows.filter(_.state == "expired")
         assert(expired.map(e => (e.host, e.service)).toSeq == Seq(("a", "cpu")))
         // reaper default :keep-keys [host service] (core.clj:295): the
@@ -54,7 +55,7 @@ class IndexProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = KeyedIndex(input.toDS(), keepKeys = IndexStep.All,
         deleteState = Some("delete"))
         .writeStream.format("memory").queryName("twsall").outputMode("append")
@@ -73,7 +74,7 @@ class IndexProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev("c", "cpu", "ok", 4.0, 600, Some(1000.0)))
         q.processAllAvailable()
-        val rows = spark.table("twsall").as[SEvent].collect()
+        val rows = spark.table("twsall").as[WireEvent].collect()
         val expired = rows.filter(_.state == "expired")
         // only a expires (b was deleted before its ttl could lapse);
         // :all keeps a's metric and ttl on the expired copy
@@ -95,7 +96,7 @@ class IndexProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = KeyedIndex(input.toDS(), deleteState = Some("delete"))
         .writeStream.format("memory").queryName("twsrearm")
         .outputMode("append").start()
@@ -118,7 +119,7 @@ class IndexProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev("w", "other", "ok", 0.0, 131))
         q.processAllAvailable()
-        val mid = spark.table("twsrearm").as[SEvent].collect()
+        val mid = spark.table("twsrearm").as[WireEvent].collect()
         assert(!mid.exists(e => e.host == "a" && e.state == "expired"),
           "expired before the re-inserted ttl's deadline")
         // now pass the new deadline: exactly one expiry, for the
@@ -127,7 +128,7 @@ class IndexProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev("w", "other", "ok", 0.0, 201))
         q.processAllAvailable()
-        val expired = spark.table("twsrearm").as[SEvent].collect()
+        val expired = spark.table("twsrearm").as[WireEvent].collect()
           .filter(e => e.host == "a" && e.state == "expired")
         assert(expired.length == 1, s"got ${expired.length} expiries")
       } finally q.stop()
@@ -147,16 +148,16 @@ class IndexProcessorSpec extends SparkSpec {
       // pre-fix their winner was shuffle-arrival order
       val eNone = SEvent("a", "cpu", "ok", None, ts(100), Some(7.0))
       val eZero = SEvent("a", "cpu", "ok", Some(0.0), ts(100), None)
-      def winner(order: Seq[SEvent], name: String): SEvent = {
+      def winner(order: Seq[WireEvent], name: String): WireEvent = {
         implicit val sqlCtx = spark.sqlContext
-        val input = MemoryStream[SEvent]
+        val input = MemoryStream[WireEvent]
         val q = KeyedIndex(input.toDS())
           .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
         try {
           input.addData(order: _*)
           q.processAllAvailable()
-          val rows = spark.table(name).as[SEvent].collect()
+          val rows = spark.table(name).as[WireEvent].collect()
           assert(rows.length == 1)
           rows.head
         } finally q.stop()
@@ -177,7 +178,7 @@ class IndexProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingStable(input.toDS(), 50)
         .writeStream.format("memory").queryName("stbl").outputMode("append")
         .start()
@@ -196,7 +197,7 @@ class IndexProcessorSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData(ev("z", "other", "ok", 9, 1301))
         q.processAllAvailable()
-        val got = spark.table("stbl").as[SEvent].collect()
+        val got = spark.table("stbl").as[WireEvent].collect()
           .filter(_.host == "a").sortBy(_.metric)
           .map(e => (e.state, e.metric.get)).toSeq
         // metric payloads survive; times are delivery-stamped

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{SEvent, StreamingRate}
+import graft.streaming.{SEvent, StreamingRate, WireEvent}
 
 /** Streaming rate with the reference's expiry semantics
   * (streams.clj:841-883, streams_test.clj rate-expiration): interval
@@ -29,7 +29,7 @@ class RateProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingRate(input.toDS(), 1, _.service)
         .writeStream.format("memory").queryName("srate").outputMode("append")
         .start()
@@ -71,7 +71,7 @@ class RateProcessorSpec extends SparkSpec {
       val table = Seq(
         (10L, 2.0, Some(4.0)), (11L, 3.0, Some(4.0)),
         (14L, 5.0, Some(2.0)), (21L, 7.0, Some(3.0)))
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingRate(input.toDS(), 1, _.service)
         .writeStream.format("memory").queryName("srate3").outputMode("append")
         .start()
@@ -110,7 +110,7 @@ class RateProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingRate(input.toDS(), 1, _.service)
         .writeStream.format("memory").queryName("srate2").outputMode("append")
         .start()

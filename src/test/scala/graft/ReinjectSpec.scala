@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sinks.Sinks
-import graft.streaming.{ReinjectLoop, SEvent}
+import graft.streaming.{ReinjectLoop, SEvent, WireEvent}
 
 /** The reinject feedback loop (config.clj:280-288): an alerting branch
   * derives events and sends them BACK into the topology's top, where
@@ -18,7 +18,7 @@ class ReinjectSpec extends SparkSpec {
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val primary = MemoryStream[SEvent]
+    val primary = MemoryStream[WireEvent]
     val loop = new ReinjectLoop
 
     // the topology: primary UNION loopback -> (index stand-in) sink
@@ -32,7 +32,7 @@ class ReinjectSpec extends SparkSpec {
       .filter(col("state") === "critical")
       .withColumn("service", concat(col("service"), lit("-alert")))
       .withColumn("state", lit("ok"))
-      .as[SEvent]
+      .as[WireEvent]
     val alertQ = Sinks.attach(alerts, loop.sink)
       .queryName("rein_alerts").outputMode("append")
       .option("checkpointLocation",
@@ -46,7 +46,7 @@ class ReinjectSpec extends SparkSpec {
       alertQ.processAllAvailable() // derive + enqueue the loopback event
       topo.processAllAvailable()   // next trigger: loopback re-enters
 
-      val seen = spark.table("rein_topo").as[SEvent].collect()
+      val seen = spark.table("rein_topo").as[WireEvent].collect()
         .map(e => (e.host, e.service, e.state)).toSet
       assert(seen.contains(("web01", "cpu", "critical")))  // original
       assert(seen.contains(("web02", "cpu", "ok")))
@@ -68,7 +68,7 @@ class ReinjectSpec extends SparkSpec {
     // bare sink: the 3-row batch against cap 2 must fail the query —
     // a misconfigured full-volume loop is a topology bug, not a
     // silently-melting driver
-    val primary = MemoryStream[SEvent]
+    val primary = MemoryStream[WireEvent]
     val loop = new ReinjectLoop(maxBatchRows = 2)
     val q = Sinks.attach(primary.toDS(), loop.sink)
       .queryName("rein_guard").outputMode("append")
@@ -88,7 +88,7 @@ class ReinjectSpec extends SparkSpec {
 
     // Guarded wrapper: the same overflow dead-letters and the query
     // keeps running; under-cap batches still reinject
-    val primary2 = MemoryStream[SEvent]
+    val primary2 = MemoryStream[WireEvent]
     val loop2 = new ReinjectLoop(maxBatchRows = 2)
     val dead = new Sinks.MemorySink
     val q2 = Sinks.attach(primary2.toDS(),
@@ -108,7 +108,7 @@ class ReinjectSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       assert(dead.rows.asScala.exists(_.getAs[String]("host") == "h1"),
         "overflow batch did not reach the dead letter")
-      val looped = spark.table("rein_guard2_loop").as[SEvent].collect()
+      val looped = spark.table("rein_guard2_loop").as[WireEvent].collect()
         .map(_.host).toSet
       assert(looped == Set("h4"),
         s"loopback saw $looped — overflow must not reinject")

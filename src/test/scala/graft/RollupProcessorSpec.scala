@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{SEvent, StreamingRollup}
+import graft.streaming.{SEvent, StreamingRollup, WireEvent}
 
 /** Streaming rollup: pass n per period, buffer the overflow, deliver
   * the buffered vector when the period's timer fires
@@ -21,7 +21,7 @@ class RollupProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingRollup(input.toDS(), n = 2, dtSeconds = 100)
         .writeStream.format("memory").queryName("ru").outputMode("append")
         .start()
@@ -57,7 +57,7 @@ class RollupProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingRollup(input.toDS(), n = 1, dtSeconds = 100)
         .writeStream.format("memory").queryName("ru3").outputMode("append")
         .start()
@@ -91,7 +91,7 @@ class RollupProcessorSpec extends SparkSpec {
       val spark0 = spark
       import spark0.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[SEvent]
+      val input = MemoryStream[WireEvent]
       val q = StreamingRollup(input.toDS(), n = 2, dtSeconds = 100)
         .writeStream.format("memory").queryName("ru2").outputMode("append")
         .start()

@@ -13,8 +13,8 @@ import graft.operators.Index
 import graft.sinks.{Sinks, SseServer}
 import graft.sources.{RiemannProtobuf, Sources}
 import graft.sources.RiemannProtobuf.PEvent
-import graft.streaming.{CombineStreams, KeyedIndex, SEvent, StreamingRate,
-  StreamingRollup}
+import graft.streaming.{CombineStreams, KeyedIndex, StreamingRate,
+  StreamingRollup, WireEvent}
 
 /** Long-haul chaos soak (the r6 verdict's top item): ONE composed
   * topology — riemann TCP server sources → where → index / rollup /
@@ -56,11 +56,9 @@ class SoakSpec extends SparkSpec {
     try s.getLocalPort finally s.close()
   }
 
-  private def sevents(df: DataFrame): Dataset[SEvent] = {
-    val sp = df.sparkSession
-    import sp.implicits._
-    df.select(col("host"), col("service"), col("state"), col("metric"),
-      timestamp_seconds(col("time_s")).as("time"), col("ttl")).as[SEvent]
+  private def sevents(df: DataFrame): Dataset[WireEvent] = {
+    WireEvent.from(df.select(col("host"), col("service"), col("state"),
+      col("metric"), timestamp_seconds(col("time_s")).as("time"), col("ttl")))
   }
 
   private def pe(host: String, service: String, state: String,
@@ -151,7 +149,7 @@ class SoakSpec extends SparkSpec {
     sseReader.setDaemon(true)
     sseReader.start()
 
-    def hasIdx(p: SEvent => Boolean) = { // probe reads (thread-safe iter)
+    def hasIdx(p: WireEvent => Boolean) = { // probe reads (thread-safe iter)
       var found = false; idx.forEach(e => if (p(e._2)) found = true); found
     }
     def rolledMetrics: Seq[(Int, Seq[Double])] = {
@@ -281,7 +279,7 @@ class SoakSpec extends SparkSpec {
 
     // ------------------------------------------------- end-state audit
     val recorded = { // (phase, emission) in record order
-      val b = Seq.newBuilder[(Int, SEvent)]
+      val b = Seq.newBuilder[(Int, WireEvent)]
       idx.forEach(e => { b += e; () })
       b.result()
     }
@@ -375,7 +373,7 @@ object SoakChaos {
   @volatile var indexPort = 0
   val pubsub = new Sinks.Pubsub
 
-  val idx = new ConcurrentLinkedQueue[(Int, SEvent)]()
+  val idx = new ConcurrentLinkedQueue[(Int, WireEvent)]()
   val roll = new ConcurrentLinkedQueue[(Int, StreamingRollup.Emission)]()
   val rate = new ConcurrentLinkedQueue[(Int, StreamingRate.RateEmission)]()
   val coal = new ConcurrentLinkedQueue[(Int, CombineStreams.Snapshot)]()
@@ -408,7 +406,7 @@ object SoakChaos {
     throw last
   }
 
-  def indexBatch(b: Dataset[SEvent], id: Long): Unit =
+  def indexBatch(b: Dataset[WireEvent], id: Long): Unit =
     if (id > idxLast.get) {
       idxLast.set(id)
       val rows = b.collect()

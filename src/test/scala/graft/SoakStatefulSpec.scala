@@ -5,7 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.{SEvent, StatefulOps}
+import graft.streaming.{SEvent, StatefulOps, WireEvent}
 
 /** Kill-and-restart chaos for the [[StatefulOps]] family — the
   * flatMapGroupsWithState operators the composed SoakSpec topology does
@@ -44,11 +44,11 @@ class SoakStatefulSpec extends SparkSpec {
 
     val ops = Seq("changed", "sreduce", "throttle", "ewma", "ddt")
     val winOps = Seq("fixedwin", "movingwin", "movingtime")
-    val streams = (ops ++ winOps).map(op => op -> MemoryStream[SEvent]).toMap
+    val streams = (ops ++ winOps).map(op => op -> MemoryStream[WireEvent]).toMap
     val ckpts = (ops ++ winOps).map(op => op -> java.nio.file.Files
       .createTempDirectory(s"soak_stateful_$op").toString).toMap
     def startAll() = (ops.map { op =>
-      val ds: Dataset[SEvent] = op match {
+      val ds: Dataset[WireEvent] = op match {
         case "changed" => StatefulOps.changedState(streams(op).toDS())
         case "sreduce" => StatefulOps.sreduce(streams(op).toDS(), 0.0, _ + _)
         case "throttle" => StatefulOps.throttle(streams(op).toDS(), 2, 60)
@@ -60,7 +60,7 @@ class SoakStatefulSpec extends SparkSpec {
         .foreachBatch(StatefulChaos.probe(op) _)
         .queryName(s"soak_$op").start()
     } ++ winOps.map { op =>
-      val ds: Dataset[Seq[SEvent]] = op match {
+      val ds: Dataset[Seq[WireEvent]] = op match {
         case "fixedwin" => StatefulOps.fixedEventWindow(streams(op).toDS(), 3)
         case "movingwin" => StatefulOps.movingEventWindow(streams(op).toDS(), 3)
         case "movingtime" => StatefulOps.movingTimeWindow(streams(op).toDS(), 30)
@@ -71,7 +71,7 @@ class SoakStatefulSpec extends SparkSpec {
         .queryName(s"soak_$op").start()
     }).toMap
 
-    val phases: Seq[Map[String, Seq[SEvent]]] = Seq(
+    val phases: Seq[Map[String, Seq[WireEvent]]] = Seq(
       Map( // phase 1
         "changed" -> Seq(se("ok", 1, 100), se("ok", 2, 110)),
         "sreduce" -> Seq(se("ok", 1, 100), se("ok", 2, 110)),
@@ -145,11 +145,11 @@ class SoakStatefulSpec extends SparkSpec {
   * replayed batch after recovery never double-counts. */
 object StatefulChaos {
   private val outs =
-    scala.collection.mutable.Map[String, ArrayBuffer[SEvent]]()
+    scala.collection.mutable.Map[String, ArrayBuffer[WireEvent]]()
   private val lastBatch = scala.collection.mutable.Map[String, Long]()
   def reset(): Unit =
     synchronized { outs.clear(); winOuts.clear(); lastBatch.clear() }
-  def probe(op: String)(b: Dataset[SEvent], id: Long): Unit = {
+  def probe(op: String)(b: Dataset[WireEvent], id: Long): Unit = {
     val rows = b.collect().toSeq // stage outside the guard
     synchronized {
       if (id > lastBatch.getOrElse(op, -1L)) {
@@ -158,13 +158,13 @@ object StatefulChaos {
       }
     }
   }
-  def got(op: String): Seq[SEvent] = synchronized {
+  def got(op: String): Seq[WireEvent] = synchronized {
     outs.getOrElse(op, ArrayBuffer()).sortBy(_.time.getTime).toList
   }
 
   private val winOuts =
     scala.collection.mutable.Map[String, ArrayBuffer[Seq[Double]]]()
-  def probeWin(op: String)(b: Dataset[Seq[SEvent]], id: Long): Unit = {
+  def probeWin(op: String)(b: Dataset[Seq[WireEvent]], id: Long): Unit = {
     val rows = b.collect().toSeq.map(_.flatMap(_.metric).toSeq)
     synchronized {
       if (id > lastBatch.getOrElse(op, -1L)) {

@@ -49,6 +49,13 @@ class StreamingHeavyTailSpec extends SparkSpec {
     Option(q.lastProgress).toSeq
       .flatMap(_.stateOperators.map(_.numRowsTotal)).sum
 
+  /** RocksDB's internal column-family rows: each registered timer
+    * twice (by key and by time) and each non-empty list's row counter,
+    * none of which `numRowsTotal` counts. */
+  private def internalRows(q: StreamingQuery): Long =
+    Option(q.lastProgress).toSeq.flatMap(_.stateOperators.map(
+      _.customMetrics.get("rocksdbNumInternalColFamiliesKeys").longValue)).sum
+
   private def stateBytes(q: StreamingQuery): Long =
     Option(q.lastProgress).toSeq
       .flatMap(_.stateOperators.map(_.memoryUsedBytes)).sum
@@ -90,14 +97,18 @@ class StreamingHeavyTailSpec extends SparkSpec {
         assert(!pairs.exists(p => p._1 != 0L || p._2 != 8L),
           s"unrelated megabyte docs paired: ${pairs.toSeq}")
 
-        // design bound: one MEMBER row per (doc, band) = 9 x 4;
-        // numRowsTotal also counts the armed-timer value rows and the
-        // timer registry (one each per live (band, bucket) key, <=
-        // docs x bands), so <= 3x members overall — what matters is
-        // that it scales with DOCS, never with characters
+        // design bound: one MEMBER row per (doc, band) = 9 x 4, plus
+        // one armed-deadline row per live (band, bucket) key (<= docs x
+        // bands): numRowsTotal counts these user state rows only. Each
+        // key's registered timer (two rows) and its member list's row
+        // counter are internal rows, <= 3 per key. What matters is that
+        // both scale with DOCS, never with characters
         val rows = stateRows(q)
-        assert(rows <= 9 * 4 * 3,
+        assert(rows <= 9 * 4 * 2,
           s"state rows $rows exceed the docs x bands design bound")
+        val internal = internalRows(q)
+        assert(internal <= 9 * 4 * 3,
+          s"timer and counter rows $internal exceed 3 per docs x bands key")
         // 9 MB of text ingested; members carry 16-minhash signatures,
         // so state memory must sit orders of magnitude below the text
         val bytes = stateBytes(q)
@@ -213,8 +224,15 @@ class StreamingHeavyTailSpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         assert(pairs.exists(p => p._1 == 7L && p._2 == 9000L &&
           p._3 >= 0.999), s"pairs: ${pairs.toSeq.take(5)}")
+        // user rows: members (at most vectors x bands; a saturated
+        // bucket clears) and one armed row per live bucket key. Each
+        // key's timer (two rows) and member list's row counter are
+        // internal rows, <= 3 per key
         val rows = stateRows(q)
         assert(rows <= 1501 * 4, s"state rows $rows exceed vectors x bands")
+        val internal = internalRows(q)
+        assert(internal <= 1501 * 4 * 3,
+          s"timer and counter rows $internal exceed 3 per vectors x bands key")
       } finally q.stop()
     }
   }

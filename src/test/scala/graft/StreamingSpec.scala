@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{SEvent, StatefulOps, StreamingIndex}
+import graft.streaming.{SEvent, StatefulOps, StreamingIndex, WireEvent}
 
 /** MemoryStream-driven golden tests for the streaming slice — the
   * Structured Streaming analog of run-stream/advance! virtual time
@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StreamingIndex(input.toDS())
       .writeStream.format("memory").queryName("idx").outputMode("append")
       .start()
@@ -38,7 +38,7 @@ class StreamingSpec extends SparkSpec {
       // batch 3: one more trigger so the timeout (armed vs watermark 500) fires
       input.addData(ev("b", "cpu", "ok", 4.0, 600, Some(1000.0)))
       q.processAllAvailable()
-      val rows = spark.table("idx").as[SEvent].collect()
+      val rows = spark.table("idx").as[WireEvent].collect()
       val expired = rows.filter(_.state == "expired")
       assert(expired.map(e => (e.host, e.service)).toSeq == Seq(("a", "cpu")))
       // inserts for both keys flowed through before expiry
@@ -51,7 +51,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StreamingIndex(input.toDS())
       .writeStream.format("memory").queryName("idx2").outputMode("append")
       .start()
@@ -66,7 +66,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ev("b", "cpu", "ok", 4.0, 600, Some(1000.0))) // fire timers
       q.processAllAvailable()
-      val rows = spark.table("idx2").as[SEvent].collect()
+      val rows = spark.table("idx2").as[WireEvent].collect()
       assert(!rows.exists(e => e.host == "a" && e.state == "expired"),
         s"ttl-less latest event was falsely expired: ${rows.toSeq}")
     } finally q.stop()
@@ -76,7 +76,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.changedState(input.toDS())
       .writeStream.format("memory").queryName("chg").outputMode("append")
       .start()
@@ -87,7 +87,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ev("a", "s", "bad", 4, 4), ev("a", "s", "ok", 5, 5))
       q.processAllAvailable()
-      val states = spark.table("chg").as[SEvent].collect()
+      val states = spark.table("chg").as[WireEvent].collect()
         .sortBy(_.time.getTime).map(e => (e.state, e.time.getTime / 1000)).toSeq
       assert(states == Seq(("ok", 1L), ("bad", 3L), ("ok", 5L)))
     } finally q.stop()
@@ -97,7 +97,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.ewmaTimeless(input.toDS(), 0.5)
       .writeStream.format("memory").queryName("ew").outputMode("append")
       .start()
@@ -106,7 +106,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ev("a", "s", "ok", 1, 3))
       q.processAllAvailable()
-      val ms = spark.table("ew").as[SEvent].collect()
+      val ms = spark.table("ew").as[WireEvent].collect()
         .sortBy(_.time.getTime).flatMap(_.metric).toSeq
       assert(ms == Seq(0.5, 0.75, 0.875)) // state survives across batches
     } finally q.stop()
@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.top(input.toDS(), 2)
       .writeStream.format("memory").queryName("top").outputMode("append").start()
     try {
@@ -125,7 +125,7 @@ class StreamingSpec extends SparkSpec {
       // c (20) displaces b from the top-2? no - k=2, {a:10, c:20} after c
       input.addData(ev("c", "s", "ok", 20, 3), ev("d", "s", "ok", 7, 4))
       q.processAllAvailable()
-      val rows = spark.table("top").as[SEvent].collect().sortBy(_.time.getTime)
+      val rows = spark.table("top").as[WireEvent].collect().sortBy(_.time.getTime)
       // a, b pass (both in top-2); c passes and demotes b (expired mirror);
       // d (7 < a:10) does not pass
       val passed = rows.filter(_.state == "ok").map(_.host).toSeq
@@ -139,7 +139,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.sreduce(input.toDS(), 0.0, _ + _)
       .writeStream.format("memory").queryName("sr").outputMode("append").start()
     try {
@@ -147,7 +147,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ev("a", "s", "ok", 3, 3))
       q.processAllAvailable()
-      val ms = spark.table("sr").as[SEvent].collect()
+      val ms = spark.table("sr").as[WireEvent].collect()
         .sortBy(_.time.getTime).flatMap(_.metric).toSeq
       assert(ms == Seq(1.0, 3.0, 6.0))
     } finally q.stop()
@@ -157,7 +157,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.ddt(input.toDS())
       .writeStream.format("memory").queryName("ddt").outputMode("append")
       .start()
@@ -174,7 +174,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ev("a", "s", "ok", -4, 16)) // Δ=0 over 14→16
       q.processAllAvailable()
-      val got = spark.table("ddt").as[SEvent].collect()
+      val got = spark.table("ddt").as[WireEvent].collect()
         .sortBy(_.time.getTime).map(e => (e.time.getTime / 1000, e.metric.get))
       assert(got.toSeq == Seq((11L, 0.0), (12L, 2.0), (14L, -3.0), (16L, 0.0)))
     } finally q.stop()
@@ -184,11 +184,11 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.fixedEventWindow(input.toDS(), 2)
       .writeStream.format("memory").queryName("few").outputMode("append")
       .start()
-    val input2 = MemoryStream[SEvent]
+    val input2 = MemoryStream[WireEvent]
     val q2 = StatefulOps.movingEventWindow(input2.toDS(), 2)
       .writeStream.format("memory").queryName("mew").outputMode("append")
       .start()
@@ -198,14 +198,14 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(ev("a", "s", "ok", 4, 40)) // completes across batches
       q.processAllAvailable()
-      val fixed = spark.table("few").as[Seq[SEvent]].collect()
+      val fixed = spark.table("few").as[Seq[WireEvent]].collect()
         .map(_.flatMap(_.metric).toSeq).sortBy(_.head)
       assert(fixed.toSeq == Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)))
 
       input2.addData(ev("a", "s", "ok", 1, 10), ev("a", "s", "ok", 2, 20),
         ev("a", "s", "ok", 3, 30))
       q2.processAllAvailable()
-      val moving = spark.table("mew").as[Seq[SEvent]].collect()
+      val moving = spark.table("mew").as[Seq[WireEvent]].collect()
         .map(_.flatMap(_.metric).toSeq).sortBy(_.last)
       assert(moving.toSeq == Seq(Seq(1.0), Seq(1.0, 2.0), Seq(2.0, 3.0)))
     } finally { q.stop(); q2.stop() }
@@ -215,7 +215,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.movingTimeWindow(input.toDS(), 2)
       .writeStream.format("memory").queryName("mtw").outputMode("append")
       .start()
@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
         ev("a", "s", "ok", 40, 4), ev("a", "s", "ok", 81, 8),
         ev("a", "s", "ok", 51, 5), ev("a", "s", "ok", 90, 9))
       arrival.foreach { e => input.addData(e); q.processAllAvailable() }
-      val got = spark.table("mtw").as[Seq[SEvent]].collect()
+      val got = spark.table("mtw").as[Seq[WireEvent]].collect()
         .map(_.flatMap(_.metric).toSeq).sortBy(w => (w.max, w.length))
       assert(got.toSeq == Seq(Seq(50.0), Seq(50.0, 60.0), Seq(80.0),
         Seq(80.0, 81.0), Seq(80.0, 81.0, 90.0)))
@@ -242,7 +242,7 @@ class StreamingSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StatefulOps.throttle(input.toDS(), 2, 100)
       .writeStream.format("memory").queryName("thr").outputMode("append")
       .start()
@@ -255,7 +255,7 @@ class StreamingSpec extends SparkSpec {
       // new bucket
       input.addData(ev("a", "s", "ok", 4, 110))
       q.processAllAvailable()
-      val ms = spark.table("thr").as[SEvent].collect()
+      val ms = spark.table("thr").as[WireEvent].collect()
         .sortBy(_.time.getTime).flatMap(_.metric).toSeq
       assert(ms == Seq(1.0, 2.0, 4.0))
     } finally q.stop()

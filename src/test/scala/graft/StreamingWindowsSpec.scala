@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{SEvent, StreamingWindows}
+import graft.streaming.{SEvent, StreamingWindows, WireEvent}
 
 /** Watermark-closed window emission: windows finalize in append mode
   * only once the watermark passes their end — the reference's
@@ -17,7 +17,7 @@ class StreamingWindowsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StreamingWindows.rate(input.toDS(), 10)
       .writeStream.format("memory").queryName("srate").outputMode("append")
       .start()
@@ -40,7 +40,7 @@ class StreamingWindowsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StreamingWindows.percentiles(input.toDS(), 10, Seq(0.5, 1.0))
       .writeStream.format("memory").queryName("spct").outputMode("append")
       .start()
@@ -61,7 +61,7 @@ class StreamingWindowsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StreamingWindows.apdex(input.toDS(), 10,
       satisfied = col("metric") <= 1.0, tolerated = col("metric") <= 4.0)
       .writeStream.format("memory").queryName("sapdex").outputMode("append")
@@ -87,7 +87,7 @@ class StreamingWindowsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     // metric carries the latency in ms; latencyNs converts, as the
     // reference's measure-latency nanoTime deltas would
     val q = StreamingWindows.instrument(input.toDS(), 10,
@@ -125,7 +125,7 @@ class StreamingWindowsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SEvent]
+    val input = MemoryStream[WireEvent]
     val q = StreamingWindows.foldInterval(input.toDS(), 10,
       expr("percentile(metric, 0.5)"))
       .writeStream.format("memory").queryName("sfold").outputMode("append")
